@@ -45,9 +45,11 @@ import uuid
 from collections.abc import Sequence
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from bear_spark.lake import reconcile
 from bear_spark.schema import schema_from_json, schema_to_json
@@ -449,11 +451,13 @@ class LakeTable:
         payload = self.payload_schema(snap)
         # hash with the bucket columns' REAL types: xxhash64 is
         # type-sensitive, so a stringly-typed probe would land in the
-        # wrong bucket for non-string keys
-        fields = [payload[c] for c in snap["bucket_cols"]]
-        row = self.spark.createDataFrame(
-            [tuple(key_values)], T.StructType(fields)
+        # wrong bucket for non-string keys. An Arrow-built row is a
+        # driver-local relation, so the probe runs no Spark job.
+        fields = T.StructType([payload[c] for c in snap["bucket_cols"]])
+        key = pa.Table.from_pylist(
+            [dict(zip(fields.names, key_values))], schema=to_arrow_schema(fields)
         )
+        row = self.spark.createDataFrame(key, fields)
         bucket = row.select(self._bucket_expr(snap)).collect()[0][0]
         df = self.read(buckets=[bucket])
         for col, val in zip(snap["bucket_cols"], key_values):
@@ -700,6 +704,8 @@ class LakeTable:
         # partition (not a high-water mark): changelog files may arrive
         # out of order, and a replayed file must be fenced while an
         # unseen earlier file must still apply.
+        # The range table is Arrow-built: a driver-local relation, where
+        # a list-built one would run a Python job on every merge.
         if fence and has_env and snap["commit_log"]:
             rows = [
                 (int(p), int(lo), int(hi))
@@ -707,8 +713,14 @@ class LakeTable:
                 for lo, hi in ranges
             ]
             if rows:
+                sp, lo, hi = zip(*rows)
                 rng = self.spark.createDataFrame(
-                    rows, "_sp int, _lo long, _hi long"
+                    pa.table({
+                        "_sp": pa.array(sp, pa.int32()),
+                        "_lo": pa.array(lo, pa.int64()),
+                        "_hi": pa.array(hi, pa.int64()),
+                    }),
+                    "_sp int, _lo long, _hi long",
                 )
                 batch = batch.join(
                     F.broadcast(rng),

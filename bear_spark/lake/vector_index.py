@@ -341,7 +341,7 @@ class VectorIndex:
             if f.endswith(".parquet")
         ]
 
-        changed_keys = ch.select(*id_cols).distinct()
+        changed_keys = assigned_ch.select(*id_cols).distinct()
         parts = []
         for rel, ds in by_gen.items():
             old = self.table.spark.read.option(

@@ -5,12 +5,25 @@ the only memory knob. Shuffle partitions sized to cores, AQE on (runtime
 coalesce + skew-join splitting), Arrow on for the pandas-UDF paths,
 session timezone pinned to UTC so results compare bit-for-bit against
 the DuckDB oracle.
+
+Local masters run their Python workers under ``bear_spark.worker_daemon``
+instead of the stock ``pyspark.daemon``. PySpark's worker calls
+``importlib.invalidate_caches()`` before every task, and on CPython each
+zip importer then re-reads its whole archive: ``pyspark.zip``, the py4j
+zip and the spark-core jar, about 27k entries per task. On a 4-core host
+that costs each task 130-350 ms before any engine code runs, several
+times what a small merge kernel call does. The engine daemon skips the
+re-read for archives under ``$SPARK_HOME``, which cannot change under a
+running worker. Non-local masters keep the stock daemon: their executors
+can import the package only per task (``--py-files``), not when the
+daemon starts.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # glibc malloc knobs that keep Python-worker heap pages resident across
@@ -30,6 +43,26 @@ _MALLOC_RETAIN_ENV = {
     "MALLOC_TRIM_THRESHOLD_": "-1",
     "MALLOC_ARENA_MAX": "4",
 }
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _engine_daemon_importable() -> bool:
+    """Make ``bear_spark.worker_daemon`` importable by the daemon the JVM
+    forks, and say whether it is. The daemon's ``PYTHONPATH`` includes
+    the JVM's own, which is captured when the JVM launches: put the
+    package root on it if the JVM is about to launch, otherwise check
+    the running JVM's."""
+    gateway = SparkContext._gateway
+    if gateway is None:
+        if "PYSPARK_GATEWAY_PORT" in os.environ:
+            return False  # spark-submit launched the JVM with its own env
+        path = os.environ.get("PYTHONPATH", "")
+        if _PACKAGE_ROOT not in path.split(os.pathsep):
+            os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (_PACKAGE_ROOT, path) if p)
+        return True
+    path = gateway.jvm.java.lang.System.getenv("PYTHONPATH") or ""
+    return _PACKAGE_ROOT in path.split(os.pathsep)
 
 
 def get_spark(
@@ -105,6 +138,9 @@ def get_spark(
         # the same knobs through executorEnv (no-op in local mode)
         for k, v in _MALLOC_RETAIN_ENV.items():
             builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, v))
+    is_local = master == "local" or master.startswith("local[")
+    if is_local and _engine_daemon_importable():
+        builder = builder.config("spark.python.daemon.module", "bear_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -274,7 +274,8 @@ def test_ivf_assign_kernel_matches_when_chain(spark):
             for r in with_ivf_list(messy, cents2, impl=impl).collect()
         }
         assert got[2] == 0 and got[3] == 0, impl
-        assert got[1] == got[4] or True  # real rows get a real argmin
+        # real rows get a real argmin
+        assert all(0 <= got[i] < len(cents2) for i in (1, 4)), impl
     jvm2 = {r.vec_id: r._list for r in with_ivf_list(messy, cents2, impl="jvm").collect()}
     pd2 = {r.vec_id: r._list for r in with_ivf_list(messy, cents2, impl="pandas").collect()}
     assert jvm2 == pd2

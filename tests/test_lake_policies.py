@@ -147,6 +147,50 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
     assert tbl.lookup(7).toPandas()["text"].tolist() == ["v2"]
 
 
+@pytest.mark.parametrize("key_type", [T.LongType(), T.StringType()])
+def test_lookup_probes_merge_bucket_without_a_job(spark, tmp_path, monkeypatch, key_type):
+    """lookup() must hash each key into the bucket merge() wrote it to,
+    and must do so on the driver: the probe starts no Spark job."""
+    schema = T.StructType(
+        [
+            T.StructField("k", key_type),
+            T.StructField("text", T.StringType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "tbl"), schema, key_cols=["k"], seq_col="ts", num_buckets=8
+    )
+    tbl.merge(
+        spark.range(12).select(
+            F.col("id").cast(key_type).alias("k"),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("text"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
+            F.lit("I").alias("op"),
+            F.col("id").alias("lsn"),
+        )
+    )
+    written = {
+        r.k: (r._bucket, r.text)
+        for r in tbl.read(include_system=True).select("k", "_bucket", "text").collect()
+    }
+    assert len(written) == 12 and len({b for b, _ in written.values()}) > 1
+
+    probed = []
+    read = tbl.read
+    monkeypatch.setattr(tbl, "read", lambda **kw: probed.append(kw["buckets"]) or read(**kw))
+    tracker = spark.sparkContext.statusTracker()
+    jobs_at_start = set(tracker.getJobIdsForGroup())
+    for k, (bucket, text) in written.items():
+        before = set(tracker.getJobIdsForGroup())
+        df = tbl.lookup(k)
+        assert set(tracker.getJobIdsForGroup()) == before, f"bucket probe for {k!r} ran a job"
+        assert probed[-1] == [bucket], k
+        assert [r.text for r in df.collect()] == [text]
+    # the tracker does see jobs: each collect above ran one
+    assert set(tracker.getJobIdsForGroup()) > jobs_at_start
+
+
 def test_bucket_column_type_widening_rejected(spark, tmp_path):
     from bear_spark.lake.reconcile import SchemaConflict
 
