@@ -67,7 +67,6 @@ def bootstrap(
             max_files_per_trigger=s.max_files_per_trigger,
             compact_every=s.compact_every,
             metrics_flush_every=s.metrics_flush_every,
-            merge_mode=s.merge_mode,
             # same vocabulary LakeTable.merge accepts from the process
             # env, so .env and env-var spellings behave identically
             merge_precombine={
@@ -88,7 +87,6 @@ def bootstrap(
 _QUICK_DEFAULTS = (
     ("BEAR_NUM_BUCKETS", "64"),
     ("BEAR_LATENESS_SEC", "3600"),
-    ("BEAR_MERGE_MODE", "arrow"),
     ("BEAR_MERGE_PRECOMBINE", "auto"),
     ("BEAR_TARGET_FILE_ROWS", "2000000"),
     ("BEAR_EMBEDDING_DIM", "8"),

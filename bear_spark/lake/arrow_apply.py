@@ -1,20 +1,20 @@
-"""Arrow-native per-bucket COW apply — the merge hot path.
+"""Arrow-native per-bucket COW apply — the merge path.
 
-The SQL apply path shuffles (batch ∪ touched-bucket table rows) through
-an exchange, aggregates, and writes via Spark's writer — the whole table
-crosses the shuffle every merge. This path exploits what the table
-already knows: data files are bucket-partitioned on shared storage, so
-only the BATCH needs to move. ``groupBy(_bucket).applyInPandas`` routes
-each bucket's change events to one task; the task reads that bucket's
-existing files directly (pyarrow, column-parallel C++), applies
-last-writer-wins vectorized in pandas (stable sort by (ts, lsn) +
-group-tail), and writes the replacement files itself — the same
-file-granularity copy-on-write an Iceberg/Delta COW writer performs,
-with the engine's two-phase snapshot commit unchanged on top.
+Data files are bucket-partitioned on shared storage, so only the BATCH
+needs to move: ``groupBy(_bucket).applyInArrow`` routes each bucket's
+change events to one task as one ``pyarrow.Table``; the task reads that
+bucket's existing files directly (pyarrow, column-parallel C++), applies
+last-writer-wins in ``pyarrow.compute``, and writes the replacement
+files itself — the same file-granularity copy-on-write an Iceberg/Delta
+COW writer performs, with the engine's two-phase snapshot commit
+unchanged on top.
 
-Everything is Arrow-batch vectorized — no per-row Python anywhere
-(`input_hint`: "vectorized pandas/Arrow UDFs (no per-row Python)
-throughout"). Task retries are idempotent: each bucket writes to a
+The batch stays in Arrow from the JVM to the parquet writer: no pandas
+round trip at the UDF boundary, no per-row Python. LWW sorts only the
+key, seq and lsn columns, keeps the last row of each key run, and does
+one full-width ``take`` — which works for every Arrow type, so array,
+struct, map and decimal payloads (embedding tables) take this path like
+flat ones. Task retries are idempotent: each bucket writes to a
 deterministic file name via tmp + ``os.replace``.
 
 Reference analog: the store-side PK upsert the reference delegates to
@@ -28,81 +28,58 @@ import os
 import uuid
 from collections.abc import Callable
 
-_ARROW_TYPES = {
-    "string": "string",
-    "binary": "binary",
-    "integer": "int32",
-    "long": "int64",
-    "short": "int16",
-    "byte": "int8",
-    "float": "float32",
-    "double": "float64",
-    "boolean": "bool_",
-    "date": "date32",
-}
+import pyarrow as pa
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from bear_spark.lake.reconcile import _erase_nullability
 
 
-def _arrow_type(pa, spark_typename):
-    if not isinstance(spark_typename, str):
-        # nested types (array/map/struct JSON objects): Arrow's hash
-        # "last" aggregation has no kernels for them — SQL path instead
-        raise TypeError(f"unsupported payload type for arrow apply: {spark_typename}")
-    if spark_typename == "timestamp":
-        return pa.timestamp("us", tz="UTC")
-    name = _ARROW_TYPES.get(spark_typename)
-    if name is None:  # decimal(p,s) etc. — same story as nested
-        raise TypeError(f"unsupported payload type for arrow apply: {spark_typename}")
-    return getattr(pa, name)()
+def arrow_schema(schema: T.StructType) -> pa.Schema:
+    """Spark payload schema -> Arrow schema, nullable at every level
+    (deletes carry null payloads whatever the declared schema says)."""
+    return to_arrow_schema(_erase_nullability(schema))
 
 
-def _arrow_schema(pa, spark_json: dict):
-    """Flat Spark StructType JSON -> pyarrow schema (payload types only)."""
-    return pa.schema(
-        [(f["name"], _arrow_type(pa, f["type"])) for f in spark_json["fields"]]
-    )
+def _last_of_key_runs(keys: pa.Table) -> pa.Array:
+    """Boolean mask over key-sorted rows: True on the last row of each
+    run of equal keys. Two nulls are one key, as in a hash group-by."""
+    n = keys.num_rows
+    if n == 0:
+        return pa.array([], pa.bool_())
+    import pyarrow.compute as pc
 
-
-def supports_schema(spark_json: dict) -> bool:
-    """True if every payload column maps onto the kernel's Arrow type
-    set (flat primitives + binary). Tables with array/map/struct or
-    decimal payloads — e.g. an embedding ``array<float>`` — take the
-    Catalyst SQL apply path instead of failing the default merge."""
-    import pyarrow as pa
-
-    try:
-        _arrow_schema(pa, spark_json)
-        return True
-    except TypeError:
-        return False
+    change = None
+    for name in keys.column_names:
+        col = keys.column(name).combine_chunks()
+        a, b = col.slice(0, n - 1), col.slice(1)
+        ne = pc.not_equal(a, b)
+        ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+        change = ne if change is None else pc.or_(change, ne)
+    return pa.concat_arrays([change, pa.array([True])])
 
 
 def make_apply_kernel(
-    files_by_bucket: dict[int, list[tuple]] | None,
-    target_schema_json: dict,
+    target: pa.Schema,
     stage_dir: str,
     key_cols: list[str],
     seq_col: str,
+    manifests_by_bucket: dict[int, str],
     wm_iso: str | None = None,
     drop_late: bool = False,
     table_root: str = "",
     compression: str = "snappy",
-    manifests_by_bucket: dict[int, str] | None = None,
     target_file_rows: int = 2_000_000,
 ) -> Callable:
-    """Build the applyInPandas kernel for one merge.
+    """Build the applyInArrow kernel for one merge.
 
-    The kernel learns its bucket's existing data files one of two ways:
+    ``target`` is the payload's Arrow schema (``arrow_schema``).
+    ``manifests_by_bucket`` maps each bucket to the rel path of its
+    immutable manifest document; the TASK reads its own manifest from
+    shared storage (same access path as the data files), so the closure
+    carries O(num_buckets) strings instead of the whole file inventory.
 
-    - ``manifests_by_bucket`` (preferred): per bucket, the rel path of
-      its immutable manifest document; the TASK reads its own manifest
-      from shared storage (same access path as the data files). The
-      closure then carries O(num_buckets) strings instead of the whole
-      file inventory — at millions of files, serializing the inventory
-      into every task closure is itself a scale bug.
-    - ``files_by_bucket`` (legacy inline snapshots): per bucket,
-      ``(rel_path, key_min, key_max)`` tuples shipped directly.
-
-    Either way the entries cover all schema versions — alignment to the
+    Manifest entries cover all schema versions — alignment to the
     target schema happens here, which is exactly the
     registry-reconciler's "rewrite Arrow batches" step. Files whose
     first-key [min, max] range contains NO batch key are CARRIED OVER
@@ -118,11 +95,11 @@ def make_apply_kernel(
     This makes merge a single job: no separate stats pass, no cache.
     """
 
-    def kernel(pdf):
+    def kernel(tbl):
+        import datetime as _dt
         import json as _json
 
-        import pandas as pd
-        import pyarrow as pa
+        import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -149,84 +126,89 @@ def make_apply_kernel(
             except (NotImplementedError, AttributeError):
                 pass
 
-        bucket = int(pdf["_bucket"].iloc[0])
-        precombined = "_cnt" in pdf.columns
+        bucket = tbl.column("_bucket")[0].as_py()
 
-        def _naive_utc(s):
-            """Normalize event time to naive UTC (the snapshot watermark
-            format) regardless of how Arrow delivered it."""
-            if getattr(s.dtype, "tz", None) is not None:
-                return s.dt.tz_convert("UTC").dt.tz_localize(None)
-            return s
+        def naive_utc(col):
+            """Event time as naive UTC (the snapshot watermark format)
+            regardless of how Arrow delivered it."""
+            return col.cast(pa.timestamp("us"))
+
+        def seg_stats(t: pa.Table, *aggs) -> list[dict]:
+            """Per (source_partition, segment) batch stats; ``aggs`` are the
+            (column, aggregate) pairs for lo, hi, count, late, max time."""
+            g = t.group_by(["_sp", "_segment"], use_threads=False).aggregate(aggs)
+            names = [f"{c}_{fn}" for c, fn, *_ in aggs]
+            out = []
+            for r in g.to_pylist():
+                m = r[names[4]]
+                out.append(
+                    {
+                        "sp": int(r["_sp"]),
+                        "f": str(r["_segment"]),
+                        "lo": int(r[names[0]]),
+                        "hi": int(r[names[1]]),
+                        "c": int(r[names[2]]),
+                        "late": int(r[names[3]]),
+                        "mts": None if m is None else m.isoformat(),
+                    }
+                )
+            return out
 
         # --- batch stats for this bucket's slice ----------------------
-        stats = []
-        if precombined:
+        if "_cnt" in tbl.column_names:
             # the driver pre-combined the batch per (key, sp, segment):
             # each row carries its subset's count/late-count/offset
             # range/max event time — fold them per (sp, segment)
-            mts_series = _naive_utc(pdf["_mts"])
-            grouped = pdf.groupby(["_sp", "_segment"], sort=False, dropna=False)
-            for (sp, segf), idx in grouped.indices.items():
-                mts = mts_series.iloc[idx].max()
-                stats.append(
-                    {
-                        "sp": int(sp),
-                        "f": str(segf),
-                        "lo": int(pdf["_lo"].iloc[idx].min()),
-                        "hi": int(pdf["_hi"].iloc[idx].max()),
-                        "c": int(pdf["_cnt"].iloc[idx].sum()),
-                        "late": int(pdf["_late_cnt"].iloc[idx].sum()),
-                        "mts": None if pd.isna(mts) else mts.isoformat(),
-                    }
-                )
-            # dropna=False: a null-key flood contends in the kernel like
-            # any hot key (it LWW-collapses below) and must count toward
-            # the adaptive pre-combine skew signal
-            key_counts = pdf.groupby(key_cols[0], sort=False, dropna=False)["_cnt"].sum()
-            max_key_rows = int(key_counts.max()) if len(key_counts) else 0
-            pdf = pdf.drop(
-                columns=["_sp", "_segment", "_cnt", "_late_cnt", "_lo", "_hi", "_mts"]
+            tbl = tbl.set_column(
+                tbl.schema.get_field_index("_mts"), "_mts", naive_utc(tbl.column("_mts"))
+            )
+            stats = seg_stats(
+                tbl, ("_lo", "min"), ("_hi", "max"), ("_cnt", "sum"),
+                ("_late_cnt", "sum"), ("_mts", "max"),
+            )
+            # null keys group together: a null-key flood contends in the
+            # kernel like any hot key (it LWW-collapses below) and must
+            # count toward the adaptive pre-combine skew signal
+            key_rows = (
+                tbl.group_by(key_cols[0], use_threads=False)
+                .aggregate([("_cnt", "sum")])
+                .column("_cnt_sum")
+            )
+            tbl = tbl.drop_columns(
+                ["_sp", "_segment", "_cnt", "_late_cnt", "_lo", "_hi", "_mts"]
             )
         else:
-            ts_series = _naive_utc(pdf[seq_col])
-            late_mask = (
-                (ts_series < pd.Timestamp(wm_iso))
-                if wm_iso
-                else pd.Series(False, index=pdf.index)
+            ts = naive_utc(tbl.column(seq_col))
+            if wm_iso:
+                wm = pa.scalar(_dt.datetime.fromisoformat(wm_iso), pa.timestamp("us"))
+                late = pc.fill_null(pc.less(ts, wm), False)
+            else:
+                late = pa.array(np.zeros(tbl.num_rows, np.bool_))
+            tbl = tbl.append_column("_late", late.cast(pa.int64())).append_column(
+                "_ts", ts
             )
-            grouped = pdf.groupby(["_sp", "_segment"], sort=False, dropna=False)
-            for (sp, segf), idx in grouped.indices.items():
-                sub_off = pdf["_off"].iloc[idx]
-                mts = ts_series.iloc[idx].max()
-                stats.append(
-                    {
-                        "sp": int(sp),
-                        "f": str(segf),
-                        "lo": int(sub_off.min()),
-                        "hi": int(sub_off.max()),
-                        "c": int(len(idx)),
-                        "late": int(late_mask.iloc[idx].sum()),
-                        "mts": None if pd.isna(mts) else mts.isoformat(),
-                    }
-                )
+            stats = seg_stats(
+                tbl, ("_off", "min"), ("_off", "max"),
+                ("_off", "count", pc.CountOptions(mode="all")),
+                ("_late", "sum"), ("_ts", "max"),
+            )
             # hottest-key share of the BATCH slice (pre-LWW, pre-filter):
             # the driver records max over buckets in lineage and
             # auto-enables map-side pre-combine on the NEXT batch when a
             # hot key persists
-            vc = pdf[key_cols[0]].value_counts(dropna=False)
-            max_key_rows = int(vc.iloc[0]) if len(vc) else 0
-            pdf = pdf.drop(columns=["_sp", "_off", "_segment"])
+            key_rows = pc.value_counts(tbl.column(key_cols[0])).field("counts")
+            tbl = tbl.drop_columns(["_sp", "_off", "_segment", "_late", "_ts"])
             if drop_late and wm_iso:
                 # drop-late policy: late events are counted (stats above,
                 # offsets committed) but never applied — the watermark is
                 # a hard admission boundary, which is what makes tombstone
-                # expiry safe. NaT event times are kept (they lose LWW).
+                # expiry safe. Null event times are kept (they lose LWW).
                 # (Pre-combine is disabled on drop-late tables: the
                 # subset winner could be late while a runner-up is not.)
-                pdf = pdf.loc[~late_mask]
-        target = _arrow_schema(pa, target_schema_json)
-        payload_names = [f.name for f in target]
+                tbl = tbl.filter(pc.invert(late))
+        max_key_rows = int(pc.max(key_rows).as_py() or 0)
+
+        payload_names = target.names
         # event shape: payload + _bucket/_op/_elsn
         evt_schema = pa.schema(
             list(target)
@@ -236,7 +218,6 @@ def make_apply_kernel(
                 pa.field("_elsn", pa.int64()),
             ]
         )
-
         # output shape: payload + _bucket/_lsn/_deleted (data-file schema)
         out_schema = pa.schema(
             list(target)
@@ -247,75 +228,52 @@ def make_apply_kernel(
             ]
         )
 
-        def align_to_events(tbl: pa.Table, op_arr, elsn_arr) -> pa.Table:
+        def align(t: pa.Table, schema: pa.Schema, given: dict) -> pa.Table:
+            """Rows -> ``schema``: ``given`` columns as-is, the bucket
+            constant, the rest cast up (schema-evolution fill + cast)."""
             cols = []
-            n = tbl.num_rows
-            for f in evt_schema:
-                if f.name == "_op":
-                    cols.append(op_arr)
-                elif f.name == "_elsn":
-                    cols.append(elsn_arr.cast(pa.int64()))
+            n = t.num_rows
+            for f in schema:
+                if f.name in given:
+                    cols.append(given[f.name])
                 elif f.name == "_bucket":
                     cols.append(pa.array([bucket] * n, pa.int32()))
-                elif f.name in tbl.column_names:
-                    cols.append(tbl.column(f.name).cast(f.type))
+                elif f.name in t.column_names:
+                    cols.append(t.column(f.name).cast(f.type))
                 else:
                     cols.append(pa.nulls(n, f.type))
-            return pa.table(cols, schema=evt_schema)
-
-        def align_to_out(tbl: pa.Table) -> pa.Table:
-            """Existing-file rows -> out_schema (schema-evolution fill +
-            cast), bypassing the event shape entirely."""
-            cols = []
-            n = tbl.num_rows
-            for f in out_schema:
-                if f.name == "_bucket":
-                    cols.append(pa.array([bucket] * n, pa.int32()))
-                elif f.name == "_deleted":
-                    cols.append(
-                        pc.fill_null(tbl.column("_deleted").cast(pa.bool_()), False)
-                    )
-                elif f.name in tbl.column_names:
-                    cols.append(tbl.column(f.name).cast(f.type))
-                else:
-                    cols.append(pa.nulls(n, f.type))
-            return pa.table(cols, schema=out_schema)
+            return pa.table(cols, schema=schema)
 
         # --- batch side (already target-aligned by the JVM projection) ---
-        batch = pa.Table.from_pandas(pdf, preserve_index=False)
-        batch = align_to_events(
-            batch, batch.column("_op").cast(pa.string()), batch.column("_elsn")
-        )
+        batch = align(tbl, evt_schema, {"_op": tbl.column("_op").cast(pa.string())})
 
         # --- existing files: read only those the batch can touch ------
         # file ranges come from parquet footers (files are key-sorted);
         # a file whose [kmin, kmax] contains no batch key is carried
         # over byte-identical — at 10^10 rows this is the difference
         # between O(touched files) and O(whole bucket) per task
-        batch_keys = pdf[key_cols[0]]
-        if manifests_by_bucket is not None:
-            mrel = manifests_by_bucket.get(bucket)
-            if mrel is None:
-                bucket_files = []
-            else:
-                with open(os.path.join(table_root, mrel)) as mf:
-                    bucket_files = [
-                        (fi["path"], fi.get("kmin"), fi.get("kmax"))
-                        for fi in _json.load(mf)["files"]
-                    ]
-        else:
-            bucket_files = (files_by_bucket or {}).get(bucket, ())
+        batch_keys = tbl.column(key_cols[0])
+        mrel = manifests_by_bucket.get(bucket)
+        bucket_files = []
+        if mrel is not None:
+            with open(os.path.join(table_root, mrel)) as mf:
+                bucket_files = [
+                    (fi["path"], fi.get("kmin"), fi.get("kmax"))
+                    for fi in _json.load(mf)["files"]
+                ]
         kept_paths = []
         to_read = []
         for rel, kmin, kmax in bucket_files:
             intersects = True
             if kmin is not None and kmax is not None:
                 try:
-                    intersects = bool(
-                        ((batch_keys >= kmin) & (batch_keys <= kmax)).any()
+                    hit = pc.and_(
+                        pc.greater_equal(batch_keys, kmin),
+                        pc.less_equal(batch_keys, kmax),
                     )
-                except TypeError:  # incomparable types → safe default
-                    intersects = True
+                    intersects = pc.any(hit).as_py() is True
+                except (TypeError, pa.ArrowException):
+                    intersects = True  # incomparable types → safe default
             if intersects:
                 to_read.append(rel)
             else:
@@ -325,10 +283,10 @@ def make_apply_kernel(
         # across a bucket's files (merge emits LWW winners; the range
         # pull rule keeps a key in exactly one file), so an existing row
         # whose key is NOT in the batch is already its own winner — it
-        # skips the (ts, lsn) sort + group-last entirely and goes
-        # straight to the key-sorted rewrite. Sort/aggregate traffic is
-        # O(batch + contended), not O(touched files) — the difference
-        # between a point update and a full-file re-merge at 10^10 rows.
+        # skips the (ts, lsn) sort entirely and goes straight to the
+        # key-sorted rewrite. Sort traffic is O(batch + contended), not
+        # O(touched files) — the difference between a point update and a
+        # full-file re-merge at 10^10 rows.
         kset = pc.unique(batch.column(key_cols[0]))
         ktype = target.field(key_cols[0]).type
         parts = [batch]
@@ -338,50 +296,43 @@ def make_apply_kernel(
             kmask = pc.is_in(t.column(key_cols[0]).cast(ktype), value_set=kset)
             # null keys always contend (LWW collapses them; rare by design)
             kmask = pc.fill_null(kmask, True)
-            cont = t.filter(kmask)
-            untouched = t.filter(pc.invert(kmask))
+            free = pc.invert(kmask)
+            deleted = pc.fill_null(t.column("_deleted").cast(pa.bool_()), False)
+            untouched = t.filter(free)
             if untouched.num_rows:
-                passthrough.append(align_to_out(untouched))
-            if cont.num_rows:
-                deleted = pc.fill_null(cont.column("_deleted").cast(pa.bool_()), False)
-                op = pc.if_else(deleted, pa.scalar("D"), pa.scalar("U"))
-                parts.append(
-                    align_to_events(cont, op.cast(pa.string()), cont.column("_lsn"))
+                passthrough.append(
+                    align(untouched, out_schema, {"_deleted": deleted.filter(free)})
                 )
+            cont = t.filter(kmask)
+            if cont.num_rows:
+                op = pc.if_else(deleted.filter(kmask), pa.scalar("D"), pa.scalar("U"))
+                elsn = cont.column("_lsn").cast(pa.int64())
+                parts.append(align(cont, evt_schema, {"_op": op, "_elsn": elsn}))
         events = pa.concat_tables(parts)
 
-        # --- LWW, pure Arrow: sort by (seq, lsn) ascending (nulls
-        # first, so a null event time always loses), then ordered
-        # group-by taking the LAST row per key — all C++; the row data
-        # never materializes as Python objects. (Group OUTPUT order is
-        # not guaranteed by the hash grouper, so file sort order is
-        # applied explicitly below.)
-        idx = pc.sort_indices(
-            events,
-            sort_keys=[(seq_col, "ascending"), ("_elsn", "ascending")],
+        # --- LWW: sort indices over only the key, seq and lsn columns
+        # ((seq, lsn) ascending, nulls first, so a null event time always
+        # loses; the sort is stable, so exact ties keep arrival order),
+        # keep the last row of each key run, then ONE full-width take —
+        # the payload is copied once, and take has kernels for every
+        # Arrow type (lists, structs, maps, decimals)
+        order_cols = [*key_cols, seq_col, "_elsn"]
+        narrow = events.select(order_cols)
+        order = pc.sort_indices(
+            narrow,
+            sort_keys=[(c, "ascending") for c in order_cols],
             null_placement="at_start",
         )
-        events = events.take(idx)
-        val_cols = [c for c in events.column_names if c not in key_cols]
-        # skip_nulls=False: "last" must return the winning row's value
-        # even when it is null (a newer event may legitimately null a
-        # column); the default would resurrect stale non-null values
-        last_opts = pc.ScalarAggregateOptions(skip_nulls=False)
-        win = events.group_by(key_cols, use_threads=False).aggregate(
-            [(c, "last", last_opts) for c in val_cols]
-        )
-
-        def wcol(name: str):
-            return win.column(name if name in key_cols else f"{name}_last")
+        winners = order.filter(_last_of_key_runs(narrow.select(key_cols).take(order)))
+        win = events.take(winners)
 
         # --- write replacement files (file-granularity COW) --------------
-        del_mask = pc.equal(wcol("_op"), pa.scalar("D"))
-        del_mask = pc.fill_null(del_mask, False)
+        del_mask = pc.fill_null(pc.equal(win.column("_op"), pa.scalar("D")), False)
         full = pa.table(
             [
-                *[wcol(n) for n in payload_names],
-                wcol("_bucket"),
-                wcol("_elsn"),
+                *[win.column(n) for n in payload_names],
+                win.column("_bucket"),
+                win.column("_elsn"),
                 del_mask,
             ],
             schema=out_schema,
@@ -393,9 +344,8 @@ def make_apply_kernel(
             full = pa.concat_tables([full, *passthrough])
         # sort data files by key: conv_id runs prefix-compress, parquet
         # min/max stats get tight ranges, per-conversation reads are
-        # sequential (the lake sort-order spec). The winners table is
-        # one row per key, so this sort is much smaller than the LWW
-        # sort above. Masks come from the sorted table itself.
+        # sequential (the lake sort-order spec). Masks come from the
+        # sorted table itself.
         full = full.sort_by([(k, "ascending") for k in key_cols])
         sorted_del = full.column("_deleted")
         counts = {False: 0, True: 0}
@@ -422,24 +372,22 @@ def make_apply_kernel(
                 os.replace(tmp_path, final_path)  # idempotent under task retry
             counts[deleted] = sub.num_rows
 
-        return pd.DataFrame(
-            [
-                {
-                    "_bucket": bucket,
-                    "rows_written": counts[False] + counts[True],
-                    "tombstones": counts[True],
-                    "max_key_rows": max_key_rows,
-                    # work-reduction evidence for the contended-row
-                    # split, wall-clock-independent: rows that entered
-                    # the (ts, lsn) LWW sort vs rows that bypassed it
-                    "lww_rows": int(events.num_rows),
-                    "passthrough_rows": int(
-                        sum(t.num_rows for t in passthrough)
-                    ),
-                    "stats": _json.dumps(stats),
-                    "kept": _json.dumps(kept_paths),
-                }
-            ]
+        return pa.table(
+            {
+                "_bucket": pa.array([bucket], pa.int32()),
+                "rows_written": pa.array([counts[False] + counts[True]], pa.int64()),
+                "tombstones": pa.array([counts[True]], pa.int64()),
+                "max_key_rows": pa.array([max_key_rows], pa.int64()),
+                # work-reduction evidence for the contended-row split,
+                # wall-clock-independent: rows that entered the (ts, lsn)
+                # LWW sort vs rows that bypassed it
+                "lww_rows": pa.array([events.num_rows], pa.int64()),
+                "passthrough_rows": pa.array(
+                    [sum(t.num_rows for t in passthrough)], pa.int64()
+                ),
+                "stats": pa.array([_json.dumps(stats)], pa.string()),
+                "kept": pa.array([_json.dumps(kept_paths)], pa.string()),
+            }
         )
 
     return kernel

@@ -171,7 +171,13 @@ class LakeTable:
     @staticmethod
     def load(spark: SparkSession, root: str) -> "LakeTable":
         t = LakeTable(spark, root)
-        t._snapshot()  # raises if missing
+        snap = t._snapshot()  # raises if missing
+        if "manifests" not in snap:
+            raise ValueError(
+                f"snapshot v{snap['version']} at {root} keeps its file list "
+                "inline (no 'manifests' key); only per-bucket manifest "
+                "snapshots are supported"
+            )
         return t
 
     # -------------------------------------------------------- metadata
@@ -213,13 +219,15 @@ class LakeTable:
             self._mcache[rel] = cached
         return cached
 
-    def _files(self, snap: dict) -> dict[str, list[dict]]:
+    def _files(
+        self, snap: dict, buckets: Sequence[int] | None = None
+    ) -> dict[str, list[dict]]:
         """bucket(str) -> file list, resolved through the manifest
-        pointers (or the legacy inline ``files`` map of pre-manifest
-        snapshots)."""
-        if "manifests" in snap:
-            return {b: self._load_manifest(rel) for b, rel in snap["manifests"].items()}
-        return snap["files"]
+        pointers — of every bucket, or of only ``buckets`` (a commit
+        hydrates just the buckets it touches)."""
+        ms = snap["manifests"]
+        keys = ms if buckets is None else [str(b) for b in buckets if str(b) in ms]
+        return {b: self._load_manifest(ms[b]) for b in keys}
 
     def _write_manifest(self, version: int, bucket, files: list[dict]) -> str:
         # write-once: a per-call uuid token keeps two writers racing on
@@ -245,16 +253,8 @@ class LakeTable:
     ) -> dict[str, str]:
         """New manifest pointer map: write one manifest per CHANGED
         bucket (empty list drops the bucket), carry every other pointer
-        by reference — commit metadata I/O is O(touched buckets). A
-        legacy inline snapshot is migrated in full once."""
-        if "manifests" in snap:
-            manifests = dict(snap["manifests"])
-        else:
-            manifests = {
-                b: self._write_manifest(new_version, b, fs)
-                for b, fs in snap["files"].items()
-                if b not in changed
-            }
+        by reference — commit metadata I/O is O(touched buckets)."""
+        manifests = dict(snap["manifests"])
         for b, fs in changed.items():
             if fs:
                 manifests[b] = self._write_manifest(new_version, b, fs)
@@ -501,10 +501,8 @@ class LakeTable:
 
         Manifest pointers are write-once, so pointer inequality IS file-set
         inequality — the diff is an O(num_buckets) driver-side string
-        compare, no file I/O. Legacy inline-``files`` snapshots fall back
-        to comparing the lists themselves."""
-        a = snap_from.get("manifests", snap_from.get("files", {}))
-        b = snap_to.get("manifests", snap_to.get("files", {}))
+        compare, no file I/O."""
+        a, b = snap_from["manifests"], snap_to["manifests"]
         return sorted(
             int(k) for k in (set(a) | set(b)) if a.get(k) != b.get(k)
         )
@@ -623,7 +621,6 @@ class LakeTable:
         self,
         batch: DataFrame,
         fence: bool = True,
-        mode: str | None = None,
         precombine: bool | None = None,
         target_file_rows: int | None = None,
     ) -> dict[str, Any]:
@@ -634,24 +631,17 @@ class LakeTable:
         ``fence`` is true, already-applied offsets are filtered out and
         the commit log advances atomically with the data.
 
-        Two apply modes (``mode`` / $BEAR_MERGE_MODE):
-
-        - ``"arrow"`` (default): ONE job — shuffle ONLY the batch by
-          bucket; each task reads its buckets' existing files directly,
-          rewrites them (file-granularity COW, vectorized Arrow kernel
-          in lake/arrow_apply.py), and returns its slice of the batch
-          stats (offset ranges, lateness, max event time), which the
-          driver folds into the commit. The table never crosses the
-          shuffle and the batch is scanned exactly once.
-        - ``"sql"``: a small stats job over the batch, then
-          union(batch, touched-bucket table rows) → groupBy(bucket,
-          key).max_by(row, (ts, lsn)) → bucket-partitioned write. Pure
-          Catalyst; kept as the oracle-parity and plan-inspection path.
+        ONE job, for every payload type: shuffle ONLY the batch by
+        bucket; each task reads its buckets' existing files directly,
+        rewrites them (file-granularity COW, the Arrow kernel in
+        lake/arrow_apply.py), and returns its slice of the batch stats
+        (offset ranges, lateness, max event time), which the driver
+        folds into the commit. The table never crosses the shuffle and
+        the batch is scanned exactly once.
 
         Row-count metrics come from the parquet footers of the staged
         files (driver-side metadata, no extra scan).
         """
-        mode = mode or os.environ.get("BEAR_MERGE_MODE", "arrow")
         if precombine is None:
             envv = os.environ.get("BEAR_MERGE_PRECOMBINE", "auto").lower()
             if envv in ("1", "true", "on"):
@@ -687,15 +677,6 @@ class LakeTable:
                     f"{new_schema[c].dataType.simpleString()}): xxhash64 routing "
                     "would re-bucket existing keys"
                 )
-
-        if mode == "arrow":
-            from bear_spark.lake.arrow_apply import supports_schema
-
-            if not supports_schema(schema_to_json(new_schema)):
-                # array/map/struct/decimal payloads (e.g. embedding
-                # columns) — Arrow's hash "last" has no kernels for
-                # them; the Catalyst path handles every Spark type
-                mode = "sql"
 
         has_env = {"source_partition", "offset"} <= set(batch.columns)
 
@@ -770,27 +751,12 @@ class LakeTable:
         stage_dir = os.path.join(self.root, stage_rel)
         shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
-        _log(f"apply start (mode={mode})")
-        max_key_rows = None
-        used_precombine = False
-        kernel_stats = None
-        if mode == "arrow":
-            st = self._merge_arrow_job(
-                src, snap, new_schema, stage_dir, shuffle_parts, has_env, wm,
-                key_cols, seq_col, precombine=precombine,
-                target_file_rows=target_file_rows,
-            )
-            if st is not None:
-                st, max_key_rows, used_precombine, kernel_stats = st
-        else:
-            # precombine is implicit in SQL mode: Catalyst plans the
-            # max_by LWW aggregation with a map-side partial_max_by
-            # before the exchange, which IS the pre-combine the arrow
-            # kernel opts into explicitly
-            st = self._merge_sql_job(
-                src, snap, new_schema, stage_dir, shuffle_parts, has_env, wm,
-                key_cols, seq_col, target_file_rows=target_file_rows,
-            )
+        _log("apply start")
+        st = self._merge_arrow_job(
+            src, snap, new_schema, stage_dir, shuffle_parts, has_env, wm,
+            key_cols, seq_col, precombine=precombine,
+            target_file_rows=target_file_rows,
+        )
         if st is None:
             return {
                 "version": snap["version"],
@@ -798,7 +764,10 @@ class LakeTable:
                 "rows_in": 0,
                 "reason": "batch empty after exactly-once fence",
             }
-        touched, rows_in, late_events, max_ts, seg, per_partition, kept = st
+        (
+            touched, rows_in, late_events, max_ts, seg, per_partition, kept,
+            max_key_rows, used_precombine, kernel_stats,
+        ) = st
 
         # fold this batch's contiguous per-(partition, segment) offset
         # ranges into the commit log
@@ -812,14 +781,7 @@ class LakeTable:
                 new_offsets[k] = _merge_ranges(new_offsets[k])
 
         # commit metadata needs only the TOUCHED buckets' file lists
-        if "manifests" in snap:
-            fmap = {
-                str(b): self._load_manifest(snap["manifests"][str(b)])
-                for b in touched
-                if str(b) in snap["manifests"]
-            }
-        else:
-            fmap = snap["files"]
+        fmap = self._files(snap, touched)
         # target rows actually read = touched buckets minus carried-over
         # files (range-pruned files were never opened)
         tgt_rows = sum(
@@ -864,15 +826,13 @@ class LakeTable:
             # per-source-partition applied-row lineage (north rule:
             # per-partition lineage/metrics); -1 = envelope-less batch
             "rows_by_partition": {str(k): v for k, v in sorted(per_partition.items())},
-        }
-        if kernel_stats is not None:
-            metrics.update(kernel_stats)
-        if max_key_rows is not None:
+            **kernel_stats,
             # batch skew stat: drives the NEXT batch's adaptive map-side
             # pre-combine decision (a hot conv_id persists across batches)
-            metrics["max_key_rows"] = max_key_rows
-            metrics["max_key_share"] = round(max_key_rows / rows_in, 4) if rows_in else 0.0
-            metrics["precombine"] = used_precombine
+            "max_key_rows": max_key_rows,
+            "max_key_share": round(max_key_rows / rows_in, 4) if rows_in else 0.0,
+            "precombine": used_precombine,
+        }
 
         schemas = dict(snap["schemas"])
         if changes:
@@ -888,7 +848,6 @@ class LakeTable:
             "watermark_ts": new_wm,
             "lineage": (snap["lineage"] + [metrics])[-200:],
         }
-        new_snap.pop("files", None)  # legacy inline inventory, if any
         # phase 2: atomic metadata swap (aborts → staged files orphaned,
         # cleaned by vacuum(); the table itself is untouched)
         self._write_snapshot(new_snap, expect_version=expect_version)
@@ -924,18 +883,22 @@ class LakeTable:
     ):
         """File-granularity COW in ONE job: shuffle only the batch, by
         bucket; each task reads its buckets' existing files directly,
-        writes the replacements (vectorized Arrow kernel,
-        lake/arrow_apply.py), and returns its batch-stats slice. The
-        table rows never cross the shuffle — at steady state this moves
-        O(batch) bytes where the SQL path moves O(batch + table).
+        writes the replacements (Arrow kernel, lake/arrow_apply.py), and
+        returns its batch-stats slice. The table rows never cross the
+        shuffle — at steady state this moves O(batch) bytes, not
+        O(batch + table).
 
-        Returns ((touched, rows_in, late_events, max_ts, seg_ranges,
-        per_partition, kept), max_key_rows, used_precombine), or None if
-        the batch is empty after the exactly-once fence.
+        Returns (touched, rows_in, late_events, max_ts, seg_ranges,
+        per_partition, kept, max_key_rows, used_precombine, kernel_stats),
+        or None if the batch is empty after the exactly-once fence.
         """
         import json as _json
 
-        from bear_spark.lake.arrow_apply import APPLY_RESULT_SCHEMA, make_apply_kernel
+        from bear_spark.lake.arrow_apply import (
+            APPLY_RESULT_SCHEMA,
+            arrow_schema,
+            make_apply_kernel,
+        )
 
         part_col = F.col("source_partition").cast("int") if has_env else F.lit(-1)
         off_col = F.col("offset").cast("long") if has_env else F.lit(-1).cast("long")
@@ -951,7 +914,7 @@ class LakeTable:
         )
         # --- skew-aware pre-combine (map-side LWW) -------------------
         # A hot conv_id funnels ALL its events into one bucket task (the
-        # applyInPandas kernel has no partial aggregation), so a skewed
+        # applyInArrow kernel has no partial aggregation), so a skewed
         # key makes one straggler task do O(hot events) work. Reducing
         # the batch per (bucket, key, source_partition, segment) FIRST
         # runs as a hash aggregate with map-side combine: each input
@@ -1019,36 +982,21 @@ class LakeTable:
         # each task reads its own (immutable) manifest from shared
         # storage and range-skips files the batch cannot touch, so both
         # the closure and task memory stay O(touched), not O(table).
-        # Legacy inline snapshots ship the file tuples directly.
-        if "manifests" in snap:
-            kern_kwargs = {
-                "manifests_by_bucket": {
-                    int(b): rel for b, rel in snap["manifests"].items()
-                }
-            }
-            files_arg = None
-        else:
-            kern_kwargs = {}
-            files_arg = {
-                int(b): [(fi["path"], fi.get("kmin"), fi.get("kmax")) for fi in fs]
-                for b, fs in snap["files"].items()
-            }
         kernel = make_apply_kernel(
-            files_arg,
-            schema_to_json(new_schema),
+            arrow_schema(new_schema),
             stage_dir,
             list(key_cols),
             seq_col,
+            {int(b): rel for b, rel in snap["manifests"].items()},
             wm_iso=wm,
             drop_late=bool(snap.get("drop_late")),
             table_root=self.root,
             target_file_rows=target_file_rows,
-            **kern_kwargs,
         )
         # pin the partition count: REPARTITION_BY_NUM both defeats AQE
         # coalescing (sized on the small batch-side shuffle, blind to
         # the table files each task will read) and satisfies the
-        # clustered distribution applyInPandas requires — no second
+        # clustered distribution applyInArrow requires — no second
         # exchange.
         n_part = merge_partition_count(
             self._effective_buckets(snap),
@@ -1058,7 +1006,7 @@ class LakeTable:
         res = (
             src_evt.repartition(n_part, "_bucket")
             .groupBy("_bucket")
-            .applyInPandas(kernel, APPLY_RESULT_SCHEMA)
+            .applyInArrow(kernel, APPLY_RESULT_SCHEMA)
             .collect()
         )
         if not res:
@@ -1097,151 +1045,9 @@ class LakeTable:
             "passthrough_rows": sum(int(r["passthrough_rows"]) for r in res),
         }
         return (
-            (touched, rows_in, late_events, max_ts, seg, per_partition, kept),
-            max_key_rows,
-            precombine,
-            kstats,
+            touched, rows_in, late_events, max_ts, seg, per_partition, kept,
+            max_key_rows, precombine, kstats,
         )
-
-    def _merge_sql_job(
-        self,
-        src: DataFrame,
-        snap: dict,
-        new_schema: T.StructType,
-        stage_dir: str,
-        shuffle_parts: int,
-        has_env: bool,
-        wm: str | None,
-        key_cols: Sequence[str],
-        seq_col: str,
-        target_file_rows: int = 2_000_000,
-    ):
-        """Catalyst COW: a small stats job over the (cached) batch, then
-        union batch + touched-bucket table rows, LWW via
-        groupBy(bucket, key).max_by, bucket-partitioned write.
-
-        repartition on _bucket gives HashPartitioning(_bucket), which
-        SATISFIES the clustered distribution required by
-        groupBy(_bucket, key...) (partitioning keys are a subset of the
-        grouping keys), so the LWW aggregation runs with no second
-        exchange — and because a bucket never splits across partitions,
-        the partitionBy write emits one file per (bucket, tombstone-
-        flag) with no extra repartition. The partition count is
-        decoupled from the bucket count: many buckets per partition
-        keeps the shuffle balanced (balls-in-bins evens out when
-        #buckets >> #partitions) while num_buckets independently sets
-        COW rewrite granularity and file size at scale.
-
-        Returns (touched, rows_in, late_events, max_ts, seg_ranges),
-        or None if the batch is empty after the exactly-once fence.
-        """
-        src = src.persist()
-        try:
-            # stats job: per (source_partition, segment) offset ranges
-            # (contiguous per changelog chunk), row/late counts, max
-            # event time, touched buckets via collect_set. (No
-            # Observation API: inside foreachBatch the optimizer can
-            # eliminate observed branches and `Observation.get` then
-            # blocks forever.)
-            part_col = F.col("source_partition") if has_env else F.lit(-1)
-            off_col = F.col("offset") if has_env else F.lit(-1).cast("long")
-            late_col = (
-                (F.col(seq_col) < F.lit(wm).cast("timestamp")).cast("long")
-                if wm
-                else F.lit(0).cast("long")
-            )
-            stats = (
-                src.groupBy(part_col.alias("_sp"), F.col("_segment").alias("_f"))
-                .agg(
-                    F.min(off_col).alias("lo"),
-                    F.max(off_col).alias("hi"),
-                    F.count(F.lit(1)).alias("c"),
-                    F.max(seq_col).alias("mts"),
-                    F.sum(late_col).alias("late"),
-                    F.collect_set("_bucket").alias("bks"),
-                )
-                .collect()
-            )
-            touched = sorted({b for r in stats for b in r["bks"]})
-            if not touched:
-                return None
-            rows_in = sum(int(r["c"]) for r in stats)
-            late_events = sum(int(r["late"] or 0) for r in stats)
-            max_ts = max((r["mts"] for r in stats if r["mts"] is not None), default=None)
-            seg: dict[tuple[int, str], list[int]] = {}
-            per_partition: dict[int, int] = {}
-            for r in stats:
-                k = (int(r["_sp"]), r["_f"])
-                per_partition[k[0]] = per_partition.get(k[0], 0) + int(r["c"])
-                lo, hi = int(r["lo"]), int(r["hi"])
-                if k in seg:
-                    seg[k][0] = min(seg[k][0], lo)
-                    seg[k][1] = max(seg[k][1], hi)
-                else:
-                    seg[k] = [lo, hi]
-
-            src_evt = self._align_to(
-                src,
-                new_schema,
-                F.col("_bucket"),
-                F.col("op").alias("_op"),
-                F.col("lsn").alias("_elsn"),
-            )
-            if snap.get("drop_late") and wm:
-                # watermark as hard admission boundary: late events were
-                # counted in the stats above but never apply (null event
-                # times are kept — they always lose LWW anyway)
-                src_evt = src_evt.filter(
-                    F.col(seq_col).isNull()
-                    | (F.col(seq_col) >= F.lit(wm).cast("timestamp"))
-                )
-            tgt = self._read_files(snap, touched)
-            tgt_evt = self._align_to(
-                tgt.withColumn(
-                    "_op", F.when(F.col("_deleted"), F.lit("D")).otherwise(F.lit("U"))
-                ).withColumn("_elsn", F.col("_lsn")),
-                new_schema,
-                "_bucket",
-                "_op",
-                "_elsn",
-            )
-            n_part = merge_partition_count(
-                len(touched),
-                shuffle_parts,
-                self.spark.sparkContext.defaultParallelism,
-            )
-            unioned = src_evt.unionByName(tgt_evt).repartition(n_part, "_bucket")
-            row = F.struct(*[F.col(c) for c in unioned.columns])
-            seq_s = F.struct(F.col(seq_col), F.col("_elsn"))
-            winner = (
-                unioned.groupBy("_bucket", *key_cols)
-                .agg(F.max_by(row, seq_s).alias("_row"))
-                .select("_row.*")
-            )
-            final = winner.select(
-                *[F.col(f.name) for f in new_schema.fields],
-                F.col("_bucket"),
-                F.col("_elsn").alias("_lsn"),
-                (F.col("_op") == "D").alias("_deleted"),
-            )
-            (
-                final.withColumn("_bucket_dir", F.col("_bucket"))
-                .withColumn("_del", F.col("_deleted"))
-                # key-sorted, size-bounded files — same contract as the
-                # arrow kernel and split_buckets: sorted keys give the
-                # footer min/max ranges that key-range pruning reads,
-                # maxRecordsPerFile stops a huge bucket becoming one
-                # unbounded file
-                .sortWithinPartitions("_bucket_dir", "_del", *key_cols)
-                .write.option("maxRecordsPerFile", max(1, int(target_file_rows)))
-                .partitionBy("_bucket_dir", "_del")
-                .mode("overwrite")
-                .parquet(stage_dir)
-            )
-            # whole-bucket rewrite: nothing carried over
-            return touched, rows_in, late_events, max_ts, seg, per_partition, {}
-        finally:
-            src.unpersist()
 
     # ------------------------------------------------------- maintenance
     def split_buckets(
@@ -1323,14 +1129,7 @@ class LakeTable:
         # only the buckets being split hydrate their manifests — the
         # same touched-only rule as merge; O(k) metadata per step, not
         # O(num_buckets)
-        if "manifests" in snap:
-            fmap = {
-                str(b): self._load_manifest(snap["manifests"][str(b)])
-                for b in old_range
-                if str(b) in snap["manifests"]
-            }
-        else:
-            fmap = snap["files"]
+        fmap = self._files(snap, old_range)
         rows_rewritten = sum(
             fi["rows"] for b in old_range for fi in fmap.get(str(b), [])
         )
@@ -1364,7 +1163,6 @@ class LakeTable:
         manifests = self._commit_manifests(snap, new_version, changed)
         new_ptr = ptr + k
         new_snap = {**snap, "version": new_version, "manifests": manifests}
-        new_snap.pop("files", None)
         # splits are maintenance commits, durable in table history like
         # merge metrics (an operator explaining a latency bump must see
         # which versions were split steps, not just that files moved)
@@ -1511,7 +1309,6 @@ class LakeTable:
             snap, new_version, {b: fs for b, fs in staged.items()}
         )
         new_snap = {**snap, "version": new_version, "manifests": manifests}
-        new_snap.pop("files", None)
         self._write_snapshot(new_snap, expect_version=expect_version)
         return {"buckets_compacted": len(frag), "files_before": files_before}
 
@@ -1594,7 +1391,6 @@ class LakeTable:
             changed[b] = live + newdead
         manifests = self._commit_manifests(snap, new_version, changed)
         new_snap = {**snap, "version": new_version, "manifests": manifests}
-        new_snap.pop("files", None)
         self._write_snapshot(new_snap, expect_version=expect_version)
         return {"expired": before - after, "kept": after}
 
@@ -1615,7 +1411,7 @@ class LakeTable:
         mdir = os.path.join(self.root, "_meta", "manifests")
         if os.path.isdir(mdir):
             live_manifests = {
-                os.path.basename(rel) for rel in snap.get("manifests", {}).values()
+                os.path.basename(rel) for rel in snap["manifests"].values()
             }
             for f in sorted(os.listdir(mdir)):
                 if f.endswith(".json") and f not in live_manifests:

@@ -54,10 +54,9 @@ when-chain (small n_lists) and an Arrow-batched BLAS argmin kernel
 
 from __future__ import annotations
 
-import itertools
+import heapq
 import json
 import logging
-import math
 import os
 import shutil
 import uuid
@@ -413,11 +412,11 @@ class VectorIndex:
         whose hyperplane margins |q·p| are smallest come first — those
         are the planes the query most nearly crossed, so their flips
         hold the likeliest near-neighbours. Enumeration stops at
-        ``max_probe_lists``, and flip candidates per shell are drawn
-        from only as many smallest-margin planes as the remaining
-        budget needs, so the work is O(budget), never C(n_planes, h) —
-        at n_planes=24 the full 2-shell enumeration is ~300 combos but
-        a 64-budget probe examines at most ~80."""
+        ``max_probe_lists``: each shell is walked best-first by margin
+        sum with a small heap and yields only as many flip sets as the
+        remaining budget needs, so the work is O(budget · h), never
+        C(n_planes, h) — at n_planes=24 the full 2-shell enumeration is
+        ~300 combos but a 64-budget probe pops at most 63."""
         m = self.meta
         qv = np.asarray(list(query), dtype=float)
         if m["kind"] == "ivf":
@@ -431,27 +430,32 @@ class VectorIndex:
         nb = len(m["state"])
         by_margin = sorted(range(nb), key=lambda i: (margins[i], i))
         lists: list[int] = [qbucket]
-        seen = {qbucket}
-        for h in range(1, max_probe_hamming + 1):
+        for h in range(1, min(max_probe_hamming, nb) + 1):
             need = max_probe_lists - len(lists)
             if need <= 0:
                 break
-            # smallest plane pool whose C(pool, h) covers the need
-            pool = h
-            while pool < nb and math.comb(pool, h) < need:
-                pool += 1
-            cand = by_margin[:pool]
-            combos = sorted(
-                itertools.combinations(cand, h),
-                key=lambda fl: (sum(margins[i] for i in fl), fl),
-            )[:need]
-            for flips in combos:
+            # best-first over h-subsets of margin ranks: start from the h
+            # smallest; a pop's successors bump one rank into the gap
+            # above it, which never lowers the sum, so pops come out in
+            # exact margin-sum order (ties by rank) and the budget keeps
+            # the true `need` cheapest flips
+            first = tuple(range(h))
+            heap = [(sum(margins[by_margin[r]] for r in first), first)]
+            queued = {first}
+            while heap and need > 0:
+                _, ranks = heapq.heappop(heap)
                 b = qbucket
-                for i in flips:
-                    b ^= 1 << i
-                if b not in seen:
-                    seen.add(b)
-                    lists.append(b)
+                for r in ranks:
+                    b ^= 1 << by_margin[r]
+                lists.append(b)
+                need -= 1
+                for j, r in enumerate(ranks):
+                    if r + 1 < (ranks[j + 1] if j + 1 < h else nb):
+                        nxt = ranks[:j] + (r + 1,) + ranks[j + 1 :]
+                        if nxt not in queued:
+                            queued.add(nxt)
+                            cost = sum(margins[by_margin[x]] for x in nxt)
+                            heapq.heappush(heap, (cost, nxt))
         return sorted(lists)
 
     def _list_dir(self, meta: dict, b: int) -> str | None:

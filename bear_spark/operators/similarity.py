@@ -81,15 +81,16 @@ def _stackable(pdf, vec_col: str, dim: int | None):
     propagates null through zip_with/aggregate and the row falls out of
     the top-k / pair comparison; dropping here makes the Arrow kernels
     degrade identically instead of raising from ``np.stack``. When
-    ``dim`` is None (no query vector) the first non-null row's length
-    anchors the expectation."""
+    ``dim`` is None (no query vector) the batch's most common length
+    anchors the expectation (the shortest on a tie), so one ragged row
+    cannot evict the valid ones, whatever the row order."""
     col = pdf[vec_col]
     mask = col.notna()
     if not mask.any():
         return pdf.iloc[0:0]
-    if dim is None:
-        dim = len(col[mask].iloc[0])
     lens = col.map(lambda v: len(v) if v is not None else -1)
+    if dim is None:
+        dim = lens[mask].mode().iloc[0]
     return pdf[mask & (lens == dim)]
 
 

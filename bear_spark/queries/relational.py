@@ -335,12 +335,18 @@ def join_range_price_band(spark, sf_dir):
       EXCEPT
       SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     )
+    UNION ALL
+    SELECT 'union' AS op, custkey FROM (
+      SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+      UNION
+      SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9000
+    )
     """,
 )
 def set_ops_custkeys(spark, sf_dir):
-    """INTERSECT and EXCEPT (distinct semantics) in one driver-checked
-    result, tagged by op. Both compile to shuffled distinct-join plans;
-    UNION (the third set op) has its own query below."""
+    """INTERSECT, EXCEPT and UNION (distinct semantics) in one
+    driver-checked result, tagged by op. INTERSECT/EXCEPT compile to
+    shuffled distinct-join plans, UNION to a union + distinct aggregate."""
     orders = t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")
     early = orders.filter(
@@ -353,27 +359,20 @@ def set_ops_custkeys(spark, sf_dir):
     f = orders.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("custkey")
     )
+    ckey = F.col("c_custkey").alias("custkey")
     exc = (
-        cust.select(F.col("c_custkey").alias("custkey"))
+        cust.select(ckey)
         .subtract(f)
         .select(F.lit("except").alias("op"), "custkey")
     )
-    return inter.unionByName(exc)
-
-
-@query(
-    "set_union_segments",
-    """
-    SELECT DISTINCT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-    UNION
-    SELECT DISTINCT c_custkey FROM customer WHERE c_acctbal > 9000
-    """,
-)
-def set_union_segments(spark, sf_dir):
-    cust = t(spark, sf_dir, "customer")
-    a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    b = cust.filter(F.col("c_acctbal") > 9000).select("c_custkey")
-    return a.union(b).distinct()
+    building = cust.filter(F.col("c_mktsegment") == "BUILDING").select(ckey)
+    rich = cust.filter(F.col("c_acctbal") > 9000).select(ckey)
+    uni = (
+        building.union(rich)
+        .distinct()
+        .select(F.lit("union").alias("op"), "custkey")
+    )
+    return inter.unionByName(exc).unionByName(uni)
 
 
 # ------------------------------------------------------------- rollup/cube

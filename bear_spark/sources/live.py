@@ -53,18 +53,6 @@ class TransientSourceError(RuntimeError):
     """A retryable fetch failure (timeouts, 5xx, connection resets)."""
 
 
-def _arrow_schema(spark_schema):
-    """Flat Spark StructType -> pyarrow schema for chunk files (same
-    primitive-type map the merge kernel uses)."""
-    import pyarrow as pa
-
-    from bear_spark.lake.arrow_apply import _arrow_type
-
-    return pa.schema(
-        [(f.name, _arrow_type(pa, f.dataType.typeName())) for f in spark_schema.fields]
-    )
-
-
 @dataclass
 class Page:
     """One page of a cursor-paginated source.
@@ -174,7 +162,9 @@ class LiveTail:
         # ``schema`` (a Spark StructType) pins the chunk files' physical
         # types to what the changelog reader will declare — python-list
         # inference would e.g. widen int32 columns to int64
-        self.arrow_schema = None if schema is None else _arrow_schema(schema)
+        from bear_spark.lake.arrow_apply import arrow_schema
+
+        self.arrow_schema = None if schema is None else arrow_schema(schema)
         self.columns = (
             [f.name for f in schema.fields] if schema is not None
             else list(columns) if columns else None

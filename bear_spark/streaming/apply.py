@@ -45,7 +45,6 @@ class CDCApplier:
         max_files_per_trigger: int = 4,
         compact_every: int = 0,
         metrics_flush_every: int = 8,
-        merge_mode: str | None = None,
         merge_precombine: bool | None = None,
         target_file_rows: int | None = None,
         split_rows_per_bucket: int = 0,
@@ -63,7 +62,6 @@ class CDCApplier:
         self.max_files_per_trigger = max_files_per_trigger
         # merge knobs threaded through from Settings (None defers to
         # LakeTable.merge's env/default resolution)
-        self.merge_mode = merge_mode
         self.merge_precombine = merge_precombine
         self.target_file_rows = target_file_rows
         # bound small-file accumulation on long streams: every N applied
@@ -141,7 +139,6 @@ class CDCApplier:
             try:
                 m = self.table.merge(
                     batch,
-                    mode=self.merge_mode,
                     precombine=self.merge_precombine,
                     target_file_rows=self.target_file_rows,
                 )

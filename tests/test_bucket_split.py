@@ -106,11 +106,11 @@ def test_split_all_at_once_preserves_state(spark, tmp_path):
     assert tbl.lookup("c001").filter(F.col("turn_idx") == 0).collect()[0]["text"] == "post-split"
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
+@pytest.mark.parametrize("mode", ["arrow"])  # the one merge path
 def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
     tbl = _mk(spark, tmp_path / f"t2_{mode}", num_buckets=4)
     a = _batch_a()
-    tbl.merge(_events(spark, a), mode=mode)
+    tbl.merge(_events(spark, a))
 
     # split the first two old buckets, leaving the frontier mid-table
     out = tbl.split_buckets(factor=2, max_buckets=1)
@@ -130,7 +130,7 @@ def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
         (f"c{i:03d}", 2, None, "2024-03-01 00:00:01", "D", 200000 + i)
         for i in range(0, 40, 3)
     ]
-    tbl.merge(_events(spark, b), mode=mode)
+    tbl.merge(_events(spark, b))
 
     # mid-split lookups prune to the correct side of the frontier
     for cid in ("c000", "c005", "c017", "c031"):
@@ -141,7 +141,7 @@ def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
     out = tbl.split_buckets()
     assert out["complete"] is True and out["num_buckets"] == 8
     c = [("c007", 0, "final", "2024-04-01 00:00:00", "U", 300000)]
-    tbl.merge(_events(spark, c), mode=mode)
+    tbl.merge(_events(spark, c))
 
     assert _state(tbl) == _lww_oracle(spark, a + b + c)
 

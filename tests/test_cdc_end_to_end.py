@@ -141,37 +141,26 @@ def test_delete_tombstone_blocks_stale_resurrection(spark, table):
     assert list(out["text"]) == ["v3"]
 
 
-@pytest.mark.parametrize("modes", [("arrow", "sql")])
-def test_apply_modes_converge_identically(spark, tmp_path, events_pdf, modes):
-    """The Arrow file-granularity COW kernel and the Catalyst union/
-    max_by path must produce byte-identical final state (live rows AND
-    tombstones) over the same chunked replay."""
+def test_merge_full_state_matches_oracle_winners(spark, table, events_pdf):
+    """The merge kernel's full state — live rows, tombstones and each
+    row's ``_lsn`` — equals the pandas oracle's last event per key over
+    the same chunked replay."""
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
-    states = []
-    for mode in modes:
-        t = LakeTable.create(
-            spark,
-            str(tmp_path / f"tbl_{mode}"),
-            TRANSCRIPT_SCHEMA,
-            key_cols=KEY_COLS,
-            seq_col="ts",
-            num_buckets=4,
-        )
-        for lo in range(0, N_EVENTS, 2500):
-            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)), mode=mode)
-        states.append(
-            t.read(include_deleted=True, include_system=True)
-            .toPandas()
-            .sort_values(KEY_COLS)
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(states[0], states[1], check_like=True)
+    for lo in range(0, N_EVENTS, 2500):
+        table.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
+    got = table.read(include_deleted=True, include_system=True).toPandas()
+    win = oracle.winners(events_pdf)
+    expected = win.assign(_deleted=win["op"] == "D").rename(columns={"lsn": "_lsn"})
+    compared = set(got.columns) & set(expected.columns)
+    assert compared == {*TRANSCRIPT_SCHEMA.fieldNames(), "_lsn", "_deleted"}
+    assert expected["_deleted"].any() and not expected["_deleted"].all()
+    oracle.assert_states_equal(got, expected)
 
 
 def test_precombine_merge_converges_identically(spark, tmp_path, monkeypatch):
     """Opt-in map-side pre-combine (skew path): chunked replay with
     BEAR_MERGE_PRECOMBINE=1 must yield byte-identical state and the
-    same commit-stat totals as the raw arrow path."""
+    same commit-stat totals as the raw path."""
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
     states, totals = [], []
     for pre in ("0", "1"):
@@ -185,7 +174,7 @@ def test_precombine_merge_converges_identically(spark, tmp_path, monkeypatch):
             num_buckets=4,
         )
         ms = [
-            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)), mode="arrow")
+            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
             for lo in range(0, N_EVENTS, 2500)
         ]
         totals.append(
@@ -319,8 +308,8 @@ def test_point_lookup_prunes_to_one_bucket(spark, table, events_pdf):
 
     import pyarrow.parquet as pq
 
-    snap = table.snapshot
-    fi = next(iter(snap["files"].values()))[0]
+    files = table.snapshot["files"]
+    fi = next(iter(files.values()))[0]
     pdf = pq.read_table(os.path.join(table.root, fi["path"])).to_pandas()
     assert list(pdf["conv_id"]) == sorted(pdf["conv_id"])
 

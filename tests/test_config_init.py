@@ -10,7 +10,7 @@ from bear_spark.init import bootstrap
 
 def test_settings_defaults_and_env_precedence(tmp_path):
     s = Settings.load(env_file=str(tmp_path / "missing.env"), env={})
-    assert s.num_buckets == 64 and s.merge_mode == "arrow" and not s.drop_late
+    assert s.num_buckets == 64 and not s.drop_late
 
     envf = tmp_path / ".env"
     envf.write_text(
@@ -59,7 +59,7 @@ def test_quick_setup_checklist(tmp_path):
     # itself, so persisting 'local[4]' verbatim would crash the session
     assert s.cores == "4"
     assert s.embedding_provider == "http"
-    assert s.num_buckets == 64 and s.merge_mode == "arrow"  # defaults block
+    assert s.num_buckets == 64  # defaults block
 
     # never overwrites an existing env file (bear/init.py:85-89)
     before = envf.read_text()

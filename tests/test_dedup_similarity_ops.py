@@ -311,3 +311,21 @@ def test_pandas_kernels_tolerate_null_and_ragged_vectors(spark):
     pair_ids = {r.id1 for r in pairs} | {r.id2 for r in pairs}
     assert 100 not in pair_ids and 101 not in pair_ids
     assert pairs  # the valid rows still pair up
+
+
+def test_neardup_kernel_survives_a_ragged_first_row(spark):
+    """The expected vector length must not come from whichever row a
+    batch happens to start with: a ragged FIRST row in a block used to
+    become the anchor and evict every valid row, so the block lost all
+    its pairs."""
+    from bear_spark.operators.similarity import cosine_neardup_pairs_pandas
+
+    rows = [(0, [1.0, 0.0], 0)]  # ragged, and first
+    rows += [(i, [1.0, 0.1 * i, 0.0], 0) for i in range(1, 5)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    pairs = cosine_neardup_pairs_pandas(
+        df.coalesce(1), threshold=-1.1, block_col="label"
+    ).collect()
+    assert {(r.id1, r.id2) for r in pairs} == {
+        (a, b) for a in range(1, 5) for b in range(a + 1, 5)
+    }

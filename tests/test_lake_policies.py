@@ -1,6 +1,6 @@
 """Merge-policy edges: late-event admission (drop_late) vs tombstone
 expiry, bucket-hash stability across arrival types, and Arrow-kernel
-type coverage with SQL fallback for nested payloads."""
+type coverage for flat, binary and nested payloads."""
 
 from __future__ import annotations
 
@@ -8,9 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bear_spark import oracle
 from bear_spark.lake import LakeTable
-from bear_spark.lake.arrow_apply import supports_schema
-from bear_spark.schema import schema_to_json
 
 SCHEMA = T.StructType(
     [
@@ -30,7 +29,7 @@ def _events(spark, rows):
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
+@pytest.mark.parametrize("mode", ["arrow"])  # the one merge path
 def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, mode):
     """On a drop_late table the watermark is a hard admission boundary,
     so expire_tombstones (watermark default) can never be beaten by a
@@ -45,14 +44,14 @@ def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, m
         lateness_sec=0,
         drop_late=True,
     )
-    tbl.merge(_events(spark, [("c1", 0, "hello", "2024-01-10 00:00:00", "I", 1)]), mode=mode)
-    m = tbl.merge(_events(spark, [("c1", 0, None, "2024-01-11 00:00:00", "D", 2)]), mode=mode)
+    tbl.merge(_events(spark, [("c1", 0, "hello", "2024-01-10 00:00:00", "I", 1)]))
+    m = tbl.merge(_events(spark, [("c1", 0, None, "2024-01-11 00:00:00", "D", 2)]))
     assert m["tombstones"] == 1
     assert tbl.read().count() == 0
     # push the watermark strictly past the delete's event time (a
     # tombstone AT the watermark is still live — an equal-ts event with
     # a higher lsn remains admissible)
-    tbl.merge(_events(spark, [("c9", 0, "advance wm", "2024-01-12 00:00:00", "I", 10)]), mode=mode)
+    tbl.merge(_events(spark, [("c9", 0, "advance wm", "2024-01-12 00:00:00", "I", 10)]))
 
     out = tbl.expire_tombstones()  # watermark default is allowed here
     assert out["expired"] == 1
@@ -60,8 +59,7 @@ def test_drop_late_table_survives_expiry_without_resurrection(spark, tmp_path, m
     # a late, stale update (ts below the 2024-01-11 watermark) arrives:
     # it must be counted AND dropped, never resurrecting the deleted key
     m = tbl.merge(
-        _events(spark, [("c1", 0, "stale resurrect", "2024-01-05 00:00:00", "U", 3)]),
-        mode=mode,
+        _events(spark, [("c1", 0, "stale resurrect", "2024-01-05 00:00:00", "U", 3)])
     )
     assert m["late_events"] == 1
     assert m["late_dropped"] == 1
@@ -103,7 +101,7 @@ def test_keep_late_table_applies_late_events(spark, tmp_path):
     assert tbl.read().count() == 2
 
 
-@pytest.mark.parametrize("mode", ["arrow", "sql"])
+@pytest.mark.parametrize("mode", ["arrow"])  # the one merge path
 def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
     """xxhash64 is type-sensitive: a batch whose bucket column arrives
     as int while the table stores long must still route each key to the
@@ -130,7 +128,7 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
         F.lit("I").alias("op"),
         F.col("id").alias("lsn"),
     )
-    tbl.merge(base, mode=mode)
+    tbl.merge(base)
     # same keys, narrower arrival type, newer ts
     upd = spark.range(50).select(
         F.col("id").cast("int").alias("k"),
@@ -139,7 +137,7 @@ def test_bucket_hash_stable_when_key_arrives_narrower(spark, tmp_path, mode):
         F.lit("U").alias("op"),
         (F.col("id") + 100).alias("lsn"),
     )
-    tbl.merge(upd, mode=mode)
+    tbl.merge(upd)
     got = tbl.read().toPandas()
     assert len(got) == 50, "duplicate keys across buckets — hash routed by arrival type"
     assert set(got["text"]) == {"v2"}
@@ -213,32 +211,118 @@ def test_bucket_column_type_widening_rejected(spark, tmp_path):
         tbl.merge(wide)
 
 
-def test_array_payload_falls_back_to_sql_on_default_merge(spark, tmp_path):
-    """An embedding array<double> payload can't take the Arrow kernel
-    (no hash-last kernel for lists) — the default merge must silently
-    use the SQL path instead of raising."""
-    schema = T.StructType(
+NESTED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("emb", T.ArrayType(T.DoubleType())),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [T.StructField("src", T.StringType()), T.StructField("n", T.IntegerType())]
+            ),
+        ),
+        T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
+        T.StructField("price", T.DecimalType(10, 2)),
+        T.StructField("ts", T.StringType()),  # cast to timestamp on arrival
+        T.StructField("op", T.StringType()),
+        T.StructField("lsn", T.LongType()),
+    ]
+)
+
+
+def test_nested_payload_merges_on_the_kernel(spark, tmp_path):
+    """Array, struct, map and decimal payloads take the same Arrow merge
+    as flat ones: inserts, updates (one nulling a non-null nested value)
+    and deletes converge to the oracle's winners, tombstones and _lsn
+    included, and a nested-payload merge starts no more Spark jobs than
+    a flat-payload merge of the same batch."""
+    from decimal import Decimal
+
+    import pandas as pd
+
+    def row(doc, ts, op, lsn, emb=(0.5,), tags=("a",), meta=("s", 1), counts=None,
+            price="1.25"):
+        return (
+            doc,
+            None if emb is None else list(emb),
+            None if tags is None else list(tags),
+            meta,
+            {"k": doc} if counts is None else counts,
+            None if price is None else Decimal(price),
+            ts,
+            op,
+            lsn,
+        )
+
+    batches = [
+        [row(d, "2024-01-01 00:00:00", "I", d, emb=(float(d), 0.5)) for d in range(6)],
         [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("emb", T.ArrayType(T.DoubleType())),
-            T.StructField("ts", T.TimestampType()),
-        ]
+            row(1, "2024-01-02 00:00:00", "U", 11, emb=None),  # non-null -> null
+            row(2, "2024-01-02 00:00:00", "U", 12, meta=None, counts={}, price=None),
+            row(3, "2024-01-02 00:00:00", "U", 13, tags=("x", "y"), counts={"a": 7}),
+            row(4, "2024-01-02 00:00:00", "D", 14),
+            row(5, "2023-12-31 00:00:00", "U", 15, tags=("stale",)),  # loses LWW
+            row(6, "2024-01-02 00:00:00", "I", 16, price="99999999.99"),
+        ],
+        [
+            row(3, "2024-01-03 00:00:00", "U", 23, tags=None, meta=("t", None)),
+            row(6, "2024-01-03 00:00:00", "D", 26),
+            row(4, "2024-01-01 12:00:00", "U", 24),  # stale: the tombstone holds
+        ],
+    ]
+    payload = T.StructType(
+        [f for f in NESTED_SCHEMA.fields if f.name not in ("ts", "op", "lsn")]
+        + [T.StructField("ts", T.TimestampType())]
     )
-    assert not supports_schema(schema_to_json(schema))
-    tbl = LakeTable.create(
-        spark, str(tmp_path / "tbl"), schema, key_cols=["doc_id"], seq_col="ts", num_buckets=2
+    nested = LakeTable.create(
+        spark, str(tmp_path / "nested"), payload,
+        key_cols=["doc_id"], seq_col="ts", num_buckets=2,
     )
-    df = spark.range(10).select(
-        F.col("id").alias("doc_id"),
-        F.array(F.col("id").cast("double"), F.lit(0.5)).alias("emb"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
-        F.lit("I").alias("op"),
-        F.col("id").alias("lsn"),
+    flat = LakeTable.create(
+        spark, str(tmp_path / "flat"),
+        T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("src", T.StringType()),
+                T.StructField("ts", T.TimestampType()),
+            ]
+        ),
+        key_cols=["doc_id"], seq_col="ts", num_buckets=2,
     )
-    m = tbl.merge(df)  # default mode=arrow → auto-fallback
-    assert m["rows_written"] == 10
-    got = tbl.read().toPandas().sort_values("doc_id")
-    assert got["emb"].iloc[3][0] == 3.0
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(fn):
+        before = set(tracker.getJobIdsForGroup())
+        fn()
+        return len(set(tracker.getJobIdsForGroup()) - before)
+
+    for rows in batches:
+        ev = spark.createDataFrame(rows, NESTED_SCHEMA).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        flat_ev = ev.select("doc_id", F.col("meta.src").alias("src"), "ts", "op", "lsn")
+        n_flat = jobs_of(lambda: flat.merge(flat_ev))
+        n_nested = jobs_of(lambda: nested.merge(ev))
+        assert n_nested <= n_flat, (n_nested, n_flat)
+
+    events = pd.DataFrame(
+        [r for b in batches for r in b], columns=NESTED_SCHEMA.fieldNames()
+    )
+    # winner rows as (payload..., _lsn, _deleted), the table's column order
+    expected = sorted(
+        (*r[:-2], r.lsn, r.op == "D")
+        for r in oracle.winners(events, key_cols=["doc_id"]).itertuples(index=False)
+    )
+    got = sorted(
+        tuple(r)
+        for r in nested.read(include_deleted=True, include_system=True)
+        .withColumn("ts", F.col("ts").cast("string"))
+        .drop("_bucket")
+        .collect()
+    )
+    assert got == expected
+    assert [r[0] for r in got if r[-1]] == [4, 6]  # tombstones kept
 
 
 def test_merge_carries_over_range_pruned_files(spark, tmp_path):
@@ -263,7 +347,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
         seq_col="ts",
         num_buckets=1,  # one bucket → pruning, not bucketing, must save us
     )
-    tbl.merge(_events(spark, rows("a", "v1", 0, "2024-01-01 00:00:00")), mode="arrow")
+    tbl.merge(_events(spark, rows("a", "v1", 0, "2024-01-01 00:00:00")))
     snap1 = tbl.snapshot
     afile = snap1["files"]["0"][0]
     assert afile["kmin"] == "a00" and afile["kmax"] == "a49"
@@ -271,7 +355,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
     digest1 = hashlib.md5(open(apath, "rb").read()).hexdigest()
 
     # disjoint key range: the a-file must be carried over untouched
-    m = tbl.merge(_events(spark, rows("m", "v1", 100, "2024-01-02 00:00:00")), mode="arrow")
+    m = tbl.merge(_events(spark, rows("m", "v1", 100, "2024-01-02 00:00:00")))
     assert m["target_rows_read"] == 0, "a-file was read despite disjoint range"
     snap2 = tbl.snapshot
     paths2 = [fi["path"] for fi in snap2["files"]["0"]]
@@ -279,7 +363,7 @@ def test_merge_carries_over_range_pruned_files(spark, tmp_path):
 
     # touch one m-key: m-file rewritten, a-file carried again
     m = tbl.merge(
-        _events(spark, [("m10", 0, "v2", "2024-01-03 00:00:00", "U", 200)]), mode="arrow"
+        _events(spark, [("m10", 0, "v2", "2024-01-03 00:00:00", "U", 200)])
     )
     assert m["target_rows_read"] == 50, "only the m-file should be read"
     snap3 = tbl.snapshot
@@ -305,7 +389,6 @@ def test_binary_payload_supported_by_arrow_kernel(spark, tmp_path):
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    assert supports_schema(schema_to_json(schema))
     tbl = LakeTable.create(
         spark, str(tmp_path / "tbl"), schema, key_cols=["doc_id"], seq_col="ts", num_buckets=2
     )
@@ -316,7 +399,7 @@ def test_binary_payload_supported_by_arrow_kernel(spark, tmp_path):
         F.lit("I").alias("op"),
         F.col("id").alias("lsn"),
     )
-    tbl.merge(df, mode="arrow")
+    tbl.merge(df)
     got = tbl.read().toPandas().sort_values("doc_id")
     assert bytes(got["payload"].iloc[2]) == b"blob-2"
 
@@ -373,6 +456,25 @@ def test_commit_metadata_is_per_touched_bucket(spark, tmp_path):
     assert left == {os.path.basename(r) for r in snap2["manifests"].values()}
     assert len(left) <= n_manifests_v1 + 1
     assert tbl.read().count() == 80
+
+
+def test_load_rejects_snapshot_without_manifests(spark, tmp_path):
+    """A snapshot that keeps its file list inline (no ``manifests`` key)
+    is refused at load with a clear error, not a later KeyError."""
+    import json
+    import os
+
+    root = str(tmp_path / "tbl")
+    LakeTable.create(spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"], num_buckets=2)
+    path = os.path.join(root, "_meta", "v0.json")
+    with open(path) as f:
+        snap = json.load(f)
+    snap["files"] = {}
+    del snap["manifests"]
+    with open(path, "w") as f:
+        json.dump(snap, f)
+    with pytest.raises(ValueError, match="manifests"):
+        LakeTable.load(spark, root)
 
 
 def test_merge_splits_output_files_at_target_rows(spark, tmp_path):
@@ -533,13 +635,10 @@ def test_untouched_rows_pass_through_lww_under_schema_evolution(spark, tmp_path)
     seed = [
         (f"c{i:02d}", 0, f"v{i}", "2024-01-01 00:00:00", "I", i) for i in range(8)
     ]
-    tbl.merge(_events(spark, seed), mode="arrow")
+    tbl.merge(_events(spark, seed))
     # delete one key so the bucket also has a tombstone file whose rows
     # (except the contended one) must pass through unchanged
-    tbl.merge(
-        _events(spark, [("c03", 0, None, "2024-01-02 00:00:00", "D", 100)]),
-        mode="arrow",
-    )
+    tbl.merge(_events(spark, [("c03", 0, None, "2024-01-02 00:00:00", "D", 100)]))
 
     # evolved batch: adds a `tool` column, touches ONLY c01 — the other
     # seven keys (six live + one tombstone) ride the passthrough path
@@ -548,7 +647,7 @@ def test_untouched_rows_pass_through_lww_under_schema_evolution(spark, tmp_path)
         "conv_id string, turn_idx int, text string, ts string, tool string, "
         "op string, lsn long",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    m = tbl.merge(ev, mode="arrow")
+    m = tbl.merge(ev)
     assert m["schema_changes"], "tool column should evolve the schema"
     # work-reduction counters: only the batch row + the contended c01
     # row entered the LWW sort; the six other live rows rode the
@@ -684,11 +783,10 @@ def test_merge_partition_count_gives_parallelism_independent_waves(monkeypatch):
     assert merge_partition_count(1, 8, 0) == 1
 
 
-def test_sql_merge_splits_output_files_at_target_rows(spark, tmp_path):
-    """mode='sql' honors the same target_file_rows contract as the
-    arrow kernel: key-sorted chunks bounded by the knob, tight
-    non-overlapping manifest ranges — not one unbounded file per
-    bucket side."""
+def test_merge_chunks_whole_bucket_rewrite_at_target_rows(spark, tmp_path):
+    """A whole-bucket rewrite honors the target_file_rows contract:
+    key-sorted chunks bounded by the knob, tight non-overlapping
+    manifest ranges — not one unbounded file per bucket side."""
     tbl = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -701,7 +799,7 @@ def test_sql_merge_splits_output_files_at_target_rows(spark, tmp_path):
         (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
         for i in range(250)
     ]
-    m = tbl.merge(_events(spark, rows), mode="sql", target_file_rows=100)
+    m = tbl.merge(_events(spark, rows), target_file_rows=100)
     assert m["rows_written"] == 250
     live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
     assert len(live) == 3, [fi["rows"] for fi in live]

@@ -301,6 +301,34 @@ def test_probe_lists_bounded_at_large_n_planes(spark, tmp_path):
     assert set(short) == expect
 
 
+def test_probe_budget_keeps_the_cheapest_flip_pairs(spark, tmp_path):
+    """Under a truncating budget the hamming-2 shell must keep the flip
+    pairs with the smallest margin sums across ALL planes: with margins
+    m0 < m1 < m2 < m3 and m0+m3 < m1+m2, flipping planes {0, 3} beats
+    flipping {1, 2}, though plane 3 is outside the three planes a
+    3-pair budget nominally needs."""
+    import json as _json
+    import os
+
+    tbl = _mk_table(spark, tmp_path, n=40)
+    idx = tbl.build_vector_index("ann", kind="lsh", n_planes=4, seed=7)
+    # plane i = margin_i * e0 + e1, so the query e0 has margin |q·p_i| = m_i
+    margins = [0.10, 0.20, 0.25, 0.30]
+    assert margins[0] + margins[3] < margins[1] + margins[2]
+    m = idx.meta
+    m["state"] = [[mi, 1.0] + [0.0] * (DIM - 2) for mi in margins]
+    with open(os.path.join(idx.root, "meta.json"), "w") as f:
+        _json.dump(m, f)
+    q = [1.0] + [0.0] * (DIM - 1)
+
+    qb = 0b1111  # q·p_i = m_i > 0 for every plane
+    # budget: the query bucket, the 4 single flips, then 3 flip pairs
+    lists = set(idx.probe_lists(q, max_probe_hamming=2, max_probe_lists=8))
+    pairs = {qb ^ 0b0011, qb ^ 0b0101, qb ^ 0b1001}  # {0,1}, {0,2}, {0,3}
+    assert lists == {qb} | {qb ^ (1 << i) for i in range(4)} | pairs
+    assert qb ^ 0b0110 not in lists  # {1,2}: larger margin sum than {0,3}
+
+
 def test_probe_receipt_totals_gated_by_debug_flag(spark, tmp_path):
     tbl = _mk_table(spark, tmp_path, n=80)
     idx = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
