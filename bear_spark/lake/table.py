@@ -320,10 +320,7 @@ class LakeTable:
         return base.cast("int")
 
     def _iter_files(self, snap: dict, buckets: Sequence[int] | None, include_deleted: bool = True):
-        bset = None if buckets is None else set(buckets)
-        for b, files in self._files(snap).items():
-            if bset is not None and int(b) not in bset:
-                continue
+        for files in self._files(snap, buckets).values():
             for fi in files:
                 if not include_deleted and fi.get("deleted"):
                     continue
@@ -403,9 +400,14 @@ class LakeTable:
         under; each group is read with its physical schema and cast up —
         this is how old files survive type widening. Tombstone-only files
         are dir-pruned when ``include_deleted`` is false."""
+        return self._scan(snap, self._iter_files(snap, buckets, include_deleted))
+
+    def _scan(self, snap: dict, files) -> DataFrame:
+        """Scan the given manifest entries of ``snap`` under declared
+        schemas, aligned to the snapshot's current schema."""
         target = T.StructType(self.payload_schema(snap).fields + _SYS_FIELDS)
         by_ver: dict[int, list[str]] = {}
-        for fi in self._iter_files(snap, buckets, include_deleted):
+        for fi in files:
             by_ver.setdefault(int(fi["schema_version"]), []).append(
                 os.path.join(self.root, fi["path"])
             )
@@ -530,11 +532,17 @@ class LakeTable:
 
         Scale shape: snapshots are diffed by manifest POINTER equality
         (driver-side, no I/O), so only buckets some commit in the range
-        actually touched are read; the old/new full-outer join shuffles
-        only those buckets' rows, never the table. A compaction-only
-        range — files rewritten, rows identical — reads the touched
-        buckets but emits zero rows (rows are compared by their LWW
-        version ``(seq, lsn)``, not by file identity).
+        actually touched are considered, and within those only the files
+        that differ between the two manifests are read. A file present in
+        both snapshots is row-identical on both sides, and by the merge's
+        one-row-per-key invariant no key in it has a row anywhere else in
+        either snapshot, so it cannot contribute a change. The old/new
+        full-outer join therefore shuffles only rewritten files' rows,
+        never the table, and runs once: every output row comes from one
+        projection of it. A compaction-only range — files rewritten, rows
+        identical — reads the rewritten files but emits zero rows (rows
+        are compared by their LWW version ``(seq, lsn)``, not by file
+        identity).
 
         Both sides are aligned to the ``to`` snapshot's schema first, so
         a range that spans a schema evolution yields the feed in the
@@ -554,24 +562,22 @@ class LakeTable:
         target = self.payload_schema(snap_to)
         out_cols = [f.name for f in target.fields]
         buckets = self._changed_buckets(snap_from, snap_to)
+        files_from = list(self._iter_files(snap_from, buckets))
+        files_to = list(self._iter_files(snap_to, buckets))
+        shared = {fi["path"] for fi in files_from} & {fi["path"] for fi in files_to}
 
-        def side(snap: dict) -> DataFrame:
-            df = self._read_files(snap, buckets, include_deleted=True)
+        def side(snap: dict, files: list[dict], prefix: str) -> DataFrame:
+            df = self._scan(snap, [fi for fi in files if fi["path"] not in shared])
             # align across schema evolution to the `to` schema + system cols
-            return reconcile.align(
-                df, T.StructType(target.fields + _SYS_FIELDS)
-            ).drop("_bucket")
+            df = reconcile.align(df, T.StructType(target.fields + _SYS_FIELDS))
+            return df.select(
+                *[F.col(c).alias(f"{prefix}{c}") for c in out_cols],
+                F.col("_lsn").alias(f"{prefix}lsn"),
+                F.coalesce("_deleted", F.lit(False)).alias(f"{prefix}del"),
+            )
 
-        old = side(snap_from).select(
-            *[F.col(c).alias(f"_o_{c}") for c in out_cols],
-            F.col("_lsn").alias("_o_lsn"),
-            F.coalesce("_deleted", F.lit(False)).alias("_o_del"),
-        )
-        new = side(snap_to).select(
-            *[F.col(c).alias(f"_n_{c}") for c in out_cols],
-            F.col("_lsn").alias("_n_lsn"),
-            F.coalesce("_deleted", F.lit(False)).alias("_n_del"),
-        )
+        old = side(snap_from, files_from, "_o_")
+        new = side(snap_to, files_to, "_n_")
         cond = [old[f"_o_{k}"].eqNullSafe(new[f"_n_{k}"]) for k in key_cols]
         j = old.join(new, cond, "full_outer")
 
@@ -588,33 +594,29 @@ class LakeTable:
         j = j.withColumn("_change_type", ctype).filter(
             F.col("_change_type").isNotNull()
         )
-
-        def image(rows: DataFrame, side_prefix: str, change) -> DataFrame:
-            return rows.select(
-                *[F.col(f"{side_prefix}{c}").alias(c) for c in out_cols],
-                change.alias("_change_type"),
-                F.lit(snap_to["version"]).alias("_commit_version"),
-            )
-
-        # postimage rows (inserts/updates) come from the new side;
-        # deletes carry the last-seen (old) payload
-        post = image(
-            j.filter(F.col("_change_type") != "delete"),
-            "_n_",
-            F.col("_change_type"),
-        )
-        dels = image(
-            j.filter(F.col("_change_type") == "delete"), "_o_", F.lit("delete")
-        )
-        out = post.unionByName(dels)
         if include_preimage:
-            pre = image(
-                j.filter(F.col("_change_type") == "update_postimage"),
-                "_o_",
-                F.lit("update_preimage"),
+            # an update emits its preimage row too: one joined row fans
+            # out to two, so the join still runs once
+            j = j.withColumn(
+                "_change_type",
+                F.explode(
+                    F.when(
+                        F.col("_change_type") == "update_postimage",
+                        F.array(F.lit("update_postimage"), F.lit("update_preimage")),
+                    ).otherwise(F.array(F.col("_change_type")))
+                ),
             )
-            out = out.unionByName(pre)
-        return out
+        # deletes carry the last-seen (old) payload, as do preimages;
+        # inserts and postimages come from the new side
+        use_old = F.col("_change_type").isin("delete", "update_preimage")
+        return j.select(
+            *[
+                F.when(use_old, F.col(f"_o_{c}")).otherwise(F.col(f"_n_{c}")).alias(c)
+                for c in out_cols
+            ],
+            "_change_type",
+            F.lit(snap_to["version"]).alias("_commit_version"),
+        )
 
     # ------------------------------------------------------------ MERGE
     def merge(

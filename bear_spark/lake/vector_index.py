@@ -342,10 +342,13 @@ class VectorIndex:
 
         changed_keys = assigned_ch.select(*id_cols).distinct()
         parts = []
+        file_schema = self._file_schema(m, with_list=True)
         for rel, ds in by_gen.items():
-            old = self.table.spark.read.option(
-                "basePath", os.path.join(self.root, rel)
-            ).parquet(*ds)
+            old = (
+                self.table.spark.read.schema(file_schema)
+                .option("basePath", os.path.join(self.root, rel))
+                .parquet(*ds)
+            )
             parts.append(old.select(*id_cols, vec_col, "_list"))
         upserts = assigned_ch.filter(
             F.col("_change_type").isin("insert", "update_postimage")
@@ -458,6 +461,17 @@ class VectorIndex:
                             heapq.heappush(heap, (cost, nxt))
         return sorted(lists)
 
+    def _file_schema(self, meta: dict, with_list: bool = False) -> T.StructType:
+        """Schema of the index data files: the id and vector columns typed
+        as in the table's payload schema, plus the ``_list`` partition
+        column for a ``basePath`` read. Declared rather than inferred,
+        because parquet schema inference starts a Spark job per read."""
+        payload = self.table.payload_schema()
+        fields = [payload[c] for c in (*meta["id_cols"], meta["vec_col"])]
+        if with_list:
+            fields.append(T.StructField("_list", T.LongType()))
+        return T.StructType(fields)
+
     def _list_dir(self, meta: dict, b: int) -> str | None:
         rel = meta.get("list_dirs", {}).get(str(b), meta.get("data_rel"))
         if rel is None:
@@ -498,7 +512,7 @@ class VectorIndex:
         }
         if not dirs:
             return None
-        return self.table.spark.read.parquet(*dirs)
+        return self.table.spark.read.schema(self._file_schema(m)).parquet(*dirs)
 
     def probe(
         self,

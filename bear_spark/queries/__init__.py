@@ -18,6 +18,7 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 logger = logging.getLogger(__name__)
 
@@ -68,8 +69,29 @@ def resolve_oracles() -> dict[str, str]:
     return out
 
 
+# (real path, size, st_mtime_ns) -> the file's schema as Spark infers it
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read one corpus table with a declared schema.
+
+    Spark's parquet schema inference starts a job even for one file, so
+    every undeclared read pays one job per table before the query runs.
+    The schema is inferred once per file identity and read from the memo
+    after that; a rewritten file has a new size or mtime, so it is
+    inferred again. A path the local file system cannot stat (a remote
+    URI) is read with inference on every call."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
 
 
 # importing the topic modules populates the registry

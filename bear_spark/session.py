@@ -17,6 +17,17 @@ re-read for archives under ``$SPARK_HOME``, which cannot change under a
 running worker. Non-local masters keep the stock daemon: their executors
 can import the package only per task (``--py-files``), not when the
 daemon starts.
+
+Every session also sizes Spark's generated-class cache
+(``spark.sql.codegen.cache.maxEntries``, a static conf) to hold the
+engine's working set. Spark's default of 100 entries is smaller than
+what one pass over the headline queries compiles (144 classes on a
+4-core host) and than a serving mix of merges, index refreshes and
+reads (about 110), so at the default every repeated query recompiles its
+classes, and one write evicts the read plans. Short queries spend more
+time in Janino than in execution, so a cache that holds the working
+set takes the compile out of every warm call. An A/B against the stock
+cache passes ``extra_conf={"spark.sql.codegen.cache.maxEntries": "100"}``.
 """
 
 from __future__ import annotations
@@ -43,6 +54,11 @@ _MALLOC_RETAIN_ENV = {
     "MALLOC_TRIM_THRESHOLD_": "-1",
     "MALLOC_ARENA_MAX": "4",
 }
+
+# Entries of Spark's generated-class cache (see the module docstring):
+# far above the measured working sets, so no warm read is evicted. An
+# entry is one compiled class, a few KiB of Metaspace.
+CODEGEN_CACHE_ENTRIES = 2000
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -117,6 +133,7 @@ def get_spark(
         # seconds on a local fs) instead of scheduling a one-task-per-
         # file distributed listing job (which costs seconds per merge)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Shuffle/spill blocks go to RAM-backed storage when requested: in
     # local mode all executor threads share one virtual disk, which

@@ -4,10 +4,16 @@ consumer surface (Iceberg changelog scan / Delta CDF analog).
 
 Covers: insert/update/delete classification, net-effect semantics
 (insert+delete inside the range cancels), preimage rows, compaction-only
-ranges emitting nothing (and pruning untouched buckets), and a range
-spanning a schema evolution yielding the feed in the evolved schema."""
+ranges emitting nothing (and pruning untouched buckets), a range
+spanning a schema evolution yielding the feed in the evolved schema, a
+plan with one join, files carried over by a merge left unread, and the
+feed equal to a pandas diff of the two versions on a random history."""
 
 from __future__ import annotations
+
+import os
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -149,3 +155,134 @@ def test_changes_rejects_inverted_range(spark, table):
     v = table.snapshot["version"]
     with pytest.raises(ValueError):
         table.changes(v, 0)
+
+
+def _join_count(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(
+        re.findall(
+            r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|"
+            r"BroadcastNestedLoopJoin|CartesianProduct)",
+            plan,
+        )
+    )
+
+
+def test_changes_plans_one_join(spark, table):
+    table.merge(
+        _events(
+            spark,
+            [
+                ("a", 0, "a0", "2024-01-01 00:00:00", "I", 1),
+                ("b", 0, "b0", "2024-01-01 00:00:01", "I", 2),
+            ],
+        )
+    )
+    v = table.snapshot["version"]
+    table.merge(
+        _events(
+            spark,
+            [
+                ("a", 0, "a0-new", "2024-01-02 00:00:00", "U", 3),
+                ("b", 0, None, "2024-01-02 00:00:01", "D", 4),
+                ("c", 0, "c0", "2024-01-02 00:00:02", "I", 5),
+            ],
+        )
+    )
+    for pre in (False, True):
+        df = table.changes(v, include_preimage=pre)
+        assert _join_count(df) == 1, df._jdf.queryExecution().executedPlan().toString()
+    assert len(_feed(table, v, include_preimage=True)) == 4
+
+
+def test_changes_skips_files_carried_over_by_a_merge(spark, tmp_path):
+    # one bucket and disjoint key ranges per commit: each merge range-
+    # prunes the earlier files and carries them into its snapshot as is
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "one"), SCHEMA,
+        key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=1,
+    )
+    tbl.merge(_events(spark, [("k0", 0, "t0", "2024-01-01 00:00:00", "I", 1)]))
+    v = tbl.snapshot["version"]
+    carried = {fi["path"] for fi in tbl.snapshot["files"]["0"]}
+    tbl.merge(_events(spark, [("k1", 0, "t1", "2024-01-01 00:00:01", "I", 2)]))
+    files_now = {fi["path"] for fi in tbl.snapshot["files"]["0"]}
+    assert carried < files_now, "the k0 file was not carried over"
+
+    df = tbl.changes(v)
+    read = {os.path.relpath(p.replace("file://", ""), tbl.root) for p in df.inputFiles()}
+    assert read == files_now - carried
+    assert _feed(tbl, v) == {("k1", 0, "insert"): "t1"}
+
+
+def _net_diff(tbl, v_from, v_to, preimage):
+    """The feed by definition: both versions' full state, diffed in pandas."""
+    def state(v):
+        pdf = tbl.read(version=v, include_deleted=True, include_system=True).toPandas()
+        return {(r["conv_id"], r["turn_idx"]): r for r in pdf.to_dict("records")}
+
+    old, new = state(v_from), state(v_to)
+    out = set()
+    for k in set(old) | set(new):
+        o, n = old.get(k), new.get(k)
+        o_live = o is not None and not o["_deleted"]
+        n_live = n is not None and not n["_deleted"]
+        if not o_live and n_live:
+            out.add((*k, "insert", n["text"]))
+        elif o_live and not n_live:
+            out.add((*k, "delete", o["text"]))
+        elif o_live and n_live and (o["_lsn"], o["ts"]) != (n["_lsn"], n["ts"]):
+            out.add((*k, "update_postimage", n["text"]))
+            if preimage:
+                out.add((*k, "update_preimage", o["text"]))
+    return out
+
+
+def test_changes_equals_net_diff_of_two_reads_on_random_history(spark, tmp_path):
+    rng = random.Random(11)
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "rand"), SCHEMA,
+        key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=2,
+    )
+    lsn, versions = 0, [tbl.snapshot["version"]]
+    for c in range(6):
+        rows = []
+        # a fresh key range per commit, so some merges carry files over
+        for i in range(rng.randint(2, 5)):
+            lsn += 1
+            rows.append((f"n{c}-{i}", 0, f"v{lsn}", f"2024-01-0{c + 1} 00:00:00", "I", lsn))
+        # updates and deletes of earlier keys, some of them stale
+        for _ in range(rng.randint(0, 4)) if c else []:
+            lsn += 1
+            src = rng.randrange(c)
+            op = rng.choice("UUD")
+            day = rng.choice([c, c + 1])
+            rows.append(
+                (f"n{src}-0", 0, None if op == "D" else f"v{lsn}",
+                 f"2024-01-0{day} 12:00:00", op, lsn)
+            )
+        tbl.merge(_events(spark, rows))
+        if c == 3:
+            tbl.compact(target_files_per_bucket=1)
+        versions.append(tbl.snapshot["version"])
+
+    carried_somewhere = False
+    for a, b in [(0, 6), (1, 3), (2, 5), (3, 4), (4, 6), (5, 6)]:
+        v_from, v_to = versions[a], versions[b]
+        for pre in (False, True):
+            df = tbl.changes(v_from, v_to, include_preimage=pre)
+            got = {
+                (r["conv_id"], r["turn_idx"], r["_change_type"], r["text"])
+                for r in df.collect()
+            }
+            assert got == _net_diff(tbl, v_from, v_to, pre), (v_from, v_to, pre)
+        # the feed reads exactly the files that are in one snapshot only
+        files = [
+            {os.path.join(tbl.root, fi["path"])
+             for fs in tbl._files(tbl._snapshot(v)).values() for fi in fs}
+            for v in (v_from, v_to)
+        ]
+        read = {p.replace("file://", "") for p in df.inputFiles()}
+        assert read == files[0] ^ files[1], (v_from, v_to)
+        carried_somewhere |= bool(files[0] & files[1])
+    assert carried_somewhere, "the history never carried a file over"

@@ -388,3 +388,57 @@ def test_streaming_applier_keeps_index_fresh(spark, tmp_path):
     ]
     deleted = {r.vec_id for r in idx.probe(q, k=1000, n_probe=8).collect()}
     assert deleted.isdisjoint(range(40, 50))
+
+
+def _jobs_of(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    fn()
+    return len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_probe_starts_one_job(spark, tmp_path):
+    """The candidate scan declares the index files' schema, so a probe
+    starts no schema-inference job: the top-k is its only job."""
+    tbl = _mk_table(spark, tmp_path, n=120)
+    idx = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
+    q = _query_vec()
+    for _ in range(2):
+        assert _jobs_of(spark, lambda: idx.probe(q, k=5, max_probe_hamming=1).collect()) == 1
+
+
+def test_incremental_refresh_reads_generations_without_inference(spark, tmp_path):
+    """An incremental refresh reads each index generation it needs under a
+    declared schema: a second generation adds at most its own scan's
+    shuffle stage, never a schema-inference job as well."""
+    import os
+
+    tbl = _mk_table(spark, tmp_path, n=200)
+    idx = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
+    rows = VectorIndex._assign(
+        tbl.read().select("vec_id", "embedding"), "lsh", idx.meta["state"], "embedding"
+    ).collect()
+    members: dict[int, list] = {}
+    for r in rows:
+        members.setdefault(r["_list"], []).append((r["vec_id"], list(r["embedding"])))
+    l1, l2 = sorted(members, key=lambda b: -len(members[b]))[:2]
+
+    def rewrite(pairs, lsn0):
+        # same vectors at a later ts: each key stays in its list
+        return _events(
+            spark,
+            [(i, v, "2024-01-02 00:00:00", "U", lsn0 + n) for n, (i, v) in enumerate(pairs)],
+        )
+
+    def gens_read():
+        return {os.path.dirname(d) for d in idx.last_refresh["dirs_read"]}
+
+    tbl.merge(rewrite(members[l1][:2], 10_000))
+    j1 = _jobs_of(spark, idx.refresh)
+    assert idx.last_refresh["lists_rewritten"] == [l1] and len(gens_read()) == 1
+
+    tbl.merge(rewrite([members[l1][2], members[l2][0]], 20_000))
+    j2 = _jobs_of(spark, idx.refresh)
+    assert sorted(idx.last_refresh["lists_rewritten"]) == sorted([l1, l2])
+    assert len(gens_read()) == 2
+    assert j2 - j1 <= 1, (j1, j2)

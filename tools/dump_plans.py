@@ -3,7 +3,10 @@
 Plan-quality evidence: for each headline query, the formatted physical
 plan at sf0.1 plus a quick extraction of the properties that matter at
 100 TB — pushed filters, read schema (column pruning), broadcast
-joins, whole-stage codegen coverage.
+joins, whole-stage codegen coverage — and the fixed cost of a warm
+second call: the Spark jobs it starts and the generated classes it
+compiles. A repeated read that starts a schema-inference job again, or
+misses the codegen cache, shows up in that line.
 """
 
 from __future__ import annotations
@@ -57,6 +60,21 @@ def _join_counts(plan: str) -> tuple[int, int]:
     )
 
 
+def warm_cost(spark, name: str, sf_dir: str) -> tuple[int, int]:
+    """(Spark jobs, generated classes compiled) of a warm second call of
+    one query, run to a noop sink under the engine's own settings."""
+    tracker = spark.sparkContext.statusTracker()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run():
+        REGISTRY[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    jobs, n = set(tracker.getJobIdsForGroup()), compiles.getCount()
+    run()
+    return len(set(tracker.getJobIdsForGroup()) - jobs), compiles.getCount() - n
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # AQE off for the dump only: the pre-AQE plan carries the codegen
@@ -73,15 +91,23 @@ def main() -> None:
         "Generated by `python tools/dump_plans.py`. The summary bullets",
         "extract the scale-relevant plan properties: predicate pushdown",
         "into the parquet scan, column pruning (ReadSchema), join",
-        "strategies, whole-stage codegen coverage, and shuffle count.",
+        "strategies, whole-stage codegen coverage, and shuffle count. The",
+        "warm-call line counts the Spark jobs and generated classes of a",
+        "second call of the query (AQE on, as the engine runs it).",
         "",
     ]
     for name in HEADLINE_QUERIES:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        jobs, compiled = warm_cost(spark, name, sf_dir)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        warm = f"warm second call: {jobs} Spark jobs, {compiled} classes compiled"
+        print(f"{name}: {warm}")
         df = REGISTRY[name](spark, sf_dir)
         plan = plan_text(df)
         lines.append(f"## {name}\n")
         for s in summarize(plan):
             lines.append(f"- {s}")
+        lines.append(f"- {warm}")
         lines.append("\n```\n" + plan.strip() + "\n```\n")
 
     # 100x-scale join check: at sf0.1 the optimizer auto-broadcasts any
