@@ -57,9 +57,8 @@ def main() -> None:
     vacuum_every = int(os.environ.get("SOAK_VACUUM_EVERY", "1"))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     num_buckets = int(os.environ.get("BENCH_NUM_BUCKETS", "64"))
-    os.environ.setdefault("BEAR_SHM_SPILL", "1")
 
-    from bench import host_probe
+    from bench import host_probe, shm_spill_conf
 
     from bear_spark.events import change_events
     from bear_spark.lake import LakeTable
@@ -85,7 +84,8 @@ def main() -> None:
         shuffle_partitions=2 * cpus,
         driver_memory=mem,
         extra_conf={
-            "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch"
+            "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch",
+            **shm_spill_conf(),
         },
     )
 

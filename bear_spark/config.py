@@ -10,7 +10,7 @@ that feeds ``embedders.get_embedder``.
 
 The store/index knobs differ by design: the reference configures a
 Milvus endpoint + HNSW index; this engine's store is the lake table, so
-the knobs are bucketing/lateness/pre-combine, and Spark session sizing
+the knobs are bucketing and lateness, and Spark session sizing
 replaces connection pooling.
 """
 
@@ -66,8 +66,6 @@ class Settings:
     num_buckets: int = 64
     lateness_sec: int = 3600
     drop_late: bool = False
-    merge_precombine: str = "auto"  # "auto" | "1" | "0" (map-side LWW)
-    target_file_rows: int = 2_000_000  # split merge output files at N rows
 
     # streaming applier (bear_spark/streaming/apply.py)
     max_files_per_trigger: int = 4

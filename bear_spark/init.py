@@ -67,13 +67,6 @@ def bootstrap(
             max_files_per_trigger=s.max_files_per_trigger,
             compact_every=s.compact_every,
             metrics_flush_every=s.metrics_flush_every,
-            # same vocabulary LakeTable.merge accepts from the process
-            # env, so .env and env-var spellings behave identically
-            merge_precombine={
-                "1": True, "true": True, "on": True,
-                "0": False, "false": False, "off": False,
-            }.get(str(s.merge_precombine).lower()),
-            target_file_rows=s.target_file_rows,
             split_rows_per_bucket=s.split_rows_per_bucket,
             split_step_buckets=s.split_step_buckets,
         )
@@ -83,12 +76,11 @@ def bootstrap(
 
 # Defaults written by quick_setup, grouped like the reference's
 # use_default_*_settings blocks (bear/init.py:46-70): store knobs first
-# (lake bucketing/merge replaces the Milvus endpoint), then embedding.
+# (lake bucketing and lateness replace the Milvus endpoint), then
+# embedding.
 _QUICK_DEFAULTS = (
     ("BEAR_NUM_BUCKETS", "64"),
     ("BEAR_LATENESS_SEC", "3600"),
-    ("BEAR_MERGE_PRECOMBINE", "auto"),
-    ("BEAR_TARGET_FILE_ROWS", "2000000"),
     ("BEAR_EMBEDDING_DIM", "8"),
     ("BEAR_EMBEDDING_DOC_PREFIX", ""),
     ("BEAR_EMBEDDING_QUERY_PREFIX", ""),

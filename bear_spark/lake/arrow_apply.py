@@ -65,11 +65,11 @@ def make_apply_kernel(
     key_cols: list[str],
     seq_col: str,
     manifests_by_bucket: dict[int, str],
+    target_file_rows: int,
     wm_iso: str | None = None,
     drop_late: bool = False,
     table_root: str = "",
     compression: str = "snappy",
-    target_file_rows: int = 2_000_000,
 ) -> Callable:
     """Build the applyInArrow kernel for one merge.
 
@@ -117,95 +117,56 @@ def make_apply_kernel(
         # — a steady page-fault tax per batch, and a cliff on hosts
         # with slow fault paths. Independent of the thread-pool
         # normalization above (a worker whose pool already defaults to
-        # one thread still wants retention). BEAR_JEMALLOC_RETAIN=0
-        # opts out (memory-tight executors); no-op on non-jemalloc
+        # one thread still wants retention). No-op on non-jemalloc
         # builds.
-        if os.environ.get("BEAR_JEMALLOC_RETAIN", "1") != "0":
-            try:
-                pa.jemalloc_set_decay_ms(-1)
-            except (NotImplementedError, AttributeError):
-                pass
+        try:
+            pa.jemalloc_set_decay_ms(-1)
+        except (NotImplementedError, AttributeError):
+            pass
 
         bucket = tbl.column("_bucket")[0].as_py()
 
-        def naive_utc(col):
-            """Event time as naive UTC (the snapshot watermark format)
-            regardless of how Arrow delivered it."""
-            return col.cast(pa.timestamp("us"))
-
-        def seg_stats(t: pa.Table, *aggs) -> list[dict]:
-            """Per (source_partition, segment) batch stats; ``aggs`` are the
-            (column, aggregate) pairs for lo, hi, count, late, max time."""
-            g = t.group_by(["_sp", "_segment"], use_threads=False).aggregate(aggs)
-            names = [f"{c}_{fn}" for c, fn, *_ in aggs]
-            out = []
-            for r in g.to_pylist():
-                m = r[names[4]]
-                out.append(
-                    {
-                        "sp": int(r["_sp"]),
-                        "f": str(r["_segment"]),
-                        "lo": int(r[names[0]]),
-                        "hi": int(r[names[1]]),
-                        "c": int(r[names[2]]),
-                        "late": int(r[names[3]]),
-                        "mts": None if m is None else m.isoformat(),
-                    }
-                )
-            return out
-
         # --- batch stats for this bucket's slice ----------------------
-        if "_cnt" in tbl.column_names:
-            # the driver pre-combined the batch per (key, sp, segment):
-            # each row carries its subset's count/late-count/offset
-            # range/max event time — fold them per (sp, segment)
-            tbl = tbl.set_column(
-                tbl.schema.get_field_index("_mts"), "_mts", naive_utc(tbl.column("_mts"))
-            )
-            stats = seg_stats(
-                tbl, ("_lo", "min"), ("_hi", "max"), ("_cnt", "sum"),
-                ("_late_cnt", "sum"), ("_mts", "max"),
-            )
-            # null keys group together: a null-key flood contends in the
-            # kernel like any hot key (it LWW-collapses below) and must
-            # count toward the adaptive pre-combine skew signal
-            key_rows = (
-                tbl.group_by(key_cols[0], use_threads=False)
-                .aggregate([("_cnt", "sum")])
-                .column("_cnt_sum")
-            )
-            tbl = tbl.drop_columns(
-                ["_sp", "_segment", "_cnt", "_late_cnt", "_lo", "_hi", "_mts"]
-            )
+        # event time as naive UTC (the snapshot watermark format)
+        # regardless of how Arrow delivered it
+        ts = tbl.column(seq_col).cast(pa.timestamp("us"))
+        if wm_iso:
+            wm = pa.scalar(_dt.datetime.fromisoformat(wm_iso), pa.timestamp("us"))
+            late = pc.fill_null(pc.less(ts, wm), False)
         else:
-            ts = naive_utc(tbl.column(seq_col))
-            if wm_iso:
-                wm = pa.scalar(_dt.datetime.fromisoformat(wm_iso), pa.timestamp("us"))
-                late = pc.fill_null(pc.less(ts, wm), False)
-            else:
-                late = pa.array(np.zeros(tbl.num_rows, np.bool_))
-            tbl = tbl.append_column("_late", late.cast(pa.int64())).append_column(
-                "_ts", ts
-            )
-            stats = seg_stats(
-                tbl, ("_off", "min"), ("_off", "max"),
+            late = pa.array(np.zeros(tbl.num_rows, np.bool_))
+        tbl = tbl.append_column("_late", late.cast(pa.int64())).append_column("_ts", ts)
+        # per (source_partition, segment): offset range, row count,
+        # late-event count and max event time
+        g = tbl.group_by(["_sp", "_segment"], use_threads=False).aggregate(
+            [
+                ("_off", "min"), ("_off", "max"),
                 ("_off", "count", pc.CountOptions(mode="all")),
                 ("_late", "sum"), ("_ts", "max"),
-            )
-            # hottest-key share of the BATCH slice (pre-LWW, pre-filter):
-            # the driver records max over buckets in lineage and
-            # auto-enables map-side pre-combine on the NEXT batch when a
-            # hot key persists
-            key_rows = pc.value_counts(tbl.column(key_cols[0])).field("counts")
-            tbl = tbl.drop_columns(["_sp", "_off", "_segment", "_late", "_ts"])
-            if drop_late and wm_iso:
-                # drop-late policy: late events are counted (stats above,
-                # offsets committed) but never applied — the watermark is
-                # a hard admission boundary, which is what makes tombstone
-                # expiry safe. Null event times are kept (they lose LWW).
-                # (Pre-combine is disabled on drop-late tables: the
-                # subset winner could be late while a runner-up is not.)
-                tbl = tbl.filter(pc.invert(late))
+            ]
+        )
+        stats = [
+            {
+                "sp": int(r["_sp"]),
+                "f": str(r["_segment"]),
+                "lo": int(r["_off_min"]),
+                "hi": int(r["_off_max"]),
+                "c": int(r["_off_count"]),
+                "late": int(r["_late_sum"]),
+                "mts": None if r["_ts_max"] is None else r["_ts_max"].isoformat(),
+            }
+            for r in g.to_pylist()
+        ]
+        # hottest-key rows of the BATCH slice (pre-LWW, pre-filter): the
+        # driver records the max over buckets in lineage as the skew stat
+        key_rows = pc.value_counts(tbl.column(key_cols[0])).field("counts")
+        tbl = tbl.drop_columns(["_sp", "_off", "_segment", "_late", "_ts"])
+        if drop_late and wm_iso:
+            # drop-late policy: late events are counted (stats above,
+            # offsets committed) but never applied — the watermark is a
+            # hard admission boundary, which is what makes tombstone
+            # expiry safe. Null event times are kept (they lose LWW).
+            tbl = tbl.filter(pc.invert(late))
         max_key_rows = int(pc.max(key_rows).as_py() or 0)
 
         payload_names = target.names

@@ -38,6 +38,7 @@ which is only at-least-once; this table upgrades that to exactly-once.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -62,6 +63,11 @@ _SYS_FIELDS = [
 _ENVELOPE = ("op", "lsn", "source_partition", "offset", "_src_file")
 
 
+#: default row bound of one data file written by merge, split and
+#: compaction (each takes ``target_file_rows=`` to override it)
+TARGET_FILE_ROWS = 2_000_000
+
+
 class ConcurrentCommit(RuntimeError):
     pass
 
@@ -72,19 +78,17 @@ def merge_partition_count(
     """Task count for the bucket-clustered merge shuffle.
 
     ``spark.sql.shuffle.partitions`` tracks ~2x the session's core
-    count, so $BEAR_MERGE_TASKS_PER_CORE defaults to 2 — bit-identical
-    task counts to the banked scaling evidence. Raising it buys more
-    task WAVES per core (finer load balancing when bucket sizes are
-    heterogeneous: local[8] gets 2 waves at the default where local[2]
-    gets 4), at the cost of more fixed per-task overhead; an A/B at
-    local[8]/16M events on THIS repo's uniform-bucket benchmark
-    measured 4-vs-2 dead neutral (39.5s mean both), so the default
-    stays at the measured configuration. Always capped by the bucket
-    count (a bucket never splits across tasks — the kernel's
+    count, so the merge asks for 2 tasks per core — bit-identical task
+    counts to the banked scaling evidence. More tasks per core buy more
+    task WAVES (finer load balancing when bucket sizes are
+    heterogeneous) at the cost of more fixed per-task overhead; an A/B
+    at local[8]/16M events on THIS repo's uniform-bucket benchmark
+    measured 4-vs-2 dead neutral (39.5s mean both), so the count stays
+    at the measured configuration. Always capped by the bucket count (a
+    bucket never splits across tasks — the kernel's
     clustered-distribution requirement).
     """
-    tpc = int(os.environ.get("BEAR_MERGE_TASKS_PER_CORE", "2"))
-    want = max(shuffle_parts, tpc * max(1, default_parallelism))
+    want = max(shuffle_parts, 2 * max(1, default_parallelism))
     return max(1, min(buckets, want))
 
 
@@ -623,8 +627,7 @@ class LakeTable:
         self,
         batch: DataFrame,
         fence: bool = True,
-        precombine: bool | None = None,
-        target_file_rows: int | None = None,
+        target_file_rows: int = TARGET_FILE_ROWS,
     ) -> dict[str, Any]:
         """MERGE a batch of change events into the table (copy-on-write).
 
@@ -642,17 +645,9 @@ class LakeTable:
         the batch is scanned exactly once.
 
         Row-count metrics come from the parquet footers of the staged
-        files (driver-side metadata, no extra scan).
+        files (driver-side metadata, no extra scan). ``target_file_rows``
+        bounds each written file, as in ``compact`` and ``split_buckets``.
         """
-        if precombine is None:
-            envv = os.environ.get("BEAR_MERGE_PRECOMBINE", "auto").lower()
-            if envv in ("1", "true", "on"):
-                precombine = True
-            elif envv in ("0", "false", "off"):
-                precombine = False
-            # else: None = adaptive (previous batch's skew stat decides)
-        if target_file_rows is None:
-            target_file_rows = int(os.environ.get("BEAR_TARGET_FILE_ROWS", "2000000"))
         snap = self._snapshot()
         expect_version = snap["version"]
         key_cols = snap["key_cols"]
@@ -712,14 +707,6 @@ class LakeTable:
                     "left_anti",
                 )
 
-        dbg = os.environ.get("BEAR_DEBUG") == "1"
-
-        def _log(msg: str) -> None:
-            if dbg:
-                import time as _time
-
-                print(f"[merge +{_time.time():.3f}] {msg}", flush=True)
-
         wm = snap["watermark_ts"]
         # segment id = source file (one changelog chunk = one contiguous
         # offset segment). Must be materialized as a column BEFORE any
@@ -753,11 +740,9 @@ class LakeTable:
         stage_dir = os.path.join(self.root, stage_rel)
         shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
-        _log("apply start")
         st = self._merge_arrow_job(
             src, snap, new_schema, stage_dir, shuffle_parts, has_env, wm,
-            key_cols, seq_col, precombine=precombine,
-            target_file_rows=target_file_rows,
+            key_cols, seq_col, target_file_rows,
         )
         if st is None:
             return {
@@ -768,7 +753,7 @@ class LakeTable:
             }
         (
             touched, rows_in, late_events, max_ts, seg, per_partition, kept,
-            max_key_rows, used_precombine, kernel_stats,
+            max_key_rows, kernel_stats,
         ) = st
 
         # fold this batch's contiguous per-(partition, segment) offset
@@ -792,7 +777,6 @@ class LakeTable:
             for fi in fmap.get(str(b), [])
             if fi["path"] not in kept.get(b, ())
         )
-        _log("apply done, enumerating staged files")
         new_files = self._enumerate_staged(stage_rel, stage_dir, touched, schema_version)
         changed = {
             b: [fi for fi in fmap.get(b, []) if fi["path"] in kept.get(int(b), ())] + staged
@@ -806,9 +790,7 @@ class LakeTable:
         new_wm = wm
         if max_ts is not None:
             # watermark = max event time seen - allowed lateness
-            import datetime as _dt
-
-            cand = (max_ts - _dt.timedelta(seconds=snap["lateness_sec"])).isoformat(sep=" ")
+            cand = (max_ts - datetime.timedelta(seconds=snap["lateness_sec"])).isoformat(sep=" ")
             if new_wm is None or cand > new_wm:
                 new_wm = cand
 
@@ -829,11 +811,10 @@ class LakeTable:
             # per-partition lineage/metrics); -1 = envelope-less batch
             "rows_by_partition": {str(k): v for k, v in sorted(per_partition.items())},
             **kernel_stats,
-            # batch skew stat: drives the NEXT batch's adaptive map-side
-            # pre-combine decision (a hot conv_id persists across batches)
+            # batch skew stat: the most events one key value (first key
+            # column) sent to its bucket's task
             "max_key_rows": max_key_rows,
             "max_key_share": round(max_key_rows / rows_in, 4) if rows_in else 0.0,
-            "precombine": used_precombine,
         }
 
         schemas = dict(snap["schemas"])
@@ -855,7 +836,7 @@ class LakeTable:
         self._write_snapshot(new_snap, expect_version=expect_version)
         return metrics
 
-    # ------------------------------------------------- apply strategies
+    # ------------------------------------------------------ apply job
     @staticmethod
     def _align_to(df: DataFrame, schema: T.StructType, *extra) -> DataFrame:
         have = set(df.columns)
@@ -880,8 +861,7 @@ class LakeTable:
         wm: str | None,
         key_cols: Sequence[str],
         seq_col: str,
-        precombine: bool | None = None,
-        target_file_rows: int = 2_000_000,
+        target_file_rows: int,
     ):
         """File-granularity COW in ONE job: shuffle only the batch, by
         bucket; each task reads its buckets' existing files directly,
@@ -891,11 +871,9 @@ class LakeTable:
         O(batch + table).
 
         Returns (touched, rows_in, late_events, max_ts, seg_ranges,
-        per_partition, kept, max_key_rows, used_precombine, kernel_stats),
-        or None if the batch is empty after the exactly-once fence.
+        per_partition, kept, max_key_rows, kernel_stats), or None if the
+        batch is empty after the exactly-once fence.
         """
-        import json as _json
-
         from bear_spark.lake.arrow_apply import (
             APPLY_RESULT_SCHEMA,
             arrow_schema,
@@ -914,72 +892,6 @@ class LakeTable:
             off_col.alias("_off"),
             F.col("_segment"),
         )
-        # --- skew-aware pre-combine (map-side LWW) -------------------
-        # A hot conv_id funnels ALL its events into one bucket task (the
-        # applyInArrow kernel has no partial aggregation), so a skewed
-        # key makes one straggler task do O(hot events) work. Reducing
-        # the batch per (bucket, key, source_partition, segment) FIRST
-        # runs as a hash aggregate with map-side combine: each input
-        # partition collapses its share of a hot key to one winner row
-        # before anything shuffles — the salting the north rule asks
-        # for, expressed as Catalyst partial aggregation. Counts/offset
-        # ranges/lateness ride along per subset so commit stats stay
-        # exact. It buys an extra full-batch shuffle+agg, which a
-        # measured A/B (8M events, local[8], identical integrity
-        # counters) priced at ~1.4x wall time under this repo's
-        # 20%-hot-key generator — worth it only under more extreme skew
-        # (one task drowning in a single key) or on clusters where
-        # shuffle bytes, not CPU, are the scarce resource. Default is
-        # therefore ADAPTIVE: engage when the PREVIOUS batch's lineage
-        # shows one key holding ≥ $BEAR_PRECOMBINE_SHARE (default 0.5)
-        # of ≥ $BEAR_PRECOMBINE_MIN_ROWS rows — a hot-key storm persists
-        # across batches, so last batch's skew is this batch's best
-        # predictor, and the stat is free (the kernel already computes
-        # it). $BEAR_MERGE_PRECOMBINE=1/0 (or the merge() arg) forces.
-        # Disabled on drop-late tables regardless: the subset winner
-        # could be late while an admissible runner-up exists, so those
-        # tables keep the raw path (the kernel filters late events
-        # itself).
-        if precombine is None:
-            share_thr = float(os.environ.get("BEAR_PRECOMBINE_SHARE", "0.5"))
-            min_rows = int(os.environ.get("BEAR_PRECOMBINE_MIN_ROWS", "100000"))
-            # last MERGE entry: maintenance commits (splits) in between
-            # must not erase the previous batch's skew signal
-            last = next(
-                (e for e in reversed(snap.get("lineage", ())) if "rows_in" in e),
-                {},
-            )
-            precombine = (
-                last.get("rows_in", 0) >= min_rows
-                and last.get("max_key_share", 0.0) >= share_thr
-            )
-        precombine = bool(precombine) and not snap.get("drop_late")
-        if precombine:
-            late_col = (
-                (F.col(seq_col) < F.lit(wm).cast("timestamp")).cast("long")
-                if wm
-                else F.lit(0).cast("long")
-            )
-            payload_names = [f.name for f in new_schema.fields]
-            row = F.struct(
-                *[F.col(c) for c in payload_names], F.col("_op"), F.col("_elsn")
-            )
-            seq_s = F.struct(F.col(seq_col), F.col("_elsn"))
-            src_evt = (
-                src_evt.groupBy("_bucket", *key_cols, "_sp", "_segment")
-                .agg(
-                    F.max_by(row, seq_s).alias("_row"),
-                    F.count(F.lit(1)).alias("_cnt"),
-                    F.sum(late_col).alias("_late_cnt"),
-                    F.min("_off").alias("_lo"),
-                    F.max("_off").alias("_hi"),
-                    F.max(seq_col).alias("_mts"),
-                )
-                .select(
-                    "_bucket", "_sp", "_segment", "_cnt", "_late_cnt",
-                    "_lo", "_hi", "_mts", "_row.*",
-                )
-            )
         # tasks learn their bucket's files via the manifest POINTERS —
         # each task reads its own (immutable) manifest from shared
         # storage and range-skips files the batch cannot touch, so both
@@ -1014,23 +926,21 @@ class LakeTable:
         if not res:
             return None
 
-        import pandas as pd
-
         touched = sorted(int(r["_bucket"]) for r in res)
         rows_in = late_events = 0
         max_ts = None
         seg: dict[tuple[int, str], list[int]] = {}
         per_partition: dict[int, int] = {}
         kept: dict[int, set[str]] = {
-            int(r["_bucket"]): set(_json.loads(r["kept"])) for r in res
+            int(r["_bucket"]): set(json.loads(r["kept"])) for r in res
         }
         for r in res:
-            for s in _json.loads(r["stats"]):
+            for s in json.loads(r["stats"]):
                 rows_in += s["c"]
                 late_events += s["late"]
                 per_partition[int(s["sp"])] = per_partition.get(int(s["sp"]), 0) + s["c"]
                 if s["mts"] is not None:
-                    t = pd.Timestamp(s["mts"]).to_pydatetime()
+                    t = datetime.datetime.fromisoformat(s["mts"])
                     if max_ts is None or t > max_ts:
                         max_ts = t
                 k = (int(s["sp"]), s["f"])
@@ -1048,7 +958,7 @@ class LakeTable:
         }
         return (
             touched, rows_in, late_events, max_ts, seg, per_partition, kept,
-            max_key_rows, precombine, kstats,
+            max_key_rows, kstats,
         )
 
     # ------------------------------------------------------- maintenance
@@ -1056,7 +966,7 @@ class LakeTable:
         self,
         factor: int | None = None,
         max_buckets: int | None = None,
-        target_file_rows: int | None = None,
+        target_file_rows: int = TARGET_FILE_ROWS,
     ) -> dict[str, Any]:
         """Grow the bucket count by ``factor`` — incrementally.
 
@@ -1121,8 +1031,6 @@ class LakeTable:
         to, ptr = int(rb["to"]), int(rb["split_ptr"])
         f = to // n
         k = n - ptr if max_buckets is None else min(int(max_buckets), n - ptr)
-        if target_file_rows is None:
-            target_file_rows = int(os.environ.get("BEAR_TARGET_FILE_ROWS", "2000000"))
         tfr = max(1, int(target_file_rows))
         expect_version = snap["version"]
         new_version = expect_version + 1
@@ -1237,7 +1145,7 @@ class LakeTable:
     def compact(
         self,
         target_files_per_bucket: int = 1,
-        target_file_rows: int | None = None,
+        target_file_rows: int = TARGET_FILE_ROWS,
     ) -> dict[str, int]:
         """Rewrite FRAGMENTED buckets' files into fewer, larger files.
 
@@ -1260,8 +1168,6 @@ class LakeTable:
         snap = self._snapshot()
         fmap = self._files(snap)
         tgt = max(1, int(target_files_per_bucket))
-        if target_file_rows is None:
-            target_file_rows = int(os.environ.get("BEAR_TARGET_FILE_ROWS", "2000000"))
         tfr = max(1, int(target_file_rows))
 
         def _fragmented(fs: list[dict]) -> bool:

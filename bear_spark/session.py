@@ -106,12 +106,10 @@ def get_spark(
         n = os.cpu_count() or 8 if cores == "*" else int(cores)
         shuffle_partitions = max(8, 2 * n)
 
-    retain = os.environ.get("BEAR_MALLOC_RETAIN", "1") != "0"
-    if retain:
-        for k, v in _MALLOC_RETAIN_ENV.items():
-            # local mode: the JVM (and the pyspark.daemon it forks) inherit
-            # the driver env captured at launch, so set it before getOrCreate
-            os.environ.setdefault(k, v)
+    for k, v in _MALLOC_RETAIN_ENV.items():
+        # local mode: the JVM (and the pyspark.daemon it forks) inherit
+        # the driver env captured at launch, so set it before getOrCreate
+        os.environ.setdefault(k, v)
 
     builder = (
         SparkSession.builder.master(master)
@@ -135,26 +133,10 @@ def get_spark(
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
-    # Shuffle/spill blocks go to RAM-backed storage when requested: in
-    # local mode all executor threads share one virtual disk, which
-    # serializes the shuffle stages that a real cluster spreads across
-    # per-executor SSDs. Opt-in ($BEAR_SHM_SPILL=1, set by the bench
-    # entry points) rather than default: tmpfs is typically capped at
-    # half of RAM, so redirecting every session's spill there could
-    # turn a large disk spill into ENOSPC.
-    if (
-        os.environ.get("BEAR_SHM_SPILL") == "1"
-        and os.path.isdir("/dev/shm")
-        and "spark.local.dir" not in (extra_conf or {})
-    ):
-        local_dir = "/dev/shm/spark-local"
-        os.makedirs(local_dir, exist_ok=True)
-        builder = builder.config("spark.local.dir", local_dir)
-    if retain:
-        # cluster mode: executors don't inherit the driver env, so ship
-        # the same knobs through executorEnv (no-op in local mode)
-        for k, v in _MALLOC_RETAIN_ENV.items():
-            builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, v))
+    # cluster mode: executors don't inherit the driver env, so ship the
+    # same knobs through executorEnv (no-op in local mode)
+    for k, v in _MALLOC_RETAIN_ENV.items():
+        builder = builder.config(f"spark.executorEnv.{k}", os.environ.get(k, v))
     is_local = master == "local" or master.startswith("local[")
     if is_local and _engine_daemon_importable():
         builder = builder.config("spark.python.daemon.module", "bear_spark.worker_daemon")

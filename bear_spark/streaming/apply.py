@@ -45,8 +45,6 @@ class CDCApplier:
         max_files_per_trigger: int = 4,
         compact_every: int = 0,
         metrics_flush_every: int = 8,
-        merge_precombine: bool | None = None,
-        target_file_rows: int | None = None,
         split_rows_per_bucket: int = 0,
         split_step_buckets: int = 4,
         merge_retries: int = 3,
@@ -60,10 +58,6 @@ class CDCApplier:
         self.checkpoint_dir = checkpoint_dir
         self.metrics_dir = metrics_dir or os.path.join(checkpoint_dir, "..", "metrics")
         self.max_files_per_trigger = max_files_per_trigger
-        # merge knobs threaded through from Settings (None defers to
-        # LakeTable.merge's env/default resolution)
-        self.merge_precombine = merge_precombine
-        self.target_file_rows = target_file_rows
         # bound small-file accumulation on long streams: every N applied
         # (non-skipped) batches, rewrite each bucket into one file and
         # vacuum superseded staging dirs. 0 disables.
@@ -137,11 +131,7 @@ class CDCApplier:
         attempts = 0
         while True:
             try:
-                m = self.table.merge(
-                    batch,
-                    precombine=self.merge_precombine,
-                    target_file_rows=self.target_file_rows,
-                )
+                m = self.table.merge(batch)
                 break
             except ConcurrentCommit:
                 attempts += 1

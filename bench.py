@@ -58,6 +58,20 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def shm_spill_conf() -> dict[str, str]:
+    """Spark conf that puts shuffle and spill blocks on tmpfs, for the
+    bench entry points: in local mode all executor threads share one
+    virtual disk, which serializes the shuffle stages that a real
+    cluster spreads across per-executor SSDs. Library sessions keep
+    Spark's disk default, since tmpfs is typically capped at half of
+    RAM and a large spill there could hit ENOSPC."""
+    if not os.path.isdir("/dev/shm"):
+        return {}
+    local_dir = "/dev/shm/spark-local"
+    os.makedirs(local_dir, exist_ok=True)
+    return {"spark.local.dir": local_dir}
+
+
 def host_probe(samples: int = 3, settle: float = 3.0) -> dict:
     """Memory-system health snapshot: first-touch (page-fault path) and
     steady-state memcpy GB/s. This VM suffers intermittent hypervisor
@@ -468,10 +482,6 @@ def main() -> None:
     from bear_spark.queries import REGISTRY
     from bear_spark.session import get_spark
 
-    # bench sessions spill shuffle blocks to tmpfs (benchmark hygiene:
-    # one shared virtual disk serializes local-mode shuffles); library
-    # sessions keep the disk default — see session.get_spark
-    os.environ.setdefault("BEAR_SHM_SPILL", "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_events = int(os.environ.get("BENCH_CDC_EVENTS", "32000000"))
@@ -491,6 +501,7 @@ def main() -> None:
         # outside the timed loop
         "spark.ui.enabled": "true",
         "spark.ui.port": "0",  # any free port; read back via uiWebUrl
+        **shm_spill_conf(),
     }
     if opts:
         extra["spark.driver.extraJavaOptions"] = opts

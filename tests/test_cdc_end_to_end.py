@@ -157,42 +157,6 @@ def test_merge_full_state_matches_oracle_winners(spark, table, events_pdf):
     oracle.assert_states_equal(got, expected)
 
 
-def test_precombine_merge_converges_identically(spark, tmp_path, monkeypatch):
-    """Opt-in map-side pre-combine (skew path): chunked replay with
-    BEAR_MERGE_PRECOMBINE=1 must yield byte-identical state and the
-    same commit-stat totals as the raw path."""
-    ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
-    states, totals = [], []
-    for pre in ("0", "1"):
-        monkeypatch.setenv("BEAR_MERGE_PRECOMBINE", pre)
-        t = LakeTable.create(
-            spark,
-            str(tmp_path / f"tbl_pre{pre}"),
-            TRANSCRIPT_SCHEMA,
-            key_cols=KEY_COLS,
-            seq_col="ts",
-            num_buckets=4,
-        )
-        ms = [
-            t.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
-            for lo in range(0, N_EVENTS, 2500)
-        ]
-        totals.append(
-            {
-                k: sum(m[k] for m in ms)
-                for k in ("rows_in", "late_events", "dedup_drops", "rows_written")
-            }
-        )
-        states.append(
-            t.read(include_deleted=True, include_system=True)
-            .toPandas()
-            .sort_values(KEY_COLS)
-            .reset_index(drop=True)
-        )
-    assert totals[0] == totals[1]
-    pd.testing.assert_frame_equal(states[0], states[1], check_like=True)
-
-
 def test_lineage_metrics_recorded(spark, table):
     ev = change_events(spark, 3000, n_convs=20, seed=5)
     m = table.merge(ev)

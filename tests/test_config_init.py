@@ -2,10 +2,43 @@
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+import bear_spark
 from bear_spark import oracle
 from bear_spark.config import Settings
 from bear_spark.events import change_events
 from bear_spark.init import bootstrap
+
+
+_ENV_READS = {"environ", "environb", "getenv", "getenvb"}
+
+
+def test_lake_and_streaming_read_no_environment():
+    """Knobs live in ``Settings`` and reach the lake table and the
+    stream as arguments: no module under ``bear_spark/lake`` or
+    ``bear_spark/streaming`` reads the process environment."""
+    pkg = Path(bear_spark.__file__).parent
+    paths = sorted([*pkg.glob("lake/*.py"), *pkg.glob("streaming/*.py")])
+    assert {"table.py", "arrow_apply.py", "apply.py"} <= {p.name for p in paths}
+    reads = []
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in _ENV_READS
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ):
+                reads.append(f"{path.parent.name}/{path.name}:{node.lineno} os.{node.attr}")
+            elif isinstance(node, ast.ImportFrom) and node.module == "os":
+                reads += [
+                    f"{path.parent.name}/{path.name}:{node.lineno} from os import {a.name}"
+                    for a in node.names
+                    if a.name in _ENV_READS
+                ]
+    assert not reads, reads
 
 
 def test_settings_defaults_and_env_precedence(tmp_path):

@@ -568,54 +568,63 @@ def test_compact_honors_target_and_skips_unfragmented(spark, tmp_path):
     assert tbl.read().count() == 200
 
 
-def test_adaptive_precombine_engages_on_persistent_hot_key(spark, tmp_path, monkeypatch):
-    """Extreme skew: one conv_id dominating the batch auto-enables the
-    map-side LWW pre-combine on the NEXT batch (feedback from the
-    lineage skew stat), with identical convergence either way."""
-    monkeypatch.delenv("BEAR_MERGE_PRECOMBINE", raising=False)
-    monkeypatch.setenv("BEAR_PRECOMBINE_MIN_ROWS", "1000")  # test-sized
-    tbl = LakeTable.create(
-        spark,
-        str(tmp_path / "tbl"),
-        SCHEMA,
-        key_cols=["conv_id", "turn_idx"],
-        seq_col="ts",
-        num_buckets=4,
-    )
-    hot = [
-        ("conv_hot", 0, f"v{i}", f"2024-01-01 00:{i // 60:02d}:{i % 60:02d}", "U", i)
-        for i in range(1500)
-    ] + [
-        (f"conv_{i:03d}", 0, "cold", "2024-01-01 00:00:00", "I", 10_000 + i)
-        for i in range(100)
-    ]
-    m1 = tbl.merge(_events(spark, hot))
-    assert m1["max_key_rows"] == 1500
-    assert m1["max_key_share"] > 0.9
-    assert m1["precombine"] is False, "first batch has no lineage to react to"
+def test_adaptive_precombine_engages_on_persistent_hot_key(spark, tmp_path):
+    """Extreme skew on the one merge path: when one conv_id holds most
+    of two consecutive 120k-event batches, the second merge starts no
+    more Spark jobs than the same merge on a cold stream of the same
+    size (skew adds no stage in front of the kernel), and the full
+    state equals the oracle's last event per key."""
+    import pandas as pd
 
-    m2 = tbl.merge(
-        _events(
-            spark,
-            [
-                ("conv_hot", 0, f"w{i}", f"2024-01-02 00:{i // 60:02d}:{i % 60:02d}", "U", 50_000 + i)
-                for i in range(1200)
-            ],
+    from bear_spark.events import change_events
+    from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
+
+    n = 120_000
+    sc = spark.sparkContext
+
+    def stream(name, hot_key_pct):
+        """Two merges of one generated log; returns the table, the log,
+        both merges' metrics and the second merge's Spark job count."""
+        tbl = LakeTable.create(
+            spark, str(tmp_path / name), TRANSCRIPT_SCHEMA,
+            key_cols=KEY_COLS, num_buckets=4,
         )
-    )
-    assert m2["precombine"] is True, "persistent hot key must auto-enable pre-combine"
-    # convergence: LWW winner is the max-(ts, lsn) event of batch 2
-    final = tbl.read().filter(F.col("conv_id") == "conv_hot").toPandas()
-    assert len(final) == 1 and final.iloc[0]["text"] == "w1199"
-    assert tbl.read().count() == 101
+        log = [
+            change_events(
+                spark, n, start=k * n, total_events=2 * n, seed=11,
+                hot_key_pct=hot_key_pct, n_hot_keys=1,
+            )
+            for k in range(2)
+        ]
+        m1 = tbl.merge(log[0])
+        group = f"second-merge-{name}"
+        sc.setJobGroup(group, "second merge")
+        try:
+            m2 = tbl.merge(log[1])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return tbl, log, (m1, m2), len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # forcing it off wins over the adaptive signal
-    m3 = tbl.merge(
-        _events(spark, [("conv_hot", 0, "z", "2024-01-03 00:00:00", "U", 99_999)]),
-        precombine=False,
-    )
-    assert m3["precombine"] is False
-    assert tbl.read().filter(F.col("conv_id") == "conv_hot").first()["text"] == "z"
+    hot, log, hot_ms, hot_jobs = stream("hot", hot_key_pct=75)
+    _, _, cold_ms, cold_jobs = stream("cold", hot_key_pct=0)
+
+    for m, ev in zip(hot_ms, log):
+        hot_rows = ev.groupBy("conv_id").count().agg(F.max("count")).first()[0]
+        assert m["rows_in"] == n
+        assert m["max_key_rows"] == hot_rows
+        assert m["max_key_share"] >= 0.5
+    assert all(m["max_key_share"] < 0.05 for m in cold_ms)
+
+    # a hot key stays bucket-local: its merge runs the cold merge's plan
+    assert 0 < hot_jobs <= cold_jobs, (hot_jobs, cold_jobs)
+
+    # convergence: full state, tombstones and _lsn included
+    got = hot.read(include_deleted=True, include_system=True).toPandas()
+    win = oracle.winners(pd.concat([ev.toPandas() for ev in log], ignore_index=True))
+    expected = win.assign(_deleted=win["op"] == "D").rename(columns={"lsn": "_lsn"})
+    assert expected["_deleted"].any() and not expected["_deleted"].all()
+    oracle.assert_states_equal(got, expected)
 
 
 def test_untouched_rows_pass_through_lww_under_schema_evolution(spark, tmp_path):
@@ -759,27 +768,20 @@ def test_compact_preserves_target_file_rows_chunking(spark, tmp_path):
     assert tbl.read().count() == 300
 
 
-def test_merge_partition_count_gives_parallelism_independent_waves(monkeypatch):
-    """Task waves must not get coarser as cores grow: at 2x-cores
-    shuffle-partition defaults, local[8] used to get 2 waves where
-    local[2] got 4, turning bucket-size variance into a straggler tail
-    on exactly the leg the N->4N scaling rule measures."""
+def test_merge_partition_count_gives_parallelism_independent_waves():
+    """The merge shuffle asks for 2 tasks per core, never fewer than the
+    session's shuffle partitions, and a bucket never splits across
+    tasks, so the bucket count caps the task count."""
     from bear_spark.lake.table import merge_partition_count
 
-    monkeypatch.delenv("BEAR_MERGE_TASKS_PER_CORE", raising=False)
-    # default (2 tasks/core) matches the banked-evidence task counts
-    # wherever shuffle partitions track 2x cores
+    # 2 tasks/core matches the banked-evidence task counts wherever
+    # shuffle partitions track 2x cores
     assert merge_partition_count(64, 8, 2) == 8
     assert merge_partition_count(64, 16, 8) == 16
-    # raising the knob equalizes wave count across parallelism levels
-    monkeypatch.setenv("BEAR_MERGE_TASKS_PER_CORE", "4")
-    assert merge_partition_count(64, 8, 2) == 8
-    assert merge_partition_count(64, 16, 8) == 32
     # a bucket never splits across tasks: bucket count caps
     assert merge_partition_count(4, 16, 8) == 4
     assert merge_partition_count(64, 64, 32) == 64
     # never below one task; defensive on zero parallelism
-    monkeypatch.delenv("BEAR_MERGE_TASKS_PER_CORE", raising=False)
     assert merge_partition_count(1, 8, 0) == 1
 
 

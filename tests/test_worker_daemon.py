@@ -117,7 +117,6 @@ def test_only_local_masters_use_engine_daemon(monkeypatch, master, engine_daemon
     monkeypatch.setattr(session_mod, "SparkSession", SimpleNamespace(builder=builder))
     monkeypatch.setattr(session_mod, "_engine_daemon_importable", lambda: True)
     monkeypatch.setenv("SPARK_GRAFT_MASTER", master)
-    monkeypatch.delenv("BEAR_SHM_SPILL", raising=False)
     session_mod.get_spark(cores=2)
     assert builder.conf["spark.master"] == master
     if engine_daemon:

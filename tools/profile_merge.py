@@ -2,7 +2,7 @@
 
 Usage: python tools/profile_merge.py <cores> [n_events] [n_batches]
 Runs bench.bench_cdc (the exact benchmark code path) in-process and
-prints throughput; BEAR_DEBUG=1 adds per-phase timestamps from merge.
+prints throughput.
 """
 
 from __future__ import annotations
