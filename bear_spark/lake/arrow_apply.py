@@ -1,21 +1,33 @@
 """Arrow-native per-bucket COW apply — the merge path.
 
 Data files are bucket-partitioned on shared storage, so only the BATCH
-needs to move: ``groupBy(_bucket).applyInArrow`` routes each bucket's
-change events to one task as one ``pyarrow.Table``; the task reads that
-bucket's existing files directly (pyarrow, column-parallel C++), applies
-last-writer-wins in ``pyarrow.compute``, and writes the replacement
-files itself — the same file-granularity copy-on-write an Iceberg/Delta
-COW writer performs, with the engine's two-phase snapshot commit
-unchanged on top.
+needs to move. The kernel gets one bucket's change events as one
+``pyarrow.Table``, reads that bucket's existing files directly (pyarrow,
+column-parallel C++), applies last-writer-wins in ``pyarrow.compute``,
+and writes the replacement files itself — the same file-granularity
+copy-on-write an Iceberg/Delta COW writer performs, with the engine's
+two-phase snapshot commit unchanged on top.
+
+The same kernel runs in one of two places, chosen per merge by
+``LakeTable._merge_arrow_job`` from Catalyst's size estimate of the
+batch (``DRIVER_APPLY_MAX_BYTES`` in lake/table.py holds the measured
+crossover):
+
+- on the driver (``apply_on_driver``), for a small batch: the batch is
+  collected with ``toArrow()`` and split by bucket, and the kernel runs
+  once per bucket in a thread pool. No shuffle, no Python-worker task;
+- in Python workers (``for_task``) otherwise, or when the estimate is
+  unknown: ``groupBy(_bucket).applyInArrow`` routes each bucket's events
+  to one task. Only there does the kernel's wrapper set the process's
+  Arrow thread pools and allocator.
 
 The batch stays in Arrow from the JVM to the parquet writer: no pandas
 round trip at the UDF boundary, no per-row Python. LWW sorts only the
 key, seq and lsn columns, keeps the last row of each key run, and does
 one full-width ``take`` — which works for every Arrow type, so array,
 struct, map and decimal payloads (embedding tables) take this path like
-flat ones. Task retries are idempotent: each bucket writes to a
-deterministic file name via tmp + ``os.replace``.
+flat ones. Retries are idempotent: each bucket writes to a deterministic
+file name via tmp + ``os.replace``.
 
 Reference analog: the store-side PK upsert the reference delegates to
 Milvus (reference: bear/db.py:72-83) — here the "store" is the lake and
@@ -71,7 +83,8 @@ def make_apply_kernel(
     table_root: str = "",
     compression: str = "snappy",
 ) -> Callable:
-    """Build the applyInArrow kernel for one merge.
+    """Build the apply kernel for one merge (run per bucket, on the
+    driver or under ``applyInArrow``).
 
     ``target`` is the payload's Arrow schema (``arrow_schema``).
     ``manifests_by_bucket`` maps each bucket to the rel path of its
@@ -102,27 +115,6 @@ def make_apply_kernel(
         import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        # one Arrow thread per task: parallelism belongs to Spark (one
-        # python worker per core); Arrow's default pool (all machine
-        # cores) would oversubscribe — and silently use cores the
-        # cluster manager never granted this executor
-        if pa.cpu_count() != 1:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        # retain freed arena pages across merge batches (workers are
-        # long-lived under spark.python.worker.reuse): jemalloc's
-        # default ~1s dirty-page decay hands pages back to the OS
-        # between batches, so every batch re-faults its working set
-        # — a steady page-fault tax per batch, and a cliff on hosts
-        # with slow fault paths. Independent of the thread-pool
-        # normalization above (a worker whose pool already defaults to
-        # one thread still wants retention). No-op on non-jemalloc
-        # builds.
-        try:
-            pa.jemalloc_set_decay_ms(-1)
-        except (NotImplementedError, AttributeError):
-            pass
 
         bucket = tbl.column("_bucket")[0].as_py()
 
@@ -352,6 +344,57 @@ def make_apply_kernel(
         )
 
     return kernel
+
+
+def for_task(kernel: Callable) -> Callable:
+    """``kernel`` as an ``applyInArrow`` function, which first sets the
+    Python worker's process-wide Arrow state.
+
+    One Arrow thread per task: parallelism belongs to Spark (one Python
+    worker per core); Arrow's default pool (all machine cores) would
+    oversubscribe, and silently use cores the cluster manager never
+    granted this executor. Freed arena pages are retained across merge
+    batches (workers are long-lived under spark.python.worker.reuse):
+    jemalloc's default ~1s dirty-page decay hands pages back to the OS
+    between batches, so every batch re-faults its working set. Only a
+    worker may do this: on the driver the same calls would pin the
+    session's own Arrow pool to one thread.
+    """
+
+    def task(tbl):
+        if pa.cpu_count() != 1:
+            pa.set_cpu_count(1)
+            pa.set_io_thread_count(1)
+        try:
+            pa.jemalloc_set_decay_ms(-1)
+        except (NotImplementedError, AttributeError):
+            pass  # not a jemalloc build
+        return kernel(tbl)
+
+    return task
+
+
+def apply_on_driver(batch: pa.Table, kernel: Callable) -> list[dict]:
+    """Run ``kernel`` in this process, once per bucket of ``batch``, in a
+    thread pool sized to the process's cores (the kernel spends its time
+    in Arrow and parquet calls, which release the GIL). Returns the
+    kernel's result rows, as ``applyInArrow(...).collect()`` would."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.compute as pc
+
+    if batch.num_rows == 0:
+        return []
+    # split once: a stable sort by bucket, then one slice per run
+    # (value_counts lists values in first-seen order, here ascending)
+    batch = batch.take(pc.sort_indices(batch.column("_bucket")))
+    parts, lo = [], 0
+    for n in pc.value_counts(batch.column("_bucket")).field("counts").to_pylist():
+        parts.append(batch.slice(lo, n))
+        lo += n
+    cores = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+    with ThreadPoolExecutor(max_workers=min(cores, len(parts))) as pool:
+        return pa.concat_tables(pool.map(kernel, parts)).to_pylist()
 
 
 APPLY_RESULT_SCHEMA = (

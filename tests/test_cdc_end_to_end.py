@@ -141,10 +141,11 @@ def test_delete_tombstone_blocks_stale_resurrection(spark, table):
     assert list(out["text"]) == ["v3"]
 
 
-def test_merge_full_state_matches_oracle_winners(spark, table, events_pdf):
+def test_merge_full_state_matches_oracle_winners(spark, table, events_pdf, placement):
     """The merge kernel's full state — live rows, tombstones and each
     row's ``_lsn`` — equals the pandas oracle's last event per key over
-    the same chunked replay."""
+    the same chunked replay, with the kernel on the driver and in the
+    ``applyInArrow`` job."""
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
     for lo in range(0, N_EVENTS, 2500):
         table.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))

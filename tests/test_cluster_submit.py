@@ -1,6 +1,8 @@
 """Multi-executor packaging test: the engine shipped to SEPARATE
 executor JVMs via ``spark-submit --py-files`` on a ``local-cluster``
-master runs the CDC merge end-to-end and converges to the same state.
+master runs the CDC merge end-to-end and converges to the same state,
+with the merge kernel on the driver and in ``applyInArrow`` tasks on the
+executors.
 
 This is the only test that leaves the shared local[8] session — it
 boots a standalone-mode mini-cluster (2 executor JVM processes), so it
@@ -41,15 +43,23 @@ spark = get_spark(app_name="cluster_submit_test", cores=2,
                   shuffle_partitions=8, driver_memory="2g")
 assert spark.sparkContext.master.startswith("local-cluster"), spark.sparkContext.master
 
+import bear_spark.lake.table as lake_table
+
 ev = change_events(spark, 30_000, n_convs=80, seed=13).cache()
 ev.count()
-tbl = LakeTable.create(spark, os.path.join({work!r}, "tbl"),
-                       TRANSCRIPT_SCHEMA, key_cols=KEY_COLS, num_buckets=4)
-m = tbl.merge(ev)
-got = tbl.read().toPandas()
 exp = oracle.replay(ev.toPandas())
-oracle.assert_states_equal(got, exp)
-print(json.dumps({{"rows": len(got), "dedup_drops": m["dedup_drops"]}}))
+out = {{}}
+# once per kernel placement: on the driver, and in applyInArrow tasks on
+# the executors
+for place, limit in (("driver", 1 << 62), ("job", -1)):
+    lake_table.DRIVER_APPLY_MAX_BYTES = limit
+    tbl = LakeTable.create(spark, os.path.join({work!r}, place),
+                           TRANSCRIPT_SCHEMA, key_cols=KEY_COLS, num_buckets=4)
+    m = tbl.merge(ev)
+    got = tbl.read().toPandas()
+    oracle.assert_states_equal(got, exp)
+    out[place] = {{"rows": len(got), "dedup_drops": m["dedup_drops"]}}
+print(json.dumps(out))
 """
 
 
@@ -73,4 +83,6 @@ def test_merge_under_local_cluster_via_py_files(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     stats = json.loads(line)
-    assert stats["rows"] > 0 and stats["dedup_drops"] > 0
+    assert set(stats) == {"driver", "job"}
+    assert stats["driver"] == stats["job"]
+    assert stats["job"]["rows"] > 0 and stats["job"]["dedup_drops"] > 0

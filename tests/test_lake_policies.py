@@ -231,12 +231,13 @@ NESTED_SCHEMA = T.StructType(
 )
 
 
-def test_nested_payload_merges_on_the_kernel(spark, tmp_path):
+def test_nested_payload_merges_on_the_kernel(spark, tmp_path, placement):
     """Array, struct, map and decimal payloads take the same Arrow merge
-    as flat ones: inserts, updates (one nulling a non-null nested value)
-    and deletes converge to the oracle's winners, tombstones and _lsn
-    included, and a nested-payload merge starts no more Spark jobs than
-    a flat-payload merge of the same batch."""
+    as flat ones, with the kernel on the driver and in the
+    ``applyInArrow`` job: inserts, updates (one nulling a non-null nested
+    value) and deletes converge to the oracle's winners, tombstones and
+    _lsn included, and a nested-payload merge starts no more Spark jobs
+    than a flat-payload merge of the same batch."""
     from decimal import Decimal
 
     import pandas as pd
@@ -298,7 +299,10 @@ def test_nested_payload_merges_on_the_kernel(spark, tmp_path):
         return len(set(tracker.getJobIdsForGroup()) - before)
 
     for rows in batches:
-        ev = spark.createDataFrame(rows, NESTED_SCHEMA).withColumn(
+        # built from pandas: a local relation has a size estimate, so the
+        # driver placement can take it
+        pdf = pd.DataFrame(rows, columns=NESTED_SCHEMA.fieldNames())
+        ev = spark.createDataFrame(pdf, NESTED_SCHEMA).withColumn(
             "ts", F.col("ts").cast("timestamp")
         )
         flat_ev = ev.select("doc_id", F.col("meta.src").alias("src"), "ts", "op", "lsn")
@@ -323,6 +327,70 @@ def test_nested_payload_merges_on_the_kernel(spark, tmp_path):
     )
     assert got == expected
     assert [r[0] for r in got if r[-1]] == [4, 6]  # tombstones kept
+
+
+def test_small_merge_runs_one_stage_and_no_python_worker(spark, tmp_path, monkeypatch):
+    """A batch Catalyst sizes at or below ``DRIVER_APPLY_MAX_BYTES``
+    merges in one Spark stage (the batch's collect) with no plan node
+    that feeds a Python worker, and the kernel leaves the driver's Arrow
+    thread pools as it found them. Forced onto the job path, the same
+    merge shows the Python-worker node, so the check can see one."""
+    import pyarrow as pa
+
+    from bear_spark.events import change_events
+    from bear_spark.lake import table as lake_table
+    from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def first_merge(name):
+        """(stages, feeds a Python worker) of a 2,000-event first merge."""
+        tbl = LakeTable.create(
+            spark, str(tmp_path / name), TRANSCRIPT_SCHEMA,
+            key_cols=KEY_COLS, num_buckets=4,
+        )
+        sc.setJobGroup(name, "first merge")
+        try:
+            m = tbl.merge(change_events(spark, 2000, n_convs=20, seed=5))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert m["rows_in"] == 2000
+        jobs = tracker.getJobIdsForGroup(name)
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+        # every plan node that exchanges rows with Python workers declares
+        # the "... Python workers" SQL metrics
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        recent = store.executionsList(max(0, n - 20), 20)
+        metrics = set()
+        for i in range(recent.size()):
+            ex = recent.apply(i)
+            if any(ex.jobs().contains(j) for j in jobs):
+                ms = ex.metrics()
+                metrics |= {ms.apply(k).name() for k in range(ms.size())}
+        assert metrics, "no SQL execution found for the merge's jobs"
+        return stages, any("Python worker" in name for name in metrics)
+
+    pools = (pa.cpu_count(), pa.io_thread_count())
+    assert first_merge("driver") == (1, False)
+    assert (pa.cpu_count(), pa.io_thread_count()) == pools
+
+    monkeypatch.setattr(lake_table, "DRIVER_APPLY_MAX_BYTES", -1)
+    stages, feeds_python = first_merge("job")
+    assert stages >= 2 and feeds_python
+
+
+def test_batch_without_size_statistics_never_counts_as_small(spark):
+    """A frame built from a Python list is an RDD, which Spark has no
+    statistics for: its estimate is unknown, so its merge keeps the job
+    path. A range has one."""
+    from bear_spark.lake.table import _estimated_bytes
+
+    assert _estimated_bytes(spark.range(10)) == 80
+    assert _estimated_bytes(_events(spark, [("c1", 0, "x", "2024-01-01", "I", 1)])) is None
 
 
 def test_merge_carries_over_range_pruned_files(spark, tmp_path):
