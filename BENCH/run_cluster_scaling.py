@@ -1,39 +1,33 @@
 #!/usr/bin/env python
-"""Probe-gated MULTI-EXECUTOR scaling pair: N vs 4N executor JVMs.
+"""N→4N executor pair under ``spark-submit --py-files``.
 
-The thread-based sweep (run_scaling.py) evidences N→4N parallelism as
-local[2] vs local[8] inside one JVM. This runner complements it with
-the strongest proxy this sandbox allows for the north rule's literal
-wording — "spark-submit --py-files on a multi-executor cluster at N
-and 4N executors":
+Runs ``bench.py`` in replay-only mode (``BENCH_MODE=cdc``) twice, the
+way the north rule words it — "spark-submit --py-files on a
+multi-executor cluster at N and 4N executors":
 
-  spark-submit --master local-cluster[E,1,M] --py-files bear_spark.zip
+  spark-submit --master local-cluster[E,1,M] --py-files bear_spark.zip bench.py
 
-local-cluster launches E SEPARATE executor JVM processes (each with its
-own heap, its own Python workers, its own shuffle block store) behind
+with E = 1 and then 4. local-cluster launches E separate executor JVMs
+(each with its own heap, Python workers and shuffle block store) behind
 an in-process standalone master; shuffle blocks cross process
-boundaries through the real Netty block-transfer path, and the engine
-code reaches executors only through the --py-files zip — exactly the
-packaging a real cluster uses, with only the network hop missing.
+boundaries through the Netty block-transfer path, and the engine reaches
+the executors only through the ``--py-files`` zip. Only the network hop
+is missing.
 
-Same clean-window protocol as run_scaling.py: a settle-retried launch
-gate probe before each run, in-situ bracket probes (taken by bench.py
-tight around the timed merge loop) certifying the sample, loop until
-K clean pairs land, all telemetry recorded. Replay integrity counters
-must be bit-identical across every run at the same event count (and
-equal to the thread-based sweep's counters — same seeded changelog).
+Each leg prints bench.py's ``cdc`` record; the last line is the pair:
+scaling efficiency = (4N events/sec / N events/sec) / 4, plus the
+replay's integrity counters, which must be identical across both legs
+(the changelog is seeded). ``cdc.cpu.jvm_task_s`` is the only CPU
+figure that covers the executors here: bench.py runs as a child of the
+driver JVM, so its ``/proc`` walk sees only the script.
 
-BENCH_CLUSTER_TIER=plateau selects the middle evidence tier instead
-(same rule as run_plateau_pairs.py): the absolute clean-window gate is
-replaced by the plateau floor (steady memcpy healthy, first-touch above
-the deep-stall floor) and a PAIR qualifies when its four in-situ
-brackets sit inside one narrow first-touch band — both executor counts
-saw the identical host, so the ratio the scaling rule needs is
-meaningful. Written after the round-3 watch showed clean windows too
-brief for any 16M-event pair while the plateau held for hours.
+Batches at or below ``lake.table.DRIVER_APPLY_MAX_BYTES`` run their
+kernel on the driver, not on the executors; size the replay so that
+each batch is above it (about 1M events per batch or more).
 
-Appends its section to BENCH/BASELINE.md; raw telemetry in
-BENCH/cluster_scaling_telemetry.json.
+Usage: python BENCH/run_cluster_scaling.py
+(``$BENCH_CDC_EVENTS``, default 8M here, and ``$BENCH_CDC_BATCHES``,
+default 4, size the replay)
 """
 
 from __future__ import annotations
@@ -42,18 +36,15 @@ import json
 import os
 import shutil
 import subprocess
-import sys
 import tempfile
-import time
-from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from run_scaling import MIN_FIRST_GBS, MIN_STEADY_GBS, default_log_cache, host_probe, probe_ok, settled_probe  # noqa: E402
 
-N_EXEC = int(os.environ.get("BENCH_CLUSTER_N", "2"))
-N4_EXEC = int(os.environ.get("BENCH_CLUSTER_4N", "8"))
-EXEC_MEM_MB = int(os.environ.get("BENCH_EXEC_MEM_MB", "2560"))
+N_EXEC, N4_EXEC = 1, 4
+# four 2 GiB executors plus a 3 GiB driver stay inside a 15 GiB host,
+# with room for each executor's Python worker
+EXEC_MEM_MB = 2048
+DRIVER_MEM = "3g"
 
 
 def _spark_submit() -> str:
@@ -62,36 +53,28 @@ def _spark_submit() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-def _zip_engine() -> str:
+def _zip_engine(into: str) -> str:
     """Package bear_spark/ the way a real submit would ship it."""
-    d = tempfile.mkdtemp(prefix="bear_submit_")
-    path = os.path.join(d, "bear_spark")
-    shutil.make_archive(path, "zip", root_dir=REPO, base_dir="bear_spark")
-    return path + ".zip"
+    return shutil.make_archive(
+        os.path.join(into, "bear_spark"), "zip", root_dir=REPO, base_dir="bear_spark"
+    )
 
 
-def run_level(zip_path: str, executors: int, n_events: int, n_batches: int) -> dict:
+def run_leg(zip_path: str, executors: int) -> dict:
     master = f"local-cluster[{executors},1,{EXEC_MEM_MB}]"
-    dmem = os.environ.get("BENCH_CLUSTER_DRIVER_MEM", "8g")
     env = dict(
         os.environ,
         SPARK_GRAFT_MASTER=master,
         SPARK_GRAFT_CPUS=str(executors),  # sizes shuffle partitions only
-        BENCH_CDC_EVENTS=str(n_events),
-        BENCH_CDC_BATCHES=str(n_batches),
         BENCH_MODE="cdc",
-        BENCH_DRIVER_MEM=dmem,
-        BENCH_JAVA_OPTS="",  # driver JVM opts go on the submit line below
+        BENCH_DRIVER_MEM=DRIVER_MEM,
     )
+    env.setdefault("BENCH_CDC_EVENTS", "8000000")
     out = subprocess.run(
         [
             _spark_submit(),
             "--master", master,
-            "--driver-memory", dmem,
-            "--conf", f"spark.driver.extraJavaOptions=-Xms{dmem} -XX:+AlwaysPreTouch",
-            # pre-fault executor heaps at launch (untimed: executors come
-            # up during session creation, before the timed merge loop)
-            "--conf", "spark.executor.extraJavaOptions=-XX:+AlwaysPreTouch",
+            "--driver-memory", DRIVER_MEM,
             "--py-files", zip_path,
             os.path.join(REPO, "bench.py"),
         ],
@@ -101,220 +84,34 @@ def run_level(zip_path: str, executors: int, n_events: int, n_batches: int) -> d
         check=True,
         timeout=3600,
     )
-    line = [ln for ln in out.stdout.strip().splitlines() if ln.lstrip().startswith("{")][-1]
+    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     return json.loads(line)["cdc"]
 
 
-TIER = os.environ.get("BENCH_CLUSTER_TIER", "clean")
-
-
-def _plateau_floor_ok(p: dict) -> bool:
-    from run_plateau_pairs import MIN_FIRST_GBS as PF, MIN_STEADY_GBS as PS
-
-    return p["steady_gbs"] >= PS and p["first_touch_gbs"] >= PF
-
-
-def gated_run(zip_path: str, executors: int, n_events: int, n_batches: int):
-    if TIER == "plateau":
-        # plateau tier: only refuse to launch into a deep stall; the
-        # certifying check is the pair-level band qualification
-        gate, retries = host_probe(), 0
-        if not _plateau_floor_ok(gate):
-            return None, {"executors": executors, "launch_gate": gate,
-                          "gate_settle_retries": retries, "skipped": True,
-                          "clean": False, "events_per_sec": 0.0}
-    else:
-        gate, retries = settled_probe()
-        if not probe_ok(gate):
-            return None, {"executors": executors, "launch_gate": gate,
-                          "gate_settle_retries": retries, "skipped": True,
-                          "clean": False, "events_per_sec": 0.0}
-    r = run_level(zip_path, executors, n_events, n_batches)
-    tele = {"executors": executors, "launch_gate": gate,
-            "gate_settle_retries": retries,
-            "pre": r["probe_pre"], "post": r["probe_post"],
-            "clean": probe_ok(r["probe_pre"]) and probe_ok(r["probe_post"]),
-            "events_per_sec": r["cdc_events_per_sec"],
-            "wall_sec": r["cdc_wall_sec"]}
-    if TIER == "plateau":
-        # a sample is usable unless a bracket hit the deep-stall floor;
-        # band qualification happens at pair level in main()
-        usable = _plateau_floor_ok(r["probe_pre"]) and _plateau_floor_ok(r["probe_post"])
-        return (r if usable else None), tele
-    return (r if tele["clean"] else None), tele
-
-
-def _probes(r: dict) -> str:
-    p, q = r.get("probe_pre"), r.get("probe_post")
-    if not p or not q:
-        return "n/a"
-    return (f"{p['first_touch_gbs']}/{p['steady_gbs']} → "
-            f"{q['first_touch_gbs']}/{q['steady_gbs']}")
-
-
 def main() -> None:
-    n_events = int(os.environ.get("BENCH_CDC_EVENTS", "16000000"))
-    n_batches = int(os.environ.get("BENCH_CDC_BATCHES", "4"))
-    k_pairs = int(os.environ.get("BENCH_CLEAN_PAIRS", "1"))
-    max_attempts = int(os.environ.get("BENCH_MAX_ATTEMPTS", "8"))
-    cache = os.environ.get(
-        "BENCH_CDC_LOG_CACHE",
-        default_log_cache(),
-    )
-    os.environ["BENCH_CDC_LOG_CACHE"] = cache
-    if TIER == "plateau":
-        # the in-child settle loop waits for an ABSOLUTE-clean pre-probe,
-        # which never arrives on the plateau — skip it (same as
-        # run_plateau_pairs.py); the brackets still record host state
-        os.environ.setdefault("BENCH_CLEAN_WAIT_SEC", "0")
+    with tempfile.TemporaryDirectory(prefix="bear_submit_") as d:
+        zip_path = _zip_engine(d)
+        legs = {}
+        for executors in (N_EXEC, N4_EXEC):
+            legs[executors] = run_leg(zip_path, executors)
+            print(json.dumps({"executors": executors, **legs[executors]}), flush=True)
 
-    zip_path = _zip_engine()
-    print(f"engine zipped for --py-files at {zip_path}", flush=True)
-
-    telemetry: list[dict] = []
-    pairs: list[dict] = []
-    integrity: tuple | None = None
-    # accumulate across invocations (same rule as run_plateau_pairs):
-    # an earlier invocation's qualified pairs at the same event count
-    # are evidence too; CLUSTER_RESET=1 starts fresh
-    tele_path = os.path.join(REPO, "BENCH", "cluster_scaling_telemetry.json")
-    if os.environ.get("CLUSTER_RESET", "0") != "1" and os.path.exists(tele_path):
-        try:
-            with open(tele_path) as f:
-                prior = json.load(f)
-            if prior.get("events") == n_events and prior.get("tier", "clean") == TIER:
-                pairs = list(prior.get("pairs", []))
-                telemetry = list(prior.get("telemetry", []))
-                if pairs:
-                    print(f"resuming bank: {len(pairs)} qualified cluster pairs "
-                          f"carried", flush=True)
-        except (OSError, ValueError):
-            pass
-
-    def check(r: dict) -> None:
-        nonlocal integrity
-        key = (r["dedup_drops"], r["rows_written"], r["late_events"])
-        if integrity is None:
-            integrity = key
-        else:
-            assert key == integrity, f"non-deterministic replay: {key} != {integrity}"
-
-    attempt = 0
-    while len(pairs) < k_pairs and attempt < max_attempts:
-        attempt += 1
-        rN, tN = gated_run(zip_path, N_EXEC, n_events, n_batches)
-        telemetry.append(tN)
-        print(f"attempt {attempt}: {N_EXEC} executors "
-              f"{tN['events_per_sec']:,.0f} ev/s clean={tN['clean']}", flush=True)
-        if rN is None:
-            continue
-        check(rN)
-        r4, t4 = gated_run(zip_path, N4_EXEC, n_events, n_batches)
-        telemetry.append(t4)
-        print(f"attempt {attempt}: {N4_EXEC} executors "
-              f"{t4['events_per_sec']:,.0f} ev/s clean={t4['clean']}", flush=True)
-        if r4 is None:
-            continue
-        check(r4)
-        eff = (r4["cdc_events_per_sec"] / rN["cdc_events_per_sec"]) / (N4_EXEC / N_EXEC)
-        pair = {"N": rN, "N4": r4, "efficiency": round(eff, 3), "tier": TIER}
-        if rN.get("tree_user_sec") and r4.get("tree_user_sec"):
-            pair["user_cpu_ratio"] = round(
-                r4["tree_user_sec"] / rN["tree_user_sec"], 3
-            )
-        if TIER == "plateau":
-            from run_plateau_pairs import qualify
-
-            ok_pair, why = qualify(rN, r4)
-            pair["qualified"], pair["why"] = ok_pair, why
-            print(f"attempt {attempt}: cluster pair efficiency={eff:.3f} "
-                  f"qualified={ok_pair} ({why})", flush=True)
-            if not ok_pair:
-                telemetry.append({"unqualified_pair": pair})
-                continue
-        else:
-            print(f"attempt {attempt}: CLEAN CLUSTER PAIR efficiency={eff:.3f}",
-                  flush=True)
-        pairs.append(pair)
-        # persist after every qualified pair: a kill mid-invocation must
-        # not lose banked evidence (the final write below also records
-        # the trailing unqualified telemetry)
-        with open(tele_path, "w") as f:
-            json.dump({"pairs": pairs, "telemetry": telemetry,
-                       "events": n_events, "tier": TIER,
-                       "executor_mem_mb": EXEC_MEM_MB}, f, indent=1)
-
-    with open(tele_path, "w") as f:
-        json.dump({"pairs": pairs, "telemetry": telemetry,
-                   "events": n_events, "tier": TIER,
-                   "executor_mem_mb": EXEC_MEM_MB}, f, indent=1)
-    if not pairs:
-        print(f"NO {TIER}-qualified cluster pairs landed — telemetry recorded",
-              flush=True)
-        sys.exit(2)
-
-    best = max(pairs, key=lambda p: p["efficiency"])
-    tN_, t4_ = best["N"], best["N4"]
-    eff = best["efficiency"]
-    if TIER == "plateau":
-        from run_plateau_pairs import BAND, MIN_FIRST_GBS as PF, MIN_STEADY_GBS as PS
-
-        gate_note = (
-            f"**Plateau-qualified pair** (middle evidence tier, same rule as "
-            f"the thread-based plateau bank): all four in-situ brackets sit in "
-            f"one <= {BAND}x first-touch band above the deep-stall floor "
-            f"(first-touch >= {PF} GB/s, steady >= {PS} GB/s), so both "
-            f"executor counts saw the identical host and the ratio is "
-            f"meaningful (biased, if anything, against the 4N leg); "
-            f"user-CPU ratio {best.get('user_cpu_ratio', 'n/a')}."
-        )
-    else:
-        gate_note = (
-            f"Clean-window floors in force for this run: first-touch >= "
-            f"{MIN_FIRST_GBS} GB/s, steady memcpy >= {MIN_STEADY_GBS} GB/s "
-            f"(healthy host: ~2-4 / ~8-12; full-stall: ~0.01; the bracketing "
-            f"probes above are the actual host state each sample was taken "
-            f"in — adjudicate against them)."
-        )
-    md = f"""
-
-## Multi-executor pair: spark-submit --py-files on local-cluster (N vs 4N executor JVMs)
-
-Same job, same seeded {n_events:,}-event changelog, submitted the way
-the north rule specifies — `spark-submit --master
-local-cluster[E,1,{EXEC_MEM_MB}] --py-files bear_spark.zip` — so the
-engine runs in **{N_EXEC} vs {N4_EXEC} separate executor JVM
-processes** (own heaps, own Python workers, shuffle blocks crossing
-process boundaries via the Netty block-transfer path, engine code
-reaching executors only through the zip). Probe-bracketed like the
-thread-based evidence (tier: {TIER}); telemetry in
-`BENCH/cluster_scaling_telemetry.json`.
-
-| executors | events/sec | wall (s) | probes pre→post (first/steady GB/s) |
-|---|---|---|---|
-| {N_EXEC} (N)  | {tN_["cdc_events_per_sec"]:,.1f} | {tN_["cdc_wall_sec"]} | {_probes(tN_)} |
-| {N4_EXEC} (4N) | {t4_["cdc_events_per_sec"]:,.1f} | {t4_["cdc_wall_sec"]} | {_probes(t4_)} |
-
-{gate_note}
-
-**Multi-executor scaling efficiency = ({t4_["cdc_events_per_sec"]:,.1f} / {tN_["cdc_events_per_sec"]:,.1f}) / {N4_EXEC // N_EXEC} = {eff:.3f}**
-(best of {len(pairs)} qualified pair{"s" if len(pairs) != 1 else ""} banked:
-{sorted(p["efficiency"] for p in pairs)})
-
-Replay integrity: dedup drops {tN_["dedup_drops"]:,}, rows MERGEd
-{tN_["rows_written"]:,}, late events {tN_["late_events"]:,} —
-bit-identical across both executor counts (and identical to the
-thread-based sweep at the same event count: same seeded log).
-
-Generated by `python BENCH/run_cluster_scaling.py` on {datetime.now(timezone.utc).isoformat(timespec="seconds")}.
-"""
-    from run_cpu_pair import write_section
-
-    write_section(
-        os.path.join(REPO, "BENCH", "BASELINE.md"), md,
-        heading="## Multi-executor pair: spark-submit --py-files",
-    )
-    print(md, flush=True)
+    n, n4 = legs[N_EXEC], legs[N4_EXEC]
+    integrity = {
+        k: (n[k], n4[k]) for k in ("dedup_drops", "rows_written", "late_events")
+    }
+    if any(a != b for a, b in integrity.values()):
+        raise RuntimeError(f"non-deterministic replay (N, 4N): {integrity}")
+    eff = (n4["cdc_events_per_sec"] / n["cdc_events_per_sec"]) / (N4_EXEC / N_EXEC)
+    print(json.dumps({
+        "master": f"local-cluster[E,1,{EXEC_MEM_MB}]",
+        "executors": [N_EXEC, N4_EXEC],
+        "events": n["cdc_events"],
+        "batches": n["cdc_batches"],
+        "events_per_sec": [n["cdc_events_per_sec"], n4["cdc_events_per_sec"]],
+        "efficiency": round(eff, 3),
+        **{k: a for k, (a, _) in integrity.items()},
+    }), flush=True)
 
 
 if __name__ == "__main__":

@@ -1,28 +1,34 @@
 #!/usr/bin/env python
-"""Long-replay soak toward the 10^10-event target.
+"""Long replay with crash-resume.
 
 Replays ``$SOAK_EVENTS`` (default 10^9) synthetic change events through
-``LakeTable.merge`` in ``$SOAK_BATCHES`` micro-batches at local[32],
-with auto-compaction every ``$SOAK_COMPACT_EVERY`` applied batches and
-a tombstone-expiry + vacuum maintenance pass at the end — the knobs a
-long-running production stream would have on.
+``LakeTable.merge`` in ``$SOAK_BATCHES`` micro-batches, with
+auto-compaction every ``$SOAK_COMPACT_EVERY`` applied batches, a vacuum
+every ``$SOAK_VACUUM_EVERY``, and a tombstone-expiry + vacuum
+maintenance pass at the end — the knobs a long-running production stream
+would have on.
 
 The changelog is generated batch-by-batch (events.change_events slices
 compose exactly), so tmpfs holds one batch + the table, never the whole
 log — the same shape as a real tail, where the WAL segment is consumed
 and released. Generation is untimed; the metric times only MERGE apply.
 
-Reported per batch: wall seconds, rows in, dedup drops, late events,
-target rows read, rows written — the flatness of the per-batch wall
-line is the "no state blow-up" evidence. Appends its section to
-BENCH/BASELINE.md.
+Prints one JSON line per batch (wall seconds, table version, rows in,
+dedup drops, late events, target rows read, rows written, and
+``perfbench.harness.host_probe()`` before and after the merge as a
+record that gates nothing), then the table's lineage tail and applied
+offsets, then a totals line. The flatness of the per-batch wall line is
+the "no state blow-up" evidence.
 
-Clean-window protocol (round-3): every batch is bracketed by the host
-sanity probe (bench.host_probe — first-touch + steady memcpy GB/s).
-A soak is stateful, so interfered batches cannot be discarded; instead
-each batch is ANNOTATED clean/dirty and the headline sustained rate is
-additionally reported over clean-window batches only, so hypervisor
-stalls are visible instead of silently folded into the number.
+Crash-resume: kill a run, then point ``$SOAK_RESUME_DIR`` at its workdir
+(printed at start) and set ``$SOAK_START_BATCH`` to continue into its
+table. The commit log fences a re-applied batch to ``skipped``, so an
+off-by-one start index is harmless; the versions in the lineage chain
+across the kill.
+
+Usage: SOAK_EVENTS=2000000 SOAK_BATCHES=8 python BENCH/run_soak.py
+Cores default to the host's (``$SPARK_GRAFT_CPUS``), the driver heap to
+``perfbench.harness.driver_heap()`` (``$BENCH_DRIVER_MEM``).
 """
 
 from __future__ import annotations
@@ -32,7 +38,6 @@ import os
 import shutil
 import sys
 import time
-from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,44 +45,35 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     t_start = time.time()
-    # wall budget: a stateful soak on this host can balloon 10x inside a
-    # hypervisor stall; stop cleanly after the current batch once the
-    # budget is spent and report the completed prefix (slices compose,
-    # so a prefix is itself a valid replay).
+    # wall budget: stop cleanly after the current batch once it is spent
+    # and report the completed prefix (slices compose, so a prefix is
+    # itself a valid replay)
     deadline_sec = float(os.environ.get("SOAK_DEADLINE_SEC", "0")) or None
     n_events = int(os.environ.get("SOAK_EVENTS", str(10**9)))
     n_batches = int(os.environ.get("SOAK_BATCHES", "10"))
     compact_every = int(os.environ.get("SOAK_COMPACT_EVERY", "4"))
-    # vacuum cadence, decoupled from compaction (round-4): COW
-    # supersedes roughly a table's worth of files per batch, so letting
-    # garbage ride for a 4-6 batch compact cycle is what capped the
-    # round-3 soak at 687.5M on this host's tmpfs/RAM ceiling. A
-    # per-batch vacuum is a driver-side rm of already-superseded stage
-    # dirs (sub-second) and bounds garbage to ONE batch's rewrite.
+    # vacuum cadence, decoupled from compaction: COW supersedes roughly a
+    # table's worth of files per batch, and a per-batch vacuum (a
+    # driver-side rm of superseded stage dirs) bounds garbage to one
+    # batch's rewrite
     vacuum_every = int(os.environ.get("SOAK_VACUUM_EVERY", "1"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    num_buckets = int(os.environ.get("BENCH_NUM_BUCKETS", "64"))
+    # opt-in online bucket growth during the soak (split steps interleaved
+    # with ingest): rows-per-bucket budget, 0=off
+    split_budget = int(os.environ.get("SOAK_SPLIT_ROWS_PER_BUCKET", "0"))
+    split_step = int(os.environ.get("SOAK_SPLIT_STEP_BUCKETS", "8"))
+    resume_dir = os.environ.get("SOAK_RESUME_DIR")
+    start_batch = int(os.environ.get("SOAK_START_BATCH", "0"))
 
-    from bench import host_probe, shm_spill_conf
+    from bench import NUM_BUCKETS, WARM_EVENTS, shm_spill_conf
+    from perfbench.harness import driver_heap, host_cores, host_probe
 
     from bear_spark.events import change_events
     from bear_spark.lake import LakeTable
     from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
     from bear_spark.session import get_spark
 
-    MIN_FIRST = float(os.environ.get("BENCH_MIN_FIRST_GBS", "1.0"))
-    MIN_STEADY = float(os.environ.get("BENCH_MIN_STEADY_GBS", "5.0"))
-    # middle evidence tier (same rule as run_plateau_pairs): a batch
-    # whose pre/post brackets sit in one narrow band measured a
-    # consistent host even when that host is in its degraded plateau
-    PLATEAU_FLOOR = float(os.environ.get("BENCH_PLATEAU_FLOOR_GBS", "0.1"))
-    PLATEAU_BAND = float(os.environ.get("BENCH_PLATEAU_BAND", "1.5"))
-    # opt-in online bucket growth during the soak (proves split steps
-    # interleave with 10^8+-event ingest): rows-per-bucket budget, 0=off
-    split_budget = int(os.environ.get("SOAK_SPLIT_ROWS_PER_BUCKET", "0"))
-    split_step = int(os.environ.get("SOAK_SPLIT_STEP_BUCKETS", "8"))
-
-    mem = os.environ.get("BENCH_DRIVER_MEM", "48g")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(host_cores())))
+    mem = os.environ.get("BENCH_DRIVER_MEM") or driver_heap()
     spark = get_spark(
         app_name="bear_soak",
         cores=cpus,
@@ -89,15 +85,7 @@ def main() -> None:
         },
     )
 
-    # crash-resume: point SOAK_RESUME_DIR at a previous (killed) soak's
-    # workdir to continue into its table from SOAK_START_BATCH. The
-    # table is consistent at ANY kill point (atomic snapshot commits),
-    # and the embedded commit log fences a re-applied batch to
-    # {skipped}, so an off-by-one start index is harmless — this is the
-    # north rule's "resumable mid-stream from any checkpoint" exercised
-    # at full soak scale, not a bench convenience.
-    resume_dir = os.environ.get("SOAK_RESUME_DIR")
-    start_batch = int(os.environ.get("SOAK_START_BATCH", "0"))
+    # the table is consistent at ANY kill point (atomic snapshot commits)
     if resume_dir:
         workdir = resume_dir
         table = LakeTable.load(spark, os.path.join(workdir, "tbl"))
@@ -113,15 +101,16 @@ def main() -> None:
             os.path.join(workdir, "tbl"),
             TRANSCRIPT_SCHEMA,
             key_cols=KEY_COLS,
-            num_buckets=num_buckets,
+            num_buckets=NUM_BUCKETS,
             overwrite=True,
         )
+        print(f"# soak workdir {workdir}", flush=True)
     # untimed JIT warmup
     warm = LakeTable.create(
         spark, os.path.join(workdir, "warm"), TRANSCRIPT_SCHEMA,
-        key_cols=KEY_COLS, num_buckets=num_buckets, overwrite=True,
+        key_cols=KEY_COLS, num_buckets=NUM_BUCKETS, overwrite=True,
     )
-    warm.merge(change_events(spark, 50_000, n_source_partitions=32))
+    warm.merge(change_events(spark, WARM_EVENTS, n_source_partitions=32))
     shutil.rmtree(os.path.join(workdir, "warm"))
 
     step = (n_events + n_batches - 1) // n_batches
@@ -157,36 +146,22 @@ def main() -> None:
         merge_wall += dt
         shutil.rmtree(seg)
         applied += 1
-        clean = (
-            pre["first_touch_gbs"] >= MIN_FIRST
-            and pre["steady_gbs"] >= MIN_STEADY
-            and post["first_touch_gbs"] >= MIN_FIRST
-            and post["steady_gbs"] >= MIN_STEADY
-        )
-        f_lo = min(pre["first_touch_gbs"], post["first_touch_gbs"])
-        f_hi = max(pre["first_touch_gbs"], post["first_touch_gbs"])
-        stable = (
-            f_lo >= PLATEAU_FLOOR
-            and pre["steady_gbs"] >= MIN_STEADY
-            and post["steady_gbs"] >= MIN_STEADY
-            and f_hi <= PLATEAU_BAND * max(f_lo, 1e-9)
-        )
         per_batch.append(
             {
                 "batch": mb,
                 "wall_sec": round(dt, 2),
-                "rows_in": m["rows_in"],
-                "dedup_drops": m["dedup_drops"],
-                "late_events": m["late_events"],
-                "target_rows_read": m["target_rows_read"],
-                "rows_written": m["rows_written"],
+                "version": m["version"],
+                "skipped": m["skipped"],
+                # a batch fenced to skipped reports no counters
+                **{k: m.get(k, 0) for k in (
+                    "rows_in", "dedup_drops", "late_events",
+                    "target_rows_read", "rows_written",
+                )},
                 # contended-split work evidence (wall-clock-independent)
                 "lww_rows": m.get("lww_rows"),
                 "passthrough_rows": m.get("passthrough_rows"),
                 "probe_pre": pre,
                 "probe_post": post,
-                "clean": clean,
-                "plateau_stable": stable,
             }
         )
         print(json.dumps(per_batch[-1]), flush=True)
@@ -222,34 +197,23 @@ def main() -> None:
     final_rows = table.read().count()
 
     if not per_batch or merge_wall <= 0:
-        # wall budget spent before the first batch could apply (session
-        # boot + warmup + generation can eat minutes on a stalled host):
-        # report the fact instead of dying on a zero division
         print("soak aborted: wall budget exhausted before any batch applied",
               flush=True)
         sys.exit(2)
 
-    clean_batches = [b for b in per_batch if b["clean"]]
-    clean_wall = sum(b["wall_sec"] for b in clean_batches)
-    stable_batches = [b for b in per_batch if b["plateau_stable"]]
-    stable_wall = sum(b["wall_sec"] for b in stable_batches)
-    totals = {
-        "events": sum(b["rows_in"] for b in per_batch),
+    print(json.dumps({
+        "lineage": [
+            {k: e.get(k) for k in ("version", "op", "skipped", "rows_in", "rows_written")}
+            for e in table.history()
+        ],
+        "applied_offsets": table.applied_offsets(),
+    }), flush=True)
+    events = sum(b["rows_in"] for b in per_batch)
+    print(json.dumps({
+        "events": events,
         "batches": len(per_batch),
         "merge_wall_sec": round(merge_wall, 1),
-        "events_per_sec": round(sum(b["rows_in"] for b in per_batch) / merge_wall, 1),
-        "clean_batches": len(clean_batches),
-        "clean_events_per_sec": (
-            round(sum(b["rows_in"] for b in clean_batches) / clean_wall, 1)
-            if clean_wall
-            else None
-        ),
-        "plateau_stable_batches": len(stable_batches),
-        "plateau_stable_events_per_sec": (
-            round(sum(b["rows_in"] for b in stable_batches) / stable_wall, 1)
-            if stable_wall
-            else None
-        ),
+        "events_per_sec": round(events / merge_wall, 1),
         "buckets_split_total": sum(b.get("buckets_split", 0) for b in per_batch),
         "final_num_buckets": int(table.snapshot["num_buckets"]),
         "maintenance_wall_sec": round(maint_wall, 1),
@@ -257,65 +221,12 @@ def main() -> None:
         "late_events": sum(b["late_events"] for b in per_batch),
         "tombstones_expired": expired["expired"],
         "final_rows": final_rows,
+        "final_version": table.snapshot["version"],
         "cpus": cpus,
-        "num_buckets": num_buckets,
         "planned_events": n_events,
         "stopped_early": stopped_early,
-    }
-    print(json.dumps(totals), flush=True)
+    }), flush=True)
     shutil.rmtree(workdir, ignore_errors=True)
-
-    rows = "\n".join(
-        f"| {b['batch']} | {b['wall_sec']} | {b['rows_in']:,} | {b['dedup_drops']:,} "
-        f"| {b['target_rows_read']:,} | {b['rows_written']:,} "
-        f"| {b['probe_pre']['first_touch_gbs']}/{b['probe_pre']['steady_gbs']} "
-        f"→ {b['probe_post']['first_touch_gbs']}/{b['probe_post']['steady_gbs']} "
-        f"| {'yes' if b['clean'] else 'NO'} "
-        f"| {'yes' if b['plateau_stable'] else 'NO'} |"
-        for b in per_batch
-    )
-    md = f"""
-
-## {totals["events"]:,}-event soak (toward the 10^10 target)
-{f'''
-(Planned {totals["planned_events"]:,} events; stopped early at the wall
-budget after {totals["batches"]} batches — event-log slices compose, so
-the completed prefix is itself a valid replay.)
-''' if totals["stopped_early"] else ""}
-Generated by `python BENCH/run_soak.py` on
-{datetime.now(timezone.utc).isoformat(timespec="seconds")}: {totals["events"]:,} events in
-{totals["batches"]} micro-batches at local[{cpus}], auto-compaction every
-{compact_every} batches, tombstone expiry + vacuum at end-of-stream.
-Sustained MERGE-apply **{totals["events_per_sec"]:,.0f} events/s** over
-{totals["merge_wall_sec"]}s of apply time; over the
-{totals["clean_batches"]}/{totals["batches"]} probe-clean batches
-(brackets ≥ {MIN_FIRST} GB/s first-touch and ≥ {MIN_STEADY} GB/s
-steady — the full pre/post probes are printed per batch below so the
-reader can adjudicate each one) the sustained rate is
-**{totals["clean_events_per_sec"] or "n/a"} events/s**, and over the
-{totals["plateau_stable_batches"]}/{totals["batches"]} plateau-stable
-batches (brackets in one ≤{PLATEAU_BAND}x band above
-{PLATEAU_FLOOR} GB/s — internally consistent host, same rule as the
-plateau pairs) it is
-**{totals["plateau_stable_events_per_sec"] or "n/a"} events/s**
-(maintenance passes add {totals["maintenance_wall_sec"]}s, untimed
-generation excluded); {totals["dedup_drops"]:,} LWW dedup drops,
-{totals["late_events"]:,} late-beyond-watermark events counted,
-{totals["tombstones_expired"]:,} tombstones expired, final table
-{totals["final_rows"]:,} rows.
-
-| batch | wall (s) | rows in | dedup drops | target rows read | rows written | probes pre→post (first/steady GB/s) | clean | stable |
-|---|---|---|---|---|---|---|---|---|
-{rows}
-
-Per-batch wall time tracks the copy-on-write rewrite of an ever-larger
-resident table (target rows read), not accumulated stream state — the
-events/sec-per-target-row line is flat, which is the no-state-blow-up
-evidence; compaction keeps file counts bounded throughout.
-"""
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(md)
-    print("appended soak section to BENCH/BASELINE.md")
 
 
 if __name__ == "__main__":

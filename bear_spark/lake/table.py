@@ -3,7 +3,7 @@
 Layout on disk::
 
     <root>/
-      _meta/VERSION          # current snapshot version (atomic os.replace)
+      _meta/VERSION          # hint: a recent snapshot version (atomic os.replace)
       _meta/v<N>.json        # immutable snapshot documents
       data/s<N>-<token>/_bucket_dir=<K>/*.parquet  # files staged by an attempt at commit N
 
@@ -16,9 +16,13 @@ watermark, and a lineage tail of recent commit metrics.
 Guarantees (the Iceberg-shaped contract the north rule asks for):
 
 - **Atomic commits**: data files are staged first, then the snapshot
-  JSON and the VERSION pointer are swapped via ``os.replace`` —
-  readers see either the old or the new snapshot, never a mix
-  (two-phase: stage data, swap metadata).
+  JSON is published by exclusive create (``os.link`` of a fully written
+  temp file) — readers see either the old or the new snapshot, never a
+  mix (two-phase: stage data, publish metadata). Of two writers on one
+  base version exactly one links ``v<N+1>.json``; the other raises
+  ``ConcurrentCommit``. ``VERSION`` moves after the link and is only a
+  hint: the current version is the hint rolled forward while the next
+  snapshot exists, so a kill between the two writes loses nothing.
 - **Exactly-once**: the commit log lives INSIDE the snapshot, so
   "rows applied" and "offsets advanced" are one atomic write. A
   replayed micro-batch whose ``(source_partition, offset)`` ranges are
@@ -237,8 +241,16 @@ class LakeTable:
 
     # -------------------------------------------------------- metadata
     def _version(self) -> int:
-        with open(os.path.join(self.root, "_meta", "VERSION")) as f:
-            return int(f.read().strip())
+        """Current version: the ``VERSION`` hint rolled forward while
+        the next snapshot document exists (Iceberg's
+        ``version-hint.text`` works the same way). A commit links
+        ``v<N>.json`` before it moves the hint, so the hint may lag."""
+        meta = os.path.join(self.root, "_meta")
+        with open(os.path.join(meta, "VERSION")) as f:
+            v = int(f.read().strip())
+        while os.path.exists(os.path.join(meta, f"v{v + 1}.json")):
+            v += 1
+        return v
 
     def _snapshot(self, version: int | None = None) -> dict[str, Any]:
         """Current snapshot, or any retained historical version
@@ -249,7 +261,10 @@ class LakeTable:
             return json.load(f)
 
     def _write_snapshot(self, snap: dict[str, Any], expect_version: int | None) -> None:
-        """Two-phase commit, phase 2: publish metadata atomically."""
+        """Two-phase commit, phase 2: publish metadata atomically. The
+        snapshot is linked into place by exclusive create, so a writer
+        that lost the race for ``v<N>.json`` raises ``ConcurrentCommit``
+        instead of replacing the winner's document."""
         meta = os.path.join(self.root, "_meta")
         if expect_version is not None and self._version() != expect_version:
             raise ConcurrentCommit(
@@ -259,7 +274,14 @@ class LakeTable:
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(snap, f)
-        os.replace(tmp, path)
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            raise ConcurrentCommit(
+                f"v{snap['version']} was committed by another writer"
+            ) from None
+        finally:
+            os.unlink(tmp)
         vtmp = os.path.join(meta, f"VERSION.tmp-{uuid.uuid4().hex}")
         with open(vtmp, "w") as f:
             f.write(str(snap["version"]))

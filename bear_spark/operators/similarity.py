@@ -19,7 +19,8 @@ from pyspark.sql import types as T
 
 # `impl="auto"` dispatch boundary for the Arrow-batched BLAS kernels vs
 # the JVM zip_with/aggregate expressions. Measured (BENCH/BASELINE.md
-# "Vector math A/B", 100k-row topk / 20k-row blocked pairs): the BLAS
+# "Vector math A/B", 100k-row topk / 20k-row blocked pairs; rerun with
+# `python BENCH/run_vector_ab.py dim`): the BLAS
 # kernel wins at EVERY dim once the corpus amortizes the Python worker
 # round-trip — topk 0.75→0.40 s at dim 64, 2.43→0.46 at 768; blocked
 # pairs 3.9→0.7 at 64 and 61.3→0.57 at 768 (the JVM per-pair dot fold
@@ -62,7 +63,8 @@ def cosine_topk(
     low dim), ``"pandas"`` (Arrow-batched BLAS matvec — wins at
     embedding-model dims, reference default 3072:
     bear/config.py:60-61), or ``"auto"`` (dispatch on
-    PANDAS_DIM_THRESHOLD; A/B numbers in BENCH/BASELINE.md)."""
+    PANDAS_DIM_THRESHOLD; A/B numbers in BENCH/BASELINE.md, from
+    BENCH/run_vector_ab.py)."""
     if impl == "auto":
         impl = "pandas" if len(query) >= PANDAS_DIM_THRESHOLD else "jvm"
     if impl == "pandas":
@@ -273,7 +275,8 @@ def ivf_fit_centroids_local(
 # it PLANS fine at any n_lists, but its per-row cost is a scalar fold
 # over every (centroid, component) pair inside codegen, while the
 # Arrow kernel does ONE (batch × dim) @ (dim × n_lists) BLAS matmul +
-# argmin per batch. Measured (BENCH/BASELINE.md "IVF assignment A/B",
+# argmin per batch. Measured (`python BENCH/run_vector_ab.py ivf`;
+# BENCH/BASELINE.md "IVF assignment A/B",
 # 100k rows dim 64): JVM grows linearly 2.8→5.2→19→76→161 s across
 # n_lists 8→32→128→512→1024 while the kernel stays 0.6–7.7 s — the
 # kernel wins ~8× from n_lists=32 (2048 cells) up. Below that, tiny

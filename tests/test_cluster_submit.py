@@ -4,12 +4,11 @@ master runs the CDC merge end-to-end and converges to the same state,
 with the merge kernel on the driver and in ``applyInArrow`` tasks on the
 executors.
 
-This is the only test that leaves the shared local[8] session — it
-boots a standalone-mode mini-cluster (2 executor JVM processes), so it
-costs minutes and is opt-in: ``BEAR_TEST_CLUSTER=1 pytest
-tests/test_cluster_submit.py``. The default suite stays fast; the
-round's BENCH evidence (BENCH/run_cluster_scaling.py) exercises the
-same path at benchmark scale.
+It boots a standalone-mode mini-cluster (2 executor JVM processes of
+1.5 GiB each, plus a 2 GiB driver), so it costs about half a minute and is
+opt-in: ``BEAR_TEST_CLUSTER=1 pytest tests/test_cluster_submit.py``.
+``BENCH/run_cluster_scaling.py`` submits ``bench.py`` the same way at 1
+and 4 executors to measure the N→4N pair.
 """
 
 from __future__ import annotations

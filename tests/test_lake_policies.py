@@ -950,6 +950,78 @@ def test_concurrent_commit_loser_leaves_winner_intact(spark, tmp_path):
     ]
 
 
+def test_interleaved_snapshot_commits_have_one_winner(spark, tmp_path):
+    """Two writers that both read base v0 before either publishes: only
+    one may commit v1. The other raises ConcurrentCommit, and v1.json
+    holds the winner's snapshot, not a silent overwrite by the loser."""
+    import json
+    import os
+    import threading
+
+    from bear_spark.lake.table import ConcurrentCommit
+
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "tbl"), SCHEMA, key_cols=["conv_id", "turn_idx"],
+        seq_col="ts", num_buckets=2,
+    )
+    base = tbl._snapshot()
+    # both writers pass the version check before either links its file
+    barrier = threading.Barrier(2)
+    orig_version = tbl._version
+
+    def racing_version():
+        barrier.wait(timeout=30)
+        return orig_version()
+
+    tbl._version = racing_version  # type: ignore[method-assign]
+    outcome: dict[str, str] = {}
+
+    def commit(name: str) -> None:
+        snap = {**base, "version": 1, "lineage": [{"writer": name}]}
+        try:
+            tbl._write_snapshot(snap, expect_version=0)
+            outcome[name] = "committed"
+        except ConcurrentCommit:
+            outcome[name] = "lost"
+
+    threads = [threading.Thread(target=commit, args=(n,)) for n in ("a", "b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    tbl._version = orig_version  # type: ignore[method-assign]
+
+    assert sorted(outcome.values()) == ["committed", "lost"], outcome
+    winner = next(n for n, o in outcome.items() if o == "committed")
+    with open(os.path.join(tbl.root, "_meta", "v1.json")) as f:
+        assert json.load(f)["lineage"] == [{"writer": winner}]
+    assert tbl._version() == 1
+
+
+def test_stale_version_hint_rolls_forward(spark, tmp_path):
+    """A kill between linking v1.json and moving VERSION leaves the hint
+    at 0. The table must still load as v1, and the next merge must
+    commit v2 on top of it, keeping both batches' rows."""
+    import os
+
+    root = str(tmp_path / "tbl")
+    t1 = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"],
+        seq_col="ts", num_buckets=2,
+    )
+    t1.merge(_events(spark, [("first", 0, "one", "2024-01-01 00:00:00", "I", 1)]))
+    with open(os.path.join(root, "_meta", "VERSION"), "w") as f:
+        f.write("0")
+
+    t2 = LakeTable.load(spark, root)
+    assert t2.snapshot["version"] == 1
+    m = t2.merge(_events(spark, [("second", 0, "two", "2024-01-02 00:00:00", "I", 2)]))
+    assert m["version"] == 2
+    got = LakeTable.load(spark, root).read().toPandas()
+    assert sorted(got["text"]) == ["one", "two"]
+
+
 def test_cdc_applier_retries_on_concurrent_commit(spark, tmp_path, monkeypatch):
     """A side maintenance job racing a micro-batch must not kill the
     stream: CDCApplier retries merge on ConcurrentCommit (bounded), and

@@ -2,7 +2,7 @@
 
 Usage: python tools/profile_merge.py <cores> [n_events] [n_batches]
 Runs bench.bench_cdc (the exact benchmark code path) in-process and
-prints throughput.
+prints throughput, integrity counters and the CPU split.
 """
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n_events = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-    extra = {}
+    # bench_cdc reads JVM-task CPU from the status REST API
+    extra = {"spark.ui.enabled": "true", "spark.ui.port": "0"}
     if os.environ.get("BEAR_JAVA_OPTS"):
         extra["spark.driver.extraJavaOptions"] = os.environ["BEAR_JAVA_OPTS"]
     spark = get_spark(
