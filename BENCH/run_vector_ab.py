@@ -79,9 +79,9 @@ def dim_section(spark, gen) -> None:
         r["topk_winner"] = winner(r["topk_jvm_sec"], r["topk_pandas_sec"])
 
         def jvm_pairs():
-            e = blocks.withColumn("nrm", _norm(F.col("embedding")))
+            e = blocks.withColumn("nrm", _norm("embedding"))
             a, b = e.alias("a"), e.alias("b")
-            cos = _dot(F.col("a.embedding"), F.col("b.embedding")) / (
+            cos = _dot("a.embedding", "b.embedding") / (
                 F.col("a.nrm") * F.col("b.nrm")
             )
             return (

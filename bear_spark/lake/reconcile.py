@@ -11,8 +11,11 @@ reads group files by schema version and align each group to the current
 schema. Incompatible changes (narrowing, type clashes) raise.
 
 Two align paths:
-- ``align`` — JVM-side ``select``/``cast`` (Catalyst codegen; the engine
-  default — no Python in the loop at all).
+- ``align`` — JVM-side casts in one ``selectExpr`` (Catalyst codegen; the
+  engine default — no Python in the loop at all). The projection is SQL
+  text, not one ``Column`` per field: each ``Column`` call is a py4j
+  round trip on the driver, and a frame already at the target schema is
+  returned as is.
 - ``align_in_pandas`` — the same rewrite expressed as a vectorized
   Arrow-batch pass through ``mapInPandas`` (kept for the raw-parse stage
   and as the explicit "rewrite Arrow batches in a pandas UDF" path; it
@@ -24,8 +27,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bear_spark.schema import sql_ident, sql_type
 
 # directed widening lattice: src -> allowed wider targets
 _WIDEN: dict[str, tuple[str, ...]] = {
@@ -105,15 +109,21 @@ def evolve(table_schema: T.StructType, batch_schema: T.StructType) -> tuple[T.St
 
 
 def align(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project/cast ``df`` onto ``target`` (JVM-side; missing cols → null)."""
-    cols = []
+    """Project/cast ``df`` onto ``target`` (JVM-side; missing cols → null).
+
+    One ``selectExpr`` over SQL text rather than a ``Column`` per field
+    (every ``Column`` call is a py4j round trip); a frame whose schema
+    already is ``target`` comes back unchanged."""
+    if df.schema == target:
+        return df
     have = set(df.columns)
-    for f in target.fields:
-        if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    return df.selectExpr(
+        *[
+            f"CAST({sql_ident(f.name) if f.name in have else 'NULL'} AS "
+            f"{sql_type(f.dataType)}) AS {sql_ident(f.name)}"
+            for f in target.fields
+        ]
+    )
 
 
 def align_in_pandas(df: DataFrame, target: T.StructType) -> DataFrame:

@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from bear_spark.lake import reconcile
-from bear_spark.schema import schema_from_json, schema_to_json
+from bear_spark.schema import schema_from_json, schema_to_json, sql_ident, sql_type
 
 _SYS_FIELDS = [
     T.StructField("_lsn", T.LongType(), True),
@@ -115,22 +115,6 @@ def merge_partition_count(
     """
     want = max(shuffle_parts, 2 * max(1, default_parallelism))
     return max(1, min(buckets, want))
-
-
-def _q(name: str) -> str:
-    """A column name as a SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_type(dt: T.DataType) -> str:
-    """A Spark type as SQL, struct field names quoted."""
-    if isinstance(dt, T.StructType):
-        return "struct<" + ",".join(f"{_q(f.name)}:{_sql_type(f.dataType)}" for f in dt) + ">"
-    if isinstance(dt, T.ArrayType):
-        return f"array<{_sql_type(dt.elementType)}>"
-    if isinstance(dt, T.MapType):
-        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
-    return dt.simpleString()
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:
@@ -382,7 +366,7 @@ class LakeTable:
         route with ``rebucket.to``; everything else still routes with
         the old modulus. O(1) per row either way — the split frontier
         is a single comparison, never a membership list."""
-        h = f"xxhash64({', '.join(cols or [_q(c) for c in snap['bucket_cols']])})"
+        h = f"xxhash64({', '.join(cols or [sql_ident(c) for c in snap['bucket_cols']])})"
         base = f"pmod({h}, {int(snap['num_buckets'])})"
         rb = snap.get("rebucket")
         if rb:
@@ -477,7 +461,8 @@ class LakeTable:
 
     def _scan(self, snap: dict, files) -> DataFrame:
         """Scan the given manifest entries of ``snap`` under declared
-        schemas, aligned to the snapshot's current schema."""
+        schemas, aligned to the snapshot's current schema (a group
+        written under it needs no projection)."""
         target = T.StructType(self.payload_schema(snap).fields + _SYS_FIELDS)
         by_ver: dict[int, list[str]] = {}
         for fi in files:
@@ -492,7 +477,7 @@ class LakeTable:
                 schema_from_json(snap["schemas"][str(ver)]).fields + _SYS_FIELDS
             )
             df = self.spark.read.schema(phys).parquet(*paths)
-            parts.append(reconcile.align(df, target))
+            parts.append(df if phys == target else reconcile.align(df, target))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -511,15 +496,16 @@ class LakeTable:
         df = self._read_files(snap, buckets, include_deleted=include_deleted)
         if not include_deleted:
             # belt-and-braces residual filter on top of the dir pruning
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+            df = df.where("NOT coalesce(`_deleted`, false)")
         if not include_system:
             df = df.drop("_lsn", "_deleted", "_bucket")
         return df
 
     def lookup(self, *key_values) -> DataFrame:
         """Point lookup by bucket-column value(s): computes the bucket
-        driver-side and scans ONLY that bucket's files (plus the parquet
-        min/max pruning inside them — data files are key-sorted).
+        driver-side and scans ONLY that bucket's live files. The key is
+        bound rather than inlined into the plan (see below), so a new key
+        compiles nothing; the scan does not prune row groups on it.
         Reference analog: `client.get(ids=[...])` point reads
         (reference: docs/examples/milvus_engine_access.ipynb)."""
         snap = self._snapshot()
@@ -534,9 +520,15 @@ class LakeTable:
         )
         row = self.spark.createDataFrame(key, fields)
         bucket = row.selectExpr(self._bucket_sql(snap)).collect()[0][0]
+        # each key value is the one element of a typed array literal: an
+        # array literal reaches the generated code as a reference, where
+        # a bare long or int literal is compiled into it, so every new key
+        # would compile new classes
         df = self.read(buckets=[bucket])
-        for col, val in zip(snap["bucket_cols"], key_values):
-            df = df.filter(F.col(col) == val)
+        for f, val in zip(fields, key_values):
+            df = df.filter(
+                F.array_contains(F.array(F.lit(val).cast(sql_type(f.dataType))), F.col(f.name))
+            )
         return df
 
     # ------------------------------------------------- vector indexes
@@ -630,65 +622,75 @@ class LakeTable:
                 f"from_version {snap_from['version']} is newer than "
                 f"to_version {snap_to['version']}"
             )
-        key_cols = snap_to["key_cols"]
-        seq_col = snap_to["seq_col"]
         target = self.payload_schema(snap_to)
-        out_cols = [f.name for f in target.fields]
         buckets = self._changed_buckets(snap_from, snap_to)
         files_from = list(self._iter_files(snap_from, buckets))
         files_to = list(self._iter_files(snap_to, buckets))
         shared = {fi["path"] for fi in files_from} & {fi["path"] for fi in files_to}
 
-        def side(snap: dict, files: list[dict], prefix: str) -> DataFrame:
+        def o(c: str) -> str:
+            return sql_ident("_o_" + c)
+
+        def n(c: str) -> str:
+            return sql_ident("_n_" + c)
+
+        def side(snap: dict, files: list[dict], name) -> DataFrame:
+            # one projection: cast up to the `to` schema (across schema
+            # evolution; a missing column is a typed null), prefix the
+            # names, and fold the system columns into lsn / del
+            have = {f.name: f.dataType for f in self.payload_schema(snap).fields}
+            cols = []
+            for f in target.fields:
+                src = sql_ident(f.name) if f.name in have else "NULL"
+                if have.get(f.name) != f.dataType:
+                    src = f"CAST({src} AS {sql_type(f.dataType)})"
+                cols.append(f"{src} AS {name(f.name)}")
             df = self._scan(snap, [fi for fi in files if fi["path"] not in shared])
-            # align across schema evolution to the `to` schema + system cols
-            df = reconcile.align(df, T.StructType(target.fields + _SYS_FIELDS))
-            return df.select(
-                *[F.col(c).alias(f"{prefix}{c}") for c in out_cols],
-                F.col("_lsn").alias(f"{prefix}lsn"),
-                F.coalesce("_deleted", F.lit(False)).alias(f"{prefix}del"),
+            return df.selectExpr(
+                *cols, f"`_lsn` AS {name('lsn')}", f"coalesce(`_deleted`, false) AS {name('del')}"
             )
 
-        old = side(snap_from, files_from, "_o_")
-        new = side(snap_to, files_to, "_n_")
-        cond = [old[f"_o_{k}"].eqNullSafe(new[f"_n_{k}"]) for k in key_cols]
-        j = old.join(new, cond, "full_outer")
+        old = side(snap_from, files_from, o)
+        new = side(snap_to, files_to, n)
+        on = " AND ".join(f"{o(k)} <=> {n(k)}" for k in snap_to["key_cols"])
+        j = old.join(new, F.expr(on), "full_outer")
 
-        o_live = F.col("_o_lsn").isNotNull() & ~F.col("_o_del")
-        n_live = F.col("_n_lsn").isNotNull() & ~F.col("_n_del")
-        same_ver = F.col("_o_lsn").eqNullSafe(F.col("_n_lsn")) & F.col(
-            f"_o_{seq_col}"
-        ).eqNullSafe(F.col(f"_n_{seq_col}"))
-        ctype = (
-            F.when(~o_live & n_live, F.lit("insert"))
-            .when(o_live & ~n_live, F.lit("delete"))
-            .when(o_live & n_live & ~same_ver, F.lit("update_postimage"))
-        )
-        j = j.withColumn("_change_type", ctype).filter(
-            F.col("_change_type").isNotNull()
-        )
+        seq = snap_to["seq_col"]
+        o_live = f"({o('lsn')} IS NOT NULL AND NOT {o('del')})"
+        n_live = f"({n('lsn')} IS NOT NULL AND NOT {n('del')})"
+        same_ver = f"({o('lsn')} <=> {n('lsn')} AND {o(seq)} <=> {n(seq)})"
+        j = j.selectExpr(
+            "*",
+            f"CASE WHEN NOT {o_live} AND {n_live} THEN 'insert' "
+            f"WHEN {o_live} AND NOT {n_live} THEN 'delete' "
+            f"WHEN {o_live} AND {n_live} AND NOT {same_ver} THEN 'update_postimage' "
+            "END AS _change_type",
+        ).where("_change_type IS NOT NULL")
         if include_preimage:
             # an update emits its preimage row too: one joined row fans
             # out to two, so the join still runs once
             j = j.withColumn(
                 "_change_type",
-                F.explode(
-                    F.when(
-                        F.col("_change_type") == "update_postimage",
-                        F.array(F.lit("update_postimage"), F.lit("update_preimage")),
-                    ).otherwise(F.array(F.col("_change_type")))
+                F.expr(
+                    "explode(CASE WHEN _change_type = 'update_postimage' "
+                    "THEN array('update_postimage', 'update_preimage') "
+                    "ELSE array(_change_type) END)"
                 ),
             )
         # deletes carry the last-seen (old) payload, as do preimages;
         # inserts and postimages come from the new side
-        use_old = F.col("_change_type").isin("delete", "update_preimage")
-        return j.select(
+        # the version comes out of a one-element array: an array literal
+        # reaches the generated code as a reference, where a bare int
+        # literal is compiled into it, so each new version would compile
+        # new classes
+        return j.selectExpr(
             *[
-                F.when(use_old, F.col(f"_o_{c}")).otherwise(F.col(f"_n_{c}")).alias(c)
-                for c in out_cols
+                f"CASE WHEN _change_type IN ('delete', 'update_preimage') "
+                f"THEN {o(f.name)} ELSE {n(f.name)} END AS {sql_ident(f.name)}"
+                for f in target.fields
             ],
             "_change_type",
-            F.lit(snap_to["version"]).alias("_commit_version"),
+            f"explode(array({int(snap_to['version'])})) AS _commit_version",
         )
 
     # ------------------------------------------------------------ MERGE
@@ -942,14 +944,14 @@ class LakeTable:
         # different bucket than prior batches and than lookup()'s probe.
         have = set(batch.columns)
         cast = {
-            f.name: f"CAST({_q(f.name) if f.name in have else 'NULL'} AS {_sql_type(f.dataType)})"
+            f.name: f"CAST({sql_ident(f.name) if f.name in have else 'NULL'} AS {sql_type(f.dataType)})"
             for f in new_schema.fields
         }
         # segment id = source file (one changelog chunk = one contiguous
         # offset segment); input_file_name() must be evaluated on the
         # scan, not on top of a cached relation (where it returns "")
         src_evt = batch.selectExpr(
-            *[f"{e} AS {_q(n)}" for n, e in cast.items()],
+            *[f"{e} AS {sql_ident(n)}" for n, e in cast.items()],
             f"{self._bucket_sql(snap, [cast[c] for c in snap['bucket_cols']])} AS _bucket",
             "`op` AS _op",
             "`lsn` AS _elsn",

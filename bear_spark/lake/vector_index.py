@@ -551,11 +551,4 @@ class VectorIndex:
                 ]
             )
             return self.table.spark.createDataFrame([], schema)
-        q = F.array(*[F.lit(float(x)) for x in query])
-        return (
-            cand.select(
-                id_col, F.round(S.cosine(F.col(m["vec_col"]), q), 6).alias("cos_sim")
-            )
-            .orderBy(F.desc("cos_sim"), id_col)
-            .limit(k)
-        )
+        return S.cosine_rank(cand, query, k, id_col, m["vec_col"])

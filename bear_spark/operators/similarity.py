@@ -12,10 +12,14 @@ Python in the loop.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bear_spark.schema import col_sql
 
 # `impl="auto"` dispatch boundary for the Arrow-batched BLAS kernels vs
 # the JVM zip_with/aggregate expressions. Measured (BENCH/BASELINE.md
@@ -33,20 +37,80 @@ from pyspark.sql import types as T
 PANDAS_DIM_THRESHOLD = 256
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _double_sql(x: float) -> str:
+    """A float as a SQL double literal. NaN and ±inf have no literal
+    form, so they are casts of their names (folded to literals)."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def vector_sql(values) -> str:
+    """A query vector as a SQL ``array<double>`` literal, built as text in
+    Python (one ``F.lit`` per component would be one py4j round trip
+    each)."""
+    return "array(" + ", ".join(_double_sql(x) for x in values) + ")"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two numeric arrays given as SQL, in double. The
+    vector math of every JVM-side similarity in this module is this text
+    (and ``cosine_sql`` over it)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
+def norm_sql(a: str) -> str:
+    """L2 norm of a numeric array given as SQL."""
+    return f"sqrt({dot_sql(a, a)})"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine similarity of two numeric arrays given as SQL."""
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
+
+
+def _expr(sql_of, *args):
+    """``sql_of`` over ``args`` as a Column. A str argument is SQL (e.g. a
+    column name); a Column argument is bound to a field of a lambda
+    parameter, so the math is the same SQL text either way."""
+    if all(isinstance(a, str) for a in args):
+        return F.expr(sql_of(*args))
+    fields = [(F.expr(a) if isinstance(a, str) else a).alias(f"_{i}") for i, a in enumerate(args)]
+    packed = F.array(F.struct(*fields))
+    body = sql_of(*[f"_p._{i}" for i in range(len(args))])
+    return F.call_function("transform", packed, F.expr(f"_p -> {body}"))[0]
+
+
+def _dot(a, b):
+    return _expr(dot_sql, a, b)
+
+
 def _norm(a):
-    return F.sqrt(_dot(a, a))
+    return _expr(norm_sql, a)
 
 
 def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _expr(cosine_sql, a, b)
+
+
+def cosine_rank(
+    vecs: DataFrame, query: list[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, cos_sim) of the ``k`` rows of ``vecs`` nearest ``query`` by
+    cosine, rounded to 6 places, ties by id: the exact scoring step of
+    every JVM-side top-k here and of ``VectorIndex.probe``."""
+    cos = cosine_sql(col_sql(vec_col), vector_sql(query))
+    return (
+        vecs.selectExpr(col_sql(id_col), f"round({cos}, 6) AS cos_sim")
+        .orderBy(F.desc("cos_sim"), id_col)
+        .limit(k)
+    )
 
 
 def cosine_topk(
@@ -69,12 +133,7 @@ def cosine_topk(
         impl = "pandas" if len(query) >= PANDAS_DIM_THRESHOLD else "jvm"
     if impl == "pandas":
         return cosine_topk_pandas(vecs, query, k=k, id_col=id_col, vec_col=vec_col)
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        vecs.select(id_col, F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
+    return cosine_rank(vecs, query, k, id_col, vec_col)
 
 
 def _stackable(pdf, vec_col: str, dim: int | None):
@@ -193,14 +252,15 @@ def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
 def rp_lsh_bucket_expr(vec_col: str, planes: list[list[float]]):
     """Bucket id = bit pattern of sign(v · plane_i) — a long column."""
-    bucket = F.lit(0).cast("long")
+    v = col_sql(vec_col)
+    bucket = "CAST(0 AS BIGINT)"
     for i, p in enumerate(planes):
-        parr = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(F.col(vec_col), parr) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
+        bit = (
+            f"CASE WHEN {dot_sql(v, vector_sql(p))} > 0 "
+            "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
         )
-        bucket = bucket.bitwiseXOR(F.shiftleft(bit, i))
-    return bucket
+        bucket = f"({bucket} ^ shiftleft({bit}, {i}))"
+    return F.expr(bucket)
 
 
 def ivf_fit_centroids(
@@ -395,12 +455,7 @@ def ivf_ann_topk(
     probe = sorted(np.argsort(dists)[:n_probe].tolist())
     assigned = with_ivf_list(vecs, centroids, vec_col=vec_col, impl=impl)
     cand = assigned.filter(F.col("_list").isin(probe))
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        cand.select(id_col, F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
+    return cosine_rank(cand, query, k, id_col, vec_col)
 
 
 def lsh_ann_topk(
@@ -429,9 +484,4 @@ def lsh_ann_topk(
     cand = bucketed.filter(
         F.bit_count(F.col("_bucket").bitwiseXOR(F.lit(qbucket))) <= max_probe_hamming
     )
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        cand.select(id_col, F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
+    return cosine_rank(cand, query, k, id_col, vec_col)

@@ -56,3 +56,30 @@ def schema_to_json(schema: T.StructType) -> dict:
 
 def schema_from_json(obj: dict) -> T.StructType:
     return T.StructType.fromJson(obj)
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a SQL identifier, backquoted. Only identifiers and
+    the engine's own numbers are written into SQL text; caller values go
+    in as typed literals."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def col_sql(name: str) -> str:
+    """A column name as ``F.col`` reads it, as SQL: dots separate the
+    parts of a qualified or nested name, each part quoted. A name that
+    already has backquotes is taken as SQL as it stands."""
+    if "`" in name:
+        return name
+    return ".".join(sql_ident(p) for p in name.split("."))
+
+
+def sql_type(dt: T.DataType) -> str:
+    """A Spark type as SQL, struct field names quoted."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(f"{sql_ident(f.name)}:{sql_type(f.dataType)}" for f in dt) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{sql_type(dt.keyType)},{sql_type(dt.valueType)}>"
+    return dt.simpleString()

@@ -25,7 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bear_spark.operators.rerank import rerank_scores
-from bear_spark.operators.similarity import cosine
+from bear_spark.operators.similarity import cosine_sql, vector_sql
+from bear_spark.schema import col_sql
 
 
 class SearchEngine:
@@ -68,8 +69,10 @@ class SearchEngine:
             empty = df.withColumn("distance", F.lit(None).cast("double"))
             cols = output_cols or [c for c in empty.columns if c != self.vec_col]
             return empty.select(*cols).limit(0)
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        df = df.withColumn("distance", F.round(cosine(F.col(self.vec_col), q), 6))
+        # one SQL expression: a Column per vector component would be a
+        # py4j round trip each
+        cos = cosine_sql(col_sql(self.vec_col), vector_sql(query_vec))
+        df = df.withColumn("distance", F.expr(f"round({cos}, 6)"))
         if min_distance is not None:
             df = df.filter(F.col("distance") >= min_distance)
         cols = output_cols or [c for c in df.columns if c != self.vec_col]

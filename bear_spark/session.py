@@ -28,6 +28,21 @@ classes, and one write evicts the read plans. Short queries spend more
 time in Janino than in execution, so a cache that holds the working
 set takes the compile out of every warm call. An A/B against the stock
 cache passes ``extra_conf={"spark.sql.codegen.cache.maxEntries": "100"}``.
+
+Every session turns off PySpark's per-call origin capture
+(``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4.1
+wraps each ``functions.*``, ``Column`` and ``DataFrame`` call so that it
+records the Python call site for error messages: the wrapper looks up
+the active session, reads a conf, sets and clears the JVM-side origin
+(each a py4j round trip) and walks the Python stack. A serving read
+built from ``Column`` calls made 450-2,700 round trips with it on, most
+of them for the wrapper. What is lost: an error's DataFrame query
+context no longer names the Python file and line that built the
+failing expression; the error class, message and SQL fragment stay.
+PySpark reads the setting once per Python process, at the first such
+call, so to turn it back on pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to the first ``get_spark`` of the process.
 """
 
 from __future__ import annotations
@@ -132,6 +147,8 @@ def get_spark(
         # file distributed listing job (which costs seconds per merge)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no per-call origin capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # cluster mode: executors don't inherit the driver env, so ship the
     # same knobs through executorEnv (no-op in local mode)

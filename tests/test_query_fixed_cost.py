@@ -1,12 +1,22 @@
 """The fixed cost of a repeated read: a warm query recompiles no generated
-class and starts no schema-inference job."""
+class and starts no schema-inference job, and building a serving read
+takes few py4j round trips."""
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from bear_spark.lake import LakeTable
 from bear_spark.queries import t
+from bear_spark.search import SearchEngine
 
 
 def _jobs_of(spark, fn):
@@ -48,3 +58,171 @@ def test_t_memoizes_the_schema_by_file_identity(spark, tmp_path):
     df = t(spark, str(tmp_path), "corpus")
     assert df.columns == ["a", "b"]
     assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+# --- serving reads: built from SQL text, bound values, few py4j calls ----
+
+SERVE_SCHEMA = T.StructType(
+    [
+        T.StructField("turn_id", T.LongType(), False),
+        T.StructField("conv_id", T.StringType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
+        T.StructField("authors", T.ArrayType(T.StringType()), True),
+    ]
+)
+DIM = 8
+
+
+def _serve_events(spark, ids, ops, lsn0, second):
+    rng = np.random.default_rng(lsn0)
+    pdf = pd.DataFrame(
+        {
+            "turn_id": ids,
+            "conv_id": [f"c{i // 4}" for i in ids],
+            "ts": pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=second),
+            "embedding": [rng.standard_normal(DIM).round(6).tolist() for _ in ids],
+            "authors": [[f"a{i % 5}", f"a{(i * 3) % 7}"] for i in ids],
+            "op": ops,
+            "lsn": np.arange(lsn0, lsn0 + len(ids)),
+        }
+    )
+    schema = T.StructType(
+        SERVE_SCHEMA.fields
+        + [T.StructField("op", T.StringType()), T.StructField("lsn", T.LongType())]
+    )
+    return spark.createDataFrame(pdf, schema)
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """A small embedding table after three writes, with an LSH index:
+    (table, index, search engine, [v1, v2, v3])."""
+    tbl = LakeTable.create(
+        spark, str(tmp_path_factory.mktemp("serve") / "t"), SERVE_SCHEMA, ["turn_id"],
+        num_buckets=4,
+    )
+    versions = [tbl.merge(_serve_events(spark, list(range(200)), "I", 1, 0))["version"]]
+    for w in (1, 2):
+        # every write updates, deletes and inserts in every bucket, so
+        # each change-feed range has rows on both sides of its join
+        upd, dele = list(range(w, 200, 9)), list(range(w + 4, 200, 23))
+        ins = list(range(200 + 20 * w, 220 + 20 * w))
+        ops = ["U"] * len(upd) + ["D"] * len(dele) + ["I"] * len(ins)
+        batch = _serve_events(spark, upd + dele + ins, ops, 1000 * w, w)
+        versions.append(tbl.merge(batch)["version"])
+    index = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=1)
+    return tbl, index, SearchEngine(tbl.read(), id_col="turn_id", vec_col="embedding"), versions
+
+
+def _query(seed):
+    return np.random.default_rng(seed).standard_normal(DIM).tolist()
+
+
+def _compiles(spark, fn):
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = metric.getCount()
+    fn()
+    return metric.getCount() - before
+
+
+def test_warm_reads_compile_nothing_for_a_new_key_or_version(spark, served):
+    """The key of a lookup and the version of a change feed go in as
+    one-element array literals, which reach the generated code as
+    references: inlined as bare literals, each new value compiled new
+    classes."""
+    tbl, _, _, (v1, v2, v3) = served
+    tbl.lookup(3).collect()
+    assert _compiles(spark, lambda: tbl.lookup(17).collect()) == 0
+    assert _compiles(spark, lambda: tbl.lookup(254).collect()) == 0
+
+    assert tbl.changes(v1, v2).collect()
+    got = []
+    assert _compiles(spark, lambda: got.extend(tbl.changes(v2, v3).collect())) == 0
+    assert got and {r["_commit_version"] for r in got} == {v3}
+
+
+def _round_trips(spark, build):
+    """py4j calls the driver makes while ``build`` runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return calls
+
+
+def test_building_a_serving_read_takes_few_py4j_round_trips(spark, served):
+    """Building (not running) each serving read. Every F.* and Column
+    call is a py4j round trip, and several more with PySpark's per-call
+    origin capture on: built that way, on this table, the reads took 398
+    (read), 454 (lookup), 2,427 and 2,505 (changes without and with
+    preimages), 438 (probe) and 575 (search_author) round trips. Built as
+    one projection of SQL text per step they take 25, 75, 87, 91, 37 and
+    131; the budgets are about 1.5x that."""
+    tbl, index, engine, (_, v2, v3) = served
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    q = _query(5)
+    reads = {
+        "read": (lambda: tbl.read(), 40),
+        "lookup": (lambda: tbl.lookup(42), 110),
+        "changes": (lambda: tbl.changes(v2, v3), 130),
+        "changes_preimage": (lambda: tbl.changes(v2, v3, include_preimage=True), 140),
+        "probe": (lambda: index.probe(q, k=5, max_probe_hamming=1), 55),
+        "search_author": (
+            lambda: engine.search_author(q, "authors", top_k=20, top_n_per_group=3, limit=4),
+            200,
+        ),
+    }
+    counts = {}
+    for name, (build, _) in reads.items():
+        build().collect()  # warm: the first call of a kind may resolve JVM classes
+        counts[name] = _round_trips(spark, build)
+    assert all(counts[n] <= budget for n, (_, budget) in reads.items()), counts
+
+
+def test_lookup_of_a_key_with_quotes_returns_its_row(spark, tmp_path):
+    schema = T.StructType(
+        [T.StructField("k", T.StringType(), False), T.StructField("v", T.LongType(), True),
+         T.StructField("ts", T.TimestampType(), True)]
+    )
+    tbl = LakeTable.create(spark, str(tmp_path / "t"), schema, ["k"], num_buckets=2)
+    keys = ["it's", "back`tick", "both ' and `", "plain"]
+    pdf = pd.DataFrame(
+        {"k": keys, "v": range(4), "ts": pd.Timestamp("2024-01-01"), "op": "I", "lsn": range(1, 5)}
+    )
+    tbl.merge(spark.createDataFrame(pdf, "k string, v long, ts timestamp, op string, lsn long"))
+    for i, k in enumerate(keys):
+        assert [tuple(r) for r in tbl.lookup(k).select("k", "v").collect()] == [(k, i)]
+    assert tbl.lookup("it''s").collect() == []
+
+
+def test_nan_query_component_ranks_by_id(spark, served):
+    """A NaN in the query vector makes every cosine NaN; Spark sorts NaN
+    above every number, so probe and search fall back to their id and
+    group tie-breaks, as they did when the vector was built from F.lit."""
+    tbl, index, engine, _ = served
+    q = _query(6)
+    q[2] = float("nan")
+
+    got = index.probe(q, k=5, max_probe_hamming=1).collect()
+    cand = sorted(
+        r["turn_id"] for r in spark.read.parquet(*index.last_probe["files_read"]).collect()
+    )
+    assert [r["turn_id"] for r in got] == cand[:5]
+    assert all(math.isnan(r["cos_sim"]) for r in got)
+
+    got = engine.search_author(q, "authors", top_k=12, top_n_per_group=3, limit=4).collect()
+    live = sorted(r["turn_id"] for r in tbl.read().select("turn_id").collect())[:12]
+    authors = {a for r in tbl.read().where(F.col("turn_id").isin(live)).collect() for a in r["authors"]}
+    assert [r["_group"] for r in got] == sorted(authors)[:4]
+    assert all(math.isnan(r["total_score"]) for r in got)
