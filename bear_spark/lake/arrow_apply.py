@@ -1,25 +1,21 @@
-"""Arrow-native per-bucket COW apply — the merge path.
+"""Arrow-native per-bucket COW apply — the merge path, and the writer
+of every table data file.
 
 Data files are bucket-partitioned on shared storage, so only the BATCH
-needs to move. The kernel gets one bucket's change events as one
+needs to move. The merge kernel gets one bucket's change events as one
 ``pyarrow.Table``, reads that bucket's existing files directly (pyarrow,
 column-parallel C++), applies last-writer-wins in ``pyarrow.compute``,
 and writes the replacement files itself — the same file-granularity
 copy-on-write an Iceberg/Delta COW writer performs, with the engine's
 two-phase snapshot commit unchanged on top.
 
-The same kernel runs in one of two places, chosen per merge by
-``LakeTable._merge_arrow_job`` from Catalyst's size estimate of the
-batch (``DRIVER_APPLY_MAX_BYTES`` in lake/table.py holds the measured
-crossover):
-
-- on the driver (``apply_on_driver``), for a small batch: the batch is
-  collected with ``toArrow()`` and split by bucket, and the kernel runs
-  once per bucket in a thread pool. No shuffle, no Python-worker task;
-- in Python workers (``for_task``) otherwise, or when the estimate is
-  unknown: ``groupBy(_bucket).applyInArrow`` routes each bucket's events
-  to one task. Only there does the kernel's wrapper set the process's
-  Arrow thread pools and allocator.
+``write_bucket`` writes every data file: the merge kernel's output, and
+the rewrite kernel's (``make_rewrite_kernel``), which compaction,
+tombstone expiry and bucket splits run over their final rows. So every
+file has one layout (``data_file_schema``) and returns its own manifest
+entry; the driver never lists a stage directory or opens a footer. Both
+kernels run per bucket, on the driver (``apply_on_driver``) or in Python
+workers (``for_task``), as ``LakeTable._run_kernel`` places them.
 
 The batch stays in Arrow from the JVM to the parquet writer: no pandas
 round trip at the UDF boundary, no per-row Python. LWW sorts only the
@@ -71,6 +67,66 @@ def _last_of_key_runs(keys: pa.Table) -> pa.Array:
     return pa.concat_arrays([change, pa.array([True])])
 
 
+def data_file_schema(target: pa.Schema) -> pa.Schema:
+    """The layout of every table data file: the payload (``target``,
+    from ``arrow_schema``), then ``_bucket``, ``_lsn`` and ``_deleted``."""
+    return pa.schema([
+        *target, pa.field("_bucket", pa.int32()), pa.field("_lsn", pa.int64()),
+        pa.field("_deleted", pa.bool_()),
+    ])
+
+
+def write_bucket(
+    full: pa.Table,
+    bucket: int,
+    stage_dir: str,
+    table_root: str,
+    key_cols: list[str],
+    target_file_rows: int,
+) -> list[dict]:
+    """Write one bucket's final rows (``data_file_schema``) as its data
+    files under ``stage_dir`` and return their manifest entries: path
+    (relative to ``table_root``), deleted, rows, and ``kmin``/``kmax``,
+    the first key column's range (None unless a str, int or float).
+
+    Rows are key-sorted (runs prefix-compress, ranges are tight, reads
+    are sequential: the lake sort-order spec), live rows and tombstones
+    go to separate ``_del=`` directories, and each side is split at
+    ``target_file_rows``: the slices are key-sorted, so the files keep
+    non-overlapping ranges for the merge kernel's range pruning. Names
+    are deterministic and land by tmp + ``os.replace``, so a retried
+    task rewrites the same files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    full = full.sort_by([(k, "ascending") for k in key_cols])
+    sorted_del = full.column("_deleted")
+    tfr = max(1, int(target_file_rows))
+    entries = []
+    for deleted, mask in ((False, pc.invert(sorted_del)), (True, sorted_del)):
+        sub = full.filter(mask)
+        if sub.num_rows == 0:
+            continue
+        d = os.path.join(stage_dir, f"_bucket_dir={bucket}", f"_del={str(deleted).lower()}")
+        os.makedirs(d, exist_ok=True)
+        for i in range((sub.num_rows + tfr - 1) // tfr):
+            chunk = sub.slice(i * tfr, tfr)
+            final_path = os.path.join(d, f"part-{bucket:05d}-c{i:04d}.parquet")
+            tmp_path = final_path + f".tmp-{uuid.uuid4().hex}"
+            pq.write_table(chunk, tmp_path)
+            os.replace(tmp_path, final_path)
+            rng = pc.min_max(chunk.column(key_cols[0])).as_py()
+            ok = all(type(v) in (str, int, float) for v in rng.values())
+            entries.append({
+                "path": os.path.relpath(final_path, table_root),
+                "deleted": deleted,
+                "rows": chunk.num_rows,
+                "kmin": rng["min"] if ok else None,
+                "kmax": rng["max"] if ok else None,
+            })
+    return entries
+
+
 def make_apply_kernel(
     target: pa.Schema,
     stage_dir: str,
@@ -78,10 +134,9 @@ def make_apply_kernel(
     seq_col: str,
     manifests_by_bucket: dict[int, str],
     target_file_rows: int,
+    table_root: str,
     wm_iso: str | None = None,
     drop_late: bool = False,
-    table_root: str = "",
-    compression: str = "snappy",
 ) -> Callable:
     """Build the apply kernel for one merge (run per bucket, on the
     driver or under ``applyInArrow``).
@@ -101,7 +156,9 @@ def make_apply_kernel(
     bounded by the files a batch actually touches, not the bucket. A
     missing range (None) means "assume it intersects".
 
-    Besides applying LWW, each group returns its slice of the BATCH
+    Each group writes its bucket through ``write_bucket`` and returns
+    the manifest entries of the files it wrote (``files``, JSON).
+    Besides that, it returns its slice of the BATCH
     stats — per (source_partition, segment) contiguous offset range,
     row count, late-event count vs the ``wm_iso`` watermark, and max
     event time — as a JSON column the driver folds into the commit.
@@ -163,23 +220,11 @@ def make_apply_kernel(
 
         payload_names = target.names
         # event shape: payload + _bucket/_op/_elsn
-        evt_schema = pa.schema(
-            list(target)
-            + [
-                pa.field("_bucket", pa.int32()),
-                pa.field("_op", pa.string()),
-                pa.field("_elsn", pa.int64()),
-            ]
-        )
-        # output shape: payload + _bucket/_lsn/_deleted (data-file schema)
-        out_schema = pa.schema(
-            list(target)
-            + [
-                pa.field("_bucket", pa.int32()),
-                pa.field("_lsn", pa.int64()),
-                pa.field("_deleted", pa.bool_()),
-            ]
-        )
+        evt_schema = pa.schema([
+            *target, pa.field("_bucket", pa.int32()), pa.field("_op", pa.string()),
+            pa.field("_elsn", pa.int64()),
+        ])
+        out_schema = data_file_schema(target)
 
         def align(t: pa.Table, schema: pa.Schema, given: dict) -> pa.Table:
             """Rows -> ``schema``: ``given`` columns as-is, the bucket
@@ -201,7 +246,7 @@ def make_apply_kernel(
         batch = align(tbl, evt_schema, {"_op": tbl.column("_op").cast(pa.string())})
 
         # --- existing files: read only those the batch can touch ------
-        # file ranges come from parquet footers (files are key-sorted);
+        # file ranges come from the manifest (files are key-sorted);
         # a file whose [kmin, kmax] contains no batch key is carried
         # over byte-identical — at 10^10 rows this is the difference
         # between O(touched files) and O(whole bucket) per task
@@ -295,41 +340,12 @@ def make_apply_kernel(
         # only materialization in the task
         if passthrough:
             full = pa.concat_tables([full, *passthrough])
-        # sort data files by key: conv_id runs prefix-compress, parquet
-        # min/max stats get tight ranges, per-conversation reads are
-        # sequential (the lake sort-order spec). Masks come from the
-        # sorted table itself.
-        full = full.sort_by([(k, "ascending") for k in key_cols])
-        sorted_del = full.column("_deleted")
-        counts = {False: 0, True: 0}
-        tfr = max(1, int(target_file_rows))
-        for deleted, mask in ((False, pc.invert(sorted_del)), (True, sorted_del)):
-            sub = full.filter(mask)
-            if sub.num_rows == 0:
-                continue
-            d = os.path.join(
-                stage_dir, f"_bucket_dir={bucket}", f"_del={str(deleted).lower()}"
-            )
-            os.makedirs(d, exist_ok=True)
-            # split at target_file_rows: a batch that touches a bucket's
-            # whole key range must not produce one unbounded file — the
-            # slices are key-sorted, so each chunk keeps a tight,
-            # non-overlapping [kmin, kmax] for later range pruning.
-            # Chunk names are deterministic → idempotent under retry.
-            n_chunks = (sub.num_rows + tfr - 1) // tfr
-            for i in range(n_chunks):
-                chunk = sub.slice(i * tfr, tfr)
-                final_path = os.path.join(d, f"part-{bucket:05d}-c{i:04d}.parquet")
-                tmp_path = final_path + f".tmp-{uuid.uuid4().hex}"
-                pq.write_table(chunk, tmp_path, compression=compression)
-                os.replace(tmp_path, final_path)  # idempotent under task retry
-            counts[deleted] = sub.num_rows
+        files = write_bucket(full, bucket, stage_dir, table_root, key_cols, target_file_rows)
 
         return pa.table(
             {
                 "_bucket": pa.array([bucket], pa.int32()),
-                "rows_written": pa.array([counts[False] + counts[True]], pa.int64()),
-                "tombstones": pa.array([counts[True]], pa.int64()),
+                "files": pa.array([_json.dumps(files)], pa.string()),
                 "max_key_rows": pa.array([max_key_rows], pa.int64()),
                 # work-reduction evidence for the contended-row split,
                 # wall-clock-independent: rows that entered the (ts, lsn)
@@ -342,6 +358,35 @@ def make_apply_kernel(
                 "kept": pa.array([_json.dumps(kept_paths)], pa.string()),
             }
         )
+
+    return kernel
+
+
+def make_rewrite_kernel(
+    target: pa.Schema,
+    stage_dir: str,
+    key_cols: list[str],
+    target_file_rows: int,
+    table_root: str,
+) -> Callable:
+    """Build the kernel of compaction, tombstone expiry and bucket split
+    (run per bucket, as the merge kernel is). Its input is already one
+    destination bucket's final rows: the table's columns at the
+    payload schema ``target``, with ``_bucket`` set to the destination.
+    It writes them through ``write_bucket`` and returns their manifest
+    entries (``REWRITE_RESULT_SCHEMA``)."""
+    schema = data_file_schema(target)
+
+    def kernel(tbl):
+        import json as _json
+
+        bucket = tbl.column("_bucket")[0].as_py()
+        full = pa.table([tbl.column(f.name).cast(f.type) for f in schema], schema=schema)
+        files = write_bucket(full, bucket, stage_dir, table_root, key_cols, target_file_rows)
+        return pa.table({
+            "_bucket": pa.array([bucket], pa.int32()),
+            "files": pa.array([_json.dumps(files)], pa.string()),
+        })
 
     return kernel
 
@@ -397,7 +442,8 @@ def apply_on_driver(batch: pa.Table, kernel: Callable) -> list[dict]:
         return pa.concat_tables(pool.map(kernel, parts)).to_pylist()
 
 
+REWRITE_RESULT_SCHEMA = "_bucket int, files string"
 APPLY_RESULT_SCHEMA = (
-    "_bucket int, rows_written long, tombstones long, max_key_rows long, "
-    "lww_rows long, passthrough_rows long, stats string, kept string"
+    f"{REWRITE_RESULT_SCHEMA}, max_key_rows long, lww_rows long, "
+    "passthrough_rows long, stats string, kept string"
 )

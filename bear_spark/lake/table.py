@@ -5,7 +5,11 @@ Layout on disk::
     <root>/
       _meta/VERSION          # hint: a recent snapshot version (atomic os.replace)
       _meta/v<N>.json        # immutable snapshot documents
-      data/s<N>-<token>/_bucket_dir=<K>/*.parquet  # files staged by an attempt at commit N
+      _meta/manifests/m<N>-b<K>-<token>.json  # bucket K's file list, written for commit N
+      data/s<N>-<token>/_bucket_dir=<K>/_del=<false|true>/part-<K>-c<NNNN>.parquet
+                             # bucket K's live / tombstone files, staged by
+                             # one attempt at commit N (lake/arrow_apply.py
+                             # writes every one, merge and maintenance alike)
 
 A snapshot records: the schema registry (all schema versions), the data
 files per bucket (each tagged with the schema version it was written
@@ -45,6 +49,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Sequence
@@ -71,9 +76,10 @@ _ENVELOPE = ("op", "lsn", "source_partition", "offset", "_src_file")
 #: compaction (each takes ``target_file_rows=`` to override it)
 TARGET_FILE_ROWS = 2_000_000
 
-#: Catalyst's size estimate of a merge's batch (bytes), at or below which
-#: the merge kernel runs on the driver instead of in an ``applyInArrow``
-#: job. Warm merges into a 16-bucket table on local[4] (4-core host,
+#: Catalyst's size estimate of a kernel's input (bytes: a merge's batch,
+#: or the rows a compaction, expiry or split rewrites), at or below which
+#: the kernel runs on the driver instead of in an ``applyInArrow`` job
+#: (``LakeTable._run_kernel``). Warm merges into a 16-bucket table on local[4] (4-core host,
 #: 15 GiB), each placement forced, median of 4-6 merges:
 #:
 #:     events   estimate   job      driver
@@ -100,7 +106,8 @@ class ConcurrentCommit(RuntimeError):
 def merge_partition_count(
     buckets: int, shuffle_parts: int, default_parallelism: int
 ) -> int:
-    """Task count for the bucket-clustered merge shuffle.
+    """Task count for the bucket-clustered shuffle of a kernel job (merge
+    and maintenance alike, ``LakeTable._run_kernel``).
 
     ``spark.sql.shuffle.partitions`` tracks ~2x the session's core
     count, so the merge asks for 2 tasks per core — bit-identical task
@@ -387,65 +394,6 @@ class LakeTable:
         """Row count for a bucket set from snapshot metadata (no scan)."""
         return sum(fi["rows"] for fi in self._iter_files(snap, buckets))
 
-    @staticmethod
-    def _key_range_from_footer(pf, key_col: str):
-        """(min, max) of ``key_col`` from the parquet row-group stats,
-        normalized to JSON-storable scalars (str for binary/utf8,
-        int/float as-is). None when unavailable or non-normalizable —
-        callers must then treat the file as intersecting everything."""
-        try:
-            idx = pf.schema_arrow.get_field_index(key_col)
-            if idx < 0:
-                return None
-            lo = hi = None
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                if not isinstance(mn, (str, int, float)) or isinstance(mn, bool):
-                    return None
-                lo = mn if lo is None else min(lo, mn)
-                hi = mx if hi is None else max(hi, mx)
-            return None if lo is None else (lo, hi)
-        except Exception:
-            return None
-
-    def _enumerate_staged(
-        self, stage_rel: str, stage_dir: str, touched: Sequence[int], schema_version: int
-    ) -> dict[str, list[dict]]:
-        """List staged files per bucket; exact row counts and first-key
-        min/max ranges come from the parquet footers (driver-side
-        metadata read, no Spark job). The key range is what lets later
-        merges skip files a batch cannot touch."""
-        import pyarrow.parquet as pq
-
-        key0 = self._snapshot()["key_cols"][0] if touched else None
-        new_files: dict[str, list[dict]] = {str(b): [] for b in touched}
-        for b in touched:
-            for deleted, dsub in ((False, "_del=false"), (True, "_del=true")):
-                bdir = os.path.join(stage_dir, f"_bucket_dir={b}", dsub)
-                if not os.path.isdir(bdir):
-                    continue
-                for fn in sorted(os.listdir(bdir)):
-                    if fn.endswith(".parquet"):
-                        fpath = os.path.join(bdir, fn)
-                        pf = pq.ParquetFile(fpath)
-                        rng = self._key_range_from_footer(pf, key0)
-                        new_files[str(b)].append(
-                            {
-                                "path": os.path.relpath(fpath, self.root),
-                                "schema_version": schema_version,
-                                "deleted": deleted,
-                                "rows": pf.metadata.num_rows,
-                                "kmin": None if rng is None else rng[0],
-                                "kmax": None if rng is None else rng[1],
-                            }
-                        )
-        return new_files
-
     def _read_files(
         self,
         snap: dict,
@@ -712,17 +660,13 @@ class LakeTable:
         rewrites them (file-granularity COW), and returns its slice of
         the batch stats (offset ranges, lateness, max event time), which
         the driver folds into the commit. The table never moves and the
-        batch is scanned exactly once. Where the kernel runs depends on
-        Catalyst's size estimate of the batch: at or below
-        ``DRIVER_APPLY_MAX_BYTES`` it runs on the driver over the
-        collected batch (one Spark stage, no Python-worker task); above
-        it, or with no estimate, in ONE job that shuffles only the batch
-        by bucket into ``applyInArrow`` tasks. Both share the fence,
-        projection, kernel and commit.
+        batch is scanned exactly once; ``_run_kernel`` places the kernel
+        on the driver or in one ``applyInArrow`` job.
 
-        Row-count metrics come from the parquet footers of the staged
-        files (driver-side metadata, no extra scan). ``target_file_rows``
-        bounds each written file, as in ``compact`` and ``split_buckets``.
+        The kernel returns the manifest entries of the files it wrote,
+        with exact row counts and key ranges, so committing reads no
+        footer. ``target_file_rows`` bounds each written file, as in
+        ``compact`` and ``split_buckets``.
         """
         snap = self._snapshot()
         expect_version = snap["version"]
@@ -786,17 +730,8 @@ class LakeTable:
 
         wm = snap["watermark_ts"]
         new_version = expect_version + 1
-        # per-ATTEMPT unique stage dir: a crashed or racing merge
-        # attempt at the same target version must never share a stage
-        # directory with this one — enumeration would commit its
-        # orphan chunk files into the table. Orphan attempt dirs are
-        # unreferenced by any snapshot and reclaimed by vacuum().
-        stage_rel = os.path.join(
-            "data", f"s{new_version}-{uuid.uuid4().hex[:8]}"
-        )
-        stage_dir = os.path.join(self.root, stage_rel)
         st = self._merge_arrow_job(
-            batch, snap, new_schema, stage_dir, has_env, wm,
+            batch, snap, new_schema, schema_version, has_env, wm,
             key_cols, seq_col, target_file_rows,
         )
         if st is None:
@@ -807,9 +742,10 @@ class LakeTable:
                 "reason": "batch empty after exactly-once fence",
             }
         (
-            touched, rows_in, late_events, max_ts, seg, per_partition, kept,
+            new_files, rows_in, late_events, max_ts, seg, per_partition, kept,
             max_key_rows, kernel_stats,
         ) = st
+        touched = sorted(int(b) for b in new_files)
 
         # fold this batch's contiguous per-(partition, segment) offset
         # ranges into the commit log
@@ -832,7 +768,6 @@ class LakeTable:
             for fi in fmap.get(str(b), [])
             if fi["path"] not in kept.get(b, ())
         )
-        new_files = self._enumerate_staged(stage_rel, stage_dir, touched, schema_version)
         changed = {
             b: [fi for fi in fmap.get(b, []) if fi["path"] in kept.get(int(b), ())] + staged
             for b, staged in new_files.items()
@@ -897,7 +832,7 @@ class LakeTable:
         batch: DataFrame,
         snap: dict,
         new_schema: T.StructType,
-        stage_dir: str,
+        schema_version: int,
         has_env: bool,
         wm: str | None,
         key_cols: Sequence[str],
@@ -905,33 +840,19 @@ class LakeTable:
         target_file_rows: int,
     ):
         """Run the Arrow kernel (lake/arrow_apply.py) once per touched
-        bucket: each call reads its bucket's existing files directly,
-        writes the replacements (file-granularity COW) and returns its
-        batch-stats slice. The table rows never move; only the batch
-        does, and there are two places it can go:
+        bucket, placed by ``_run_kernel``: each call reads its bucket's
+        existing files directly, writes the replacements (file-granularity
+        COW) and returns their manifest entries and its batch-stats
+        slice. The table rows never move; only the batch does.
 
-        - on the driver, when Catalyst estimates the batch at or below
-          ``DRIVER_APPLY_MAX_BYTES``: one ``toArrow()`` collect, then the
-          kernel per bucket in a local thread pool. A small merge's cost
-          is otherwise the shuffle and the Python-worker round trip, not
-          the kernel;
-        - in one job otherwise, or when the estimate is unknown: shuffle
-          the batch by bucket and run the kernel under
-          ``groupBy(_bucket).applyInArrow``, so a large batch spreads over
-          the executors. At steady state this moves O(batch) bytes, not
-          O(batch + table).
-
-        Both run the same projection, kernel and result fold.
-
-        Returns (touched, rows_in, late_events, max_ts, seg_ranges,
-        per_partition, kept, max_key_rows, kernel_stats), or None if the
-        batch is empty after the exactly-once fence.
+        Returns (new_files, rows_in, late_events, max_ts, seg_ranges,
+        per_partition, kept, max_key_rows, kernel_stats), where
+        new_files maps each touched bucket to its new entries, or None if
+        the batch is empty after the exactly-once fence.
         """
         from bear_spark.lake.arrow_apply import (
             APPLY_RESULT_SCHEMA,
-            apply_on_driver,
             arrow_schema,
-            for_task,
             make_apply_kernel,
         )
 
@@ -965,7 +886,7 @@ class LakeTable:
         # the closure and task memory stay O(touched), not O(table).
         kernel = make_apply_kernel(
             arrow_schema(new_schema),
-            stage_dir,
+            self._stage_dir(snap),
             list(key_cols),
             seq_col,
             {int(b): rel for b, rel in snap["manifests"].items()},
@@ -974,30 +895,12 @@ class LakeTable:
             table_root=self.root,
             target_file_rows=target_file_rows,
         )
-        est = _estimated_bytes(src_evt)
-        if est is not None and est <= DRIVER_APPLY_MAX_BYTES:
-            res = apply_on_driver(src_evt.toArrow(), kernel)
-        else:
-            # pin the partition count: REPARTITION_BY_NUM both defeats
-            # AQE coalescing (sized on the small batch-side shuffle,
-            # blind to the table files each task will read) and
-            # satisfies the clustered distribution applyInArrow
-            # requires — no second exchange.
-            n_part = merge_partition_count(
-                self._effective_buckets(snap),
-                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                self.spark.sparkContext.defaultParallelism,
-            )
-            res = (
-                src_evt.repartition(n_part, "_bucket")
-                .groupBy("_bucket")
-                .applyInArrow(for_task(kernel), APPLY_RESULT_SCHEMA)
-                .collect()
-            )
+        res = self._run_kernel(
+            src_evt, kernel, APPLY_RESULT_SCHEMA, self._effective_buckets(snap)
+        )
         if not res:
             return None
 
-        touched = sorted(int(r["_bucket"]) for r in res)
         rows_in = late_events = 0
         max_ts = None
         seg: dict[tuple[int, str], list[int]] = {}
@@ -1028,9 +931,90 @@ class LakeTable:
             "passthrough_rows": sum(int(r["passthrough_rows"]) for r in res),
         }
         return (
-            touched, rows_in, late_events, max_ts, seg, per_partition, kept,
-            max_key_rows, kstats,
+            self._entries(res, schema_version), rows_in, late_events, max_ts,
+            seg, per_partition, kept, max_key_rows, kstats,
         )
+
+    def _run_kernel(self, df: DataFrame, kernel, result_schema: str, buckets: int) -> list:
+        """Run an Arrow kernel (lake/arrow_apply.py) once per ``_bucket``
+        of ``df`` and return its result rows. The merge and all three
+        maintenance rewrites go through here, so they share one placement
+        rule and one task count:
+
+        - on the driver, when Catalyst estimates ``df`` at or below
+          ``DRIVER_APPLY_MAX_BYTES``: one ``toArrow()`` collect, then the
+          kernel per bucket in a local thread pool. A small merge's cost
+          is otherwise the shuffle and the Python-worker round trip, not
+          the kernel;
+        - in one job otherwise, or when the estimate is unknown: shuffle
+          ``df`` by bucket and run the kernel under
+          ``groupBy(_bucket).applyInArrow``, so a large input spreads
+          over the executors. The partition count is pinned
+          (``merge_partition_count`` over the ``buckets`` the rows can
+          land in): REPARTITION_BY_NUM both defeats AQE coalescing (sized
+          on the small input-side shuffle, blind to the table files a
+          merge task reads) and satisfies the clustered distribution
+          ``applyInArrow`` requires — no second exchange.
+        """
+        from bear_spark.lake.arrow_apply import apply_on_driver, for_task
+
+        est = _estimated_bytes(df)
+        if est is not None and est <= DRIVER_APPLY_MAX_BYTES:
+            return apply_on_driver(df.toArrow(), kernel)
+        n_part = merge_partition_count(
+            buckets,
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+            self.spark.sparkContext.defaultParallelism,
+        )
+        return (
+            df.repartition(n_part, "_bucket")
+            .groupBy("_bucket")
+            .applyInArrow(for_task(kernel), result_schema)
+            .collect()
+        )
+
+    def _stage_dir(self, snap: dict) -> str:
+        """A fresh stage directory for one attempt at the commit after
+        ``snap``: ``data/s<N+1>-<token>``. It is per ATTEMPT, so a crashed
+        or racing attempt at the same version never shares it; an
+        attempt that does not commit leaves it unreferenced, for
+        ``vacuum()``."""
+        return os.path.join(
+            self.root, "data", f"s{int(snap['version']) + 1}-{uuid.uuid4().hex[:8]}"
+        )
+
+    @staticmethod
+    def _entries(res: list, schema_version: int) -> dict[str, list[dict]]:
+        """bucket(str) -> manifest entries of the files a kernel wrote."""
+        return {
+            str(r["_bucket"]): [
+                {**fi, "schema_version": schema_version} for fi in json.loads(r["files"])
+            ]
+            for r in res
+        }
+
+    def _rewrite(
+        self, df: DataFrame, snap: dict, buckets: int, target_file_rows: int
+    ) -> dict[str, list[dict]]:
+        """Write ``df`` — final rows in the table's columns, ``_bucket``
+        set to each row's destination — as data files of the commit after
+        ``snap``, through the merge's writer and placement. Returns the
+        new manifest entries of every bucket that got rows."""
+        from bear_spark.lake.arrow_apply import (
+            REWRITE_RESULT_SCHEMA,
+            arrow_schema,
+            make_rewrite_kernel,
+        )
+
+        kernel = make_rewrite_kernel(
+            arrow_schema(self.payload_schema(snap)),
+            self._stage_dir(snap),
+            list(snap["key_cols"]),
+            target_file_rows,
+            self.root,
+        )
+        res = self._run_kernel(df, kernel, REWRITE_RESULT_SCHEMA, buckets)
+        return self._entries(res, int(snap["current_schema_version"]))
 
     # ------------------------------------------------------- maintenance
     def split_buckets(
@@ -1102,7 +1086,6 @@ class LakeTable:
         to, ptr = int(rb["to"]), int(rb["split_ptr"])
         f = to // n
         k = n - ptr if max_buckets is None else min(int(max_buckets), n - ptr)
-        tfr = max(1, int(target_file_rows))
         expect_version = snap["version"]
         new_version = expect_version + 1
         old_range = list(range(ptr, ptr + k))
@@ -1116,31 +1099,10 @@ class LakeTable:
         )
         changed: dict[str, list[dict]] = {str(c): [] for c in children}
         if rows_rewritten:
-            # per-ATTEMPT unique stage dir (same crash/race rationale as
-            # merge/compact; orphans are vacuum()ed)
-            stage_rel = os.path.join("data", f"s{new_version}-{uuid.uuid4().hex[:8]}")
-            stage_dir = os.path.join(self.root, stage_rel)
-            key_cols = snap["key_cols"]
-            shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            h = F.xxhash64(*[F.col(c) for c in snap["bucket_cols"]])
-            df = self._read_files(snap, old_range).withColumn(
-                "_bucket", F.pmod(h, F.lit(to)).cast("int")
-            )
-            (
-                df.withColumn("_bucket_dir", F.col("_bucket"))
-                .withColumn("_del", F.col("_deleted"))
-                .repartition(max(1, min(len(children), shuffle_parts)), "_bucket")
-                .sortWithinPartitions("_bucket_dir", "_del", *key_cols)
-                .write.option("maxRecordsPerFile", tfr)
-                .partitionBy("_bucket_dir", "_del")
-                .mode("overwrite")
-                .parquet(stage_dir)
-            )
-            staged = self._enumerate_staged(
-                stage_rel, stage_dir, children, int(snap["current_schema_version"])
-            )
-            for b, fs in staged.items():
-                changed[b] = fs
+            # each row goes to its child under the new modulus
+            child = self._bucket_sql({**snap, "num_buckets": to, "rebucket": None})
+            df = self._read_files(snap, old_range).withColumn("_bucket", F.expr(child))
+            changed.update(self._rewrite(df, snap, len(children), target_file_rows))
         manifests = self._commit_manifests(snap, new_version, changed)
         new_ptr = ptr + k
         new_snap = {**snap, "version": new_version, "manifests": manifests}
@@ -1183,8 +1145,8 @@ class LakeTable:
         Buckets are the COW rewrite granularity, so a count sized for
         10^7 rows is wrong at 10^10 — this is the self-tuning wrapper a
         streaming applier calls after each merge. Decision is pure
-        driver-side manifest metadata (per-bucket row totals from
-        parquet footers already in the snapshot), no table scan:
+        driver-side manifest metadata (per-bucket row totals already in
+        the snapshot), no table scan:
 
         - a split already in flight is continued, ``max_buckets`` old
           buckets per call, so maintenance interleaves with ingest in
@@ -1260,32 +1222,9 @@ class LakeTable:
         files_before = sum(len(fmap[str(b)]) for b in frag)
         expect_version = snap["version"]
         new_version = expect_version + 1
-        # per-ATTEMPT unique stage dir: a crashed or racing merge
-        # attempt at the same target version must never share a stage
-        # directory with this one — enumeration would commit its
-        # orphan chunk files into the table. Orphan attempt dirs are
-        # unreferenced by any snapshot and reclaimed by vacuum().
-        stage_rel = os.path.join(
-            "data", f"s{new_version}-{uuid.uuid4().hex[:8]}"
-        )
-        stage_dir = os.path.join(self.root, stage_rel)
-        key_cols = snap["key_cols"]
-        df = self._read_files(snap, frag)
-        (
-            df.withColumn("_bucket_dir", F.col("_bucket"))
-            .withColumn("_del", F.col("_deleted"))
-            .repartition(len(frag), "_bucket")
-            .sortWithinPartitions("_bucket_dir", "_del", *key_cols)
-            .write.option("maxRecordsPerFile", tfr)
-            .partitionBy("_bucket_dir", "_del")
-            .mode("overwrite")
-            .parquet(stage_dir)
-        )
-        staged = self._enumerate_staged(
-            stage_rel, stage_dir, frag, int(snap["current_schema_version"])
-        )
+        staged = self._rewrite(self._read_files(snap, frag), snap, len(frag), tfr)
         manifests = self._commit_manifests(
-            snap, new_version, {b: fs for b, fs in staged.items()}
+            snap, new_version, {str(b): staged.get(str(b), []) for b in frag}
         )
         new_snap = {**snap, "version": new_version, "manifests": manifests}
         self._write_snapshot(new_snap, expect_version=expect_version)
@@ -1319,55 +1258,24 @@ class LakeTable:
             return {"expired": 0, "kept": 0}
         expect_version = snap["version"]
         new_version = expect_version + 1
-        # per-ATTEMPT unique stage dir: a crashed or racing merge
-        # attempt at the same target version must never share a stage
-        # directory with this one — enumeration would commit its
-        # orphan chunk files into the table. Orphan attempt dirs are
-        # unreferenced by any snapshot and reclaimed by vacuum().
-        stage_rel = os.path.join(
-            "data", f"s{new_version}-{uuid.uuid4().hex[:8]}"
-        )
-        stage_dir = os.path.join(self.root, stage_rel)
         seq_col = snap["seq_col"]
 
         fmap = self._files(snap)
-        dead_buckets = sorted(
-            int(b)
-            for b, fs in fmap.items()
-            if any(fi.get("deleted") for fi in fs)
-        )
-        if not dead_buckets:
+        dead = {b: [fi for fi in fs if fi.get("deleted")] for b, fs in fmap.items()}
+        dead = {b: fs for b, fs in dead.items() if fs}
+        if not dead:
             return {"expired": 0, "kept": 0}
-        dead = self._read_files(snap, dead_buckets).filter(
-            F.coalesce(F.col("_deleted"), F.lit(False))
-        )
-        keep = dead.filter(
+        # only the tombstone files are read; live files keep their entries
+        keep = self._scan(snap, [fi for fs in dead.values() for fi in fs]).filter(
             F.col(seq_col).isNull() | (F.col(seq_col) >= F.lit(cutoff).cast("timestamp"))
         )
-        (
-            keep.withColumn("_bucket_dir", F.col("_bucket"))
-            .withColumn("_del", F.lit(True))
-            .repartition(max(1, min(len(dead_buckets), 32)), "_bucket")
-            .write.partitionBy("_bucket_dir", "_del")
-            .mode("overwrite")
-            .parquet(stage_dir)
-        )
-        staged = self._enumerate_staged(
-            stage_rel, stage_dir, dead_buckets, int(snap["current_schema_version"])
-        )
-        changed: dict[str, list[dict]] = {}
-        before = after = 0
-        dead_set = set(dead_buckets)
-        for b, fs in fmap.items():
-            olddead = [fi for fi in fs if fi.get("deleted")]
-            before += sum(fi["rows"] for fi in olddead)
-            if int(b) not in dead_set:
-                after += sum(fi["rows"] for fi in olddead)
-                continue
-            live = [fi for fi in fs if not fi.get("deleted")]
-            newdead = staged.get(b, [])
-            after += sum(fi["rows"] for fi in newdead)
-            changed[b] = live + newdead
+        staged = self._rewrite(keep, snap, len(dead), TARGET_FILE_ROWS)
+        changed = {
+            b: [fi for fi in fmap[b] if not fi.get("deleted")] + staged.get(b, [])
+            for b in dead
+        }
+        before = sum(fi["rows"] for fs in dead.values() for fi in fs)
+        after = sum(fi["rows"] for fs in staged.values() for fi in fs)
         manifests = self._commit_manifests(snap, new_version, changed)
         new_snap = {**snap, "version": new_version, "manifests": manifests}
         self._write_snapshot(new_snap, expect_version=expect_version)
@@ -1376,15 +1284,27 @@ class LakeTable:
     def vacuum(self) -> list[str]:
         """Delete staged data dirs and manifest documents not referenced
         by the current snapshot (this retires time travel to older
-        versions, as documented on ``read``)."""
+        versions, as documented on ``read``).
+
+        One staged for a version above the current one is kept: it may
+        belong to a commit in flight in another process, since a writer
+        for version M can still publish while ``v<M>.json`` is absent.
+        One at or below the current version can never be committed, so
+        it is garbage."""
         snap = self._snapshot()
         fmap = self._files(snap)
         live_dirs = {fi["path"].split(os.sep)[1] for fs in fmap.values() for fi in fs}
+
+        def in_flight(name: str) -> bool:
+            # s<M>-<token> (data) and m<M>-b<K>-<token>.json (manifests)
+            m = re.match(r"[sm](\d+)-", name)
+            return m is not None and int(m.group(1)) > int(snap["version"])
+
         removed = []
         data_root = os.path.join(self.root, "data")
         if os.path.isdir(data_root):
             for d in sorted(os.listdir(data_root)):
-                if d not in live_dirs:
+                if d not in live_dirs and not in_flight(d):
                     shutil.rmtree(os.path.join(data_root, d))
                     removed.append(d)
         mdir = os.path.join(self.root, "_meta", "manifests")
@@ -1393,7 +1313,7 @@ class LakeTable:
                 os.path.basename(rel) for rel in snap["manifests"].values()
             }
             for f in sorted(os.listdir(mdir)):
-                if f.endswith(".json") and f not in live_manifests:
+                if f.endswith(".json") and f not in live_manifests and not in_flight(f):
                     os.remove(os.path.join(mdir, f))
                     self._mcache.pop(os.path.join("_meta", "manifests", f), None)
                     removed.append(os.path.join("manifests", f))

@@ -106,9 +106,8 @@ def test_split_all_at_once_preserves_state(spark, tmp_path):
     assert tbl.lookup("c001").filter(F.col("turn_idx") == 0).collect()[0]["text"] == "post-split"
 
 
-@pytest.mark.parametrize("mode", ["arrow"])  # the one merge path
-def test_incremental_split_interleaves_with_merges(spark, tmp_path, mode):
-    tbl = _mk(spark, tmp_path / f"t2_{mode}", num_buckets=4)
+def test_incremental_split_interleaves_with_merges(spark, tmp_path, placement):
+    tbl = _mk(spark, tmp_path / "t2", num_buckets=4)
     a = _batch_a()
     tbl.merge(_events(spark, a))
 

@@ -171,7 +171,7 @@ def test_lineage_metrics_recorded(spark, table):
     assert len(m["rows_by_partition"]) == 8  # generator default shards
 
 
-def test_compact_and_vacuum_preserve_state(spark, table, events_pdf):
+def test_compact_and_vacuum_preserve_state(spark, table, events_pdf, placement):
     ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
     for lo in range(0, N_EVENTS, 2500):
         table.merge(ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)))
@@ -188,7 +188,7 @@ def test_compact_and_vacuum_preserve_state(spark, table, events_pdf):
     assert m["skipped"]
 
 
-def test_expire_tombstones_drops_only_settled_deletes(spark, table):
+def test_expire_tombstones_drops_only_settled_deletes(spark, table, placement):
     """Tombstones with event time below the cutoff vanish; newer ones
     survive and still block stale resurrection; live rows untouched."""
     import pyspark.sql.functions as F
@@ -226,8 +226,12 @@ def test_expire_tombstones_drops_only_settled_deletes(spark, table):
 def test_crash_between_stage_and_commit_leaves_table_intact(spark, table, monkeypatch):
     """Two-phase commit: if the process dies AFTER data files are
     staged but BEFORE the snapshot swap, readers still see the old
-    snapshot, the orphaned staging dir is vacuumable, and re-merging
-    the same batch succeeds (offsets were never committed → no fence)."""
+    snapshot and re-merging the same batch succeeds (offsets were never
+    committed → no fence). The orphaned staging dir is for the next
+    version, which another writer could still be committing, so vacuum
+    keeps it until that version is committed and then reclaims it."""
+    import os
+
     ev = change_events(spark, 4000, n_convs=30, seed=31)
     table.merge(ev.filter(ev.lsn < 2000))
     v1 = table.snapshot["version"]
@@ -244,15 +248,22 @@ def test_crash_between_stage_and_commit_leaves_table_intact(spark, table, monkey
         table.merge(ev.filter(ev.lsn >= 2000))
     monkeypatch.setattr(LakeTable, "_write_snapshot", real_write)
 
-    # old snapshot intact, staged orphan reclaimable
+    # old snapshot intact, staged orphan kept while v1+1 is uncommitted
     assert table.snapshot["version"] == v1
     got = _live_state(table).sort_values(KEY_COLS).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, state1, check_like=True)
-    assert table.vacuum(), "orphaned staging dir must be reclaimed"
+    data = os.path.join(table.root, "data")
+    live = {fi["path"].split(os.sep)[1] for fs in table.snapshot["files"].values() for fi in fs}
+    orphans = set(os.listdir(data)) - live
+    assert len(orphans) == 1 and next(iter(orphans)).startswith(f"s{v1 + 1}-"), orphans
+    assert not orphans & set(table.vacuum())
+    assert orphans <= set(os.listdir(data))
 
-    # retry applies cleanly (no offsets were committed for the batch)
+    # retry applies cleanly (no offsets were committed for the batch);
+    # v1+1 is now committed, so the orphan is reclaimable
     m = table.merge(ev.filter(ev.lsn >= 2000))
     assert not m["skipped"]
+    assert orphans <= set(table.vacuum()), "orphaned staging dir must be reclaimed"
     expected = oracle.replay(change_events(spark, 4000, n_convs=30, seed=31).toPandas())
     oracle.assert_states_equal(_live_state(table), expected)
 

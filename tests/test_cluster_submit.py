@@ -2,7 +2,8 @@
 executor JVMs via ``spark-submit --py-files`` on a ``local-cluster``
 master runs the CDC merge end-to-end and converges to the same state,
 with the merge kernel on the driver and in ``applyInArrow`` tasks on the
-executors.
+executors; so does a bucket split followed by a compaction, whose rewrite
+kernel is placed the same way.
 
 It boots a standalone-mode mini-cluster (2 executor JVM processes of
 1.5 GiB each, plus a 2 GiB driver), so it costs about half a minute and is
@@ -49,7 +50,7 @@ ev.count()
 exp = oracle.replay(ev.toPandas())
 out = {{}}
 # once per kernel placement: on the driver, and in applyInArrow tasks on
-# the executors
+# the executors; the split writes small files, so compaction has work
 for place, limit in (("driver", 1 << 62), ("job", -1)):
     lake_table.DRIVER_APPLY_MAX_BYTES = limit
     tbl = LakeTable.create(spark, os.path.join({work!r}, place),
@@ -57,7 +58,12 @@ for place, limit in (("driver", 1 << 62), ("job", -1)):
     m = tbl.merge(ev)
     got = tbl.read().toPandas()
     oracle.assert_states_equal(got, exp)
-    out[place] = {{"rows": len(got), "dedup_drops": m["dedup_drops"]}}
+    assert tbl.split_buckets(factor=2, target_file_rows=500)["num_buckets"] == 8
+    oracle.assert_states_equal(tbl.read().toPandas(), exp)
+    c = tbl.compact()
+    oracle.assert_states_equal(tbl.read().toPandas(), exp)
+    out[place] = {{"rows": len(got), "dedup_drops": m["dedup_drops"],
+                   "compacted": c["buckets_compacted"]}}
 print(json.dumps(out))
 """
 
@@ -85,3 +91,4 @@ def test_merge_under_local_cluster_via_py_files(tmp_path):
     assert set(stats) == {"driver", "job"}
     assert stats["driver"] == stats["job"]
     assert stats["job"]["rows"] > 0 and stats["job"]["dedup_drops"] > 0
+    assert stats["job"]["compacted"] > 0

@@ -1064,3 +1064,147 @@ def test_cdc_applier_retries_on_concurrent_commit(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tbl, "merge", always_lose)
     with pytest.raises(ConcurrentCommit):
         app._apply_batch(batch, epoch_id=1)
+
+
+def test_vacuum_during_a_merge_keeps_the_commit_in_flight(spark, tmp_path):
+    """A vacuum from another handle that runs after a merge has staged
+    its files and written its manifests, but before it links its
+    snapshot, must not delete either: the merge still commits, and every
+    later read finds its files."""
+    import os
+
+    root = str(tmp_path / "tbl")
+    tbl = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"],
+        seq_col="ts", num_buckets=2,
+    )
+    tbl.merge(_events(spark, [("base", 0, "baseline", "2024-01-01 00:00:00", "I", 1)]))
+    other = LakeTable.load(spark, root)
+    # the other handle vacuums between _commit_manifests and the link
+    orig_write = tbl._write_snapshot
+    removed: list[str] = []
+
+    def vacuum_then_write(snap, expect_version):
+        removed.extend(other.vacuum())
+        return orig_write(snap, expect_version)
+
+    tbl._write_snapshot = vacuum_then_write  # type: ignore[method-assign]
+    m = tbl.merge(_events(spark, [("next", 0, "second", "2024-01-02 00:00:00", "I", 2)]))
+    tbl._write_snapshot = orig_write  # type: ignore[method-assign]
+
+    assert m["version"] == 2
+    assert not [r for r in removed if r.startswith(("s2-", "manifests/m00000002-"))], removed
+    for fs in tbl.snapshot["files"].values():
+        for fi in fs:
+            assert os.path.exists(os.path.join(root, fi["path"])), fi["path"]
+    fresh = LakeTable.load(spark, root)
+    assert sorted(fresh.read().toPandas()["text"]) == ["baseline", "second"]
+
+
+def _pandas_events(spark, rows):
+    """rows as ``_events`` takes them, built from pandas: such a batch
+    has a size estimate, so a forced placement applies to its merge."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text", "ts", "op", "lsn"])
+    df = spark.createDataFrame(
+        pdf, "conv_id string, turn_idx int, text string, ts string, op string, lsn long"
+    )
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _merge_and_maintain(spark, root, check):
+    """Merge fragmented output, compact it, split the buckets and expire
+    some tombstones, calling ``check(tbl)`` after each of the four, then
+    compare the live state with the oracle."""
+    import pandas as pd
+
+    tbl = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"],
+        seq_col="ts", num_buckets=2,
+    )
+    ins = [
+        (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
+        for i in range(200)
+    ]
+    # deletes at two event times (only the older ones expire) and updates
+    upd = [
+        (f"conv_{i:04d}", 0, None, f"2024-01-0{2 if i % 4 else 5} 00:00:00", "D", 1000 + i)
+        for i in range(0, 80, 2)
+    ] + [
+        (f"conv_{i:04d}", 0, f"u{i}", "2024-01-03 00:00:00", "U", 2000 + i)
+        for i in range(1, 80, 2)
+    ]
+    tbl.merge(_pandas_events(spark, ins), target_file_rows=30)
+    tbl.merge(_pandas_events(spark, upd), target_file_rows=30)
+    check(tbl)
+    assert tbl.compact()["buckets_compacted"] == 2
+    check(tbl)
+    assert tbl.split_buckets(factor=2, target_file_rows=25)["num_buckets"] == 4
+    check(tbl)
+    assert tbl.expire_tombstones(older_than="2024-01-04 00:00:00") == {"expired": 20, "kept": 20}
+    check(tbl)
+    events = pd.DataFrame(ins + upd, columns=["conv_id", "turn_idx", "text", "ts", "op", "lsn"])
+    events["ts"] = pd.to_datetime(events["ts"])
+    oracle.assert_states_equal(tbl.read().toPandas(), oracle.replay(events))
+
+
+def test_manifest_entries_match_their_files(spark, tmp_path, placement):
+    """Every manifest entry a merge or a maintenance rewrite commits
+    matches its file: the row count, the first key column's real range,
+    and the bucket and tombstone flag of its directory and rows."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def check(tbl):
+        n = 0
+        for b, fs in tbl.snapshot["files"].items():
+            for fi in fs:
+                path = os.path.join(tbl.root, fi["path"])
+                t = pq.read_table(path)
+                assert fi["rows"] == pq.ParquetFile(path).metadata.num_rows == t.num_rows
+                rng = pc.min_max(t.column("conv_id")).as_py()
+                assert (fi["kmin"], fi["kmax"]) == (rng["min"], rng["max"]), fi
+                d = os.path.join(f"_bucket_dir={b}", f"_del={str(fi['deleted']).lower()}")
+                assert os.path.dirname(fi["path"]).endswith(d), fi["path"]
+                assert set(t.column("_bucket").to_pylist()) == {int(b)}
+                assert set(t.column("_deleted").to_pylist()) == {fi["deleted"]}
+                n += 1
+        assert n
+
+    _merge_and_maintain(spark, str(tmp_path / "tbl"), check)
+
+
+def test_every_data_file_has_the_merge_kernel_layout(spark, tmp_path):
+    """Merged, compacted, split and expired files share one physical
+    layout: the merge kernel's Arrow schema, column order included, with
+    the event time as INT64 TIMESTAMP_MICROS (not Spark's INT96)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bear_spark.lake.arrow_apply import arrow_schema
+
+    def check(tbl):
+        want = pa.schema([
+            *arrow_schema(tbl.payload_schema()),
+            pa.field("_bucket", pa.int32()),
+            pa.field("_lsn", pa.int64()),
+            pa.field("_deleted", pa.bool_()),
+        ])
+        for fs in tbl.snapshot["files"].values():
+            for fi in fs:
+                pf = pq.ParquetFile(os.path.join(tbl.root, fi["path"]))
+                assert pf.schema_arrow.equals(want), (fi["path"], pf.schema_arrow)
+                ts = pf.schema.column(want.get_field_index("ts"))
+                assert ts.physical_type == "INT64"
+                assert ts.logical_type.to_json() == (
+                    '{"Type": "Timestamp", "isAdjustedToUTC": true, '
+                    '"timeUnit": "microseconds", "is_from_converted_type": false, '
+                    '"force_set_converted_type": false}'
+                )
+
+    _merge_and_maintain(spark, str(tmp_path / "tbl"), check)
