@@ -1,5 +1,5 @@
-"""Arrow-native per-bucket COW apply — the merge path, and the writer
-of every table data file.
+"""Arrow-native per-bucket kernels — the merge path, the writer of every
+table data file, and the change feed.
 
 Data files are bucket-partitioned on shared storage, so only the BATCH
 needs to move. The merge kernel gets one bucket's change events as one
@@ -13,9 +13,17 @@ two-phase snapshot commit unchanged on top.
 the rewrite kernel's (``make_rewrite_kernel``), which compaction,
 tombstone expiry and bucket splits run over their final rows. So every
 file has one layout (``data_file_schema``) and returns its own manifest
-entry; the driver never lists a stage directory or opens a footer. Both
-kernels run per bucket, on the driver (``apply_on_driver``) or in Python
-workers (``for_task``), as ``LakeTable._run_kernel`` places them.
+entry; the driver never lists a stage directory or opens a footer.
+
+The change feed (``LakeTable.changes``) is one more kernel
+(``make_diff_kernel``): it gets one bucket group's list of files that are
+in only one of two snapshots, reads them as the merge kernel reads its
+bucket's files, aligns them with the same ``align``, and pairs old and
+new rows by key with one sort. No Spark join, no shuffle of rows.
+
+Every kernel runs per bucket (or bucket group), on the driver
+(``apply_on_driver``) or in Python workers (``for_task``), as
+``LakeTable`` places it: on the driver when its input is small.
 
 The batch stays in Arrow from the JVM to the parquet writer: no pandas
 round trip at the UDF boundary, no per-row Python. LWW sorts only the
@@ -49,6 +57,15 @@ def arrow_schema(schema: T.StructType) -> pa.Schema:
     return to_arrow_schema(_erase_nullability(schema))
 
 
+def _distinct(a, b):
+    """Elementwise ``a IS DISTINCT FROM b``: never null, and two nulls
+    are equal (SQL's ``NOT (a <=> b)``)."""
+    import pyarrow.compute as pc
+
+    ne = pc.not_equal(a, b)
+    return pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+
+
 def _last_of_key_runs(keys: pa.Table) -> pa.Array:
     """Boolean mask over key-sorted rows: True on the last row of each
     run of equal keys. Two nulls are one key, as in a hash group-by."""
@@ -60,11 +77,27 @@ def _last_of_key_runs(keys: pa.Table) -> pa.Array:
     change = None
     for name in keys.column_names:
         col = keys.column(name).combine_chunks()
-        a, b = col.slice(0, n - 1), col.slice(1)
-        ne = pc.not_equal(a, b)
-        ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+        ne = _distinct(col.slice(0, n - 1), col.slice(1))
         change = ne if change is None else pc.or_(change, ne)
     return pa.concat_arrays([change, pa.array([True])])
+
+
+def align(t: pa.Table, schema: pa.Schema, given: dict, bucket: int | None = None) -> pa.Table:
+    """Rows of a data file or batch -> ``schema``: ``given`` columns
+    as-is, ``_bucket`` as the constant ``bucket`` when one is given, the
+    rest cast up (schema-evolution fill + cast)."""
+    cols = []
+    n = t.num_rows
+    for f in schema:
+        if f.name in given:
+            cols.append(given[f.name])
+        elif f.name == "_bucket" and bucket is not None:
+            cols.append(pa.array([bucket] * n, pa.int32()))
+        elif f.name in t.column_names:
+            cols.append(t.column(f.name).cast(f.type))
+        else:
+            cols.append(pa.nulls(n, f.type))
+    return pa.table(cols, schema=schema)
 
 
 def data_file_schema(target: pa.Schema) -> pa.Schema:
@@ -226,24 +259,8 @@ def make_apply_kernel(
         ])
         out_schema = data_file_schema(target)
 
-        def align(t: pa.Table, schema: pa.Schema, given: dict) -> pa.Table:
-            """Rows -> ``schema``: ``given`` columns as-is, the bucket
-            constant, the rest cast up (schema-evolution fill + cast)."""
-            cols = []
-            n = t.num_rows
-            for f in schema:
-                if f.name in given:
-                    cols.append(given[f.name])
-                elif f.name == "_bucket":
-                    cols.append(pa.array([bucket] * n, pa.int32()))
-                elif f.name in t.column_names:
-                    cols.append(t.column(f.name).cast(f.type))
-                else:
-                    cols.append(pa.nulls(n, f.type))
-            return pa.table(cols, schema=schema)
-
         # --- batch side (already target-aligned by the JVM projection) ---
-        batch = align(tbl, evt_schema, {"_op": tbl.column("_op").cast(pa.string())})
+        batch = align(tbl, evt_schema, {"_op": tbl.column("_op").cast(pa.string())}, bucket)
 
         # --- existing files: read only those the batch can touch ------
         # file ranges come from the manifest (files are key-sorted);
@@ -251,6 +268,9 @@ def make_apply_kernel(
         # over byte-identical — at 10^10 rows this is the difference
         # between O(touched files) and O(whole bucket) per task
         batch_keys = tbl.column(key_cols[0])
+        # a null key lies outside every [kmin, kmax] (the ranges skip
+        # nulls) but may sit in any file, so a batch holding one reads all
+        null_key = batch_keys.null_count > 0
         mrel = manifests_by_bucket.get(bucket)
         bucket_files = []
         if mrel is not None:
@@ -263,7 +283,7 @@ def make_apply_kernel(
         to_read = []
         for rel, kmin, kmax in bucket_files:
             intersects = True
-            if kmin is not None and kmax is not None:
+            if kmin is not None and kmax is not None and not null_key:
                 try:
                     hit = pc.and_(
                         pc.greater_equal(batch_keys, kmin),
@@ -299,13 +319,13 @@ def make_apply_kernel(
             untouched = t.filter(free)
             if untouched.num_rows:
                 passthrough.append(
-                    align(untouched, out_schema, {"_deleted": deleted.filter(free)})
+                    align(untouched, out_schema, {"_deleted": deleted.filter(free)}, bucket)
                 )
             cont = t.filter(kmask)
             if cont.num_rows:
                 op = pc.if_else(deleted.filter(kmask), pa.scalar("D"), pa.scalar("U"))
                 elsn = cont.column("_lsn").cast(pa.int64())
-                parts.append(align(cont, evt_schema, {"_op": op, "_elsn": elsn}))
+                parts.append(align(cont, evt_schema, {"_op": op, "_elsn": elsn}, bucket))
         events = pa.concat_tables(parts)
 
         # --- LWW: sort indices over only the key, seq and lsn columns
@@ -391,6 +411,94 @@ def make_rewrite_kernel(
     return kernel
 
 
+def make_diff_kernel(
+    target: pa.Schema,
+    table_root: str,
+    key_cols: list[str],
+    seq_col: str,
+    version: int,
+    include_preimage: bool,
+) -> Callable:
+    """Build the kernel of one ``LakeTable.changes`` read (run per bucket
+    group, on the driver or under ``applyInArrow``, as the merge kernel
+    is).
+
+    Its input is one group's files that are in only one of the two
+    snapshots: ``_bucket`` (the group), ``_side`` (0: the ``from``
+    snapshot, 1: ``to``) and ``path`` (relative to ``table_root``). It
+    reads each file whole and aligns it to ``target``, the ``to``
+    snapshot's payload (``arrow_schema``), plus ``_lsn`` and
+    ``_deleted``. One sort over (keys, side) then pairs old and new rows:
+    by the merge's one-row-per-key invariant a key has at most one row
+    per snapshot, so each run of equal keys is an (old, new) pair, an
+    old row alone or a new row alone. Two nulls are one key, as in
+    ``_last_of_key_runs``.
+
+    A pair is classified by liveness and its LWW version ``(seq, lsn)``:
+    insert (no live old row, a live new one), delete (a live old row, no
+    live new one) or update (both live, versions differ). Inserts and
+    update postimages take the new row's payload; deletes, and update
+    preimages when ``include_preimage``, the old row's. Returns the
+    payload, ``_change_type`` and ``_commit_version`` (``version``)."""
+    row_schema = pa.schema([*target, pa.field("_lsn", pa.int64()), pa.field("_deleted", pa.bool_())])
+    out_schema = pa.schema([
+        *target, pa.field("_change_type", pa.string()), pa.field("_commit_version", pa.int32()),
+    ])
+
+    def kernel(files):
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        parts, sides = [], []
+        for side, rel in zip(files.column("_side").to_pylist(), files.column("path").to_pylist()):
+            t = pq.read_table(os.path.join(table_root, rel))
+            deleted = pc.fill_null(t.column("_deleted").cast(pa.bool_()), False)
+            parts.append(align(t, row_schema, {"_deleted": deleted}))
+            sides.append(np.full(t.num_rows, side, np.int8))
+        rows = pa.concat_tables(parts).append_column("_side", pa.array(np.concatenate(sides)))
+        if rows.num_rows == 0:
+            return out_schema.empty_table()
+
+        # one sort over (keys, side): each key's old row comes first
+        order_cols = [*key_cols, "_side"]
+        order = pc.sort_indices(
+            rows.select(order_cols),
+            sort_keys=[(c, "ascending") for c in order_cols],
+            null_placement="at_start",
+        )
+        last = _last_of_key_runs(rows.select(key_cols).take(order))
+        first = pa.concat_arrays([pa.array([True]), last.slice(0, len(last) - 1)])
+        new_i, old_i = order.filter(last), order.filter(first)
+        side, deleted, lsn, seq = (
+            rows.column(c).combine_chunks() for c in ("_side", "_deleted", "_lsn", seq_col)
+        )
+        n_live = pc.and_(pc.equal(side.take(new_i), 1), pc.invert(deleted.take(new_i)))
+        o_live = pc.and_(pc.equal(side.take(old_i), 0), pc.invert(deleted.take(old_i)))
+        moved = pc.or_(
+            _distinct(lsn.take(old_i), lsn.take(new_i)),
+            _distinct(seq.take(old_i), seq.take(new_i)),
+        )
+        insert = pc.and_(pc.invert(o_live), n_live)
+        delete = pc.and_(o_live, pc.invert(n_live))
+        update = pc.and_(pc.and_(o_live, n_live), moved)
+
+        post = pc.or_(insert, update)
+        pre = pc.or_(delete, update) if include_preimage else delete
+        take = pa.concat_arrays([new_i.filter(post), old_i.filter(pre)])
+        kinds = pa.concat_arrays([
+            pc.if_else(insert.filter(post), "insert", "update_postimage"),
+            pc.if_else(delete.filter(pre), "delete", "update_preimage"),
+        ])
+        out = rows.select(target.names).take(take)
+        return pa.table(
+            [*out.columns, kinds, pa.array(np.full(len(take), version, np.int32))],
+            schema=out_schema,
+        )
+
+    return kernel
+
+
 def for_task(kernel: Callable) -> Callable:
     """``kernel`` as an ``applyInArrow`` function, which first sets the
     Python worker's process-wide Arrow state.
@@ -419,17 +527,19 @@ def for_task(kernel: Callable) -> Callable:
     return task
 
 
-def apply_on_driver(batch: pa.Table, kernel: Callable) -> list[dict]:
-    """Run ``kernel`` in this process, once per bucket of ``batch``, in a
-    thread pool sized to the process's cores (the kernel spends its time
-    in Arrow and parquet calls, which release the GIL). Returns the
-    kernel's result rows, as ``applyInArrow(...).collect()`` would."""
+def apply_on_driver(batch: pa.Table, kernel: Callable) -> pa.Table:
+    """Run ``kernel`` in this process, once per ``_bucket`` of ``batch``,
+    in a thread pool sized to the process's cores (the kernel spends its
+    time in Arrow and parquet calls, which release the GIL). Returns the
+    kernel's results as one table, the rows that
+    ``applyInArrow(...).collect()`` would return (none, and no columns,
+    when ``batch`` is empty)."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.compute as pc
 
     if batch.num_rows == 0:
-        return []
+        return pa.table({})
     # split once: a stable sort by bucket, then one slice per run
     # (value_counts lists values in first-seen order, here ascending)
     batch = batch.take(pc.sort_indices(batch.column("_bucket")))
@@ -439,7 +549,7 @@ def apply_on_driver(batch: pa.Table, kernel: Callable) -> list[dict]:
         lo += n
     cores = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
     with ThreadPoolExecutor(max_workers=min(cores, len(parts))) as pool:
-        return pa.concat_tables(pool.map(kernel, parts)).to_pylist()
+        return pa.concat_tables(pool.map(kernel, parts))
 
 
 REWRITE_RESULT_SCHEMA = "_bucket int, files string"

@@ -77,10 +77,12 @@ _ENVELOPE = ("op", "lsn", "source_partition", "offset", "_src_file")
 TARGET_FILE_ROWS = 2_000_000
 
 #: Catalyst's size estimate of a kernel's input (bytes: a merge's batch,
-#: or the rows a compaction, expiry or split rewrites), at or below which
-#: the kernel runs on the driver instead of in an ``applyInArrow`` job
-#: (``LakeTable._run_kernel``). Warm merges into a 16-bucket table on local[4] (4-core host,
-#: 15 GiB), each placement forced, median of 4-6 merges:
+#: or the rows a compaction, expiry or split rewrites; for a change feed,
+#: the on-disk size of the files it diffs), at or below which the kernel
+#: runs on the driver instead of in an ``applyInArrow`` job
+#: (``LakeTable._run_kernel``, ``LakeTable.changes``). Warm merges into a
+#: 16-bucket table on local[4] (4-core host, 15 GiB), each placement
+#: forced, median of 4-6 merges:
 #:
 #:     events   estimate   job      driver
 #:     140k       9.3 MB   1.25 s   0.85 s
@@ -549,13 +551,20 @@ class LakeTable:
         that differ between the two manifests are read. A file present in
         both snapshots is row-identical on both sides, and by the merge's
         one-row-per-key invariant no key in it has a row anywhere else in
-        either snapshot, so it cannot contribute a change. The old/new
-        full-outer join therefore shuffles only rewritten files' rows,
-        never the table, and runs once: every output row comes from one
-        projection of it. A compaction-only range — files rewritten, rows
-        identical — reads the rewritten files but emits zero rows (rows
-        are compared by their LWW version ``(seq, lsn)``, not by file
-        identity).
+        either snapshot, so it cannot contribute a change. The diff is one
+        Arrow kernel (``arrow_apply.make_diff_kernel``) per bucket group:
+        it reads the group's differing files and pairs old and new rows
+        by key with one sort, so no Spark join or row shuffle runs. A
+        group is ``bucket % num_buckets`` of the ``from`` snapshot: a
+        split maps bucket ``b`` only to children ``b + k*num_buckets``, so
+        both of a key's rows land in one group even across a split. The
+        kernel is placed as a merge's is: on the driver when the files
+        to read total at most ``DRIVER_APPLY_MAX_BYTES`` on disk (the
+        feed is then a driver-local relation, computed by this call),
+        else as one ``applyInArrow`` job over the list of files. A
+        compaction-only range — files rewritten, rows identical — reads
+        the rewritten files but emits zero rows (rows are compared by
+        their LWW version ``(seq, lsn)``, not by file identity).
 
         Both sides are aligned to the ``to`` snapshot's schema first, so
         a range that spans a schema evolution yields the feed in the
@@ -563,6 +572,8 @@ class LakeTable:
         columns). Requires both snapshots' data files to still exist —
         i.e. ``from_version`` must not have been ``vacuum()``ed away.
         """
+        from bear_spark.lake import arrow_apply
+
         snap_to = self._snapshot(to_version)
         snap_from = self._snapshot(from_version)
         if snap_from["version"] > snap_to["version"]:
@@ -571,74 +582,46 @@ class LakeTable:
                 f"to_version {snap_to['version']}"
             )
         target = self.payload_schema(snap_to)
+        schema = T.StructType(
+            reconcile._erase_nullability(target).fields
+            + [
+                T.StructField("_change_type", T.StringType()),
+                T.StructField("_commit_version", T.IntegerType()),
+            ]
+        )
         buckets = self._changed_buckets(snap_from, snap_to)
-        files_from = list(self._iter_files(snap_from, buckets))
-        files_to = list(self._iter_files(snap_to, buckets))
-        shared = {fi["path"] for fi in files_from} & {fi["path"] for fi in files_to}
-
-        def o(c: str) -> str:
-            return sql_ident("_o_" + c)
-
-        def n(c: str) -> str:
-            return sql_ident("_n_" + c)
-
-        def side(snap: dict, files: list[dict], name) -> DataFrame:
-            # one projection: cast up to the `to` schema (across schema
-            # evolution; a missing column is a typed null), prefix the
-            # names, and fold the system columns into lsn / del
-            have = {f.name: f.dataType for f in self.payload_schema(snap).fields}
-            cols = []
-            for f in target.fields:
-                src = sql_ident(f.name) if f.name in have else "NULL"
-                if have.get(f.name) != f.dataType:
-                    src = f"CAST({src} AS {sql_type(f.dataType)})"
-                cols.append(f"{src} AS {name(f.name)}")
-            df = self._scan(snap, [fi for fi in files if fi["path"] not in shared])
-            return df.selectExpr(
-                *cols, f"`_lsn` AS {name('lsn')}", f"coalesce(`_deleted`, false) AS {name('del')}"
-            )
-
-        old = side(snap_from, files_from, o)
-        new = side(snap_to, files_to, n)
-        on = " AND ".join(f"{o(k)} <=> {n(k)}" for k in snap_to["key_cols"])
-        j = old.join(new, F.expr(on), "full_outer")
-
-        seq = snap_to["seq_col"]
-        o_live = f"({o('lsn')} IS NOT NULL AND NOT {o('del')})"
-        n_live = f"({n('lsn')} IS NOT NULL AND NOT {n('del')})"
-        same_ver = f"({o('lsn')} <=> {n('lsn')} AND {o(seq)} <=> {n(seq)})"
-        j = j.selectExpr(
-            "*",
-            f"CASE WHEN NOT {o_live} AND {n_live} THEN 'insert' "
-            f"WHEN {o_live} AND NOT {n_live} THEN 'delete' "
-            f"WHEN {o_live} AND {n_live} AND NOT {same_ver} THEN 'update_postimage' "
-            "END AS _change_type",
-        ).where("_change_type IS NOT NULL")
-        if include_preimage:
-            # an update emits its preimage row too: one joined row fans
-            # out to two, so the join still runs once
-            j = j.withColumn(
-                "_change_type",
-                F.expr(
-                    "explode(CASE WHEN _change_type = 'update_postimage' "
-                    "THEN array('update_postimage', 'update_preimage') "
-                    "ELSE array(_change_type) END)"
-                ),
-            )
-        # deletes carry the last-seen (old) payload, as do preimages;
-        # inserts and postimages come from the new side
-        # the version comes out of a one-element array: an array literal
-        # reaches the generated code as a reference, where a bare int
-        # literal is compiled into it, so each new version would compile
-        # new classes
-        return j.selectExpr(
-            *[
-                f"CASE WHEN _change_type IN ('delete', 'update_preimage') "
-                f"THEN {o(f.name)} ELSE {n(f.name)} END AS {sql_ident(f.name)}"
-                for f in target.fields
-            ],
-            "_change_type",
-            f"explode(array({int(snap_to['version'])})) AS _commit_version",
+        fmaps = (self._files(snap_from, buckets), self._files(snap_to, buckets))
+        old_paths, new_paths = (
+            {fi["path"] for fs in fmap.values() for fi in fs} for fmap in fmaps
+        )
+        shared = old_paths & new_paths
+        n_from = int(snap_from["num_buckets"])
+        rows = [
+            (int(b) % n_from, side, fi["path"])
+            for side, fmap in enumerate(fmaps)
+            for b, fs in fmap.items()
+            for fi in fs
+            if fi["path"] not in shared
+        ]
+        if not rows:
+            return self.spark.createDataFrame(arrow_apply.arrow_schema(schema).empty_table(), schema)
+        group, side, path = zip(*rows)
+        files = pa.table({
+            "_bucket": pa.array(group, pa.int32()),
+            "_side": pa.array(side, pa.int8()),
+            "path": pa.array(path, pa.string()),
+        })
+        kernel = arrow_apply.make_diff_kernel(
+            arrow_apply.arrow_schema(target), self.root, list(snap_to["key_cols"]),
+            snap_to["seq_col"], int(snap_to["version"]), include_preimage,
+        )
+        size = sum(os.path.getsize(os.path.join(self.root, p)) for p in path)
+        if size <= DRIVER_APPLY_MAX_BYTES:
+            feed = arrow_apply.apply_on_driver(files, kernel)
+            return self.spark.createDataFrame(feed, schema)
+        return self._kernel_job(
+            self.spark.createDataFrame(files, "_bucket int, _side tinyint, path string"),
+            kernel, schema, len(set(group)),
         )
 
     # ------------------------------------------------------------ MERGE
@@ -939,28 +922,36 @@ class LakeTable:
         """Run an Arrow kernel (lake/arrow_apply.py) once per ``_bucket``
         of ``df`` and return its result rows. The merge and all three
         maintenance rewrites go through here, so they share one placement
-        rule and one task count:
+        rule and one task count (``changes()`` places its diff kernel by
+        the same rule, on the on-disk size of the files it reads):
 
         - on the driver, when Catalyst estimates ``df`` at or below
           ``DRIVER_APPLY_MAX_BYTES``: one ``toArrow()`` collect, then the
           kernel per bucket in a local thread pool. A small merge's cost
           is otherwise the shuffle and the Python-worker round trip, not
           the kernel;
-        - in one job otherwise, or when the estimate is unknown: shuffle
-          ``df`` by bucket and run the kernel under
-          ``groupBy(_bucket).applyInArrow``, so a large input spreads
-          over the executors. The partition count is pinned
-          (``merge_partition_count`` over the ``buckets`` the rows can
-          land in): REPARTITION_BY_NUM both defeats AQE coalescing (sized
-          on the small input-side shuffle, blind to the table files a
-          merge task reads) and satisfies the clustered distribution
-          ``applyInArrow`` requires — no second exchange.
+        - in one job otherwise, or when the estimate is unknown
+          (``_kernel_job``).
         """
-        from bear_spark.lake.arrow_apply import apply_on_driver, for_task
+        from bear_spark.lake import arrow_apply
 
         est = _estimated_bytes(df)
         if est is not None and est <= DRIVER_APPLY_MAX_BYTES:
-            return apply_on_driver(df.toArrow(), kernel)
+            return arrow_apply.apply_on_driver(df.toArrow(), kernel).to_pylist()
+        return self._kernel_job(df, kernel, result_schema, buckets).collect()
+
+    def _kernel_job(self, df: DataFrame, kernel, result_schema, buckets: int) -> DataFrame:
+        """``kernel`` once per ``_bucket`` of ``df`` in one job: shuffle
+        ``df`` by bucket and run the kernel under
+        ``groupBy(_bucket).applyInArrow``, so a large input spreads over
+        the executors. The partition count is pinned
+        (``merge_partition_count`` over the ``buckets`` the rows can land
+        in): REPARTITION_BY_NUM both defeats AQE coalescing (sized on the
+        small input-side shuffle, blind to the table files a task reads)
+        and satisfies the clustered distribution ``applyInArrow`` requires
+        — no second exchange."""
+        from bear_spark.lake.arrow_apply import for_task
+
         n_part = merge_partition_count(
             buckets,
             int(self.spark.conf.get("spark.sql.shuffle.partitions")),
@@ -970,7 +961,6 @@ class LakeTable:
             df.repartition(n_part, "_bucket")
             .groupBy("_bucket")
             .applyInArrow(for_task(kernel), result_schema)
-            .collect()
         )
 
     def _stage_dir(self, snap: dict) -> str:

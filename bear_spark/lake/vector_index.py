@@ -243,16 +243,17 @@ class VectorIndex:
 
         Falls back to a full rebuild when the feed is unavailable
         (indexed snapshot vacuumed away) or the meta predates per-list
-        pointers. Reference analog: Milvus maintains its HNSW index
-        incrementally on upsert (bear/db.py:72-83 — index upkeep is
-        implicit in the store)."""
+        pointers. Every path updates this index and returns it, so
+        ``last_refresh`` is its receipt whichever path ran. Reference
+        analog: Milvus maintains its HNSW index incrementally on upsert
+        (bear/db.py:72-83 — index upkeep is implicit in the store)."""
         m = self.meta
         cur = self.table._version()
         if m["built_from_version"] == cur:
             return self
 
         def full() -> "VectorIndex":
-            idx = VectorIndex.build(
+            VectorIndex.build(
                 self.table,
                 self.name,
                 vec_col=m["vec_col"],
@@ -265,8 +266,8 @@ class VectorIndex:
                 fit_sample=m.get("fit_sample"),
                 _state=m["state"],
             )
-            idx.last_refresh = {"mode": "full"}
-            return idx
+            self.last_refresh = {"mode": "full"}
+            return self
 
         if not incremental or "list_dirs" not in m:
             return full()

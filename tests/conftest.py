@@ -18,10 +18,10 @@ def spark():
 
 @pytest.fixture(params=["driver", "job"])
 def placement(request, monkeypatch):
-    """Where ``LakeTable.merge`` runs its kernel: on the driver (every
-    batch with a size estimate counts as small) or in the
-    ``applyInArrow`` job (none does). The test's merges must have taken
-    the forced placement."""
+    """Where ``LakeTable`` runs its kernels (merge, maintenance and the
+    change feed's diff): on the driver (every input with a size counts
+    as small) or in the ``applyInArrow`` job (none does). The test's
+    kernels must have taken the forced placement."""
     from bear_spark.lake import arrow_apply, table
 
     limit = 1 << 62 if request.param == "driver" else -1

@@ -5,13 +5,15 @@ consumer surface (Iceberg changelog scan / Delta CDF analog).
 Covers: insert/update/delete classification, net-effect semantics
 (insert+delete inside the range cancels), preimage rows, compaction-only
 ranges emitting nothing (and pruning untouched buckets), a range
-spanning a schema evolution yielding the feed in the evolved schema, a
-plan with one join, files carried over by a merge left unread, and the
-feed equal to a pandas diff of the two versions on a random history."""
+spanning a schema evolution yielding the feed in the evolved schema, one
+diff-kernel call per bucket group and no join under either placement,
+files carried over by a merge left unread, one output schema under both
+placements, and the feed equal to a pandas diff of the two versions on a
+random history with a bucket split and a null key."""
 
 from __future__ import annotations
 
-import os
+import json
 import random
 import re
 
@@ -19,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bear_spark.lake import LakeTable
+from bear_spark.lake import LakeTable, arrow_apply
 
 SCHEMA = T.StructType(
     [
@@ -157,25 +159,52 @@ def test_changes_rejects_inverted_range(spark, table):
         table.changes(v, 0)
 
 
-def _join_count(df) -> int:
+def _plan_counts(df) -> tuple[int, int]:
+    """(joins, FlatMapGroupsInArrow nodes) in ``df``'s physical plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return len(
-        re.findall(
-            r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|"
-            r"BroadcastNestedLoopJoin|CartesianProduct)",
-            plan,
-        )
+    joins = re.findall(
+        r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|"
+        r"BroadcastNestedLoopJoin|CartesianProduct)",
+        plan,
     )
+    return len(joins), plan.count("FlatMapGroupsInArrow")
 
 
-def test_changes_plans_one_join(spark, table):
+def _spy_diff_kernel(monkeypatch, log):
+    """Record every diff-kernel call as (group, paths handed to it). The
+    calls go to the file ``log``, so calls made in Python workers are
+    recorded too. Returns a function that pops the calls so far."""
+    make = arrow_apply.make_diff_kernel
+
+    def making(*args, **kwargs):
+        kernel, path = make(*args, **kwargs), str(log)
+
+        def logged(files):
+            with open(path, "a") as f:
+                groups = sorted(set(files.column("_bucket").to_pylist()))
+                f.write(json.dumps([groups, files.column("path").to_pylist()]) + "\n")
+            return kernel(files)
+
+        return logged
+
+    monkeypatch.setattr(arrow_apply, "make_diff_kernel", making)
+
+    def calls():
+        if not log.exists():
+            return []
+        out = [json.loads(ln) for ln in log.read_text().splitlines()]
+        log.unlink()
+        return out
+
+    return calls
+
+
+def test_changes_runs_one_diff_kernel_per_group(spark, table, placement, monkeypatch, tmp_path):
+    calls = _spy_diff_kernel(monkeypatch, tmp_path / "calls")
     table.merge(
         _events(
             spark,
-            [
-                ("a", 0, "a0", "2024-01-01 00:00:00", "I", 1),
-                ("b", 0, "b0", "2024-01-01 00:00:01", "I", 2),
-            ],
+            [(f"k{i}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i + 1) for i in range(12)],
         )
     )
     v = table.snapshot["version"]
@@ -183,25 +212,37 @@ def test_changes_plans_one_join(spark, table):
         _events(
             spark,
             [
-                ("a", 0, "a0-new", "2024-01-02 00:00:00", "U", 3),
-                ("b", 0, None, "2024-01-02 00:00:01", "D", 4),
-                ("c", 0, "c0", "2024-01-02 00:00:02", "I", 5),
+                ("k0", 0, "t0-new", "2024-01-02 00:00:00", "U", 20),
+                ("k1", 0, None, "2024-01-02 00:00:01", "D", 21),
+                ("c", 0, "c0", "2024-01-02 00:00:02", "I", 22),
+                *[(f"k{i}", 0, f"t{i}-new", "2024-01-02 00:00:03", "U", 20 + i) for i in range(3, 12)],
             ],
         )
     )
+    changed = table._changed_buckets(table._snapshot(v), table._snapshot())
+    assert len(changed) > 1
     for pre in (False, True):
+        calls()
         df = table.changes(v, include_preimage=pre)
-        assert _join_count(df) == 1, df._jdf.queryExecution().executedPlan().toString()
-    assert len(_feed(table, v, include_preimage=True)) == 4
+        joins, arrow_groups = _plan_counts(df)
+        assert joins == 0
+        assert arrow_groups == (1 if placement == "job" else 0)
+        rows = df.collect()
+        assert len(rows) == 12 + pre * 10
+        groups = [g for gs, _ in calls() for g in gs]
+        # each bucket group once, in one call of its own
+        assert sorted(groups) == sorted(b % 4 for b in changed)
+    assert len(_feed(table, v, include_preimage=True)) == 22
 
 
-def test_changes_skips_files_carried_over_by_a_merge(spark, tmp_path):
+def test_changes_skips_files_carried_over_by_a_merge(spark, tmp_path, monkeypatch):
     # one bucket and disjoint key ranges per commit: each merge range-
     # prunes the earlier files and carries them into its snapshot as is
     tbl = LakeTable.create(
         spark, str(tmp_path / "one"), SCHEMA,
         key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=1,
     )
+    calls = _spy_diff_kernel(monkeypatch, tmp_path / "calls")
     tbl.merge(_events(spark, [("k0", 0, "t0", "2024-01-01 00:00:00", "I", 1)]))
     v = tbl.snapshot["version"]
     carried = {fi["path"] for fi in tbl.snapshot["files"]["0"]}
@@ -209,10 +250,54 @@ def test_changes_skips_files_carried_over_by_a_merge(spark, tmp_path):
     files_now = {fi["path"] for fi in tbl.snapshot["files"]["0"]}
     assert carried < files_now, "the k0 file was not carried over"
 
-    df = tbl.changes(v)
-    read = {os.path.relpath(p.replace("file://", ""), tbl.root) for p in df.inputFiles()}
-    assert read == files_now - carried
     assert _feed(tbl, v) == {("k1", 0, "insert"): "t1"}
+    read = {p for _, paths in calls() for p in paths}
+    assert read == files_now - carried
+
+
+def test_changes_schema_is_the_same_on_both_placements(spark, table, placement):
+    """The feed's names and types, pinned to what the Spark-join
+    implementation returned: payload in the ``to`` schema (widened across
+    an evolution), ``_change_type`` string, ``_commit_version`` int."""
+    table.merge(_events(spark, [("a", 0, "a0", "2024-01-01 00:00:00", "I", 1)]))
+    v = table.snapshot["version"]
+    table.merge(_events(spark, [("a", 0, "a1", "2024-01-02 00:00:00", "U", 2)]))
+    base = [("conv_id", "string"), ("turn_idx", "int"), ("text", "string"), ("ts", "timestamp")]
+    tail = [("_change_type", "string"), ("_commit_version", "int")]
+
+    def names_and_types(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    for df in (table.changes(v), table.changes(v, include_preimage=True)):
+        assert names_and_types(df) == base + tail
+    assert names_and_types(table.changes(v, v)) == base + tail  # empty feed
+    widened = _events(spark, [("b", 0, "b0", "2024-01-03 00:00:00", "I", 3)]).withColumn(
+        "turn_idx", F.col("turn_idx").cast("long")
+    ).withColumn("tool", F.lit("t"))
+    table.merge(widened)
+    evolved = [*base[:1], ("turn_idx", "bigint"), *base[2:], ("tool", "string")]
+    assert names_and_types(table.changes(v)) == evolved + tail
+
+
+def test_null_key_update_replaces_its_row(spark, table):
+    """A null first key lies outside every file's key range, so a batch
+    updating it must still read the file that holds it: pruning on the
+    range alone carried that file over and left two live rows."""
+    table.merge(
+        _events(
+            spark,
+            [(f"k{i}", 0, "x", "2024-01-01 00:00:00", "I", i + 1) for i in range(20)]
+            + [(None, 0, "null0", "2024-01-01 00:00:00", "I", 100)],
+        )
+    )
+    v = table.snapshot["version"]
+    table.merge(_events(spark, [(None, 0, "null1", "2024-01-02 00:00:00", "U", 101)]))
+    rows = table.read().where("conv_id IS NULL").collect()
+    assert [r["text"] for r in rows] == ["null1"]
+    assert _feed(table, v, include_preimage=True) == {
+        (None, 0, "update_postimage"): "null1",
+        (None, 0, "update_preimage"): "null0",
+    }
 
 
 def _net_diff(tbl, v_from, v_to, preimage):
@@ -238,12 +323,15 @@ def _net_diff(tbl, v_from, v_to, preimage):
     return out
 
 
-def test_changes_equals_net_diff_of_two_reads_on_random_history(spark, tmp_path):
+def test_changes_equals_net_diff_of_two_reads_on_random_history(
+    spark, tmp_path, placement, monkeypatch
+):
     rng = random.Random(11)
     tbl = LakeTable.create(
         spark, str(tmp_path / "rand"), SCHEMA,
         key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=2,
     )
+    calls = _spy_diff_kernel(monkeypatch, tmp_path / "calls")
     lsn, versions = 0, [tbl.snapshot["version"]]
     for c in range(6):
         rows = []
@@ -261,28 +349,36 @@ def test_changes_equals_net_diff_of_two_reads_on_random_history(spark, tmp_path)
                 (f"n{src}-0", 0, None if op == "D" else f"v{lsn}",
                  f"2024-01-0{day} 12:00:00", op, lsn)
             )
+        # a null key, inserted and then updated: two nulls are one key
+        if c in (1, 4):
+            lsn += 1
+            rows.append((None, 0, f"v{lsn}", f"2024-01-0{c + 1} 06:00:00", "I" if c == 1 else "U", lsn))
         tbl.merge(_events(spark, rows))
         if c == 3:
             tbl.compact(target_files_per_bucket=1)
+        if c == 2:
+            # a split inside the diffed ranges: a key's old row is in
+            # bucket b, its new row may be in b + 2
+            assert tbl.split_buckets(factor=2)["num_buckets"] == 4
         versions.append(tbl.snapshot["version"])
 
     carried_somewhere = False
-    for a, b in [(0, 6), (1, 3), (2, 5), (3, 4), (4, 6), (5, 6)]:
+    for a, b in [(0, 6), (1, 3), (2, 5), (3, 4), (4, 6), (5, 6), (1, 5)]:
         v_from, v_to = versions[a], versions[b]
         for pre in (False, True):
+            calls()
             df = tbl.changes(v_from, v_to, include_preimage=pre)
             got = {
                 (r["conv_id"], r["turn_idx"], r["_change_type"], r["text"])
                 for r in df.collect()
             }
             assert got == _net_diff(tbl, v_from, v_to, pre), (v_from, v_to, pre)
-        # the feed reads exactly the files that are in one snapshot only
-        files = [
-            {os.path.join(tbl.root, fi["path"])
-             for fs in tbl._files(tbl._snapshot(v)).values() for fi in fs}
-            for v in (v_from, v_to)
-        ]
-        read = {p.replace("file://", "") for p in df.inputFiles()}
-        assert read == files[0] ^ files[1], (v_from, v_to)
+            # the kernel reads exactly the files that are in one snapshot only
+            files = [
+                {fi["path"] for fs in tbl._files(tbl._snapshot(v)).values() for fi in fs}
+                for v in (v_from, v_to)
+            ]
+            read = [p for _, paths in calls() for p in paths]
+            assert sorted(read) == sorted(files[0] ^ files[1]), (v_from, v_to)
         carried_somewhere |= bool(files[0] & files[1])
     assert carried_somewhere, "the history never carried a file over"

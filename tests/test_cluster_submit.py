@@ -3,7 +3,8 @@ executor JVMs via ``spark-submit --py-files`` on a ``local-cluster``
 master runs the CDC merge end-to-end and converges to the same state,
 with the merge kernel on the driver and in ``applyInArrow`` tasks on the
 executors; so does a bucket split followed by a compaction, whose rewrite
-kernel is placed the same way.
+kernel is placed the same way, and the change feed's diff kernel gives the
+same feed under both placements.
 
 It boots a standalone-mode mini-cluster (2 executor JVM processes of
 1.5 GiB each, plus a 2 GiB driver), so it costs about half a minute and is
@@ -55,15 +56,21 @@ for place, limit in (("driver", 1 << 62), ("job", -1)):
     lake_table.DRIVER_APPLY_MAX_BYTES = limit
     tbl = LakeTable.create(spark, os.path.join({work!r}, place),
                            TRANSCRIPT_SCHEMA, key_cols=KEY_COLS, num_buckets=4)
+    v0 = tbl.snapshot["version"]
     m = tbl.merge(ev)
     got = tbl.read().toPandas()
     oracle.assert_states_equal(got, exp)
+    # the feed from an empty table: every live row, as an insert
+    feed = tbl.changes(v0).toPandas()
+    assert set(feed["_change_type"]) == {{"insert"}} and len(feed) == len(got)
     assert tbl.split_buckets(factor=2, target_file_rows=500)["num_buckets"] == 8
     oracle.assert_states_equal(tbl.read().toPandas(), exp)
     c = tbl.compact()
     oracle.assert_states_equal(tbl.read().toPandas(), exp)
+    # a split and a compaction rewrite every file and change no row
+    assert tbl.changes(m["version"]).count() == 0
     out[place] = {{"rows": len(got), "dedup_drops": m["dedup_drops"],
-                   "compacted": c["buckets_compacted"]}}
+                   "compacted": c["buckets_compacted"], "feed": len(feed)}}
 print(json.dumps(out))
 """
 
@@ -92,3 +99,4 @@ def test_merge_under_local_cluster_via_py_files(tmp_path):
     assert stats["driver"] == stats["job"]
     assert stats["job"]["rows"] > 0 and stats["job"]["dedup_drops"] > 0
     assert stats["job"]["compacted"] > 0
+    assert stats["job"]["feed"] == stats["job"]["rows"]

@@ -162,6 +162,22 @@ def test_stale_index_raises_and_refresh_recovers(spark, tmp_path):
     assert superseded.isdisjoint(gens3), "deferred reclaim did not sweep"
 
 
+def test_refresh_fallback_keeps_its_receipt_on_the_index(spark, tmp_path):
+    """A refresh whose feed is gone (the indexed version vacuumed away)
+    rebuilds in full; callers that ignore the return value (the
+    streaming applier, the serving benchmark) still see the receipt."""
+    tbl = _mk_table(spark, tmp_path, n=80)
+    idx = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
+    tbl.merge(_events(spark, _vec_rows(10, seed=2, start_id=500)))
+    tbl.vacuum()
+    assert idx.refresh() is idx
+    assert idx.last_refresh == {"mode": "full"}
+    assert idx.meta["built_from_version"] == tbl._version()
+    tbl.merge(_events(spark, _vec_rows(10, seed=3, start_id=600)))
+    assert idx.refresh() is idx
+    assert idx.last_refresh["mode"] == "incremental"
+
+
 def test_vector_index_load_roundtrip(spark, tmp_path):
     tbl = _mk_table(spark, tmp_path, n=60)
     tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
