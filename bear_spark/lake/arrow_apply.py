@@ -1,5 +1,5 @@
 """Arrow-native per-bucket kernels — the merge path, the writer of every
-table data file, and the change feed.
+data file (the table's and its vector indexes'), and the change feed.
 
 Data files are bucket-partitioned on shared storage, so only the BATCH
 needs to move. The merge kernel gets one bucket's change events as one
@@ -9,11 +9,13 @@ and writes the replacement files itself — the same file-granularity
 copy-on-write an Iceberg/Delta COW writer performs, with the engine's
 two-phase snapshot commit unchanged on top.
 
-``write_bucket`` writes every data file: the merge kernel's output, and
-the rewrite kernel's (``make_rewrite_kernel``), which compaction,
-tombstone expiry and bucket splits run over their final rows. So every
-file has one layout (``data_file_schema``) and returns its own manifest
-entry; the driver never lists a stage directory or opens a footer.
+``write_bucket`` writes every data file: the merge kernel's output, the
+rewrite kernel's (``make_rewrite_kernel``), which compaction, tombstone
+expiry and bucket splits run over their final rows, and the index
+kernel's (``make_index_kernel``), which builds and refreshes a vector
+index one list at a time. So every table file has one layout
+(``data_file_schema``), and every file returns its own manifest entry;
+the driver never lists a stage directory or opens a footer.
 
 The change feed (``LakeTable.changes``) is one more kernel
 (``make_diff_kernel``): it gets one bucket group's list of files that are
@@ -117,8 +119,9 @@ def write_bucket(
     key_cols: list[str],
     target_file_rows: int,
 ) -> list[dict]:
-    """Write one bucket's final rows (``data_file_schema``) as its data
-    files under ``stage_dir`` and return their manifest entries: path
+    """Write one bucket's final rows (``data_file_schema``; a vector
+    index list's are its id and vector columns and ``_deleted``) as its
+    data files under ``stage_dir`` and return their manifest entries: path
     (relative to ``table_root``), deleted, rows, and ``kmin``/``kmax``,
     the first key column's range (None unless a str, int or float).
 
@@ -405,6 +408,59 @@ def make_rewrite_kernel(
         files = write_bucket(full, bucket, stage_dir, table_root, key_cols, target_file_rows)
         return pa.table({
             "_bucket": pa.array([bucket], pa.int32()),
+            "files": pa.array([_json.dumps(files)], pa.string()),
+        })
+
+    return kernel
+
+
+def make_index_kernel(
+    target: pa.Schema,
+    stage_dir: str,
+    index_root: str,
+    key_cols: list[str],
+    lists: dict[str, list[dict]],
+    target_file_rows: int,
+) -> Callable:
+    """Build the kernel of a vector index's build and refresh
+    (``lake/vector_index.py``; run per list, placed as the merge kernel
+    is). Its input is one list's assigned rows: ``target``'s columns (the
+    index's id and vector columns), ``_bucket`` (the list id) and
+    ``_change_type``. It reads the list's current files (``lists``: the
+    index meta's entries, paths relative to ``index_root``), drops every
+    row whose key is in its input (two nulls are one key, as in
+    ``_last_of_key_runs``), appends the input's inserts and update
+    postimages, and writes the list through ``write_bucket``. A delete or
+    preimage row carries the old vector, so it is assigned to the list
+    that holds the old row. Returns ``REWRITE_RESULT_SCHEMA``."""
+    paths = {int(b): [fi["path"] for fi in fs] for b, fs in lists.items()}
+
+    def kernel(tbl):
+        import json as _json
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        lid = tbl.column("_bucket")[0].as_py()
+        cur = [align(pq.read_table(os.path.join(index_root, p)), target, {}) for p in paths.get(lid, [])]
+        new = align(tbl, target, {})
+        rows = pa.concat_tables([*cur, new])
+        n_cur = rows.num_rows - new.num_rows
+        # the sort is stable and current rows come first, so a current
+        # row is the last of its key run only if no input row shares
+        # its key
+        keys = rows.select(key_cols)
+        order = pc.sort_indices(
+            keys, sort_keys=[(k, "ascending") for k in key_cols], null_placement="at_start"
+        )
+        last = _last_of_key_runs(keys.take(order))
+        kept = order.filter(pc.and_(last, pc.less(order, n_cur)))
+        upsert = pc.is_in(tbl.column("_change_type"), value_set=pa.array(["insert", "update_postimage"]))
+        full = pa.concat_tables([rows.take(kept), new.filter(upsert)])
+        full = full.append_column("_deleted", pa.repeat(False, full.num_rows))
+        files = write_bucket(full, lid, stage_dir, index_root, key_cols, target_file_rows)
+        return pa.table({
+            "_bucket": pa.array([lid], pa.int32()),
             "files": pa.array([_json.dumps(files)], pa.string()),
         })
 

@@ -484,7 +484,7 @@ class LakeTable:
     # ------------------------------------------------- vector indexes
     def build_vector_index(self, name: str, **kw):
         """Materialize durable ANN index state (LSH bucket / IVF list
-        assignment) as partition layout under ``<root>/_index/<name>``
+        assignment) as per-list files under ``<root>/_index/<name>``
         — the persisted analog of the reference's store-side HNSW index
         (reference: bear/config.py:23-35). Probing the index reads only
         the probed lists' files. See lake/vector_index.py."""
@@ -920,10 +920,11 @@ class LakeTable:
 
     def _run_kernel(self, df: DataFrame, kernel, result_schema: str, buckets: int) -> list:
         """Run an Arrow kernel (lake/arrow_apply.py) once per ``_bucket``
-        of ``df`` and return its result rows. The merge and all three
-        maintenance rewrites go through here, so they share one placement
-        rule and one task count (``changes()`` places its diff kernel by
-        the same rule, on the on-disk size of the files it reads):
+        of ``df`` and return its result rows. The merge, all three
+        maintenance rewrites and a vector index's build and refresh go
+        through here, so they share one placement rule and one task count
+        (``changes()`` places its diff kernel by the same rule, on the
+        on-disk size of the files it reads):
 
         - on the driver, when Catalyst estimates ``df`` at or below
           ``DRIVER_APPLY_MAX_BYTES``: one ``toArrow()`` collect, then the

@@ -7,42 +7,46 @@ probe scans the whole corpus. The reference keeps its ANN index as
 durable store-side state (reference: bear/config.py:23-35 — the HNSW
 index params live on the collection; bear/model.py:131-141 — the index
 is created once and reused by every search). The Spark-native
-equivalent of "index as physical state" is PARTITION LAYOUT: materialize
-the assignment as a ``_list`` partition column on disk, so probing N
-lists reads exactly those lists' directories and never opens any other
-file — probing IS partition pruning.
+equivalent of "index as physical state" is FILE LAYOUT: materialize
+the assignment as one set of files per list, so probing N lists reads
+exactly those lists' files and never opens any other file — probing IS
+file pruning.
 
 Layout under ``<table_root>/_index/<name>/``::
 
-    meta.json                        atomic (os.replace): kind, params,
-                                     fitted state (hyperplanes or
-                                     centroids), built_from_version,
-                                     per-list generation pointers
-    d-<token>/_list=<id>/*.parquet   id cols + vector column only,
-                                     re-partitioned by assignment
+    meta.json     atomic (os.replace): kind, params, fitted state
+                  (hyperplanes or centroids), built_from_version, and
+                  ``lists``: each list id's file entries
+    d-<token>/    the files one build or refresh wrote, per list, by the
+                  table's Arrow writer (``write_bucket``, with the list id
+                  in place of the bucket): id cols + vector column,
+                  key-sorted
 
 The index data is a COPY (projection) of the table, like any secondary
 index: the base table's physical layout is key-hash buckets chosen for
-MERGE locality, so probe locality needs its own layout. ``meta.json``
-maps EACH list id to the generation directory holding its current
-files, so an incremental ``refresh()`` rewrites only the lists whose
-membership changed and leaves every other list's files untouched — the
-same manifest-pointer idea the table itself uses for buckets.
+MERGE locality, so probe locality needs its own layout. Build and refresh
+are one more per-bucket Arrow kernel (``arrow_apply.make_index_kernel``)
+under ``LakeTable._run_kernel``, with the list id as the bucket, so they
+run where a merge would: on the driver when small, else in one
+``applyInArrow`` job. ``meta.json`` keeps each list's manifest entries,
+so an incremental ``refresh()`` rewrites only the lists whose membership
+changed, unchanged lists keep their entries (and files) as they are, and
+a probe reads its lists' file paths straight from meta — the same
+manifest idea the table itself uses for buckets.
 
-Generation lifecycle: writes go to a fresh ``d-<token>`` dir, then
-``meta.json`` swaps atomically. Superseded generations are NOT deleted
-at swap time — a concurrent reader's lazy Spark job may have listed
-files from the old meta and would hit FileNotFound mid-action —
-reclamation is deferred to the START of the next build/refresh, which
-removes any ``d-*`` dir no list pointer references (this also sweeps
-crash orphans: a dir whose build died before the meta swap is never
-referenced).
+Generation lifecycle: each build or refresh writes to a fresh
+``d-<token>`` dir, then ``meta.json`` swaps atomically. Superseded
+generations are NOT deleted at swap time — a concurrent reader's lazy
+Spark job may have listed files from the old meta and would hit
+FileNotFound mid-action — reclamation is deferred to the START of the
+next build/refresh, which removes any ``d-*`` dir no list entry
+references (this also sweeps crash orphans: a dir whose build died
+before the meta swap is never referenced).
 
 At 100 TB: ``n_lists`` (or ``2**n_planes``) is sized so one list is a
 few files (~sqrt(N) lists is the IVF norm); the initial assignment job
-is one scan + one hash-partitioned shuffle write, i.e. the same cost
-class as one merge of the full table, amortized over every subsequent
-probe — and from then on ``refresh()`` consumes the table's net
+is one scan + one kernel per list, i.e. the same cost class as one merge
+of the full table, amortized over every subsequent probe — and from then on ``refresh()`` consumes the table's net
 change-data feed (``LakeTable.changes``), so keeping the index current
 costs O(changed rows + affected lists), the same cost class as the
 merge that advanced the table. Fitting the IVF quantizer samples the
@@ -67,7 +71,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bear_spark.lake.table import TARGET_FILE_ROWS
 from bear_spark.operators import similarity as S
+from bear_spark.schema import sql_ident
 
 logger = logging.getLogger(__name__)
 
@@ -81,15 +87,13 @@ class VectorIndex:
         self.table = table
         self.name = name
         self.root = os.path.join(table.root, "_index", name)
-        # filled by the last _candidate_scan: {"lists_probed", "dirs",
-        # "files_read", "files_total"} — the probe's pruning receipt.
-        # files_total (an O(all lists) listdir sweep) is only computed
-        # when debug_receipts is on; probes stay O(probed lists).
+        # filled by the last _candidate_scan: {"lists_probed",
+        # "files_read", "files_total"} — the probe's pruning receipt,
+        # all from meta
         self.last_probe: dict[str, Any] | None = None
-        self.debug_receipts = False
-        # filled by the last incremental refresh: {"lists_rewritten",
-        # "dirs_read", "files_read", "mode"} — the refresh's
-        # touched-only receipt
+        # filled by the last refresh: {"mode", "lists_rewritten",
+        # "files_read"} for an incremental one — its touched-only
+        # receipt — or {"mode": "full"}
         self.last_refresh: dict[str, Any] | None = None
 
     # ------------------------------------------------------------ meta
@@ -109,7 +113,7 @@ class VectorIndex:
         os.replace(tmp, mpath)
 
     def _reclaim_unreferenced(self) -> None:
-        """Remove generation dirs no list pointer references: superseded
+        """Remove generation dirs no list entry references: superseded
         generations from a previous swap and crash orphans. Runs at the
         START of build/refresh (deferred reclamation), never at swap
         time, so a reader holding the previous meta keeps its files."""
@@ -117,22 +121,11 @@ class VectorIndex:
             return
         referenced: set[str] = set()
         if self.exists():
-            m = self.meta
-            referenced = set(m.get("list_dirs", {}).values()) | {m.get("data_rel")}
+            lists = self.meta.get("lists", {})
+            referenced = {fi["path"].split(os.sep)[0] for fs in lists.values() for fi in fs}
         for d in os.listdir(self.root):
             if d.startswith("d-") and d not in referenced:
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-
-    @staticmethod
-    def _scan_list_dirs(gen_dir: str, data_rel: str) -> dict[str, str]:
-        """list id -> generation pointer for every list the writer
-        produced under one generation dir."""
-        out: dict[str, str] = {}
-        if os.path.isdir(gen_dir):
-            for d in os.listdir(gen_dir):
-                if d.startswith("_list="):
-                    out[d.split("=", 1)[1]] = data_rel
-        return out
 
     # ----------------------------------------------------------- build
     @classmethod
@@ -148,10 +141,9 @@ class VectorIndex:
         seed: int = 7,
         max_iter: int = 10,
         fit_sample: float | None = None,
-        target_file_rows: int = 2_000_000,
         _state: list[list[float]] | None = None,
     ) -> "VectorIndex":
-        """Materialize the assignment column as partition layout.
+        """Materialize the assignment as per-list files.
 
         ``_state`` (internal) injects already-fitted planes/centroids so
         a full rebuild reassigns without refitting — assignments stay
@@ -163,35 +155,22 @@ class VectorIndex:
         idx._reclaim_unreferenced()
         snap = table._snapshot()
         id_cols = list(id_cols or snap["key_cols"])
-        df = table.read().select(*id_cols, vec_col)
+        df = table.read(version=snap["version"]).select(*id_cols, vec_col)
 
         if _state is not None:
             state = _state
         elif kind == "lsh":
-            dim = df.select(F.size(vec_col)).first()
+            # size(NULL) is NULL, so the planes are sized from a vector
+            # that is there
+            dim = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
             if dim is None:
-                raise ValueError("cannot index an empty table without _state")
+                raise ValueError("cannot index a table with no vector without _state")
             state = S._planes(int(dim[0]), n_planes, seed)
         else:
             fit_df = df.sample(fit_sample, seed=seed) if fit_sample else df
             state = S.ivf_fit_centroids(
                 fit_df, n_lists=n_lists, vec_col=vec_col, seed=seed, max_iter=max_iter
             )
-
-        assigned = cls._assign(df, kind, state, vec_col)
-        token = uuid.uuid4().hex[:8]
-        data_rel = f"d-{token}"
-        out = os.path.join(idx.root, data_rel)
-        os.makedirs(idx.root, exist_ok=True)
-        # repartition by the assignment so each list's rows co-locate
-        # into that list's directory with one writer per list;
-        # maxRecordsPerFile bounds file size when a list is hot
-        (
-            assigned.repartition(F.col("_list"))
-            .write.option("maxRecordsPerFile", target_file_rows)
-            .partitionBy("_list")
-            .parquet(out)
-        )
 
         meta = {
             "kind": kind,
@@ -201,17 +180,11 @@ class VectorIndex:
             "n_planes": n_planes if kind == "lsh" else None,
             "n_lists": n_lists if kind == "ivf" else None,
             "state": state,  # hyperplanes (lsh) or centroids (ivf)
-            "built_from_version": snap["version"],
-            "data_rel": data_rel,
-            # per-list generation pointers — incremental refresh moves
-            # only the affected lists' pointers to a new generation
-            "list_dirs": cls._scan_list_dirs(out, data_rel),
-            # write/fit knobs carried across refreshes so file sizing
-            # and refit sampling stay what the user configured at build
-            "target_file_rows": target_file_rows,
-            "fit_sample": fit_sample,
+            "lists": {},
         }
-        idx._swap_meta(meta)
+        os.makedirs(idx.root, exist_ok=True)
+        rows = cls._assign(df, kind, state, vec_col).withColumn("_change_type", F.lit("insert"))
+        idx._apply(meta, rows, snap["version"])
         return idx
 
     @staticmethod
@@ -221,8 +194,41 @@ class VectorIndex:
             return df.withColumn("_list", S.rp_lsh_bucket_expr(vec_col, state))
         return S.with_ivf_list(df, state, vec_col=vec_col, out_col="_list")
 
+    def _apply(self, meta: dict[str, Any], rows: DataFrame, version: int) -> list[int]:
+        """Run the index kernel (``arrow_apply.make_index_kernel``) once per
+        ``_list`` of ``rows`` — assigned rows with ``_change_type`` —
+        placed by ``LakeTable._run_kernel``, then swap in ``meta`` with
+        the rewritten lists' entries at ``version``. Returns the
+        rewritten list ids."""
+        from bear_spark.lake.arrow_apply import (
+            REWRITE_RESULT_SCHEMA,
+            arrow_schema,
+            make_index_kernel,
+        )
+
+        cols = [*meta["id_cols"], meta["vec_col"]]
+        kernel = make_index_kernel(
+            arrow_schema(self._file_schema(meta)),
+            os.path.join(self.root, f"d-{uuid.uuid4().hex[:8]}"),
+            self.root,
+            meta["id_cols"],
+            meta["lists"],
+            TARGET_FILE_ROWS,
+        )
+        state = meta["state"]
+        n = 1 << len(state) if meta["kind"] == "lsh" else len(state)
+        res = self.table._run_kernel(
+            rows.selectExpr(*map(sql_ident, cols), "CAST(_list AS INT) AS _bucket", "_change_type"),
+            kernel, REWRITE_RESULT_SCHEMA, n,
+        )
+        written = {str(r["_bucket"]): json.loads(r["files"]) for r in res}
+        # a list whose every row left it has no files and drops out
+        lists = {b: fs for b, fs in {**meta["lists"], **written}.items() if fs}
+        self._swap_meta(dict(meta, built_from_version=version, lists=lists))
+        return sorted(int(b) for b in written)
+
     # --------------------------------------------------------- refresh
-    def refresh(self, incremental: bool = True) -> "VectorIndex":
+    def refresh(self) -> "VectorIndex":
         """Catch the index up to the table's CURRENT version, reusing
         the fitted planes/centroids (no refit — same hash family, so
         probe behavior is unchanged; only membership updates).
@@ -232,47 +238,45 @@ class VectorIndex:
         assign each changed row under the fixed state (delete /
         update-preimage rows carry the OLD payload, so their assignment
         IS the old list — no index scan needed to locate stale copies),
-        and rewrite ONLY the affected lists: each one's surviving rows
-        (old files anti-join changed keys) plus its new upserts land in
-        a fresh generation dir and that list's meta pointer moves.
-        Unchanged lists keep their files byte-identical. Cost is
-        O(changed rows + affected lists' rows), the same cost class as
-        the merge that advanced the table — this is what makes the
-        index maintainable under a 10^10-event stream, vs the full
-        rescan+rewrite of ``incremental=False``.
+        and run the index kernel over ONLY the lists the feed touches:
+        each reads its list's files (entries from meta), drops the
+        changed keys, appends its upserts and writes the list with the
+        table's Arrow writer (``write_bucket``) into a fresh generation
+        dir; meta then takes those lists' new entries. Unchanged lists
+        keep their entries and files byte-identical. Cost is O(changed
+        rows + affected lists' rows), the same cost class as the merge
+        that advanced the table, and a small feed runs the kernel on the
+        driver, as a small merge does.
 
         Falls back to a full rebuild when the feed is unavailable
-        (indexed snapshot vacuumed away) or the meta predates per-list
-        pointers. Every path updates this index and returns it, so
-        ``last_refresh`` is its receipt whichever path ran. Reference
-        analog: Milvus maintains its HNSW index incrementally on upsert
-        (bear/db.py:72-83 — index upkeep is implicit in the store)."""
+        (indexed snapshot vacuumed away) or the incremental path fails
+        (e.g. a meta.json with no per-list entries). Every path updates
+        this index and returns it, so ``last_refresh`` is its receipt
+        whichever path ran. Reference analog: Milvus maintains its HNSW
+        index incrementally on upsert (bear/db.py:72-83 — index upkeep
+        is implicit in the store)."""
         m = self.meta
         cur = self.table._version()
         if m["built_from_version"] == cur:
             return self
-
-        def full() -> "VectorIndex":
-            VectorIndex.build(
-                self.table,
-                self.name,
-                vec_col=m["vec_col"],
-                id_cols=m["id_cols"],
-                kind=m["kind"],
-                n_planes=m["n_planes"] or 4,
-                n_lists=m["n_lists"] or 8,
-                seed=m["seed"],
-                target_file_rows=m.get("target_file_rows", 2_000_000),
-                fit_sample=m.get("fit_sample"),
-                _state=m["state"],
-            )
-            self.last_refresh = {"mode": "full"}
-            return self
-
-        if not incremental or "list_dirs" not in m:
-            return full()
         try:
-            return self._refresh_incremental(m, cur)
+            ch = self.table.changes(m["built_from_version"], cur, include_preimage=True)
+            self._reclaim_unreferenced()
+            vec_col = m["vec_col"]
+            rows = self._assign(
+                ch.select(*m["id_cols"], vec_col, "_change_type"), m["kind"], m["state"], vec_col
+            )
+            rewritten = self._apply(m, rows, cur)
+            self.last_refresh = {
+                "mode": "incremental",
+                "lists_rewritten": rewritten,
+                "files_read": [
+                    os.path.join(self.root, fi["path"])
+                    for b in rewritten
+                    for fi in m["lists"].get(str(b), [])
+                ],
+            }
+            return self
         except FileNotFoundError:
             # indexed snapshot vacuumed away — the change feed's lower
             # bound is gone; a full rebuild from the current snapshot is
@@ -282,7 +286,6 @@ class VectorIndex:
                 "refresh; falling back to full rebuild",
                 self.name, m["built_from_version"],
             )
-            return full()
         except Exception:
             # index-follows-table must not kill the stream that drives
             # it: a failed incremental attempt leaves only an orphan
@@ -292,111 +295,18 @@ class VectorIndex:
                 "index %r: incremental refresh failed; falling back to "
                 "full rebuild", self.name, exc_info=True,
             )
-            return full()
-
-    def _refresh_incremental(self, m: dict[str, Any], cur: int) -> "VectorIndex":
-        ch = self.table.changes(m["built_from_version"], include_preimage=True)
-
-        self._reclaim_unreferenced()
-        vec_col, id_cols = m["vec_col"], m["id_cols"]
-        kind, state = m["kind"], m["state"]
-        assigned_ch = self._assign(
-            ch.select(*id_cols, vec_col, "_change_type"), kind, state, vec_col
+        VectorIndex.build(
+            self.table,
+            self.name,
+            vec_col=m["vec_col"],
+            id_cols=m["id_cols"],
+            kind=m["kind"],
+            n_planes=m["n_planes"] or 4,
+            n_lists=m["n_lists"] or 8,
+            seed=m["seed"],
+            _state=m["state"],
         )
-        # localCheckpoint once: affected-list discovery, the key
-        # anti-join and the upsert union all reuse the assigned feed
-        # without recomputing the change diff three times
-        assigned_ch = assigned_ch.localCheckpoint(eager=True)
-        # bounded driver scalar: distinct list ids touched by the feed
-        # (≤ number of changed lists, never rows)
-        affected = sorted(
-            r[0] for r in assigned_ch.select("_list").distinct().collect()
-        )
-        if not affected:
-            # compaction-only range: membership unchanged, just advance
-            meta = dict(m, built_from_version=cur)
-            self._swap_meta(meta)
-            self.last_refresh = {
-                "mode": "incremental", "lists_rewritten": [],
-                "dirs_read": [], "files_read": [],
-            }
-            return self
-
-        list_dirs: dict[str, str] = dict(m["list_dirs"])
-        # old files for ONLY the affected lists, grouped by generation
-        # so the partition column parses from each generation's basePath
-        by_gen: dict[str, list[str]] = {}
-        for b in affected:
-            rel = list_dirs.get(str(b))
-            if rel is None:
-                continue  # brand-new list: nothing on disk yet
-            d = os.path.join(self.root, rel, f"_list={b}")
-            if os.path.isdir(d):
-                by_gen.setdefault(rel, []).append(d)
-        dirs_read = [d for ds in by_gen.values() for d in ds]
-        files_read = [
-            os.path.join(d, f)
-            for d in dirs_read
-            for f in sorted(os.listdir(d))
-            if f.endswith(".parquet")
-        ]
-
-        changed_keys = assigned_ch.select(*id_cols).distinct()
-        parts = []
-        file_schema = self._file_schema(m, with_list=True)
-        for rel, ds in by_gen.items():
-            old = (
-                self.table.spark.read.schema(file_schema)
-                .option("basePath", os.path.join(self.root, rel))
-                .parquet(*ds)
-            )
-            parts.append(old.select(*id_cols, vec_col, "_list"))
-        upserts = assigned_ch.filter(
-            F.col("_change_type").isin("insert", "update_postimage")
-        ).select(*id_cols, vec_col, "_list")
-        if parts:
-            survivors = parts[0]
-            for p in parts[1:]:
-                survivors = survivors.unionByName(p)
-            # no mandatory broadcast: the changed-key set is O(batch) on
-            # a streaming cadence but O(backlog) on a long catch-up —
-            # AQE picks broadcast vs shuffle from the actual size
-            survivors = survivors.join(
-                changed_keys, on=list(id_cols), how="left_anti"
-            )
-            new_data = survivors.unionByName(upserts)
-        else:
-            new_data = upserts
-
-        token = uuid.uuid4().hex[:8]
-        data_rel = f"d-{token}"
-        out = os.path.join(self.root, data_rel)
-        (
-            new_data.repartition(F.col("_list"))
-            .write.option("maxRecordsPerFile", m.get("target_file_rows", 2_000_000))
-            .partitionBy("_list")
-            .parquet(out)
-        )
-        written = self._scan_list_dirs(out, data_rel)
-        # move pointers: every affected list now lives in the new
-        # generation; an affected list with no surviving rows simply
-        # loses its pointer (empty list)
-        for b in affected:
-            list_dirs.pop(str(b), None)
-        list_dirs.update(written)
-        meta = dict(
-            m,
-            built_from_version=cur,
-            data_rel=data_rel,
-            list_dirs=list_dirs,
-        )
-        self._swap_meta(meta)
-        self.last_refresh = {
-            "mode": "incremental",
-            "lists_rewritten": [int(b) for b in affected],
-            "dirs_read": dirs_read,
-            "files_read": files_read,
-        }
+        self.last_refresh = {"mode": "full"}
         return self
 
     # ----------------------------------------------------------- probe
@@ -462,58 +372,30 @@ class VectorIndex:
                             heapq.heappush(heap, (cost, nxt))
         return sorted(lists)
 
-    def _file_schema(self, meta: dict, with_list: bool = False) -> T.StructType:
+    def _file_schema(self, meta: dict) -> T.StructType:
         """Schema of the index data files: the id and vector columns typed
-        as in the table's payload schema, plus the ``_list`` partition
-        column for a ``basePath`` read. Declared rather than inferred,
+        as in the table's payload schema. Declared rather than inferred,
         because parquet schema inference starts a Spark job per read."""
         payload = self.table.payload_schema()
-        fields = [payload[c] for c in (*meta["id_cols"], meta["vec_col"])]
-        if with_list:
-            fields.append(T.StructField("_list", T.LongType()))
-        return T.StructType(fields)
-
-    def _list_dir(self, meta: dict, b: int) -> str | None:
-        rel = meta.get("list_dirs", {}).get(str(b), meta.get("data_rel"))
-        if rel is None:
-            return None
-        d = os.path.join(self.root, rel, f"_list={b}")
-        return d if os.path.isdir(d) else None
+        return T.StructType([payload[c] for c in (*meta["id_cols"], meta["vec_col"])])
 
     def _candidate_scan(self, lists: Sequence[int]) -> DataFrame | None:
-        """Read ONLY the probed lists' directories (partition pruning by
-        construction: unlisted directories are never passed to the
-        reader). Records the pruning receipt in ``last_probe``;
-        ``files_total`` (an O(all lists) listdir) is only filled when
-        ``debug_receipts`` is set, so production probes do O(probed)
-        driver listings."""
+        """Read ONLY the probed lists' files, as meta lists them (pruning
+        by construction: no other file is passed to the reader). Records
+        the pruning receipt in ``last_probe``."""
         m = self.meta
-        dirs = [d for b in lists if (d := self._list_dir(m, b)) is not None]
-
-        def _parquets(d: str) -> list[str]:
-            return [
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            ]
-
-        files_total = None
-        if self.debug_receipts:
-            all_dirs = [
-                d
-                for b in m.get("list_dirs", {})
-                if (d := self._list_dir(m, int(b))) is not None
-            ]
-            files_total = sum(len(_parquets(d)) for d in set(all_dirs))
+        entries = m["lists"]
+        files = [
+            os.path.join(self.root, fi["path"]) for b in lists for fi in entries.get(str(b), [])
+        ]
         self.last_probe = {
             "lists_probed": [int(b) for b in lists],
-            "dirs": dirs,
-            "files_read": [p for d in dirs for p in _parquets(d)],
-            "files_total": files_total,
+            "files_read": files,
+            "files_total": sum(len(fs) for fs in entries.values()),
         }
-        if not dirs:
+        if not files:
             return None
-        return self.table.spark.read.schema(self._file_schema(m)).parquet(*dirs)
+        return self.table.spark.read.schema(self._file_schema(m)).parquet(*files)
 
     def probe(
         self,

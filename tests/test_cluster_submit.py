@@ -3,8 +3,10 @@ executor JVMs via ``spark-submit --py-files`` on a ``local-cluster``
 master runs the CDC merge end-to-end and converges to the same state,
 with the merge kernel on the driver and in ``applyInArrow`` tasks on the
 executors; so does a bucket split followed by a compaction, whose rewrite
-kernel is placed the same way, and the change feed's diff kernel gives the
-same feed under both placements.
+kernel is placed the same way, the change feed's diff kernel gives the
+same feed under both placements, and an LSH index built and refreshed by
+the index kernel under each placement holds the same lists and answers a
+probe the same way.
 
 It boots a standalone-mode mini-cluster (2 executor JVM processes of
 1.5 GiB each, plus a 2 GiB driver), so it costs about half a minute and is
@@ -34,6 +36,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DRIVER = """
 import json, os, sys
 sys.path.insert(0, {repo!r})
+import numpy as np
+import pandas as pd
+from pyspark.sql import types as T
 from bear_spark.events import change_events
 from bear_spark.lake import LakeTable
 from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
@@ -69,8 +74,35 @@ for place, limit in (("driver", 1 << 62), ("job", -1)):
     oracle.assert_states_equal(tbl.read().toPandas(), exp)
     # a split and a compaction rewrite every file and change no row
     assert tbl.changes(m["version"]).count() == 0
+    # an LSH index, built and then refreshed after inserts, updates and
+    # deletes; its kernel runs in executor tasks under the job placement
+    rng = np.random.default_rng(3)
+
+    def vec_events(ids, op, lsn0, day):
+        return spark.createDataFrame(pd.DataFrame({{
+            "vec_id": ids, "embedding": [rng.standard_normal(8).tolist() for _ in ids],
+            "ts": pd.Timestamp("2024-01-01") + pd.Timedelta(days=day), "op": op,
+            "lsn": range(lsn0, lsn0 + len(ids)),
+        }}), "vec_id long, embedding array<double>, ts timestamp, op string, lsn long")
+
+    vt = LakeTable.create(spark, os.path.join({work!r}, place + "_vec"),
+                          T.StructType([T.StructField("vec_id", T.LongType()),
+                                        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+                                        T.StructField("ts", T.TimestampType())]),
+                          key_cols=["vec_id"], num_buckets=4)
+    vt.merge(vec_events(list(range(400)), "I", 0, 0))
+    idx = vt.build_vector_index("ann", kind="lsh", n_planes=3, seed=5)
+    vt.merge(vec_events(list(range(0, 400, 7)) + list(range(400, 440)), "U", 1000, 1))
+    vt.merge(vec_events(list(range(3, 400, 11)), "D", 2000, 2))
+    idx.refresh()
+    assert idx.last_refresh["mode"] == "incremental", idx.last_refresh
+    q = np.random.default_rng(9).standard_normal(8).tolist()
+    probe = [[r["vec_id"], r["cos_sim"]] for r in idx.probe(q, k=20, max_probe_hamming=1).collect()]
+    lists = {{b: sum(fi["rows"] for fi in fs) for b, fs in sorted(idx.meta["lists"].items())}}
+    assert sum(lists.values()) == vt.read().count()
     out[place] = {{"rows": len(got), "dedup_drops": m["dedup_drops"],
-                   "compacted": c["buckets_compacted"], "feed": len(feed)}}
+                   "compacted": c["buckets_compacted"], "feed": len(feed),
+                   "probe": probe, "lists": lists}}
 print(json.dumps(out))
 """
 
@@ -100,3 +132,4 @@ def test_merge_under_local_cluster_via_py_files(tmp_path):
     assert stats["job"]["rows"] > 0 and stats["job"]["dedup_drops"] > 0
     assert stats["job"]["compacted"] > 0
     assert stats["job"]["feed"] == stats["job"]["rows"]
+    assert len(stats["job"]["probe"]) == 20 and len(stats["job"]["lists"]) > 1

@@ -233,3 +233,47 @@ def test_nan_query_component_ranks_by_id(spark, served):
     authors = {a for r in tbl.read().where(F.col("turn_id").isin(live)).collect() for a in r["authors"]}
     assert [r["_group"] for r in got] == sorted(authors)[:4]
     assert all(math.isnan(r["total_score"]) for r in got)
+
+
+@pytest.fixture
+def refreshed(spark, tmp_path):
+    """An LSH-indexed table and a function that lands one small write:
+    a few inserts, updates and deletes, merged from pandas."""
+    tbl = LakeTable.create(spark, str(tmp_path / "t"), SERVE_SCHEMA, ["turn_id"], num_buckets=4)
+    tbl.merge(_serve_events(spark, list(range(300)), "I", 1, 0))
+    index = tbl.build_vector_index("ann", kind="lsh", n_planes=4, seed=3)
+    writes = iter(range(1, 100))
+
+    def write():
+        w = next(writes)
+        upd, dele = [w, w + 100, w + 200], [w + 50]
+        ins = list(range(1000 + 10 * w, 1004 + 10 * w))
+        batch = _serve_events(spark, upd + dele + ins, ["U"] * 3 + ["D"] + ["I"] * 4, 1000 * w, w)
+        tbl.merge(batch)
+
+    return index, write
+
+
+def test_warm_refresh_compiles_nothing(spark, refreshed):
+    """A refresh of a small write assigns the feed over a driver-local
+    relation and runs the index kernel on the driver, so once the session
+    is warm it compiles no class: refreshes that read several index
+    generations through Spark compiled 10 classes on a later call."""
+    index, write = refreshed
+    write()
+    index.refresh()
+    for _ in range(2):
+        write()
+        assert _compiles(spark, index.refresh) == 0
+        assert index.last_refresh["mode"] == "incremental"
+
+
+def test_refresh_of_a_small_feed_starts_at_most_one_job(spark, refreshed):
+    """The feed, the assignment and the index kernel of a small write
+    all run on the driver: one collect of the assigned feed, where a
+    Spark anti-join, union and partitioned write took 7 jobs."""
+    index, write = refreshed
+    for _ in range(2):
+        write()
+        assert _jobs_of(spark, index.refresh) <= 1
+        assert index.last_refresh["mode"] == "incremental"
