@@ -12,6 +12,11 @@ The store/index knobs differ by design: the reference configures a
 Milvus endpoint + HNSW index; this engine's store is the lake table, so
 the knobs are bucketing and lateness, and Spark session sizing
 replaces connection pooling.
+
+A value no deployment sets is not a setting: the data-file row bound
+and compaction floor (``lake/table.py``), the merge retry bound and the
+metrics flush cadence (``streaming/apply.py``) are module constants next
+to the code that reads them.
 """
 
 from __future__ import annotations
@@ -70,7 +75,6 @@ class Settings:
     # streaming applier (bear_spark/streaming/apply.py)
     max_files_per_trigger: int = 4
     compact_every: int = 0
-    metrics_flush_every: int = 8
     split_rows_per_bucket: int = 0  # 0 = no auto bucket growth
     split_step_buckets: int = 4  # old buckets split per micro-batch
 

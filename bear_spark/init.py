@@ -66,7 +66,6 @@ def bootstrap(
             os.path.join(root, "metrics"),
             max_files_per_trigger=s.max_files_per_trigger,
             compact_every=s.compact_every,
-            metrics_flush_every=s.metrics_flush_every,
             split_rows_per_bucket=s.split_rows_per_bucket,
             split_step_buckets=s.split_step_buckets,
         )

@@ -9,22 +9,9 @@ are added (nullable), and numeric types may widen (int→long,
 int/long/float→double). Old data files keep their old physical schema —
 reads group files by schema version and align each group to the current
 schema. Incompatible changes (narrowing, type clashes) raise.
-
-Two align paths:
-- ``align`` — JVM-side casts in one ``selectExpr`` (Catalyst codegen; the
-  engine default — no Python in the loop at all). The projection is SQL
-  text, not one ``Column`` per field: each ``Column`` call is a py4j
-  round trip on the driver, and a frame already at the target schema is
-  returned as is.
-- ``align_in_pandas`` — the same rewrite expressed as a vectorized
-  Arrow-batch pass through ``mapInPandas`` (kept for the raw-parse stage
-  and as the explicit "rewrite Arrow batches in a pandas UDF" path; it
-  is vectorized per batch, never per row).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -124,22 +111,3 @@ def align(df: DataFrame, target: T.StructType) -> DataFrame:
             for f in target.fields
         ]
     )
-
-
-def align_in_pandas(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Arrow-batch rewrite of ``df`` to ``target`` via mapInPandas.
-
-    Vectorized: each pandas batch is reindexed/cast as whole columns.
-    Used on the raw-parse path; for pure column alignment prefer
-    :func:`align` (stays in codegen).
-    """
-    import pandas as pd  # local import: executors only
-
-    names = [f.name for f in target.fields]
-
-    def rewrite(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pdf.reindex(columns=names)
-            yield out
-
-    return df.mapInPandas(rewrite, schema=target)

@@ -72,9 +72,16 @@ _SYS_FIELDS = [
 _ENVELOPE = ("op", "lsn", "source_partition", "offset", "_src_file")
 
 
-#: default row bound of one data file written by merge, split and
-#: compaction (each takes ``target_file_rows=`` to override it)
+#: row bound of one data file, whoever writes it: merge, split,
+#: compaction, tombstone expiry and a vector index's lists. Each kernel
+#: reads it when it is built on the driver and carries it in its
+#: closure, so a worker never falls back to its own copy of the module.
 TARGET_FILE_ROWS = 2_000_000
+
+#: data files per bucket side (live, tombstone) that ``compact`` leaves
+#: alone; a bucket side holding more than this, and more than its rows
+#: need at ``TARGET_FILE_ROWS``, is rewritten.
+COMPACT_FILES_PER_SIDE = 1
 
 #: Catalyst's size estimate of a kernel's input (bytes: a merge's batch,
 #: or the rows a compaction, expiry or split rewrites; for a change feed,
@@ -126,12 +133,24 @@ def merge_partition_count(
     return max(1, min(buckets, want))
 
 
+#: a plan node whose rows a Python worker computes (``applyInArrow``,
+#: ``mapInPandas``, a Python UDF's eval node), matched on the node name
+#: that starts each line of the plan's tree string
+_PYTHON_NODE = re.compile(r"^[\s:|+\-!]*\w*(Python|InArrow|InPandas)\w*\b", re.M)
+
+
 def _estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for ``df``'s optimized plan, or None when
-    an input has no statistics: Spark then stands in the session's
-    ``spark.sql.defaultSizeInBytes`` for that leaf, and the total says
-    nothing about the batch."""
+    it says nothing about the rows:
+
+    - an input has no statistics: Spark then stands in the session's
+      ``spark.sql.defaultSizeInBytes`` for that leaf;
+    - a node's rows come from Python (a lazy change feed's
+      ``applyInArrow`` job, say): Catalyst sizes its output from its
+      input, a file list, not from the rows it returns."""
     plan = df._jdf.queryExecution().optimizedPlan()
+    if _PYTHON_NODE.search(plan.treeString()):
+        return None
     unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
     leaves = plan.collectLeaves()
     for i in range(leaves.size()):
@@ -257,7 +276,8 @@ class LakeTable:
         """Two-phase commit, phase 2: publish metadata atomically. The
         snapshot is linked into place by exclusive create, so a writer
         that lost the race for ``v<N>.json`` raises ``ConcurrentCommit``
-        instead of replacing the winner's document."""
+        instead of replacing the winner's document. Only ``create`` (v0)
+        and ``_commit`` (every later version) call it."""
         meta = os.path.join(self.root, "_meta")
         if expect_version is not None and self._version() != expect_version:
             raise ConcurrentCommit(
@@ -318,19 +338,27 @@ class LakeTable:
         self._mcache[rel] = files
         return rel
 
-    def _commit_manifests(
-        self, snap: dict, new_version: int, changed: dict[str, list[dict]]
-    ) -> dict[str, str]:
-        """New manifest pointer map: write one manifest per CHANGED
-        bucket (empty list drops the bucket), carry every other pointer
-        by reference — commit metadata I/O is O(touched buckets)."""
+    def _commit(self, snap: dict, changed: dict[str, list[dict]], **fields) -> None:
+        """Commit the version after ``snap``: the one commit path of
+        every write after ``create`` (merge, split, compaction, expiry).
+        Writes one manifest per CHANGED bucket (an empty list drops the
+        bucket) and carries every other pointer by reference, so commit
+        metadata I/O is O(touched buckets); then links ``snap`` plus
+        ``fields`` as the next snapshot. Raises ``ConcurrentCommit`` if
+        another writer committed since ``snap``; the staged files and
+        manifests are then orphans for ``vacuum()``, and the table is
+        untouched."""
+        version = int(snap["version"]) + 1
         manifests = dict(snap["manifests"])
         for b, fs in changed.items():
             if fs:
-                manifests[b] = self._write_manifest(new_version, b, fs)
+                manifests[b] = self._write_manifest(version, b, fs)
             else:
                 manifests.pop(b, None)
-        return manifests
+        self._write_snapshot(
+            {**snap, **fields, "version": version, "manifests": manifests},
+            expect_version=snap["version"],
+        )
 
     # public introspection -------------------------------------------------
     @property
@@ -391,10 +419,6 @@ class LakeTable:
                 if not include_deleted and fi.get("deleted"):
                     continue
                 yield fi
-
-    def _file_rows(self, snap: dict, buckets: Sequence[int] | None) -> int:
-        """Row count for a bucket set from snapshot metadata (no scan)."""
-        return sum(fi["rows"] for fi in self._iter_files(snap, buckets))
 
     def _read_files(
         self,
@@ -625,18 +649,14 @@ class LakeTable:
         )
 
     # ------------------------------------------------------------ MERGE
-    def merge(
-        self,
-        batch: DataFrame,
-        fence: bool = True,
-        target_file_rows: int = TARGET_FILE_ROWS,
-    ) -> dict[str, Any]:
+    def merge(self, batch: DataFrame) -> dict[str, Any]:
         """MERGE a batch of change events into the table (copy-on-write).
 
         ``batch`` carries the payload columns plus ``op`` ('I'/'U'/'D')
-        and ``lsn``; if ``source_partition``/``offset`` are present and
-        ``fence`` is true, already-applied offsets are filtered out and
-        the commit log advances atomically with the data.
+        and ``lsn``; if ``source_partition``/``offset`` are present,
+        already-applied offsets are filtered out and the commit log
+        advances atomically with the data. A batch without them is
+        applied whole and leaves the commit log as it is.
 
         One kernel, for every payload type (lake/arrow_apply.py): per
         touched bucket it reads the bucket's existing files directly,
@@ -648,11 +668,9 @@ class LakeTable:
 
         The kernel returns the manifest entries of the files it wrote,
         with exact row counts and key ranges, so committing reads no
-        footer. ``target_file_rows`` bounds each written file, as in
-        ``compact`` and ``split_buckets``.
+        footer. ``TARGET_FILE_ROWS`` bounds each written file.
         """
         snap = self._snapshot()
-        expect_version = snap["version"]
         key_cols = snap["key_cols"]
         seq_col = snap["seq_col"]
 
@@ -687,7 +705,7 @@ class LakeTable:
         # unseen earlier file must still apply.
         # The range table is Arrow-built: a driver-local relation, where
         # a list-built one would run a Python job on every merge.
-        if fence and has_env and snap["commit_log"]:
+        if has_env and snap["commit_log"]:
             rows = [
                 (int(p), int(lo), int(hi))
                 for p, ranges in snap["commit_log"].items()
@@ -712,10 +730,8 @@ class LakeTable:
                 )
 
         wm = snap["watermark_ts"]
-        new_version = expect_version + 1
         st = self._merge_arrow_job(
-            batch, snap, new_schema, schema_version, has_env, wm,
-            key_cols, seq_col, target_file_rows,
+            batch, snap, new_schema, schema_version, has_env, wm, key_cols, seq_col
         )
         if st is None:
             return {
@@ -755,7 +771,6 @@ class LakeTable:
             b: [fi for fi in fmap.get(b, []) if fi["path"] in kept.get(int(b), ())] + staged
             for b, staged in new_files.items()
         }
-        manifests = self._commit_manifests(snap, new_version, changed)
         rows_written = sum(fi["rows"] for fs in new_files.values() for fi in fs)
         tombstones = sum(
             fi["rows"] for fs in new_files.values() for fi in fs if fi["deleted"]
@@ -768,7 +783,7 @@ class LakeTable:
                 new_wm = cand
 
         metrics = {
-            "version": new_version,
+            "version": snap["version"] + 1,
             "skipped": False,
             "rows_in": rows_in,
             "rows_after_fence": rows_in,
@@ -794,19 +809,14 @@ class LakeTable:
         if changes:
             schemas[str(schema_version)] = schema_to_json(new_schema)
 
-        new_snap = {
-            **snap,
-            "version": new_version,
-            "schemas": schemas,
-            "current_schema_version": schema_version,
-            "manifests": manifests,
-            "commit_log": new_offsets,
-            "watermark_ts": new_wm,
-            "lineage": (snap["lineage"] + [metrics])[-200:],
-        }
-        # phase 2: atomic metadata swap (aborts → staged files orphaned,
-        # cleaned by vacuum(); the table itself is untouched)
-        self._write_snapshot(new_snap, expect_version=expect_version)
+        self._commit(
+            snap, changed,
+            schemas=schemas,
+            current_schema_version=schema_version,
+            commit_log=new_offsets,
+            watermark_ts=new_wm,
+            lineage=(snap["lineage"] + [metrics])[-200:],
+        )
         return metrics
 
     # ------------------------------------------------------ apply job
@@ -820,7 +830,6 @@ class LakeTable:
         wm: str | None,
         key_cols: Sequence[str],
         seq_col: str,
-        target_file_rows: int,
     ):
         """Run the Arrow kernel (lake/arrow_apply.py) once per touched
         bucket, placed by ``_run_kernel``: each call reads its bucket's
@@ -876,7 +885,7 @@ class LakeTable:
             wm_iso=wm,
             drop_late=bool(snap.get("drop_late")),
             table_root=self.root,
-            target_file_rows=target_file_rows,
+            target_file_rows=TARGET_FILE_ROWS,
         )
         res = self._run_kernel(
             src_evt, kernel, APPLY_RESULT_SCHEMA, self._effective_buckets(snap)
@@ -984,9 +993,7 @@ class LakeTable:
             for r in res
         }
 
-    def _rewrite(
-        self, df: DataFrame, snap: dict, buckets: int, target_file_rows: int
-    ) -> dict[str, list[dict]]:
+    def _rewrite(self, df: DataFrame, snap: dict, buckets: int) -> dict[str, list[dict]]:
         """Write ``df`` — final rows in the table's columns, ``_bucket``
         set to each row's destination — as data files of the commit after
         ``snap``, through the merge's writer and placement. Returns the
@@ -1001,7 +1008,7 @@ class LakeTable:
             arrow_schema(self.payload_schema(snap)),
             self._stage_dir(snap),
             list(snap["key_cols"]),
-            target_file_rows,
+            TARGET_FILE_ROWS,
             self.root,
         )
         res = self._run_kernel(df, kernel, REWRITE_RESULT_SCHEMA, buckets)
@@ -1012,7 +1019,6 @@ class LakeTable:
         self,
         factor: int | None = None,
         max_buckets: int | None = None,
-        target_file_rows: int = TARGET_FILE_ROWS,
     ) -> dict[str, Any]:
         """Grow the bucket count by ``factor`` — incrementally.
 
@@ -1045,11 +1051,11 @@ class LakeTable:
         ``factor`` must be an integer >= 2 (power-of-two growth is the
         classic choice but any integer works; default 2). ``None``
         continues an in-flight split as-is; a conflicting explicit
-        ``factor`` raises. Rewritten files are
-        key-sorted and bounded by ``target_file_rows`` (same knob as
-        ``merge``/``compact``). Reference analog: the reference rebuilds
-        its whole Milvus collection to re-shard (bear/db.py drop +
-        re-ingest); here growth is online and incremental.
+        ``factor`` raises. Rewritten files are key-sorted and bounded by
+        ``TARGET_FILE_ROWS``, as every data file is. Reference analog:
+        the reference rebuilds its whole Milvus collection to re-shard
+        (bear/db.py drop + re-ingest); here growth is online and
+        incremental.
         """
         if max_buckets is not None and int(max_buckets) < 1:
             raise ValueError(f"max_buckets must be >= 1, got {max_buckets}")
@@ -1077,8 +1083,6 @@ class LakeTable:
         to, ptr = int(rb["to"]), int(rb["split_ptr"])
         f = to // n
         k = n - ptr if max_buckets is None else min(int(max_buckets), n - ptr)
-        expect_version = snap["version"]
-        new_version = expect_version + 1
         old_range = list(range(ptr, ptr + k))
         children = [b + i * n for b in old_range for i in range(f)]
         # only the buckets being split hydrate their manifests — the
@@ -1093,37 +1097,34 @@ class LakeTable:
             # each row goes to its child under the new modulus
             child = self._bucket_sql({**snap, "num_buckets": to, "rebucket": None})
             df = self._read_files(snap, old_range).withColumn("_bucket", F.expr(child))
-            changed.update(self._rewrite(df, snap, len(children), target_file_rows))
-        manifests = self._commit_manifests(snap, new_version, changed)
+            changed.update(self._rewrite(df, snap, len(children)))
         new_ptr = ptr + k
-        new_snap = {**snap, "version": new_version, "manifests": manifests}
+        done = new_ptr >= n
+        if done:
+            # the split is complete: the marker leaves the snapshot
+            snap = {key: v for key, v in snap.items() if key != "rebucket"}
+            layout = {"num_buckets": to}
+        else:
+            layout = {"rebucket": {"to": to, "split_ptr": new_ptr}}
+        out = {
+            "buckets_split": k,
+            "split_ptr": 0 if done else new_ptr,
+            "num_buckets": to if done else n,
+            "target_buckets": to,
+            "complete": done,
+            "rows_rewritten": rows_rewritten,
+        }
         # splits are maintenance commits, durable in table history like
         # merge metrics (an operator explaining a latency bump must see
         # which versions were split steps, not just that files moved)
-        new_snap["lineage"] = (
-            snap["lineage"]
-            + [{
-                "op": "split", "version": new_version,
-                "buckets_split": k, "rows_rewritten": rows_rewritten,
-                "split_ptr": new_ptr if new_ptr < n else 0,
-                "num_buckets": to if new_ptr >= n else n,
-                "target_buckets": to,
-            }]
-        )[-200:]
-        if new_ptr >= n:
-            new_snap["num_buckets"] = to
-            new_snap.pop("rebucket", None)
-        else:
-            new_snap["rebucket"] = {"to": to, "split_ptr": new_ptr}
-        self._write_snapshot(new_snap, expect_version=expect_version)
-        return {
-            "buckets_split": k,
-            "split_ptr": 0 if new_ptr >= n else new_ptr,
-            "num_buckets": int(new_snap["num_buckets"]),
+        entry = {
+            "op": "split", "version": snap["version"] + 1,
+            "buckets_split": k, "rows_rewritten": rows_rewritten,
+            "split_ptr": out["split_ptr"], "num_buckets": out["num_buckets"],
             "target_buckets": to,
-            "complete": new_ptr >= n,
-            "rows_rewritten": rows_rewritten,
         }
+        self._commit(snap, changed, lineage=(snap["lineage"] + [entry])[-200:], **layout)
+        return out
 
     def maybe_split(
         self,
@@ -1166,33 +1167,26 @@ class LakeTable:
             return None
         return self.split_buckets(factor=factor, max_buckets=max_buckets)
 
-    def compact(
-        self,
-        target_files_per_bucket: int = 1,
-        target_file_rows: int = TARGET_FILE_ROWS,
-    ) -> dict[str, int]:
+    def compact(self) -> dict[str, int]:
         """Rewrite FRAGMENTED buckets' files into fewer, larger files.
 
         COW merges leave multiple files per bucket (chunked writes, task
         parallelism); compaction is the standard lake answer. Only
-        buckets holding more than ``target_files_per_bucket`` data files
-        are rewritten — every other bucket's manifest pointer is carried
-        by reference, so the job reads O(fragmented), not O(table). A
-        no-op (nothing fragmented) commits nothing. Rewritten files are
-        re-sorted by key (the lake file sort-order spec: tight parquet
-        min/max ranges for merge-time pruning).
+        buckets holding more than ``COMPACT_FILES_PER_SIDE`` data files
+        on a side are rewritten — every other bucket's manifest pointer
+        is carried by reference, so the job reads O(fragmented), not
+        O(table). A no-op (nothing fragmented) commits nothing.
+        Rewritten files are re-sorted by key (the lake file sort-order
+        spec: tight parquet min/max ranges for merge-time pruning).
 
-        ``target_file_rows`` (same knob/default as ``merge``) bounds the
-        rewritten files AND raises the fragmentation floor: a bucket
-        whose file count is already justified by its row count
-        (ceil(rows / target_file_rows)) is NOT fragmentation — merging
-        its chunks back into one unbounded file would defeat the merge
-        writer's size bound and set up a split/re-merge cycle between
-        the two maintenance passes."""
+        ``TARGET_FILE_ROWS`` bounds the rewritten files AND raises the
+        fragmentation floor: a bucket whose file count is already
+        justified by its row count (ceil(rows / TARGET_FILE_ROWS)) is
+        NOT fragmentation — merging its chunks back into one unbounded
+        file would defeat the merge writer's size bound and set up a
+        split/re-merge cycle between the two maintenance passes."""
         snap = self._snapshot()
         fmap = self._files(snap)
-        tgt = max(1, int(target_files_per_bucket))
-        tfr = max(1, int(target_file_rows))
 
         def _fragmented(fs: list[dict]) -> bool:
             # live and tombstone files land in separate dirs, so the
@@ -1200,7 +1194,7 @@ class LakeTable:
             # each against max(target, files its rows legitimately need)
             def _side(side_fs: list[dict]) -> bool:
                 rows = sum(fi["rows"] for fi in side_fs)
-                floor = max(tgt, -(-rows // tfr))
+                floor = max(COMPACT_FILES_PER_SIDE, -(-rows // TARGET_FILE_ROWS))
                 return len(side_fs) > floor
 
             return _side([fi for fi in fs if not fi.get("deleted")]) or _side(
@@ -1211,14 +1205,8 @@ class LakeTable:
         if not frag:
             return {"buckets_compacted": 0, "files_before": 0}
         files_before = sum(len(fmap[str(b)]) for b in frag)
-        expect_version = snap["version"]
-        new_version = expect_version + 1
-        staged = self._rewrite(self._read_files(snap, frag), snap, len(frag), tfr)
-        manifests = self._commit_manifests(
-            snap, new_version, {str(b): staged.get(str(b), []) for b in frag}
-        )
-        new_snap = {**snap, "version": new_version, "manifests": manifests}
-        self._write_snapshot(new_snap, expect_version=expect_version)
+        staged = self._rewrite(self._read_files(snap, frag), snap, len(frag))
+        self._commit(snap, {str(b): staged.get(str(b), []) for b in frag})
         return {"buckets_compacted": len(frag), "files_before": files_before}
 
     def expire_tombstones(self, older_than: str | None = None) -> dict[str, int]:
@@ -1247,8 +1235,6 @@ class LakeTable:
         cutoff = older_than or snap["watermark_ts"]
         if cutoff is None:
             return {"expired": 0, "kept": 0}
-        expect_version = snap["version"]
-        new_version = expect_version + 1
         seq_col = snap["seq_col"]
 
         fmap = self._files(snap)
@@ -1260,16 +1246,14 @@ class LakeTable:
         keep = self._scan(snap, [fi for fs in dead.values() for fi in fs]).filter(
             F.col(seq_col).isNull() | (F.col(seq_col) >= F.lit(cutoff).cast("timestamp"))
         )
-        staged = self._rewrite(keep, snap, len(dead), TARGET_FILE_ROWS)
+        staged = self._rewrite(keep, snap, len(dead))
         changed = {
             b: [fi for fi in fmap[b] if not fi.get("deleted")] + staged.get(b, [])
             for b in dead
         }
         before = sum(fi["rows"] for fs in dead.values() for fi in fs)
         after = sum(fi["rows"] for fs in staged.values() for fi in fs)
-        manifests = self._commit_manifests(snap, new_version, changed)
-        new_snap = {**snap, "version": new_version, "manifests": manifests}
-        self._write_snapshot(new_snap, expect_version=expect_version)
+        self._commit(snap, changed)
         return {"expired": before - after, "kept": after}
 
     def vacuum(self) -> list[str]:

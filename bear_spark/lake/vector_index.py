@@ -49,11 +49,10 @@ is one scan + one kernel per list, i.e. the same cost class as one merge
 of the full table, amortized over every subsequent probe — and from then on ``refresh()`` consumes the table's net
 change-data feed (``LakeTable.changes``), so keeping the index current
 costs O(changed rows + affected lists), the same cost class as the
-merge that advanced the table. Fitting the IVF quantizer samples the
-corpus — centroid quality needs ~256 points per list, never the full
-table. The IVF assignment itself dispatches between the codegen
-when-chain (small n_lists) and an Arrow-batched BLAS argmin kernel
-(realistic n_lists) via ``operators.similarity.with_ivf_list``.
+merge that advanced the table. The IVF quantizer is fit by MLlib
+k-means over the table's vectors. The IVF assignment itself dispatches
+between the codegen when-chain (small n_lists) and an Arrow-batched BLAS
+argmin kernel (realistic n_lists) via ``operators.similarity.with_ivf_list``.
 """
 
 from __future__ import annotations
@@ -71,7 +70,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bear_spark.lake.table import TARGET_FILE_ROWS
+from bear_spark.lake import table as lake_table
 from bear_spark.operators import similarity as S
 from bear_spark.schema import sql_ident
 
@@ -139,8 +138,6 @@ class VectorIndex:
         n_planes: int = 4,
         n_lists: int = 8,
         seed: int = 7,
-        max_iter: int = 10,
-        fit_sample: float | None = None,
         _state: list[list[float]] | None = None,
     ) -> "VectorIndex":
         """Materialize the assignment as per-list files.
@@ -167,10 +164,7 @@ class VectorIndex:
                 raise ValueError("cannot index a table with no vector without _state")
             state = S._planes(int(dim[0]), n_planes, seed)
         else:
-            fit_df = df.sample(fit_sample, seed=seed) if fit_sample else df
-            state = S.ivf_fit_centroids(
-                fit_df, n_lists=n_lists, vec_col=vec_col, seed=seed, max_iter=max_iter
-            )
+            state = S.ivf_fit_centroids(df, n_lists=n_lists, vec_col=vec_col, seed=seed)
 
         meta = {
             "kind": kind,
@@ -213,7 +207,7 @@ class VectorIndex:
             self.root,
             meta["id_cols"],
             meta["lists"],
-            TARGET_FILE_ROWS,
+            lake_table.TARGET_FILE_ROWS,
         )
         state = meta["state"]
         n = 1 << len(state) if meta["kind"] == "lsh" else len(state)

@@ -18,7 +18,6 @@ bear/ingest.py:19, inverted to columnar).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,26 +80,3 @@ def parse_raw(df: DataFrame, schema: T.StructType = CHANGE_EVENT_SCHEMA) -> Data
     bear/ingest.py:19 / bear/model.py:173-202, inverted to columnar.
     """
     return df.select(F.from_json("raw", schema).alias("r")).select("r.*")
-
-
-def parse_raw_arrow(df: DataFrame, schema: T.StructType = CHANGE_EVENT_SCHEMA) -> DataFrame:
-    """Arrow-batch variant of :func:`parse_raw` via mapInPandas — the
-    kernel parses each batch column-wise with pyarrow/pandas (batch-level
-    vectorization; kept for payloads needing Python-only decoding, e.g.
-    the multimodal stand-ins in operators/multimodal.py)."""
-    import json as _json
-
-    import pandas as pd
-
-    names = [f.name for f in schema.fields]
-    ts_cols = [f.name for f in schema.fields if f.dataType.typeName().startswith("timestamp")]
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            parsed = pd.json_normalize(pdf["raw"].map(_json.loads))
-            out = parsed.reindex(columns=names)
-            for c in ts_cols:
-                out[c] = pd.to_datetime(out[c])
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)

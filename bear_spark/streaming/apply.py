@@ -33,6 +33,24 @@ from bear_spark.lake import LakeTable
 from bear_spark.lake.table import ConcurrentCommit
 from bear_spark.sources.changelog import read_changelog_stream
 
+#: metric rows are buffered and flushed every this many batches (and at
+#: stream end): one small parquet file per N micro-batches instead of a
+#: 1-row Spark job + file per batch. Durability is best-effort by design
+#: — the authoritative lineage already rides the table snapshot's
+#: lineage tail, committed atomically with each merge; the metrics table
+#: is the SQL-queryable projection.
+METRICS_FLUSH_EVERY = 8
+
+#: merge attempts after the first that a batch gets when it loses the
+#: snapshot swap. A side maintenance job (compact / split / tombstone
+#: expiry run from another process) racing a micro-batch loses or wins
+#: the optimistic swap; when the STREAM loses, the batch was never
+#: committed, so re-running merge against the advanced snapshot is safe
+#: (the exactly-once fence re-checks offsets) — a bounded retry keeps
+#: one maintenance race from killing a 10^10-event stream. Bounded so a
+#: genuinely stuck writer war still surfaces.
+MERGE_RETRIES = 3
+
 
 class CDCApplier:
     def __init__(
@@ -44,10 +62,8 @@ class CDCApplier:
         metrics_dir: str | None = None,
         max_files_per_trigger: int = 4,
         compact_every: int = 0,
-        metrics_flush_every: int = 8,
         split_rows_per_bucket: int = 0,
         split_step_buckets: int = 4,
-        merge_retries: int = 3,
         refresh_index_every: int = 0,
         index_names: list[str] | None = None,
         event_schema=None,
@@ -72,24 +88,8 @@ class CDCApplier:
         self.split_rows_per_bucket = int(split_rows_per_bucket)
         self.split_step_buckets = max(1, int(split_step_buckets))
         self.batch_metrics: list[dict] = []
-        # metrics are buffered and flushed every N batches (and at
-        # stream end): one small parquet file per N micro-batches
-        # instead of a 1-row Spark job + file per batch. Durability is
-        # best-effort by design — the authoritative lineage already
-        # rides the table snapshot's lineage tail, committed atomically
-        # with each merge; this table is the SQL-queryable projection.
-        self.metrics_flush_every = max(1, int(metrics_flush_every))
         self._unflushed: list[dict] = []
         self._flush_seq = 0
-        # A side maintenance job (compact / split / tombstone expiry run
-        # from another process) racing a micro-batch loses or wins the
-        # optimistic snapshot swap; when the STREAM loses, the batch was
-        # never committed, so re-running merge against the advanced
-        # snapshot is safe (the exactly-once fence re-checks offsets) —
-        # a bounded retry keeps one maintenance race from killing a
-        # 10^10-event stream. Bounded so a genuinely stuck writer war
-        # still surfaces.
-        self.merge_retries = max(0, int(merge_retries))
         # index-follows-table: every N applied batches, catch each
         # persisted ANN index up to the table head via the INCREMENTAL
         # change-feed refresh (lake/vector_index.py) — O(changed rows +
@@ -135,7 +135,7 @@ class CDCApplier:
                 break
             except ConcurrentCommit:
                 attempts += 1
-                if attempts > self.merge_retries:
+                if attempts > MERGE_RETRIES:
                     raise
         if attempts:
             m["merge_retries"] = attempts
@@ -184,7 +184,7 @@ class CDCApplier:
                 except Exception:
                     pass
                 raise
-        if len(self._unflushed) >= self.metrics_flush_every:
+        if len(self._unflushed) >= METRICS_FLUSH_EVERY:
             self._flush_metrics()
 
     def _refresh_indexes(self) -> int:

@@ -49,7 +49,7 @@ def test_bench_cdc_mode_prints_one_json_line(tmp_path):
 
 @pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: f"{p.parent.name}/{p.name}")
 def test_script_imports(path):
-    assert len(SCRIPTS) >= 6
+    assert len(SCRIPTS) >= 5
     spec = importlib.util.spec_from_file_location(f"_script_{path.stem}", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

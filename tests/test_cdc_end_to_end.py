@@ -88,12 +88,13 @@ def test_chunked_replay_matches_oracle(spark, table, events_pdf):
 
 
 def test_replay_is_idempotent_and_order_insensitive(spark, table, events_pdf):
-    """Apply chunks out of order, some twice (fence off to simulate raw
-    at-least-once delivery) — LWW must still converge to the oracle."""
-    ev = change_events(spark, N_EVENTS, n_convs=60, seed=7)
+    """Apply chunks out of order, some twice (without the offset envelope,
+    so nothing is fenced: raw at-least-once delivery) — LWW must still
+    converge to the oracle."""
+    ev = change_events(spark, N_EVENTS, n_convs=60, seed=7).drop("source_partition", "offset")
     chunks = [ev.filter((ev.lsn >= lo) & (ev.lsn < lo + 2500)) for lo in range(0, N_EVENTS, 2500)]
     for c in [chunks[2], chunks[0], chunks[3], chunks[0], chunks[1], chunks[2]]:
-        table.merge(c, fence=False)
+        table.merge(c)
     expected = oracle.replay(events_pdf)
     oracle.assert_states_equal(_live_state(table), expected)
 
@@ -105,8 +106,6 @@ def test_exactly_once_fence_skips_replayed_batch(spark, table):
     m2 = table.merge(ev)  # full replay → fenced out entirely
     assert m2["skipped"]
     state1 = _live_state(table)
-    m3 = table.merge(ev, fence=True)
-    assert m3["skipped"]
     oracle.assert_states_equal(
         state1, oracle.replay(change_events(spark, 4000, n_convs=30, seed=9).toPandas())
     )
@@ -132,11 +131,11 @@ def test_delete_tombstone_blocks_stale_resurrection(spark, table):
     assert table.read().count() == 0
     # stale update (ts < delete's ts) arrives late, unfenced
     stale = mk([("c1", 0, "user", "v1b", None, "2024-01-01 00:00:03", "U", 3, 0, 2)])
-    table.merge(stale, fence=False)
+    table.merge(stale.drop("source_partition", "offset"))
     assert table.read().count() == 0, "tombstone must win over stale update"
     # a genuinely newer insert resurrects
     fresh = mk([("c1", 0, "user", "v3", None, "2024-01-01 00:00:09", "I", 9, 0, 3)])
-    table.merge(fresh, fence=False)
+    table.merge(fresh.drop("source_partition", "offset"))
     out = table.read().toPandas()
     assert list(out["text"]) == ["v3"]
 
@@ -217,8 +216,9 @@ def test_expire_tombstones_drops_only_settled_deletes(spark, table, placement):
     assert set(after[~after["_deleted"]]["conv_id"]) == {"c3"}
     # surviving tombstone still blocks a stale update
     table.merge(
-        mk([("c2", 0, "user", "stale", None, "2024-01-02 12:00:00", "U", 9, 0, 3)]),
-        fence=False,
+        mk([("c2", 0, "user", "stale", None, "2024-01-02 12:00:00", "U", 9, 0, 3)]).drop(
+            "source_partition", "offset"
+        ),
     )
     assert "c2" not in set(table.read().toPandas()["conv_id"])
 

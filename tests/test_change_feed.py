@@ -113,7 +113,7 @@ def test_compaction_only_range_emits_nothing(spark, table):
             _events(spark, [(f"k{i}", 0, f"t{i}", f"2024-01-01 00:00:0{i}", "I", i + 1)])
         )
     v = table.snapshot["version"]
-    out = table.compact(target_files_per_bucket=1)
+    out = table.compact()
     assert out["buckets_compacted"] >= 1
     df = table.changes(v)
     assert df.count() == 0
@@ -355,7 +355,7 @@ def test_changes_equals_net_diff_of_two_reads_on_random_history(
             rows.append((None, 0, f"v{lsn}", f"2024-01-0{c + 1} 06:00:00", "I" if c == 1 else "U", lsn))
         tbl.merge(_events(spark, rows))
         if c == 3:
-            tbl.compact(target_files_per_bucket=1)
+            tbl.compact()
         if c == 2:
             # a split inside the diffed ranges: a key's old row is in
             # bucket b, its new row may be in b + 2

@@ -51,6 +51,7 @@ assert spark.sparkContext.master.startswith("local-cluster"), spark.sparkContext
 
 import bear_spark.lake.table as lake_table
 
+default_file_rows = lake_table.TARGET_FILE_ROWS
 ev = change_events(spark, 30_000, n_convs=80, seed=13).cache()
 ev.count()
 exp = oracle.replay(ev.toPandas())
@@ -68,7 +69,9 @@ for place, limit in (("driver", 1 << 62), ("job", -1)):
     # the feed from an empty table: every live row, as an insert
     feed = tbl.changes(v0).toPandas()
     assert set(feed["_change_type"]) == {{"insert"}} and len(feed) == len(got)
-    assert tbl.split_buckets(factor=2, target_file_rows=500)["num_buckets"] == 8
+    lake_table.TARGET_FILE_ROWS = 500
+    assert tbl.split_buckets(factor=2)["num_buckets"] == 8
+    lake_table.TARGET_FILE_ROWS = default_file_rows
     oracle.assert_states_equal(tbl.read().toPandas(), exp)
     c = tbl.compact()
     oracle.assert_states_equal(tbl.read().toPandas(), exp)

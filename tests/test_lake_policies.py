@@ -10,6 +10,7 @@ from pyspark.sql import types as T
 
 from bear_spark import oracle
 from bear_spark.lake import LakeTable
+from bear_spark.lake import table as lake_table
 
 SCHEMA = T.StructType(
     [
@@ -19,6 +20,7 @@ SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
+DEFAULT_FILE_ROWS = lake_table.TARGET_FILE_ROWS
 
 
 def _events(spark, rows):
@@ -545,10 +547,11 @@ def test_load_rejects_snapshot_without_manifests(spark, tmp_path):
         LakeTable.load(spark, root)
 
 
-def test_merge_splits_output_files_at_target_rows(spark, tmp_path):
+def test_merge_splits_output_files_at_target_rows(spark, tmp_path, monkeypatch):
     """A batch touching a bucket's whole key range must not emit one
-    unbounded replacement file: output is chunked at target_file_rows,
+    unbounded replacement file: output is chunked at TARGET_FILE_ROWS,
     each chunk key-sorted with its own tight manifest [kmin, kmax]."""
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 100)
     tbl = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -561,7 +564,7 @@ def test_merge_splits_output_files_at_target_rows(spark, tmp_path):
         (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
         for i in range(250)
     ]
-    m = tbl.merge(_events(spark, rows), target_file_rows=100)
+    m = tbl.merge(_events(spark, rows))
     assert m["rows_written"] == 250
     files = tbl.snapshot["files"]["0"]
     live = [fi for fi in files if not fi["deleted"]]
@@ -575,17 +578,16 @@ def test_merge_splits_output_files_at_target_rows(spark, tmp_path):
     # a later single-key update must touch exactly one chunk (the other
     # two carried over by range pruning)
     m2 = tbl.merge(
-        _events(spark, [("conv_0000", 0, "v2", "2024-01-02 00:00:00", "U", 9999)]),
-        target_file_rows=100,
+        _events(spark, [("conv_0000", 0, "v2", "2024-01-02 00:00:00", "U", 9999)])
     )
     assert m2["target_rows_read"] == 100, "only the covering chunk is rewritten"
     assert tbl.read().filter(F.col("conv_id") == "conv_0000").first()["text"] == "v2"
 
 
-def test_compact_honors_target_and_skips_unfragmented(spark, tmp_path):
-    """compact(target_files_per_bucket=N) rewrites ONLY buckets with
-    more than N files per side and carries the rest by pointer; a fully
-    compacted table is a metadata no-op."""
+def test_compact_honors_target_and_skips_unfragmented(spark, tmp_path, monkeypatch):
+    """compact() rewrites ONLY buckets with more than
+    COMPACT_FILES_PER_SIDE files per side and carries the rest by
+    pointer; a fully compacted table is a metadata no-op."""
     tbl = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -599,19 +601,22 @@ def test_compact_honors_target_and_skips_unfragmented(spark, tmp_path):
         (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
         for i in range(200)
     ]
-    tbl.merge(_events(spark, rows), target_file_rows=20)
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 20)
+    tbl.merge(_events(spark, rows))
+    monkeypatch.undo()
     snap1 = tbl._snapshot()
     frag_counts = {b: len(fs) for b, fs in tbl._files(snap1).items()}
     assert all(c > 2 for c in frag_counts.values()), frag_counts
 
-    out = tbl.compact(target_files_per_bucket=2)
+    monkeypatch.setattr(lake_table, "COMPACT_FILES_PER_SIDE", 2)
+    out = tbl.compact()
     assert out["buckets_compacted"] == 4
     snap2 = tbl._snapshot()
     assert all(len(fs) <= 2 for fs in tbl._files(snap2).values())
     assert tbl.read().count() == 200
 
     # second compaction: nothing fragmented → no new snapshot version
-    out2 = tbl.compact(target_files_per_bucket=2)
+    out2 = tbl.compact()
     assert out2["buckets_compacted"] == 0
     assert tbl._snapshot()["version"] == snap2["version"]
 
@@ -628,7 +633,8 @@ def test_compact_honors_target_and_skips_unfragmented(spark, tmp_path):
         b for b in snap3["manifests"]
         if snap3["manifests"][b] != snap2["manifests"].get(b)
     }
-    tbl.compact(target_files_per_bucket=1)
+    monkeypatch.undo()
+    tbl.compact()
     snap4 = tbl._snapshot()
     untouched = set(snap3["manifests"]) - touched
     carried = {b for b in untouched if snap4["manifests"][b] == snap3["manifests"][b]}
@@ -795,11 +801,12 @@ def test_orphan_stage_files_from_crashed_attempt_never_committed(spark, tmp_path
     assert sorted(tbl.read().toPandas()["text"]) == ["v1", "v2"]
 
 
-def test_compact_preserves_target_file_rows_chunking(spark, tmp_path):
-    """compact() must not merge legitimate target_file_rows chunks back
+def test_compact_preserves_target_file_rows_chunking(spark, tmp_path, monkeypatch):
+    """compact() must not merge legitimate TARGET_FILE_ROWS chunks back
     into one unbounded file: a bucket whose file count is justified by
-    ceil(rows / target_file_rows) is not fragmentation, and a genuinely
+    ceil(rows / TARGET_FILE_ROWS) is not fragmentation, and a genuinely
     fragmented bucket is rewritten into size-bounded files, not one."""
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 100)
     tbl = LakeTable.create(
         spark, str(tmp_path / "tbl"), SCHEMA,
         key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=1,
@@ -808,12 +815,12 @@ def test_compact_preserves_target_file_rows_chunking(spark, tmp_path):
         (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
         for i in range(250)
     ]
-    tbl.merge(_events(spark, rows), target_file_rows=100)
+    tbl.merge(_events(spark, rows))
     live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
     assert [fi["rows"] for fi in live] == [100, 100, 50]
 
     # 3 chunks for 250 rows at tfr=100 is the legitimate floor → no-op
-    out = tbl.compact(target_files_per_bucket=1, target_file_rows=100)
+    out = tbl.compact()
     assert out["buckets_compacted"] == 0
 
     # now ACTUALLY fragment the bucket: five more 10-row merges
@@ -823,10 +830,10 @@ def test_compact_preserves_target_file_rows_chunking(spark, tmp_path):
              1000 + k * 10 + j)
             for j in range(10)
         ]
-        tbl.merge(_events(spark, extra), target_file_rows=100)
+        tbl.merge(_events(spark, extra))
     live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
     assert len(live) > 3
-    out = tbl.compact(target_files_per_bucket=1, target_file_rows=100)
+    out = tbl.compact()
     assert out["buckets_compacted"] == 1
     live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
     total = sum(fi["rows"] for fi in live)
@@ -853,10 +860,11 @@ def test_merge_partition_count_gives_parallelism_independent_waves():
     assert merge_partition_count(1, 8, 0) == 1
 
 
-def test_merge_chunks_whole_bucket_rewrite_at_target_rows(spark, tmp_path):
-    """A whole-bucket rewrite honors the target_file_rows contract:
-    key-sorted chunks bounded by the knob, tight non-overlapping
-    manifest ranges — not one unbounded file per bucket side."""
+def test_merge_chunks_whole_bucket_rewrite_at_target_rows(spark, tmp_path, monkeypatch):
+    """A whole-bucket rewrite honors the TARGET_FILE_ROWS contract:
+    key-sorted chunks bounded by it, tight non-overlapping manifest
+    ranges — not one unbounded file per bucket side."""
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 100)
     tbl = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -869,7 +877,7 @@ def test_merge_chunks_whole_bucket_rewrite_at_target_rows(spark, tmp_path):
         (f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i)
         for i in range(250)
     ]
-    m = tbl.merge(_events(spark, rows), target_file_rows=100)
+    m = tbl.merge(_events(spark, rows))
     assert m["rows_written"] == 250
     live = [fi for fi in tbl.snapshot["files"]["0"] if not fi["deleted"]]
     assert len(live) == 3, [fi["rows"] for fi in live]
@@ -999,6 +1007,97 @@ def test_interleaved_snapshot_commits_have_one_winner(spark, tmp_path):
     assert tbl._version() == 1
 
 
+@pytest.mark.parametrize("step", ["compact", "split"])
+def test_maintenance_commit_loser_leaves_winner_intact(spark, tmp_path, monkeypatch, step):
+    """A maintenance commit (a compaction, or one split step) racing a
+    merge from one base version loses at the snapshot swap: it raises
+    ConcurrentCommit, the merge's rows are intact, a retry commits on
+    top of it, vacuum() reclaims the loser's stage dir, and the full
+    state (tombstones and ``_lsn`` included) is the oracle's."""
+    import os
+
+    import pandas as pd
+
+    from bear_spark.lake.table import ConcurrentCommit
+
+    root = str(tmp_path / "tbl")
+    t1 = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"],
+        seq_col="ts", num_buckets=2,
+    )
+    ins = [(f"conv_{i:04d}", 0, f"t{i}", "2024-01-01 00:00:00", "I", i) for i in range(100)]
+    win = [(f"conv_{i:04d}", 0, None, "2024-01-02 00:00:00", "D", 1000 + i) for i in range(0, 40, 4)]
+    win += [("win", 0, "winner", "2024-01-02 00:00:00", "I", 2000)]
+    # 10-row files: every bucket is fragmented once the bound is back
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 10)
+    t1.merge(_pandas_events(spark, ins))
+    monkeypatch.undo()
+
+    # a second handle frozen at the current version, as two processes
+    # whose calls interleave would be
+    t2 = LakeTable.load(spark, root)
+    stale = t2._snapshot()
+    orig_snapshot = t2._snapshot
+    t2._snapshot = lambda version=None: (  # type: ignore[method-assign]
+        stale if version is None else orig_snapshot(version)
+    )
+
+    def maintain(tbl):
+        return tbl.compact() if step == "compact" else tbl.split_buckets(factor=2, max_buckets=1)
+
+    m = t1.merge(_pandas_events(spark, win))
+    with pytest.raises(ConcurrentCommit):
+        maintain(t2)
+
+    fresh = LakeTable.load(spark, root)
+    assert fresh.snapshot["version"] == m["version"]
+    live = fresh.read().toPandas()
+    assert len(live) == 91 and "winner" in set(live["text"])
+    referenced = {fi["path"].split(os.sep)[1] for fs in fresh.snapshot["files"].values() for fi in fs}
+    loser = {
+        d for d in os.listdir(os.path.join(root, "data"))
+        if d.startswith(f"s{m['version']}-") and d not in referenced
+    }
+    assert len(loser) == 1, loser
+
+    t2._snapshot = orig_snapshot  # type: ignore[method-assign]
+    out = maintain(t2)
+    assert out.get("buckets_compacted", out.get("buckets_split")) > 0
+    assert t2._version() == m["version"] + 1
+    assert loser <= set(t2.vacuum())
+
+    events = pd.DataFrame(ins + win, columns=["conv_id", "turn_idx", "text", "ts", "op", "lsn"])
+    events["ts"] = pd.to_datetime(events["ts"])
+    w = oracle.winners(events)
+    expected = w.assign(_deleted=w["op"] == "D").rename(columns={"lsn": "_lsn"})
+    got = LakeTable.load(spark, root).read(include_deleted=True, include_system=True).toPandas()
+    assert len(got) == len(expected) == 101
+    oracle.assert_states_equal(got, expected)
+
+
+def test_only_create_and_commit_publish_a_snapshot():
+    """Every write after ``create`` goes through ``LakeTable._commit``:
+    no other function in the package calls ``_write_snapshot``."""
+    import ast
+    from pathlib import Path
+
+    import bear_spark
+
+    callers = []
+    for path in sorted(Path(bear_spark.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                callers += [
+                    fn.name
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "_write_snapshot"
+                ]
+    assert sorted(callers) == ["_commit", "create"]
+
+
 def test_stale_version_hint_rolls_forward(spark, tmp_path):
     """A kill between linking v1.json and moving VERSION leaves the hint
     at 0. The table must still load as v1, and the next merge must
@@ -1039,17 +1138,16 @@ def test_cdc_applier_retries_on_concurrent_commit(spark, tmp_path, monkeypatch):
         changelog_dir=str(tmp_path / "log"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         metrics_dir=str(tmp_path / "metrics"),
-        merge_retries=3,
     )
 
     real_merge = tbl.merge
     fail_first = {"left": 2}
 
-    def flaky(batch, **kw):
+    def flaky(batch):
         if fail_first["left"] > 0:
             fail_first["left"] -= 1
             raise ConcurrentCommit("maintenance advanced the snapshot")
-        return real_merge(batch, **kw)
+        return real_merge(batch)
 
     monkeypatch.setattr(tbl, "merge", flaky)
     batch = _events(spark, [("c1", 0, "hello", "2024-01-01 00:00:00", "I", 1)])
@@ -1058,7 +1156,7 @@ def test_cdc_applier_retries_on_concurrent_commit(spark, tmp_path, monkeypatch):
     assert tbl.read().count() == 1
 
     # exhausting the bound propagates the error (no infinite writer war)
-    def always_lose(batch, **kw):
+    def always_lose(batch):
         raise ConcurrentCommit("stuck")
 
     monkeypatch.setattr(tbl, "merge", always_lose)
@@ -1080,7 +1178,7 @@ def test_vacuum_during_a_merge_keeps_the_commit_in_flight(spark, tmp_path):
     )
     tbl.merge(_events(spark, [("base", 0, "baseline", "2024-01-01 00:00:00", "I", 1)]))
     other = LakeTable.load(spark, root)
-    # the other handle vacuums between _commit_manifests and the link
+    # the other handle vacuums between the manifest writes and the link
     orig_write = tbl._write_snapshot
     removed: list[str] = []
 
@@ -1113,10 +1211,11 @@ def _pandas_events(spark, rows):
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _merge_and_maintain(spark, root, check):
-    """Merge fragmented output, compact it, split the buckets and expire
-    some tombstones, calling ``check(tbl)`` after each of the four, then
-    compare the live state with the oracle."""
+def _merge_and_maintain(spark, root, check, monkeypatch):
+    """Merge fragmented output (30-row files), compact it, split the
+    buckets (25-row files) and expire some tombstones, calling
+    ``check(tbl)`` after each of the four, then compare the live state
+    with the oracle."""
     import pandas as pd
 
     tbl = LakeTable.create(
@@ -1135,12 +1234,16 @@ def _merge_and_maintain(spark, root, check):
         (f"conv_{i:04d}", 0, f"u{i}", "2024-01-03 00:00:00", "U", 2000 + i)
         for i in range(1, 80, 2)
     ]
-    tbl.merge(_pandas_events(spark, ins), target_file_rows=30)
-    tbl.merge(_pandas_events(spark, upd), target_file_rows=30)
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 30)
+    tbl.merge(_pandas_events(spark, ins))
+    tbl.merge(_pandas_events(spark, upd))
     check(tbl)
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", DEFAULT_FILE_ROWS)
     assert tbl.compact()["buckets_compacted"] == 2
     check(tbl)
-    assert tbl.split_buckets(factor=2, target_file_rows=25)["num_buckets"] == 4
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", 25)
+    assert tbl.split_buckets(factor=2)["num_buckets"] == 4
+    monkeypatch.setattr(lake_table, "TARGET_FILE_ROWS", DEFAULT_FILE_ROWS)
     check(tbl)
     assert tbl.expire_tombstones(older_than="2024-01-04 00:00:00") == {"expired": 20, "kept": 20}
     check(tbl)
@@ -1149,7 +1252,7 @@ def _merge_and_maintain(spark, root, check):
     oracle.assert_states_equal(tbl.read().toPandas(), oracle.replay(events))
 
 
-def test_manifest_entries_match_their_files(spark, tmp_path, placement):
+def test_manifest_entries_match_their_files(spark, tmp_path, placement, monkeypatch):
     """Every manifest entry a merge or a maintenance rewrite commits
     matches its file: the row count, the first key column's real range,
     and the bucket and tombstone flag of its directory and rows."""
@@ -1174,10 +1277,10 @@ def test_manifest_entries_match_their_files(spark, tmp_path, placement):
                 n += 1
         assert n
 
-    _merge_and_maintain(spark, str(tmp_path / "tbl"), check)
+    _merge_and_maintain(spark, str(tmp_path / "tbl"), check, monkeypatch)
 
 
-def test_every_data_file_has_the_merge_kernel_layout(spark, tmp_path):
+def test_every_data_file_has_the_merge_kernel_layout(spark, tmp_path, monkeypatch):
     """Merged, compacted, split and expired files share one physical
     layout: the merge kernel's Arrow schema, column order included, with
     the event time as INT64 TIMESTAMP_MICROS (not Spark's INT96)."""
@@ -1207,4 +1310,4 @@ def test_every_data_file_has_the_merge_kernel_layout(spark, tmp_path):
                     '"force_set_converted_type": false}'
                 )
 
-    _merge_and_maintain(spark, str(tmp_path / "tbl"), check)
+    _merge_and_maintain(spark, str(tmp_path / "tbl"), check, monkeypatch)

@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from bear_spark.lake import LakeTable
-from bear_spark.lake.reconcile import SchemaConflict, align_in_pandas, evolve
+from bear_spark.lake.reconcile import SchemaConflict, evolve
 from pyspark.sql import types as T
 
 BASE = T.StructType(
@@ -182,23 +182,6 @@ def test_evolve_pure_function():
     merged, changes = evolve(a, b)
     assert [f.dataType.simpleString() for f in merged.fields] == ["bigint", "float", "string"]
     assert len(changes) == 2
-
-
-def test_align_in_pandas_matches_jvm_align(spark):
-    from bear_spark.lake.reconcile import align
-
-    df = spark.createDataFrame([(1, "a")], "x int, text string")
-    target = T.StructType(
-        [
-            T.StructField("x", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("extra", T.StringType()),
-        ]
-    )
-    jvm = align(df, target).toPandas()
-    arrow = align_in_pandas(df, target).toPandas()
-    assert jvm.columns.tolist() == arrow.columns.tolist() == ["x", "text", "extra"]
-    assert jvm.iloc[0]["x"] == arrow.iloc[0]["x"] == 1
 
 
 def test_registry_union_schema_widens_conflicting_types():

@@ -9,8 +9,9 @@ from bear_spark import oracle
 from bear_spark.events import change_events
 from bear_spark.lake import LakeTable
 from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
-from bear_spark.sources.changelog import parse_raw, parse_raw_arrow, write_changelog, write_raw
+from bear_spark.sources.changelog import parse_raw, write_changelog, write_raw
 from bear_spark.streaming import CDCApplier
+from bear_spark.streaming import apply as apply_mod
 
 N = 8000
 
@@ -102,7 +103,7 @@ def test_stream_with_auto_compaction_matches_oracle(spark, tmp_path, log_and_ora
     assert n_files <= 2 * len(table.snapshot["files"]) + 8
 
 
-def test_metrics_sink_batches_flushes(spark, tmp_path, log_and_oracle):
+def test_metrics_sink_batches_flushes(spark, tmp_path, log_and_oracle, monkeypatch):
     """Metric rows are buffered and flushed every N batches: 8 files /
     1 per trigger = 8 batches → ceil(8/3) = 3 metrics files, written
     driver-side (no Spark job), still fully queryable."""
@@ -111,9 +112,10 @@ def test_metrics_sink_batches_flushes(spark, tmp_path, log_and_oracle):
 
     log_dir, files, expected = log_and_oracle
     table = _mk_table(spark, tmp_path)
+    monkeypatch.setattr(apply_mod, "METRICS_FLUSH_EVERY", 3)
     app = CDCApplier(
         spark, table, log_dir, str(tmp_path / "ckpt"), str(tmp_path / "metrics"),
-        max_files_per_trigger=1, metrics_flush_every=3,
+        max_files_per_trigger=1,
     )
     metrics = app.run_available()
     n_batches = len(metrics)
@@ -131,12 +133,10 @@ def test_raw_json_parse_paths_agree(spark, tmp_path):
     write_raw(ev, raw_dir)
     raw = spark.read.parquet(raw_dir)
     jvm = parse_raw(raw).toPandas().sort_values("lsn").reset_index(drop=True)
-    arrow = parse_raw_arrow(raw).toPandas().sort_values("lsn").reset_index(drop=True)
     base = ev.toPandas().sort_values("lsn").reset_index(drop=True)
     import pandas as pd
 
     pd.testing.assert_frame_equal(jvm[base.columns], base, check_dtype=False)
-    pd.testing.assert_frame_equal(arrow[base.columns], base, check_dtype=False)
 
 
 def test_metrics_row_survives_maintenance_failure(spark, tmp_path, monkeypatch):
@@ -145,9 +145,10 @@ def test_metrics_row_survives_maintenance_failure(spark, tmp_path, monkeypatch):
     already fenced in the commit log, so a restart replays it as
     {skipped} and the applied row could never be recorded again."""
     table = _mk_table(spark, tmp_path)
+    monkeypatch.setattr(apply_mod, "METRICS_FLUSH_EVERY", 100)
     app = CDCApplier(
         spark, table, str(tmp_path / "log"), str(tmp_path / "ckpt"),
-        str(tmp_path / "metrics"), compact_every=1, metrics_flush_every=100,
+        str(tmp_path / "metrics"), compact_every=1,
     )
 
     def boom():

@@ -562,3 +562,49 @@ def test_refresh_keeps_each_live_key_in_its_assigned_list(spark, tmp_path, place
     assert idx.meta["built_from_version"] == tbl._version()
     check(before, set())
     assert untouched > len(before)  # some refresh left a list alone
+
+
+@pytest.mark.parametrize("feed", ["driver", "job"])
+def test_refresh_runs_the_index_kernel_where_its_feed_ran(spark, tmp_path, monkeypatch, feed):
+    """A refresh whose change feed ran as an ``applyInArrow`` job runs its
+    index kernel as a job too, never collecting the whole feed on the
+    driver: Catalyst sizes such a feed by the file list under it, not by
+    the rows it returns. With the cut above the feed's files, both run on
+    the driver. Either way the lists end up as the table's assignment."""
+    from bear_spark.lake import arrow_apply
+    from bear_spark.lake import table as lake_table
+
+    tbl = _mk_table(spark, tmp_path, n=400)
+    idx = tbl.build_vector_index("ann", kind="lsh", n_planes=3, seed=7)
+    # a later version of every row: 400 updates
+    tbl.merge(_events(spark, [
+        (k, vec, "2024-01-02 00:00:00", "U", 1000 + k) for k, vec, *_ in _vec_rows(400, seed=1)
+    ]))
+    new_files = tbl.snapshot["files"].values()
+    new_bytes = sum(os.path.getsize(os.path.join(tbl.root, fi["path"])) for fs in new_files for fi in fs)
+    # the feed reads the old and the new files, so it is over this cut
+    monkeypatch.setattr(lake_table, "DRIVER_APPLY_MAX_BYTES", new_bytes if feed == "job" else 1 << 62)
+    on_driver = arrow_apply.apply_on_driver
+    calls = []
+
+    def spy(batch, kernel):
+        calls.append(batch.num_rows)
+        return on_driver(batch, kernel)
+
+    monkeypatch.setattr(arrow_apply, "apply_on_driver", spy)
+    idx.refresh()
+    assert idx.last_refresh["mode"] == "incremental"
+    if feed == "job":
+        assert calls == []
+    else:
+        # the feed's file list, then the assigned feed: an update's
+        # preimage and postimage per key
+        assert calls[1:] == [800], calls
+    want = {
+        r.vec_id: (list(r.embedding), r._list)
+        for r in VectorIndex._assign(
+            tbl.read().select("vec_id", "embedding"), "lsh", idx.meta["state"], "embedding"
+        ).collect()
+    }
+    got, n = _index_rows(idx)
+    assert got == want and n == len(want)
