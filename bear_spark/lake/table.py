@@ -46,6 +46,7 @@ which is only at-least-once; this table upgrades that to exactly-once.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
@@ -133,10 +134,11 @@ def merge_partition_count(
     return max(1, min(buckets, want))
 
 
-#: a plan node whose rows a Python worker computes (``applyInArrow``,
-#: ``mapInPandas``, a Python UDF's eval node), matched on the node name
-#: that starts each line of the plan's tree string
-_PYTHON_NODE = re.compile(r"^[\s:|+\-!]*\w*(Python|InArrow|InPandas)\w*\b", re.M)
+#: a grouped Python node (``applyInArrow``, ``applyInPandas``, their
+#: cogrouped forms), matched on the node name that starts each line of
+#: the plan's tree string: its function returns any rows for a group,
+#: unrelated in number and size to the rows it is given
+_GROUPED_PYTHON_NODE = re.compile(r"^[\s:|+\-!]*FlatMap(Co)?GroupsIn(Arrow|Pandas)\w*\b", re.M)
 
 
 def _estimated_bytes(df: DataFrame) -> int | None:
@@ -145,11 +147,15 @@ def _estimated_bytes(df: DataFrame) -> int | None:
 
     - an input has no statistics: Spark then stands in the session's
       ``spark.sql.defaultSizeInBytes`` for that leaf;
-    - a node's rows come from Python (a lazy change feed's
+    - a grouped Python node computes rows (a lazy change feed's
       ``applyInArrow`` job, say): Catalyst sizes its output from its
-      input, a file list, not from the rows it returns."""
+      input, a file list, not from the rows it returns.
+
+    A Python row map (``mapInPandas``, a Python UDF) keeps its estimate:
+    it is sized from its input rows, which is right for the one such
+    node in a kernel input, ``with_ivf_list``'s Arrow assignment."""
     plan = df._jdf.queryExecution().optimizedPlan()
-    if _PYTHON_NODE.search(plan.treeString()):
+    if _GROUPED_PYTHON_NODE.search(plan.treeString()):
         return None
     unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
     leaves = plan.collectLeaves()
@@ -289,16 +295,21 @@ class LakeTable:
             json.dump(snap, f)
         try:
             os.link(tmp, path)
-        except FileExistsError:
+        except (FileExistsError, FileNotFoundError):
+            # a missing temp file was swept by vacuum(), which removes
+            # only those of versions already committed
             raise ConcurrentCommit(
                 f"v{snap['version']} was committed by another writer"
             ) from None
         finally:
-            os.unlink(tmp)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         vtmp = os.path.join(meta, f"VERSION.tmp-{uuid.uuid4().hex}")
         with open(vtmp, "w") as f:
             f.write(str(snap["version"]))
-        os.replace(vtmp, os.path.join(meta, "VERSION"))
+        # a hint temp swept by vacuum() loses only the hint
+        with contextlib.suppress(FileNotFoundError):
+            os.replace(vtmp, os.path.join(meta, "VERSION"))
 
     # -- per-bucket file manifests ------------------------------------
     def _load_manifest(self, rel: str) -> list[dict]:
@@ -334,7 +345,11 @@ class LakeTable:
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump({"files": files}, f)
-        os.replace(tmp, path)
+        try:
+            os.replace(tmp, path)
+        except FileNotFoundError:
+            # vacuum() sweeps only temp files of committed versions
+            raise ConcurrentCommit(f"v{version} was committed by another writer") from None
         self._mcache[rel] = files
         return rel
 
@@ -1259,21 +1274,26 @@ class LakeTable:
     def vacuum(self) -> list[str]:
         """Delete staged data dirs and manifest documents not referenced
         by the current snapshot (this retires time travel to older
-        versions, as documented on ``read``).
+        versions, as documented on ``read``), and the ``_meta`` temp
+        files a killed commit leaves behind.
 
         One staged for a version above the current one is kept: it may
         belong to a commit in flight in another process, since a writer
         for version M can still publish while ``v<M>.json`` is absent.
         One at or below the current version can never be committed, so
-        it is garbage."""
+        it is garbage; a writer whose temp file is swept that way fails
+        with ``ConcurrentCommit``, as it would have anyway. Every
+        ``VERSION`` temp file goes: the hint may lag, never the table."""
         snap = self._snapshot()
+        version = int(snap["version"])
         fmap = self._files(snap)
         live_dirs = {fi["path"].split(os.sep)[1] for fs in fmap.values() for fi in fs}
 
         def in_flight(name: str) -> bool:
-            # s<M>-<token> (data) and m<M>-b<K>-<token>.json (manifests)
-            m = re.match(r"[sm](\d+)-", name)
-            return m is not None and int(m.group(1)) > int(snap["version"])
+            # s<M>-<token> (data), m<M>-b<K>-<token>.json (manifests) and
+            # v<M>.json.tmp-<hex> (a snapshot's temp file)
+            m = re.match(r"[smv](\d+)[-.]", name)
+            return m is not None and int(m.group(1)) > version
 
         removed = []
         data_root = os.path.join(self.root, "data")
@@ -1282,14 +1302,24 @@ class LakeTable:
                 if d not in live_dirs and not in_flight(d):
                     shutil.rmtree(os.path.join(data_root, d))
                     removed.append(d)
-        mdir = os.path.join(self.root, "_meta", "manifests")
+        meta = os.path.join(self.root, "_meta")
+        for f in sorted(os.listdir(meta)):
+            if f.startswith("VERSION.tmp-") or (
+                re.match(r"v\d+\.json\.tmp-", f) and not in_flight(f)
+            ):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(meta, f))
+                removed.append(f)
+        mdir = os.path.join(meta, "manifests")
         if os.path.isdir(mdir):
             live_manifests = {
                 os.path.basename(rel) for rel in snap["manifests"].values()
             }
+            # a manifest's temp file (m<M>-...json.tmp-<hex>) is never live
             for f in sorted(os.listdir(mdir)):
-                if f.endswith(".json") and f not in live_manifests and not in_flight(f):
-                    os.remove(os.path.join(mdir, f))
+                if ".json" in f and f not in live_manifests and not in_flight(f):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(mdir, f))
                     self._mcache.pop(os.path.join("_meta", "manifests", f), None)
                     removed.append(os.path.join("manifests", f))
         return removed

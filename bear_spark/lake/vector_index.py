@@ -49,10 +49,12 @@ is one scan + one kernel per list, i.e. the same cost class as one merge
 of the full table, amortized over every subsequent probe — and from then on ``refresh()`` consumes the table's net
 change-data feed (``LakeTable.changes``), so keeping the index current
 costs O(changed rows + affected lists), the same cost class as the
-merge that advanced the table. The IVF quantizer is fit by MLlib
-k-means over the table's vectors. The IVF assignment itself dispatches
-between the codegen when-chain (small n_lists) and an Arrow-batched BLAS
-argmin kernel (realistic n_lists) via ``operators.similarity.with_ivf_list``.
+merge that advanced the table. The IVF quantizer is fit on the driver
+(``operators.similarity.ivf_fit_centroids_local``) over a deterministic
+sample of at most ``IVF_SAMPLE_PER_LIST`` vectors per list. The IVF
+assignment itself dispatches between the linear JVM array expression
+(small n_lists x dim) and an Arrow-batched BLAS argmin kernel (large)
+via ``operators.similarity.with_ivf_list``.
 """
 
 from __future__ import annotations
@@ -75,6 +77,11 @@ from bear_spark.operators import similarity as S
 from bear_spark.schema import sql_ident
 
 logger = logging.getLogger(__name__)
+
+#: vectors per list in the IVF fit's driver sample (the faiss convention:
+#: a coarse quantizer needs a few hundred points per centroid, not the
+#: corpus)
+IVF_SAMPLE_PER_LIST = 256
 
 
 class StaleVectorIndex(RuntimeError):
@@ -156,15 +163,16 @@ class VectorIndex:
 
         if _state is not None:
             state = _state
-        elif kind == "lsh":
-            # size(NULL) is NULL, so the planes are sized from a vector
+        else:
+            # size(NULL) is NULL, so the state is sized from a vector
             # that is there
             dim = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
             if dim is None:
                 raise ValueError("cannot index a table with no vector without _state")
-            state = S._planes(int(dim[0]), n_planes, seed)
-        else:
-            state = S.ivf_fit_centroids(df, n_lists=n_lists, vec_col=vec_col, seed=seed)
+            if kind == "lsh":
+                state = S._planes(int(dim[0]), n_planes, seed)
+            else:
+                state = cls._fit_ivf(df, vec_col, id_cols, int(dim[0]), n_lists, seed)
 
         meta = {
             "kind": kind,
@@ -180,6 +188,28 @@ class VectorIndex:
         rows = cls._assign(df, kind, state, vec_col).withColumn("_change_type", F.lit("insert"))
         idx._apply(meta, rows, snap["version"])
         return idx
+
+    @staticmethod
+    def _fit_ivf(
+        df: DataFrame, vec_col: str, id_cols: list[str], dim: int, n_lists: int, seed: int
+    ) -> list[list[float]]:
+        """Centroids fit on the driver over a sample of ``df``: at most
+        ``IVF_SAMPLE_PER_LIST * n_lists`` vectors of length ``dim`` (null
+        and wrong-length ones skipped), the first by a hash of the id
+        columns, so a build at the same version and seed fits the same
+        centroids. Fewer valid vectors than ``n_lists`` raise
+        ``ValueError``."""
+        ids = [F.col(c) for c in id_cols]
+        sample = (
+            df.where(F.size(vec_col) == dim)
+            .orderBy(F.xxhash64(*ids), *ids)
+            .limit(IVF_SAMPLE_PER_LIST * n_lists)
+            .select(F.col(vec_col).cast("array<double>"))
+            .toArrow()
+        )
+        flat = sample.column(0).combine_chunks().flatten()
+        X = flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+        return S.ivf_fit_centroids_local(X, n_lists=n_lists, seed=seed)
 
     @staticmethod
     def _assign(df: DataFrame, kind: str, state, vec_col: str) -> DataFrame:

@@ -1,13 +1,16 @@
 """Vector similarity search operators.
 
-Brute-force exact cosine top-k is the correctness baseline (the
-reference's ANN search is a store-side HNSW index, bear/config.py:23-35;
-query semantics = top-k by inner product, bear/search.py:96-111). The
-scale path is random-hyperplane LSH: bucket vectors by the sign pattern
-of dot products with fixed random hyperplanes, probe the query's bucket
-(and optionally neighboring buckets), then score exactly within the
-candidate set. All vector math is JVM-side (zip_with/aggregate), no
-Python in the loop.
+Brute-force exact cosine top-k (``cosine_rank``) is the correctness
+baseline and the scoring step of every ANN path here (the reference's
+ANN search is a store-side HNSW index, bear/config.py:23-35; query
+semantics = top-k by inner product, bear/search.py:96-111). The scale
+paths narrow the candidate set first, then score exactly within it:
+random-hyperplane LSH buckets vectors by the sign pattern of dot
+products with fixed random hyperplanes and probes the query's bucket
+(and its neighbours); IVF assigns each vector to its nearest k-means
+centroid and probes the lists nearest the query. All scoring is
+JVM-side (zip_with/aggregate), no Python in the loop; only the IVF
+assignment has an Arrow-batched kernel, for large n_lists x dim.
 """
 
 from __future__ import annotations
@@ -20,22 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bear_spark.schema import col_sql
-
-# `impl="auto"` dispatch boundary for the Arrow-batched BLAS kernels vs
-# the JVM zip_with/aggregate expressions. Measured (BENCH/BASELINE.md
-# "Vector math A/B", 100k-row topk / 20k-row blocked pairs; rerun with
-# `python BENCH/run_vector_ab.py dim`): the BLAS
-# kernel wins at EVERY dim once the corpus amortizes the Python worker
-# round-trip — topk 0.75→0.40 s at dim 64, 2.43→0.46 at 768; blocked
-# pairs 3.9→0.7 at 64 and 61.3→0.57 at 768 (the JVM per-pair dot fold
-# scales with dim, the per-block matmul barely moves). JVM only wins on
-# tiny corpora (hundreds of rows), where worker startup dominates —
-# which is exactly the low-dim testdata regime, so the dim-keyed
-# dispatch keeps small/low-dim on JVM and embedding-model dims
-# (reference default 3072, bear/config.py:60-61) on BLAS. For a big
-# low-dim corpus, pass impl="pandas" explicitly.
-PANDAS_DIM_THRESHOLD = 256
-
 
 def _double_sql(x: float) -> str:
     """A float as a SQL double literal. NaN and ±inf have no literal
@@ -113,138 +100,6 @@ def cosine_rank(
     )
 
 
-def cosine_topk(
-    vecs: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    impl: str = "auto",
-) -> DataFrame:
-    """Exact top-k by cosine against a literal query vector.
-
-    ``impl``: ``"jvm"`` (zip_with/aggregate inside codegen — wins at
-    low dim), ``"pandas"`` (Arrow-batched BLAS matvec — wins at
-    embedding-model dims, reference default 3072:
-    bear/config.py:60-61), or ``"auto"`` (dispatch on
-    PANDAS_DIM_THRESHOLD; A/B numbers in BENCH/BASELINE.md, from
-    BENCH/run_vector_ab.py)."""
-    if impl == "auto":
-        impl = "pandas" if len(query) >= PANDAS_DIM_THRESHOLD else "jvm"
-    if impl == "pandas":
-        return cosine_topk_pandas(vecs, query, k=k, id_col=id_col, vec_col=vec_col)
-    return cosine_rank(vecs, query, k, id_col, vec_col)
-
-
-def _stackable(pdf, vec_col: str, dim: int | None):
-    """Drop rows whose vector can't join an (n, dim) stack: null
-    embeddings and wrong-length vectors. The JVM expression path
-    propagates null through zip_with/aggregate and the row falls out of
-    the top-k / pair comparison; dropping here makes the Arrow kernels
-    degrade identically instead of raising from ``np.stack``. When
-    ``dim`` is None (no query vector) the batch's most common length
-    anchors the expectation (the shortest on a tie), so one ragged row
-    cannot evict the valid ones, whatever the row order."""
-    col = pdf[vec_col]
-    mask = col.notna()
-    if not mask.any():
-        return pdf.iloc[0:0]
-    lens = col.map(lambda v: len(v) if v is not None else -1)
-    if dim is None:
-        dim = lens[mask].mode().iloc[0]
-    return pdf[mask & (lens == dim)]
-
-
-def cosine_topk_pandas(
-    vecs: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched matrix kernel: per batch, stack the embeddings into
-    one (batch, dim) matrix and score with a single BLAS matvec — the
-    high-dim fast path (one vectorized op per batch vs a per-element
-    codegen fold per row). Per-partition top-k happens via Spark's
-    TakeOrdered on the scored stream; no Python in the final sort."""
-    import pandas as pd
-
-    q = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-    id_field = vecs.schema[id_col]
-    out_schema = T.StructType([id_field, T.StructField("cos_sim", T.DoubleType())])
-
-    def score(it):
-        for pdf in it:
-            pdf = _stackable(pdf, vec_col, len(q))
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (X @ q) / (np.linalg.norm(X, axis=1) * qn)
-            yield pd.DataFrame({id_col: pdf[id_col], "cos_sim": np.round(sims, 6)})
-
-    return (
-        vecs.select(id_col, vec_col)
-        .mapInPandas(score, out_schema)
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
-
-
-def cosine_neardup_pairs_pandas(
-    vecs: DataFrame,
-    threshold: float = 0.9,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Blocked near-dup pairs via a per-block BLAS gram matrix: within
-    each block (LSH bucket / label), normalize rows once and take the
-    upper triangle of X̂·X̂ᵀ ≥ threshold. One matmul per block instead
-    of one JVM dot per pair — the high-dim winner (BENCH A/B). Block
-    sizes are bounded by the blocking scheme, so the O(b²) triangle
-    stays in one task's memory; the shuffle is the same groupBy-block
-    exchange the JVM plan pays."""
-    import pandas as pd
-
-    id_field = vecs.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("id1", id_field.dataType),
-            T.StructField("id2", id_field.dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = _stackable(pdf, vec_col, None)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id1": [], "id2": [], "cos_sim": []}).astype(
-                {"cos_sim": "float64"}
-            )
-        pdf = pdf.sort_values(id_col)
-        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        S = Xn @ Xn.T
-        iu, ju = np.triu_indices(n, k=1)
-        keep = S[iu, ju] >= threshold
-        ids = pdf[id_col].to_numpy()
-        return pd.DataFrame(
-            {
-                "id1": ids[iu[keep]],
-                "id2": ids[ju[keep]],
-                "cos_sim": np.round(S[iu, ju][keep], 4),
-            }
-        )
-
-    return (
-        vecs.select(block_col, id_col, vec_col)
-        .groupBy(block_col)
-        .applyInPandas(pairs, out_schema)
-    )
-
-
 def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
@@ -263,23 +118,15 @@ def rp_lsh_bucket_expr(vec_col: str, planes: list[list[float]]):
     return F.expr(bucket)
 
 
-def ivf_fit_centroids(
-    vecs: DataFrame,
-    n_lists: int,
-    vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 10,
-) -> list[list[float]]:
-    """Train the IVF coarse quantizer: k-means centroids over the
-    vector column (distributed MLlib k-means; deterministic via seed).
-    At 100 TB you fit on a sample (`df.sample`) — centroid quality
-    needs only ~256 points per list."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = vecs.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_lists, seed=seed, maxIter=max_iter).fit(feat)
-    return [c.tolist() for c in model.clusterCenters()]
+def _sq_dists(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """(n, k) squared L2 distances from each row of ``X`` to each row of
+    ``C``, summed elementwise (no dot-product expansion, so no BLAS
+    rounding), in row chunks of at most ``1 << 22`` temporaries so a
+    fit's memory does not grow with n * k * dim."""
+    step = max(1, (1 << 22) // max(1, C.size))
+    return np.concatenate(
+        [((X[i : i + step, None, :] - C[None, :, :]) ** 2).sum(axis=2) for i in range(0, len(X), step)]
+    )
 
 
 def ivf_fit_centroids_local(
@@ -288,27 +135,25 @@ def ivf_fit_centroids_local(
     seed: int = 7,
     max_iter: int = 10,
 ) -> list[list[float]]:
-    """Driver-side IVF quantizer training: seeded k-means++ init + fixed
-    Lloyd iterations over an in-memory sample.
+    """IVF quantizer training on the driver: seeded k-means++ init + at
+    most ``max_iter`` Lloyd iterations over an in-memory sample — the
+    only IVF fit (``VectorIndex.build`` and the registry's IVF query).
 
-    This is the realistic 100 TB fit path (the faiss convention: train
-    the coarse quantizer on a ~256-points-per-list sample pulled to one
-    machine, never the full corpus) — and, unlike the distributed MLlib
-    fit, it is bit-deterministic for a given (input order, seed), so the
-    centroids can be shared as literals with a SQL oracle engine.
-    ``ivf_fit_centroids`` remains the distributed alternative when the
-    sample itself is too big for the driver."""
+    The faiss convention: train the coarse quantizer on a sample of a
+    few hundred points per list pulled to one machine, never on the full
+    corpus. It is bit-deterministic for a given (input order, seed), so
+    the centroids can be shared as literals with a SQL oracle engine.
+    Fewer rows than ``n_lists`` raise ``ValueError``."""
     X = np.asarray(X, dtype=float)
     rng = np.random.default_rng(seed)
     n = len(X)
     if n < n_lists:
         raise ValueError(f"{n} vectors < n_lists={n_lists}")
-    # k-means++ seeding
+    # k-means++ seeding: d2 is each row's distance to its nearest center
     centers = [X[int(rng.integers(n))]]
+    d2 = np.full(n, np.inf)
     for _ in range(1, n_lists):
-        d2 = np.min(
-            [np.sum((X - c) ** 2, axis=1) for c in centers], axis=0
-        )
+        d2 = np.minimum(d2, np.sum((X - centers[-1]) ** 2, axis=1))
         tot = float(d2.sum())
         if tot <= 0.0:
             centers.append(X[int(rng.integers(n))])
@@ -316,8 +161,7 @@ def ivf_fit_centroids_local(
         centers.append(X[int(rng.choice(n, p=d2 / tot))])
     C = np.stack(centers)
     for _ in range(max_iter):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
+        assign = _sq_dists(X, C).argmin(axis=1)
         newC = C.copy()
         for j in range(n_lists):
             m = assign == j
@@ -390,8 +234,7 @@ def with_ivf_list(
     whole-stage codegen), ``"pandas"`` (Arrow-batched BLAS argmin:
     stack the batch into (rows, dim), one ``X @ C.T`` matmul, argmin —
     one vectorized op per batch), or ``"auto"`` (dispatch on
-    n_lists × dim against IVF_ASSIGN_CELLS_THRESHOLD, the same
-    shape-keyed dispatch PANDAS_DIM_THRESHOLD uses for top-k). Both
+    n_lists × dim against IVF_ASSIGN_CELLS_THRESHOLD). Both
     impls agree row-for-row: ties take the smallest list id (first
     argmin / first array_position match), and null or wrong-length
     vectors land in list 0, so index layouts are impl-independent.
@@ -441,19 +284,18 @@ def ivf_ann_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: probe the ``n_probe`` inverted lists whose
     centroids are nearest the query, score exactly within them.
 
     At scale the list id is a precomputed partition column, so probing
     reads only those partitions (partition pruning); here it is an
-    assignment (expression or Arrow kernel, dispatched by
-    ``with_ivf_list``) filtered at scan."""
+    assignment (``with_ivf_list``, which picks the expression or the
+    Arrow kernel by n_lists × dim) filtered at scan."""
     qv = np.asarray(query, dtype=float)
     dists = [float(np.sum((qv - np.asarray(c)) ** 2)) for c in centroids]
     probe = sorted(np.argsort(dists)[:n_probe].tolist())
-    assigned = with_ivf_list(vecs, centroids, vec_col=vec_col, impl=impl)
+    assigned = with_ivf_list(vecs, centroids, vec_col=vec_col)
     cand = assigned.filter(F.col("_list").isin(probe))
     return cosine_rank(cand, query, k, id_col, vec_col)
 

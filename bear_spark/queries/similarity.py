@@ -94,7 +94,7 @@ def vector_search_filtered(spark, sf_dir):
     bear/search.py:51-111, filter build at :78-84, min_distance at
     :108-110). This is also the brute-force exact cosine top-k
     baseline that the LSH/IVF queries approximate (drop the filters
-    and it is plain exact ANN — operators/similarity.cosine_topk)."""
+    and it is plain exact ANN — operators/similarity.cosine_rank)."""
     e = t(spark, sf_dir, "embeddings")
     qvec = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     cand = e.filter((F.col("vec_id") != 0) & (F.col("label") != 3))

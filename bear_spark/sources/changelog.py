@@ -9,9 +9,8 @@ source tails it with ``maxFilesPerTrigger`` micro-batches, and the
 lake table's commit log fences replays by (source_partition, offset).
 
 A raw-text variant (`write_raw` / `parse_raw`) carries each event as a
-JSON line, with parsing done in a vectorized Arrow pass (mapInPandas) —
-the "rewrite Arrow batches in pandas UDFs, no per-row Python" stage
-(reference analog: the per-row ``Work.from_raw`` loop at
+JSON line, parsed JVM-side by ``from_json`` with an explicit schema — no
+Python anywhere (reference analog: the per-row ``Work.from_raw`` loop at
 bear/ingest.py:19, inverted to columnar).
 """
 

@@ -10,7 +10,6 @@ import pytest
 from bear_spark import oracle
 from bear_spark.events import change_events
 from bear_spark.lake import LakeTable
-from bear_spark.operators.dedup import lww_dedup_agg, lww_dedup_window
 from bear_spark.schema import KEY_COLS, TRANSCRIPT_SCHEMA
 
 N_EVENTS = 10_000
@@ -59,15 +58,6 @@ def test_generator_deterministic(spark):
     pd.testing.assert_frame_equal(a, b)
     assert set(a["op"]) <= {"I", "U", "D"}
     assert a["lsn"].is_unique
-
-
-def test_dedup_variants_agree(spark):
-    ev = change_events(spark, 5000, n_convs=20, seed=11)
-    a = lww_dedup_agg(ev, KEY_COLS, ["ts", "lsn"]).toPandas()
-    b = lww_dedup_window(ev, KEY_COLS, ["ts", "lsn"]).toPandas()
-    a = a.sort_values(KEY_COLS).reset_index(drop=True)
-    b = b.sort_values(KEY_COLS).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_like=True)
 
 
 def test_single_merge_matches_oracle(spark, table, events_pdf):

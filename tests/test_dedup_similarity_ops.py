@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bear_spark.operators.minhash import minhash_neardup_pairs, minhash_signatures, shingles
-from bear_spark.operators.similarity import cosine_topk, lsh_ann_topk
+from bear_spark.operators.similarity import cosine_rank, lsh_ann_topk
 from bear_spark.operators.simhash import simhash, simhash_neardup_pairs
 
 SF = "/root/testdata/sf0.01"
@@ -114,7 +114,7 @@ def test_simhash_neardups_and_distance(spark, corpus):
 def test_lsh_ann_recall_vs_bruteforce(spark):
     vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
     query = vecs.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    exact = [r["vec_id"] for r in cosine_topk(vecs, query, 10).collect()]
+    exact = [r["vec_id"] for r in cosine_rank(vecs, query, 10, "vec_id", "embedding").collect()]
     approx = [
         r["vec_id"]
         for r in lsh_ann_topk(vecs, query, 10, n_planes=4, max_probe_hamming=3).collect()
@@ -142,17 +142,60 @@ def test_ivf_ann_full_probe_equals_exact(spark):
     """Probing every inverted list = exhaustive search: IVF with
     n_probe=n_lists must return exactly the brute-force top-k; a
     narrow probe must still reach decent recall."""
-    from bear_spark.operators.similarity import ivf_ann_topk, ivf_fit_centroids
+    import numpy as np
+
+    from bear_spark.operators.similarity import ivf_ann_topk, ivf_fit_centroids_local
 
     vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
     query = vecs.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    cents = ivf_fit_centroids(vecs, n_lists=8, seed=7)
-    exact = [r["vec_id"] for r in cosine_topk(vecs, query, 10).collect()]
+    X = np.asarray([r.embedding for r in vecs.orderBy("vec_id").collect()], dtype=float)
+    cents = ivf_fit_centroids_local(X, n_lists=8, seed=7)
+    exact = [r["vec_id"] for r in cosine_rank(vecs, query, 10, "vec_id", "embedding").collect()]
     full = [r["vec_id"] for r in ivf_ann_topk(vecs, query, cents, k=10, n_probe=8).collect()]
     assert full == exact
     narrow = [r["vec_id"] for r in ivf_ann_topk(vecs, query, cents, k=10, n_probe=3).collect()]
     recall = len(set(exact) & set(narrow)) / 10
     assert recall >= 0.5, f"IVF recall too low: {recall}"
+
+
+def test_ivf_local_fit_matches_the_plain_reference():
+    """The fit keeps each row's distance to its nearest k-means++ center
+    as it goes and computes Lloyd distances in row chunks; both change
+    only the memory and work, not the arithmetic, so the centroids are
+    bit-identical to the plain form (all centers each round, one
+    (n, k, dim) array). 128 lists x dim 64 makes two chunks of rows."""
+    import numpy as np
+
+    from bear_spark.operators.similarity import ivf_fit_centroids_local
+
+    def reference(X, n_lists, seed, max_iter=10):
+        rng = np.random.default_rng(seed)
+        n = len(X)
+        centers = [X[int(rng.integers(n))]]
+        for _ in range(1, n_lists):
+            d2 = np.min([np.sum((X - c) ** 2, axis=1) for c in centers], axis=0)
+            tot = float(d2.sum())
+            if tot <= 0.0:
+                centers.append(X[int(rng.integers(n))])
+                continue
+            centers.append(X[int(rng.choice(n, p=d2 / tot))])
+        C = np.stack(centers)
+        for _ in range(max_iter):
+            assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+            newC = C.copy()
+            for j in range(n_lists):
+                if (assign == j).any():
+                    newC[j] = X[assign == j].mean(axis=0)
+            if np.array_equal(newC, C):
+                break
+            C = newC
+        return C.tolist()
+
+    X = np.random.default_rng(4).standard_normal((600, 64))
+    assert ivf_fit_centroids_local(X, 128, seed=3) == reference(X, 128, 3)
+    assert ivf_fit_centroids_local(X[:50], 8, seed=7) == reference(X[:50], 8, 7)
+    with pytest.raises(ValueError, match="n_lists=8"):
+        ivf_fit_centroids_local(X[:7], 8)
 
 
 def test_simhash_banding_pigeonhole_guard(spark):
@@ -167,54 +210,6 @@ def test_simhash_banding_pigeonhole_guard(spark):
     # derived default: 60 // (8+1) = 6-bit bands -> 10 bands > 8
     out = simhash_neardup_pairs(corpus, max_hamming=8)
     assert out.columns == ["id1", "id2", "hamming"]
-
-
-def test_pandas_matrix_kernels_agree_with_jvm(spark):
-    """The Arrow-batched BLAS kernels (high-dim fast path) must return
-    exactly what the JVM zip_with/aggregate expressions return — same
-    ids, same rounded scores — and impl='auto' must dispatch to pandas
-    at embedding-model dims."""
-    import numpy as np
-
-    from bear_spark.operators.similarity import (
-        PANDAS_DIM_THRESHOLD,
-        cosine_neardup_pairs_pandas,
-        cosine_topk_pandas,
-    )
-
-    vecs = spark.read.parquet(f"{SF}/embeddings.parquet")
-    query = [float(x) for x in vecs.filter(F.col("vec_id") == 0).first()["embedding"]]
-
-    jvm = cosine_topk(vecs, query, k=10, impl="jvm").collect()
-    pdk = cosine_topk_pandas(vecs, query, k=10).collect()
-    assert [(r.vec_id, r.cos_sim) for r in jvm] == [(r.vec_id, r.cos_sim) for r in pdk]
-    assert len(query) < PANDAS_DIM_THRESHOLD  # testdata is low-dim → auto=jvm
-
-    # blocked near-dup pairs: gram-matrix kernel vs the oracle-green
-    # JVM query (queries/similarity.cosine_neardup_pairs)
-    from bear_spark.queries.similarity import cosine_neardup_pairs as q_jvm
-
-    exp = {
-        (r.id1, r.id2, r.cos_sim)
-        for r in q_jvm(spark, SF).collect()
-    }
-    got = {
-        (r.id1, r.id2, r.cos_sim)
-        for r in cosine_neardup_pairs_pandas(vecs, threshold=0.9).collect()
-    }
-    assert got == exp
-
-    # auto dispatch at high dim routes through the pandas kernel
-    rng = np.random.default_rng(5)
-    hi = spark.createDataFrame(
-        [(i, [float(x) for x in rng.standard_normal(PANDAS_DIM_THRESHOLD)])
-         for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    hq = [float(x) for x in rng.standard_normal(PANDAS_DIM_THRESHOLD)]
-    auto = cosine_topk(hi, hq, k=5, impl="auto").collect()
-    ref = cosine_topk_pandas(hi, hq, k=5).collect()
-    assert [(r.vec_id, r.cos_sim) for r in auto] == [(r.vec_id, r.cos_sim) for r in ref]
 
 
 def test_ivf_assign_kernel_matches_when_chain(spark):
@@ -279,53 +274,3 @@ def test_ivf_assign_kernel_matches_when_chain(spark):
     jvm2 = {r.vec_id: r._list for r in with_ivf_list(messy, cents2, impl="jvm").collect()}
     pd2 = {r.vec_id: r._list for r in with_ivf_list(messy, cents2, impl="pandas").collect()}
     assert jvm2 == pd2
-
-
-def test_pandas_kernels_tolerate_null_and_ragged_vectors(spark):
-    """Advisor round-4: np.stack on null/ragged embeddings raised where
-    the JVM path null-propagates and drops the row — the kernels must
-    now degrade identically (drop those rows) instead of erroring."""
-    import numpy as np
-
-    from bear_spark.operators.similarity import (
-        cosine_neardup_pairs_pandas,
-        cosine_topk,
-        cosine_topk_pandas,
-    )
-
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)], i % 2) for i in range(10)]
-    rows += [(100, None, 0), (101, [1.0], 1)]  # null + ragged
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    q = [float(x) for x in rng.standard_normal(8)]
-
-    jvm = cosine_topk(df, q, k=20, impl="jvm").collect()
-    pdk = cosine_topk_pandas(df, q, k=20).collect()
-    ids = {r.vec_id for r in pdk}
-    assert 100 not in ids and 101 not in ids
-    assert [(r.vec_id, r.cos_sim) for r in jvm][:10] == [
-        (r.vec_id, r.cos_sim) for r in pdk
-    ][:10]
-
-    pairs = cosine_neardup_pairs_pandas(df, threshold=-1.1, block_col="label").collect()
-    pair_ids = {r.id1 for r in pairs} | {r.id2 for r in pairs}
-    assert 100 not in pair_ids and 101 not in pair_ids
-    assert pairs  # the valid rows still pair up
-
-
-def test_neardup_kernel_survives_a_ragged_first_row(spark):
-    """The expected vector length must not come from whichever row a
-    batch happens to start with: a ragged FIRST row in a block used to
-    become the anchor and evict every valid row, so the block lost all
-    its pairs."""
-    from bear_spark.operators.similarity import cosine_neardup_pairs_pandas
-
-    rows = [(0, [1.0, 0.0], 0)]  # ragged, and first
-    rows += [(i, [1.0, 0.1 * i, 0.0], 0) for i in range(1, 5)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    pairs = cosine_neardup_pairs_pandas(
-        df.coalesce(1), threshold=-1.1, block_col="label"
-    ).collect()
-    assert {(r.id1, r.id2) for r in pairs} == {
-        (a, b) for a in range(1, 5) for b in range(a + 1, 5)
-    }

@@ -1121,6 +1121,119 @@ def test_stale_version_hint_rolls_forward(spark, tmp_path):
     assert sorted(got["text"]) == ["one", "two"]
 
 
+def _meta_temp_files(root: str) -> list[str]:
+    import os
+
+    meta = os.path.join(root, "_meta")
+    return sorted(
+        os.path.relpath(os.path.join(d, f), meta)
+        for d, _, fs in os.walk(meta)
+        for f in fs
+        if ".tmp-" in f
+    )
+
+
+@pytest.mark.parametrize("kill_at", [("link", 1), ("replace", 1), ("replace", 2)], ids=str)
+def test_vacuum_removes_temp_files_a_killed_commit_leaves(spark, tmp_path, kill_at):
+    """A writer killed mid-commit (its process exits, no cleanup runs)
+    leaves a temp file in ``_meta``: at ``os.link`` the snapshot's, at
+    the first ``os.replace`` its manifest's, at the second the
+    ``VERSION`` hint's. Once a later commit passes that version,
+    ``vacuum()`` removes it, and the table keeps every committed row."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(tmp_path / "tbl")
+    tbl = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=1,
+    )
+    tbl.merge(_events(spark, [("a", 0, "one", "2024-01-01 00:00:00", "I", 1)]))
+    fn, nth = kill_at
+    child = f"""
+import os, sys
+sys.path.insert(0, {str(Path(__file__).resolve().parent.parent)!r})
+from bear_spark.lake.table import LakeTable
+
+tbl = LakeTable(None, {root!r})
+snap = tbl._snapshot()
+real, calls = os.{fn}, []
+
+def killed(*args):
+    calls.append(args)
+    if len(calls) == {nth}:
+        os._exit(9)
+    return real(*args)
+
+os.{fn} = killed
+tbl._commit(snap, tbl._files(snap))
+"""
+    out = subprocess.run([sys.executable, "-c", child], capture_output=True, text=True, timeout=300)
+    assert out.returncode == 9, out.stderr[-2000:]
+    left = _meta_temp_files(root)
+    assert len(left) == 1, left
+
+    tbl = LakeTable.load(spark, root)
+    tbl.merge(_events(spark, [("b", 0, "two", "2024-01-02 00:00:00", "I", 2)]))
+    removed = tbl.vacuum()
+    assert left[0] in removed, removed
+    assert _meta_temp_files(root) == []
+    assert sorted(LakeTable.load(spark, root).read().toPandas()["text"]) == ["one", "two"]
+
+
+@pytest.mark.parametrize("swept", ["manifest", "snapshot", "hint"])
+def test_vacuum_between_temp_write_and_publish_keeps_commit_outcomes(
+    spark, tmp_path, monkeypatch, swept
+):
+    """``vacuum()`` runs while a writer holds a temp file it has not
+    published yet. A writer whose rival already committed its version
+    loses its manifest or snapshot temp file to the sweep and still
+    raises ``ConcurrentCommit``; a writer that linked its snapshot and
+    loses only the ``VERSION`` hint's temp file returns normally. Either
+    way the table is at the winner's version with its rows."""
+    import os
+
+    from bear_spark.lake.table import ConcurrentCommit
+
+    root = str(tmp_path / "tbl")
+    tbl = LakeTable.create(
+        spark, root, SCHEMA, key_cols=["conv_id", "turn_idx"], seq_col="ts", num_buckets=1,
+    )
+    tbl.merge(_events(spark, [("a", 0, "one", "2024-01-01 00:00:00", "I", 1)]))
+    base = tbl._snapshot()
+    real = {"link": os.link, "replace": os.replace}
+    swept_files = []
+
+    def publish(fn, src, dst):
+        hit = {
+            "manifest": fn == "replace" and "manifests" in dst,
+            "snapshot": fn == "link",
+            "hint": fn == "replace" and os.path.basename(dst) == "VERSION",
+        }[swept]
+        if hit and not swept_files:
+            swept_files.append(src)
+            if swept != "hint":
+                tbl._commit(base, {})  # a rival commits the same version first
+            tbl.vacuum()
+            assert not os.path.exists(src)
+        return real[fn](src, dst)
+
+    monkeypatch.setattr(os, "link", lambda src, dst: publish("link", src, dst))
+    monkeypatch.setattr(os, "replace", lambda src, dst: publish("replace", src, dst))
+    if swept == "hint":
+        tbl._commit(base, tbl._files(base))
+    else:
+        with pytest.raises(ConcurrentCommit):
+            tbl._commit(base, tbl._files(base))
+    monkeypatch.undo()
+
+    assert swept_files
+    assert tbl._version() == 2
+    assert _meta_temp_files(root) == []
+    assert tbl.read().toPandas()["text"].tolist() == ["one"]
+
+
 def test_cdc_applier_retries_on_concurrent_commit(spark, tmp_path, monkeypatch):
     """A side maintenance job racing a micro-batch must not kill the
     stream: CDCApplier retries merge on ConcurrentCommit (bounded), and

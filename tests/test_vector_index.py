@@ -608,3 +608,94 @@ def test_refresh_runs_the_index_kernel_where_its_feed_ran(spark, tmp_path, monke
     }
     got, n = _index_rows(idx)
     assert got == want and n == len(want)
+
+
+@pytest.mark.parametrize("assign", ["jvm", "arrow"])
+def test_small_ivf_refresh_runs_its_index_kernel_on_the_driver(spark, tmp_path, monkeypatch, assign):
+    """A small IVF refresh runs both its kernels (the feed's diff, then
+    the index's) on the driver, whichever assignment ``with_ivf_list``
+    picks: the Arrow one is a row map (``mapInPandas``), which Catalyst
+    sizes from its input rows. Each list then holds the table's
+    assignment."""
+    from bear_spark.lake import arrow_apply
+
+    threshold = 0 if assign == "arrow" else S.IVF_ASSIGN_CELLS_THRESHOLD
+    monkeypatch.setattr(S, "IVF_ASSIGN_CELLS_THRESHOLD", threshold)
+    tbl = _mk_table(spark, tmp_path)
+    idx = tbl.build_vector_index("ivf", kind="ivf", n_lists=8, seed=7)
+    state = idx.meta["state"]
+    assigned = VectorIndex._assign(tbl.read().select("vec_id", "embedding"), "ivf", state, "embedding")
+    plan = assigned._jdf.queryExecution().optimizedPlan().toString()
+    assert ("MapInPandas" in plan) == (assign == "arrow"), plan
+    tbl.merge(_events(spark, _vec_rows(5, seed=3, start_id=1000)))
+
+    on_driver, kernel_job = arrow_apply.apply_on_driver, LakeTable._kernel_job
+    driver, jobs = [], []
+    monkeypatch.setattr(
+        arrow_apply, "apply_on_driver", lambda b, k: driver.append(b.num_rows) or on_driver(b, k)
+    )
+    monkeypatch.setattr(
+        LakeTable, "_kernel_job", lambda self, *a: jobs.append(a) or kernel_job(self, *a)
+    )
+    idx.refresh()
+    assert idx.last_refresh["mode"] == "incremental"
+    assert len(driver) == 2 and jobs == [], (driver, jobs)
+    want = {
+        r.vec_id: (list(r.embedding), r._list)
+        for r in VectorIndex._assign(
+            tbl.read().select("vec_id", "embedding"), "ivf", state, "embedding"
+        ).collect()
+    }
+    got, n = _index_rows(idx)
+    assert got == want and n == len(want)
+
+
+def test_ivf_builds_at_one_version_and_seed_are_identical(spark, tmp_path, monkeypatch):
+    """The IVF fit samples the table deterministically (by a hash of the
+    ids), so two builds at one version and seed fit the same centroids
+    and put the same rows in each list, with the whole table as the
+    sample and with a sample smaller than the table."""
+    from bear_spark.lake import vector_index
+
+    tbl = _mk_table(spark, tmp_path, n=300)
+    for per_list in (vector_index.IVF_SAMPLE_PER_LIST, 10):
+        monkeypatch.setattr(vector_index, "IVF_SAMPLE_PER_LIST", per_list)
+        a = tbl.build_vector_index(f"a{per_list}", kind="ivf", n_lists=8, seed=7)
+        b = tbl.build_vector_index(f"b{per_list}", kind="ivf", n_lists=8, seed=7)
+        assert a.meta["state"] == b.meta["state"]
+        assert np.asarray(a.meta["state"]).shape == (8, DIM)
+        assert _index_rows(a) == _index_rows(b)
+        assert len(_index_rows(a)[0]) == 300
+
+
+def test_ivf_build_skips_null_and_ragged_vectors(spark, tmp_path):
+    """The fit skips a null vector and a wrong-length one (sized from the
+    first vector that is there, as the LSH build is); the index still
+    holds both, in list 0, and probes equal the scan-time operator."""
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "tbl"), SCHEMA,
+        key_cols=["vec_id"], seq_col="ts", num_buckets=1,
+    )
+    rows = [(0, None, "2024-01-01 00:00:00", "I", 0), *_vec_rows(40, start_id=1)]
+    rows.append((999, [1.0, 2.0], "2024-01-01 00:00:00", "I", 999))
+    tbl.merge(_events(spark, rows))
+    idx = tbl.build_vector_index("ivf", kind="ivf", n_lists=8, seed=7)
+    assert np.asarray(idx.meta["state"]).shape == (8, DIM)
+    got, n = _index_rows(idx)
+    assert n == 42 and got[0] == (None, 0) and got[999][1] == 0
+    q = _query_vec()
+    exp = S.ivf_ann_topk(tbl.read(), q, idx.meta["state"], k=10, n_probe=8).collect()
+    probed = idx.probe(q, k=10, n_probe=8).collect()
+    assert [(r.vec_id, r.cos_sim) for r in probed] == [(r.vec_id, r.cos_sim) for r in exp]
+
+
+def test_ivf_build_needs_n_lists_valid_vectors(spark, tmp_path):
+    """Nine rows but six valid vectors cannot fit eight centroids."""
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "tbl"), SCHEMA,
+        key_cols=["vec_id"], seq_col="ts", num_buckets=1,
+    )
+    nulls = [(100 + i, None, "2024-01-01 00:00:00", "I", 100 + i) for i in range(3)]
+    tbl.merge(_events(spark, _vec_rows(6) + nulls))
+    with pytest.raises(ValueError, match="n_lists=8"):
+        tbl.build_vector_index("ivf", kind="ivf", n_lists=8, seed=7)
