@@ -46,6 +46,7 @@ import os
 import uuid
 from collections.abc import Callable
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -163,6 +164,29 @@ def write_bucket(
     return entries
 
 
+def _unapplied(sp: pa.ChunkedArray, off: pa.ChunkedArray, applied: dict) -> np.ndarray:
+    """Boolean mask: True for each row whose (source partition ``sp``,
+    offset ``off``) lies in none of ``applied``'s ranges, which map a
+    partition to the sorted, disjoint ``(lo, hi)`` bound arrays of its
+    applied offsets. One ``searchsorted`` per partition present; a row
+    with a null partition or offset is never fenced."""
+    import pyarrow.compute as pc
+
+    known = pc.and_(pc.is_valid(sp), pc.is_valid(off)).to_numpy(zero_copy_only=False)
+    sp = pc.fill_null(sp, -1).to_numpy()
+    off = pc.fill_null(off, 0).to_numpy()
+    keep = np.ones(len(sp), np.bool_)
+    for p in np.unique(sp[known]):
+        if int(p) not in applied:
+            continue
+        lo, hi = applied[int(p)]
+        rows = np.flatnonzero(known & (sp == p))
+        o = off[rows]
+        i = np.searchsorted(lo, o, side="right") - 1
+        keep[rows] = (i < 0) | (o > hi[np.maximum(i, 0)])
+    return keep
+
+
 def make_apply_kernel(
     target: pa.Schema,
     stage_dir: str,
@@ -173,11 +197,21 @@ def make_apply_kernel(
     table_root: str,
     wm_iso: str | None = None,
     drop_late: bool = False,
+    applied: dict[str, list[list[int]]] | None = None,
 ) -> Callable:
     """Build the apply kernel for one merge (run per bucket, on the
     driver or under ``applyInArrow``).
 
     ``target`` is the payload's Arrow schema (``arrow_schema``).
+
+    ``applied`` is the snapshot's commit log (source partition -> its
+    merged, sorted ``[lo, hi]`` applied offset ranges, ``_merge_ranges``)
+    and makes the merge exactly-once: the kernel's first step drops every
+    row whose ``(_sp, _off)`` falls inside an applied range (a row with a
+    null partition or offset is never fenced). The stats below count only
+    the rows that pass. A bucket whose rows are all fenced writes no file
+    and returns no row, so a fully replayed batch returns nothing at all.
+
     ``manifests_by_bucket`` maps each bucket to the rel path of its
     immutable manifest document; the TASK reads its own manifest from
     shared storage (same access path as the data files), so the closure
@@ -200,16 +234,26 @@ def make_apply_kernel(
     event time — as a JSON column the driver folds into the commit.
     This makes merge a single job: no separate stats pass, no cache.
     """
+    fence = {
+        int(p): (np.array([r[0] for r in rs], np.int64), np.array([r[1] for r in rs], np.int64))
+        for p, rs in (applied or {}).items()
+        if rs
+    }
 
     def kernel(tbl):
         import datetime as _dt
         import json as _json
 
-        import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         bucket = tbl.column("_bucket")[0].as_py()
+
+        # --- exactly-once fence: drop the rows already applied ----------
+        if fence:
+            tbl = tbl.filter(_unapplied(tbl.column("_sp"), tbl.column("_off"), fence))
+            if tbl.num_rows == 0:
+                return APPLY_RESULT.empty_table()
 
         # --- batch stats for this bucket's slice ----------------------
         # event time as naive UTC (the snapshot watermark format)
@@ -230,12 +274,14 @@ def make_apply_kernel(
                 ("_late", "sum"), ("_ts", "max"),
             ]
         )
+        # a null partition or offset has no range to commit: its group
+        # reports None there and is counted all the same
         stats = [
             {
-                "sp": int(r["_sp"]),
+                "sp": r["_sp"],
                 "f": str(r["_segment"]),
-                "lo": int(r["_off_min"]),
-                "hi": int(r["_off_max"]),
+                "lo": r["_off_min"],
+                "hi": r["_off_max"],
                 "c": int(r["_off_count"]),
                 "late": int(r["_late_sum"]),
                 "mts": None if r["_ts_max"] is None else r["_ts_max"].isoformat(),
@@ -367,19 +413,18 @@ def make_apply_kernel(
 
         return pa.table(
             {
-                "_bucket": pa.array([bucket], pa.int32()),
-                "files": pa.array([_json.dumps(files)], pa.string()),
-                "max_key_rows": pa.array([max_key_rows], pa.int64()),
+                "_bucket": [bucket],
+                "files": [_json.dumps(files)],
+                "max_key_rows": [max_key_rows],
                 # work-reduction evidence for the contended-row split,
                 # wall-clock-independent: rows that entered the (ts, lsn)
                 # LWW sort vs rows that bypassed it
-                "lww_rows": pa.array([events.num_rows], pa.int64()),
-                "passthrough_rows": pa.array(
-                    [sum(t.num_rows for t in passthrough)], pa.int64()
-                ),
-                "stats": pa.array([_json.dumps(stats)], pa.string()),
-                "kept": pa.array([_json.dumps(kept_paths)], pa.string()),
-            }
+                "lww_rows": [events.num_rows],
+                "passthrough_rows": [sum(t.num_rows for t in passthrough)],
+                "stats": [_json.dumps(stats)],
+                "kept": [_json.dumps(kept_paths)],
+            },
+            schema=APPLY_RESULT,
         )
 
     return kernel
@@ -502,7 +547,6 @@ def make_diff_kernel(
     ])
 
     def kernel(files):
-        import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -613,3 +657,9 @@ APPLY_RESULT_SCHEMA = (
     f"{REWRITE_RESULT_SCHEMA}, max_key_rows long, lww_rows long, "
     "passthrough_rows long, stats string, kept string"
 )
+#: ``APPLY_RESULT_SCHEMA`` in Arrow: the merge kernel's result rows
+APPLY_RESULT = pa.schema([
+    ("_bucket", pa.int32()), ("files", pa.string()), ("max_key_rows", pa.int64()),
+    ("lww_rows", pa.int64()), ("passthrough_rows", pa.int64()), ("stats", pa.string()),
+    ("kept", pa.string()),
+])

@@ -674,12 +674,16 @@ class LakeTable:
         applied whole and leaves the commit log as it is.
 
         One kernel, for every payload type (lake/arrow_apply.py): per
-        touched bucket it reads the bucket's existing files directly,
+        touched bucket it first drops the rows whose offsets the
+        snapshot's commit log already holds (the fence; the ranges ride
+        in its closure), then reads the bucket's existing files directly,
         rewrites them (file-granularity COW), and returns its slice of
         the batch stats (offset ranges, lateness, max event time), which
         the driver folds into the commit. The table never moves and the
-        batch is scanned exactly once; ``_run_kernel`` places the kernel
-        on the driver or in one ``applyInArrow`` job.
+        batch is scanned exactly once, by a plan of one scan and one
+        projection (no join); ``_run_kernel`` places the kernel on the
+        driver or in one ``applyInArrow`` job. A batch the fence empties
+        returns ``skipped`` and commits nothing.
 
         The kernel returns the manifest entries of the files it wrote,
         with exact row counts and key ranges, so committing reads no
@@ -711,39 +715,13 @@ class LakeTable:
                     "would re-bucket existing keys"
                 )
 
+        # exactly-once fencing on (source_partition, offset): the
+        # commit log stores APPLIED OFFSET RANGES per source partition
+        # (not a high-water mark), since changelog files may arrive out
+        # of order: a replayed file must be fenced while an unseen
+        # earlier file must still apply. The kernel drops applied rows
+        # as its first step, so the batch plan is one scan + projection.
         has_env = {"source_partition", "offset"} <= set(batch.columns)
-
-        # --- exactly-once fencing on (source_partition, offset_range) ---
-        # The commit log stores APPLIED OFFSET RANGES per source
-        # partition (not a high-water mark): changelog files may arrive
-        # out of order, and a replayed file must be fenced while an
-        # unseen earlier file must still apply.
-        # The range table is Arrow-built: a driver-local relation, where
-        # a list-built one would run a Python job on every merge.
-        if has_env and snap["commit_log"]:
-            rows = [
-                (int(p), int(lo), int(hi))
-                for p, ranges in snap["commit_log"].items()
-                for lo, hi in ranges
-            ]
-            if rows:
-                sp, lo, hi = zip(*rows)
-                rng = self.spark.createDataFrame(
-                    pa.table({
-                        "_sp": pa.array(sp, pa.int32()),
-                        "_lo": pa.array(lo, pa.int64()),
-                        "_hi": pa.array(hi, pa.int64()),
-                    }),
-                    "_sp int, _lo long, _hi long",
-                )
-                batch = batch.alias("b").join(
-                    F.broadcast(rng.alias("r")),
-                    F.expr(
-                        "b.`source_partition` = r._sp AND b.`offset` BETWEEN r._lo AND r._hi"
-                    ),
-                    "left_anti",
-                )
-
         wm = snap["watermark_ts"]
         st = self._merge_arrow_job(
             batch, snap, new_schema, schema_version, has_env, wm, key_cols, seq_col
@@ -901,6 +879,7 @@ class LakeTable:
             drop_late=bool(snap.get("drop_late")),
             table_root=self.root,
             target_file_rows=TARGET_FILE_ROWS,
+            applied=snap["commit_log"] if has_env else None,
         )
         res = self._run_kernel(
             src_evt, kernel, APPLY_RESULT_SCHEMA, self._effective_buckets(snap)
@@ -919,12 +898,15 @@ class LakeTable:
             for s in json.loads(r["stats"]):
                 rows_in += s["c"]
                 late_events += s["late"]
-                per_partition[int(s["sp"])] = per_partition.get(int(s["sp"]), 0) + s["c"]
+                sp = -1 if s["sp"] is None else int(s["sp"])
+                per_partition[sp] = per_partition.get(sp, 0) + s["c"]
                 if s["mts"] is not None:
                     t = datetime.datetime.fromisoformat(s["mts"])
                     if max_ts is None or t > max_ts:
                         max_ts = t
-                k = (int(s["sp"]), s["f"])
+                if s["sp"] is None or s["lo"] is None:
+                    continue
+                k = (sp, s["f"])
                 if k in seg:
                     seg[k][0] = min(seg[k][0], s["lo"])
                     seg[k][1] = max(seg[k][1], s["hi"])

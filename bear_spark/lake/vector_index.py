@@ -164,15 +164,21 @@ class VectorIndex:
         if _state is not None:
             state = _state
         else:
-            # size(NULL) is NULL, so the state is sized from a vector
-            # that is there
-            dim = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
-            if dim is None:
+            # sized from the most common length among the vectors that
+            # are there (the shortest on a tie), so one stray vector,
+            # wherever it sorts, cannot size the whole index
+            lens = (
+                df.where(F.col(vec_col).isNotNull())
+                .groupBy(F.size(vec_col).alias("dim")).count()
+                .toArrow().to_pylist()
+            )
+            if not lens:
                 raise ValueError("cannot index a table with no vector without _state")
+            dim = min(lens, key=lambda r: (-r["count"], r["dim"]))["dim"]
             if kind == "lsh":
-                state = S._planes(int(dim[0]), n_planes, seed)
+                state = S._planes(dim, n_planes, seed)
             else:
-                state = cls._fit_ivf(df, vec_col, id_cols, int(dim[0]), n_lists, seed)
+                state = cls._fit_ivf(df, vec_col, id_cols, dim, n_lists, seed)
 
         meta = {
             "kind": kind,

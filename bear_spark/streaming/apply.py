@@ -7,9 +7,10 @@ lake table via MERGE. Exactly-once comes from TWO cooperating layers:
 1. Spark's streaming checkpoint (which files each epoch consumed) —
    at-least-once delivery on restart.
 2. The table's embedded commit log keyed by (source_partition, offset)
-   — already-applied rows are fenced inside ``LakeTable.merge`` before
-   any write, and offsets advance in the same atomic snapshot swap as
-   the data. Replayed epochs after a crash between "batch applied" and
+   — already-applied rows are fenced inside the merge's apply kernel
+   (``lake/arrow_apply.py``), as its first step before any write, and
+   offsets advance in the same atomic snapshot swap as the data.
+   Replayed epochs after a crash between "batch applied" and
    "checkpoint written" are therefore harmless.
 
 Reference analog: the crawl→stage→ingest loop with delete-after-ingest
@@ -20,7 +21,10 @@ upgrades it to true exactly-once.
 Per-batch lineage metrics (rows in, dedup drops, late events, buckets
 touched) land in the table snapshot's lineage tail AND in a metrics
 parquet table for SQL access (the north rule's per-partition
-lineage/metrics tables).
+lineage/metrics tables). The metric dicts ``run_available`` returns also
+carry Spark's own split of each epoch (``duration_ms``: latestOffset,
+walCommit, addBatch, commitOffsets, ...), which the parquet table does
+not store.
 """
 
 from __future__ import annotations
@@ -252,7 +256,14 @@ class CDCApplier:
         """Drain everything currently in the changelog (bounded replay:
         ``trigger(availableNow=True)``), then stop. Resumable: rerunning
         continues from the streaming checkpoint, and the table commit
-        log fences anything redelivered."""
+        log fences anything redelivered.
+
+        Returns every metric dict this applier has produced. Each epoch
+        of this drain gets Spark's phase timings for it
+        (``StreamingQueryProgress.durationMs``, matched by batch id) as
+        ``duration_ms``, for as many epochs as Spark keeps progress
+        (``spark.sql.streaming.numRecentProgressUpdates``, 100)."""
+        start = len(self.batch_metrics)
         kw = {} if self.event_schema is None else {"schema": self.event_schema}
         stream = read_changelog_stream(
             self.spark, self.changelog_dir, self.max_files_per_trigger, **kw
@@ -264,6 +275,10 @@ class CDCApplier:
             .start()
         )
         q.awaitTermination()
+        durations = {p.batchId: dict(p.durationMs) for p in q.recentProgress}
+        for m in self.batch_metrics[start:]:
+            if m["epoch_id"] in durations:
+                m["duration_ms"] = durations[m["epoch_id"]]
         self._flush_metrics()
         return self.batch_metrics
 

@@ -163,3 +163,27 @@ def test_metrics_row_survives_maintenance_failure(spark, tmp_path, monkeypatch):
     assert len(mt) == 1
     assert not bool(mt["skipped"].iloc[0])
     assert int(mt["rows_in"].iloc[0]) == 500
+
+
+def test_run_available_returns_spark_epoch_phases(spark, tmp_path, log_and_oracle):
+    """Each epoch's metric dict carries Spark's own phase split of that
+    epoch (``durationMs``, matched by batch id); the metrics table keeps
+    its columns. Checkpoints go through the FileSystem manager."""
+    from bear_spark.session import CHECKPOINT_FILE_MANAGER
+
+    log_dir, files, expected = log_and_oracle
+    table = _mk_table(spark, tmp_path)
+    app = CDCApplier(
+        spark, table, log_dir, str(tmp_path / "ckpt"), str(tmp_path / "metrics"),
+        max_files_per_trigger=3,
+    )
+    metrics = app.run_available()
+    applied = [m for m in metrics if not m["skipped"]]
+    assert len(applied) == 3
+    assert [m["epoch_id"] for m in metrics] == list(range(len(metrics)))
+    for m in applied:
+        ms = m["duration_ms"]
+        assert ms["addBatch"] >= 0 and ms["walCommit"] >= 0, ms
+    assert "duration_ms" not in app.metrics_table().columns
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == CHECKPOINT_FILE_MANAGER
+    oracle.assert_states_equal(table.read().toPandas(), expected)

@@ -670,7 +670,7 @@ def test_ivf_builds_at_one_version_and_seed_are_identical(spark, tmp_path, monke
 
 def test_ivf_build_skips_null_and_ragged_vectors(spark, tmp_path):
     """The fit skips a null vector and a wrong-length one (sized from the
-    first vector that is there, as the LSH build is); the index still
+    most common vector length, as the LSH build is); the index still
     holds both, in list 0, and probes equal the scan-time operator."""
     tbl = LakeTable.create(
         spark, str(tmp_path / "tbl"), SCHEMA,
@@ -699,3 +699,25 @@ def test_ivf_build_needs_n_lists_valid_vectors(spark, tmp_path):
     tbl.merge(_events(spark, _vec_rows(6) + nulls))
     with pytest.raises(ValueError, match="n_lists=8"):
         tbl.build_vector_index("ivf", kind="ivf", n_lists=8, seed=7)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_build_sizes_the_index_from_the_most_common_length(spark, tmp_path, kind):
+    """The lowest key, read first, holds a 2-dim vector and the other 59
+    keys dim-16 ones: the index is sized from the most common length, so
+    the build succeeds and a probe of every list equals the exact top-k
+    over the valid vectors."""
+    tbl = LakeTable.create(
+        spark, str(tmp_path / "tbl"), SCHEMA,
+        key_cols=["vec_id"], seq_col="ts", num_buckets=1,
+    )
+    rows = [(0, [1.0, 2.0], "2024-01-01 00:00:00", "I", 0), *_vec_rows(59, start_id=1)]
+    tbl.merge(_events(spark, rows))
+    idx = tbl.build_vector_index("ann", kind=kind, n_planes=3, n_lists=8, seed=7)
+    assert np.asarray(idx.meta["state"]).shape == ((3, DIM) if kind == "lsh" else (8, DIM))
+    q = _query_vec()
+    every = {"max_probe_hamming": 3} if kind == "lsh" else {"n_probe": 8}
+    got = idx.probe(q, k=10, **every).collect()
+    valid = tbl.read().where(F.size("embedding") == DIM)
+    exp = S.cosine_rank(valid, q, 10, "vec_id", "embedding").collect()
+    assert [(r.vec_id, r.cos_sim) for r in got] == [(r.vec_id, r.cos_sim) for r in exp]
